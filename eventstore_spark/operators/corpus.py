@@ -180,7 +180,7 @@ def pack_shards(docs: DataFrame, budget_tokens: int = 2000, buckets: int = 32,
     # re-tokenized the full text column when left lazy. One serialized
     # cache of the narrow (doc_id, n_tokens) projection tokenizes the
     # corpus once (PySpark MEMORY_AND_DISK = serialized, the corpus-sized
-    # storage-level policy; A/B med 1.15 -> 1.07 s, tools/_probe_r14i.py).
+    # storage-level policy; A/B med 1.15 -> 1.07 s, OPTIMIZATION_r14.md §10).
     lo, hi = base.agg(F.min("doc_id"), F.max("doc_id")).first()
     if lo is None:
         return base.select("doc_id", "n_tokens", F.lit(0).cast("long").alias("shard"))

@@ -1251,26 +1251,29 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
         .withColumn("_seed", F.lit(False))
     )
-    rows = seed_side.unionByName(query_side).collect()
-    seeds = sorted((r for r in rows if r["_seed"]), key=lambda r: (r["_h"], r["vec_id"]))
-    qrows = [r.asDict() | {"query_id": r["vec_id"]} for r in rows if not r["_seed"]]
-    dim = len(seeds[0]["qvec"])
-    assert dim % m == 0, f"dim {dim} not divisible by m={m}"
-    d = dim // m
-    kk = min(n_codes, len(seeds))
-    books = [
-        [[int(x) for x in r["qvec"][s * d:(s + 1) * d]] for r in seeds]
-        for s in range(m)
-    ]
-    books = _pq_train_iters(base, books, m, kk, iters, d)
-    cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
-    codes = base.select(
-        "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
-    ).transform(scoped_cache)
-    # the scoring action recomputes base's lineage once into the codes
-    # cache (one corpus pass, same as the old pq_encode scan) instead of
-    # pinning the corpus-sized qvec table for the query's lifetime
-    base.unpersist()
+    try:
+        rows = seed_side.unionByName(query_side).collect()
+        seeds = sorted((r for r in rows if r["_seed"]), key=lambda r: (r["_h"], r["vec_id"]))
+        qrows = [r.asDict() | {"query_id": r["vec_id"]} for r in rows if not r["_seed"]]
+        dim = len(seeds[0]["qvec"])
+        assert dim % m == 0, f"dim {dim} not divisible by m={m}"
+        d = dim // m
+        kk = min(n_codes, len(seeds))
+        books = [
+            [[int(x) for x in r["qvec"][s * d:(s + 1) * d]] for r in seeds]
+            for s in range(m)
+        ]
+        books = _pq_train_iters(base, books, m, kk, iters, d)
+        cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
+        codes = base.select(
+            "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
+        ).transform(scoped_cache)
+    finally:
+        # the scoring action recomputes base's lineage once into the codes
+        # cache (one corpus pass, same as the old pq_encode scan) instead of
+        # pinning the corpus-sized qvec table for the query's lifetime; an
+        # empty corpus or a failed training pass must not leak it either
+        base.unpersist()
     per_query = []
     for r in sorted(qrows, key=lambda r: r["query_id"]):
         qv = [int(x) for x in r["qvec"]]

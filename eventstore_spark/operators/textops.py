@@ -1972,7 +1972,7 @@ def kn_perplexity(docs: DataFrame, train_source: str = "src0",
     # countDistinct(w1)/countDistinct(w2) over c2 (one row per distinct
     # key by construction), so ONE multi-aggregate job over the cached c2
     # measures all three sides (r14-opt: three sequential eager guard
-    # jobs → one; A/B med 2.81 → 2.66 s, tools/_probe_r14h.py). h/cont
+    # jobs → one; A/B med 2.81 → 2.66 s, OPTIMIZATION_r14.md §9). h/cont
     # are no longer persisted — each is consumed exactly once (its
     # broadcast build) and reads cached c2.
     # btot stays a plain broadcast: 1 row by construction.

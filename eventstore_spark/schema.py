@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 # (the bench/oracle harnesses' clearCache() remains a superset of this).
 # Without a release, a session that runs the whole registry accumulates
 # every query's cached tables until memory pressure — measured and fixed
-# this round (tools/_probe_r14e.py: 0 cached relations remain after
+# this round (OPTIMIZATION_r14.md §6: 0 cached relations remain after
 # running the caching query families + one release call).
 
 _QUERY_CACHES: list[DataFrame] = []

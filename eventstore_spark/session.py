@@ -42,7 +42,7 @@ def get_spark(app_name: str = "eventstore_spark", cpus: int | None = None) -> Sp
         # so tiny local shuffles still spread across cores first.
         # Parameterised like the other scale knobs (r14): unset falls
         # back to 128m. A single-variable interleaved A/B (64m Spark
-        # default vs 128m, tools/_probe_r14a.py) measured NO local delta
+        # default vs 128m, OPTIMIZATION_r14.md §5) measured NO local delta
         # on dedup_simhash / tpch_q3 / dedup_minhash_pairs — the r13
         # simhash regression was not this setting.
         .config(

@@ -154,8 +154,8 @@ class _PathCore:
     Every ``EventLogWriter`` opened on the same directory in this process
     shares a core, which is what makes multiple writer OBJECTS safe:
 
-      * ``mutex`` serializes whole appends (an RLock — the soft-delete
-        recreate path re-enters ``append`` for the metastream write);
+      * ``mutex`` serializes whole commits (one group of queued
+        appends, a bulk ``append_df``, writer open and close);
       * ``last_position`` is the committed head every writer syncs to
         before allocating, so positions from different writer objects
         never collide;
@@ -171,7 +171,7 @@ class _PathCore:
 
     def __init__(self, path: str):
         self.path = path
-        self.mutex = threading.RLock()
+        self.mutex = threading.Lock()
         self.cond = threading.Condition()
         self.epoch = 0
         self.last_position: int | None = None  # None until first recovery
@@ -336,7 +336,6 @@ class EventLogWriter:
     def __init__(self, spark: SparkSession, path: str,
                  max_append_size: int = DEFAULT_MAX_APPEND_SIZE,
                  lock_timeout_s: float = 0.0,
-                 group_commit_window_ms: float = 0.0,
                  read_only: bool = False):
         self.spark = spark
         self.path = path
@@ -346,13 +345,10 @@ class EventLogWriter:
         # open read-only handles while ONE process owns the append head.
         # Appends through a read-only handle raise WriterFencedError.
         self._read_only = read_only
-        # group commit (RequestManager batching): >0 gathers concurrent
-        # append() calls for this many ms and commits them as one file
-        self._group_window = group_commit_window_ms / 1000.0
-        self._group_q: list = []
-        self._group_cond = threading.Condition()
-        self._group_thread: threading.Thread | None = None
-        self._group_stop = threading.Event()
+        # appends waiting to commit, oldest first; the caller at the front
+        # commits everything queued behind it as one group (see append)
+        self._queue: list[tuple] = []
+        self._queue_cond = threading.Condition()
         self.max_append_size = max_append_size
         os.makedirs(path, exist_ok=True)
         # shared per-directory write head: in-process total-order +
@@ -609,18 +605,21 @@ class EventLogWriter:
         the first new event number so the old events stay invisible while
         the new ones show.
 
-        Serialized through the shared per-directory mutex; the fencing
-        token is verified BEFORE any state moves, and a failed/fenced
-        commit rolls the touched streams' in-memory state back to the
-        durable log, so numbering stays intact for the retry.
+        Every call joins this writer's queue; the caller at the front
+        takes the shared per-directory mutex and commits every append
+        queued by then as ONE parquet file + ONE manifest publish, then
+        wakes the rest (LevelDB's ``DBImpl::Write`` shape, and the
+        reference's one storage write per drained RequestManager batch).
+        A caller that is alone commits at once. Each caller gets its own
+        result or rejection (WrongExpectedVersion, StreamDeleted, ...).
 
-        With ``group_commit_window_ms`` > 0, concurrent ``append()``
-        calls are gathered by a collector thread and committed as ONE
-        parquet file + ONE manifest publish — the group-commit of the
-        reference's RequestManager pipeline (many in-flight appends, one
-        storage write), amortizing the per-commit fsync/manifest cost
-        across callers. Results (and per-append errors such as
-        WrongExpectedVersion) resolve per caller.
+        The fencing token is verified BEFORE any state moves, and a
+        failed/fenced commit rolls the touched streams' in-memory state
+        back to the durable log, so numbering stays intact for the retry.
+        A failure part-way through applying one append, or in the commit
+        itself, fails every append batched with it that was not already
+        rejected; nothing of the group is committed, so callers retry
+        (an idempotent retry by event id is safe).
         """
         if self._read_only:
             raise WriterFencedError(
@@ -628,27 +627,40 @@ class EventLogWriter:
                 "the owning writer process"
             )
         self._validate_append(stream_id, events, expected_version)
-        if self._group_window > 0:
-            return self._append_grouped(stream_id, events, expected_version, created)
-        with self._core.mutex:
-            _verify_fence(self._core)
-            rows: list[tuple] = []
-            touched: set[str] = set()
-            try:
-                last = self._apply_append(
-                    stream_id, events, expected_version, created, rows, touched
-                )
-            except BaseException:
-                if touched:  # mid-apply failure → restore from the log
-                    self._rollback(touched)
-                raise
-            if rows:
-                try:
-                    self._commit(rows)
-                except BaseException:
-                    self._rollback(touched)
-                    raise
-            return last
+        box: dict = {}
+        item = (stream_id, events, expected_version, created, box)
+        with self._queue_cond:
+            self._queue.append(item)
+            while "done" not in box and self._queue[0] is not item:
+                self._queue_cond.wait()
+        if "done" not in box:
+            self._commit_queue(item)
+        if "error" in box:
+            raise box["error"]
+        return box["result"]
+
+    def _commit_queue(self, front: tuple) -> None:
+        """Run by the caller at the front of the queue: commit the queued
+        appends as one group under the core mutex, then hand each caller
+        its outcome and wake the next front."""
+        batch = [front]
+        try:
+            with self._core.mutex:
+                with self._queue_cond:
+                    batch = list(self._queue)
+                self._commit_group(batch)
+        except BaseException as e:  # nothing committed: fail the group
+            for *_ignored, box in batch:
+                box.pop("result", None)
+                box.setdefault("error", e)
+            if not isinstance(e, Exception):
+                raise  # an interrupt stays with the thread it hit
+        finally:
+            with self._queue_cond:
+                del self._queue[:len(batch)]
+                for *_ignored, box in batch:
+                    box["done"] = True
+                self._queue_cond.notify_all()
 
     def _apply_append(self, stream_id, events, expected_version, created,
                       rows_sink: list, touched: set) -> int:
@@ -741,120 +753,37 @@ class EventLogWriter:
         self._recover()
         self._core.last_position = self._last_position
 
-    # -- group commit (RequestManager batching analog) --
-    def _append_grouped(self, stream_id, events, expected_version, created) -> int:
-        box: dict = {"done": threading.Event()}
-        with self._group_cond:
-            # append() after close() must FAIL like the non-grouped path
-            # does (via _verify_fence), not park forever on a collector
-            # that exited (ADVICE r5)
-            if self._group_stop.is_set():
-                raise WriterFencedError(
-                    f"writer for {self.path} was closed — open a new "
-                    "EventLogWriter"
-                )
-            self._group_q.append((stream_id, events, expected_version, created, box))
-            if self._group_thread is None or not self._group_thread.is_alive():
-                self._group_thread = threading.Thread(
-                    target=self._collector_loop, daemon=True
-                )
-                self._group_thread.start()
-            self._group_cond.notify_all()
-        box["done"].wait()
-        if "error" in box:
-            raise box["error"]
-        return box["result"]
-
-    def _drain_group_queue(self) -> None:
-        """Fail any queued appends instead of leaving their callers
-        parked (the close()-races-enqueue window: the up-front stop check
-        in _append_grouped can pass just before close() sets the flag)."""
-        with self._group_cond:
-            leftover, self._group_q[:] = list(self._group_q), []
-        for *_ignored, box in leftover:
-            if not box["done"].is_set():
-                box.setdefault(
-                    "error",
-                    WriterFencedError(
-                        f"writer for {self.path} was closed — open a new "
-                        "EventLogWriter"
-                    ),
-                )
-                box["done"].set()
-
-    def _collector_loop(self) -> None:
-        import time as _time
-
-        while not self._group_stop.is_set():
-            with self._group_cond:
-                while not self._group_q and not self._group_stop.is_set():
-                    self._group_cond.wait(timeout=0.5)
-                if self._group_stop.is_set() and not self._group_q:
-                    return
-            _time.sleep(self._group_window)  # gather the group
-            with self._group_cond:
-                batch = list(self._group_q)
-                self._group_q.clear()
-            try:
-                with self._core.mutex:
-                    self._commit_group(batch)
-            finally:
-                # the collector must NEVER leave a caller parked: any
-                # box not resolved by _commit_group (unexpected error)
-                # fails loudly instead of hanging its append()
-                for *_ignored, box in batch:
-                    if not box["done"].is_set():
-                        box.setdefault(
-                            "error",
-                            RuntimeError("group commit failed unexpectedly"),
-                        )
-                        box["done"].set()
-        self._drain_group_queue()  # stop raced an enqueue — fail it loudly
-
     def _commit_group(self, batch: list) -> None:
+        """Apply the queued appends in order and commit all their rows as
+        ONE file. A rejection errors only its own caller. Anything raised
+        from here fails every caller of the group not already rejected."""
+        _verify_fence(self._core)
         rows: list[tuple] = []
         touched: set[str] = set()
-        try:
-            _verify_fence(self._core)
-        except BaseException as e:
-            for *_ignored, box in batch:
-                box["error"] = e
-                box["done"].set()
-            return
-        aborted = None
         for sid, events, expected, created, box in batch:
-            if aborted is not None:
-                box["error"] = aborted
-                continue
             rows_before, touched_before = len(rows), set(touched)
             try:
                 box["result"] = self._apply_append(
                     sid, events, expected, created, rows, touched
                 )
             except BaseException as e:
-                if len(rows) > rows_before or touched != touched_before:
-                    # MID-APPLY failure (infrastructure, not a rejection):
-                    # state for this append is half-applied and later
-                    # appends would check against it — abort the whole
-                    # group, restore from the durable log, commit nothing
-                    del rows[rows_before:]
-                    self._rollback(touched)
-                    aborted = e
-                box["error"] = e  # rejection, or first aborted append
-        if aborted is not None:
-            for *_ignored, box in batch:
-                box.pop("result", None)
-                box.setdefault("error", aborted)
-        if rows and aborted is None:
+                box["error"] = e
+                if (len(rows) > rows_before or touched != touched_before
+                        or not isinstance(e, Exception)):
+                    # not a rejection (those raise before any mutation):
+                    # a MID-APPLY failure leaves this append half-applied
+                    # and later appends would check against it, and an
+                    # interrupt stops the group — abort the whole group,
+                    # restore from the durable log, commit nothing
+                    if touched:
+                        self._rollback(touched)
+                    raise
+        if rows:
             try:
                 self._commit(rows)
-            except BaseException as e:
+            except BaseException:
                 self._rollback(touched)
-                for *_ignored, box in batch:
-                    box.pop("result", None)
-                    box.setdefault("error", e)
-        for *_ignored, box in batch:
-            box["done"].set()
+                raise
 
     def _publish_append(self, names: list[str]) -> None:
         """Publish an append commit's files to the manifest as a CAS
@@ -1133,12 +1062,6 @@ class EventLogWriter:
         if self._read_only:
             return  # never held the fence — and must not release the
             # owning writer's claim through the shared core
-        self._group_stop.set()
-        with self._group_cond:
-            self._group_cond.notify_all()
-        if self._group_thread is not None:
-            self._group_thread.join(timeout=5)
-        self._drain_group_queue()  # never leave an enqueued caller parked
         with self._core.mutex:
             _release_fence(self._core)
 

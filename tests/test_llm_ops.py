@@ -1250,6 +1250,19 @@ def test_pq_zero_quantization_error_is_exact_l2(spark):
     assert got == exact
 
 
+def test_pq_topk_empty_corpus_raises_without_leaking_cache(spark):
+    """An empty corpus fails at codebook seeding; the corpus cache taken
+    before it must still be released (no extra persistent RDD)."""
+    def n_persistent() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    n0 = n_persistent()
+    with pytest.raises(IndexError):
+        sim.pq_topk(emb, [0], k=5, m=4, n_codes=8)
+    assert n_persistent() == n0
+
+
 def test_pq_codes_shape_and_determinism(vectors):
     books = sim.train_pq_codebooks(vectors, m=4, k=8, iters=2)
     assert len(books) == 4 and all(len(b) == 8 for b in books)

@@ -406,25 +406,37 @@ def test_fencing_wait_mode_acquires_after_release(spark, tmp_path):
 
 def test_group_commit_batches_concurrent_appends(spark, tmp_path):
     """Group commit (the reference RequestManager's many-in-flight-one-
-    storage-write shape): concurrent appends through the collector land
-    in FEWER commit files than appends, with the total order and
-    per-stream numbering exactly as if appended sequentially."""
+    storage-write shape): concurrent appends queued behind a committing
+    caller land in FEWER commit files than appends, with the total order
+    and per-stream numbering exactly as if appended sequentially. More
+    threads than cores and a short switch interval stress the queue
+    hand-off between callers."""
     import os as _os
+    import sys
     import threading
+    import time as _t
 
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
-    per_thread, n_threads = 8, 4
+    w = EventLogWriter(spark, path)
+    per_thread, n_threads = 8, 8
 
     def run(tid):
         for i in range(per_thread):
             w.append(f"s-{tid}", [ProposedEvent("E", f'{{"i": {i}}}')])
 
-    threads = [threading.Thread(target=run, args=(t,)) for t in range(n_threads)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    threads = [threading.Thread(target=run, args=(t,), daemon=True)
+               for t in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        deadline = _t.monotonic() + 120
+        for t in threads:
+            t.join(timeout=max(0.0, deadline - _t.monotonic()))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(not t.is_alive() for t in threads)
     n = per_thread * n_threads
     rows = w.load().collect()
     assert len(rows) == n
@@ -443,7 +455,7 @@ def test_group_commit_isolates_per_append_errors(spark, tmp_path):
     import threading
 
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
     results = {}
 
@@ -473,7 +485,7 @@ def test_group_commit_soft_delete_recreate_in_group(spark, tmp_path):
     """The recreate path's metastream write joins the SAME group commit
     (one file for stream rows + $tb rewrite)."""
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=30)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
     w.soft_delete("s-1")
     last = w.append("s-1", [ProposedEvent("B")])
@@ -497,7 +509,7 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
     import threading
 
     path = str(tmp_path / "log")
-    w = EventLogWriter(spark, path, group_commit_window_ms=40)
+    w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])  # durable baseline
 
     orig = EventLogWriter._current_meta
@@ -552,16 +564,74 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
 
 
 def test_group_commit_append_after_close_fails_fast(spark, tmp_path):
-    """append() on a CLOSED group-commit writer raises WriterFencedError
-    immediately (the non-grouped path's behavior) instead of parking
-    forever on a collector that exited (ADVICE r5)."""
+    """append() on a CLOSED writer raises WriterFencedError immediately
+    (through the fence check of the queued commit) instead of parking."""
     from eventstore_spark.writer import WriterFencedError
 
-    w = EventLogWriter(spark, str(tmp_path / "gclose"), group_commit_window_ms=30)
+    w = EventLogWriter(spark, str(tmp_path / "gclose"))
     w.append("s-1", [ProposedEvent("A")])
     w.close()
     with pytest.raises(WriterFencedError):
         w.append("s-1", [ProposedEvent("B")])
+
+
+def test_queued_appends_commit_as_one_group(spark, tmp_path):
+    """Appends queued while the core mutex is held commit as ONE parquet
+    file once it is released, and every caller gets its own outcome:
+    fresh streams, a wrong expected version, an idempotent retry and a
+    soft-delete recreate, with dense log positions."""
+    import os as _os
+    import threading
+    import time as _t
+
+    from eventstore_spark.writer import NO_STREAM
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    w.append("s-old", [ProposedEvent("A")])
+    w.append("s-idem", [ProposedEvent("A", event_id="fixed")])
+    w.append("s-del", [ProposedEvent("A")])
+    w.soft_delete("s-del")
+
+    def parquet_files():
+        return {f for f in _os.listdir(path) if f.endswith(".parquet")}
+
+    calls = {
+        "f-0": lambda: w.append("f-0", [ProposedEvent("B")]),
+        "f-1": lambda: w.append("f-1", [ProposedEvent("B"), ProposedEvent("C")]),
+        "wrong": lambda: w.append("s-old", [ProposedEvent("B")], expected_version=7),
+        "retry": lambda: w.append("s-idem", [ProposedEvent("A", event_id="fixed")],
+                                  expected_version=NO_STREAM),
+        "recreate": lambda: w.append("s-del", [ProposedEvent("B")]),
+    }
+    outcomes = {}
+
+    def run(name):
+        try:
+            outcomes[name] = calls[name]()
+        except Exception as e:
+            outcomes[name] = type(e).__name__
+
+    before = parquet_files()
+    threads = [threading.Thread(target=run, args=(n,), daemon=True) for n in calls]
+    with w._core.mutex:
+        for t in threads:
+            t.start()
+        deadline = _t.monotonic() + 30
+        while len(w._queue) < len(calls) and _t.monotonic() < deadline:
+            _t.sleep(0.01)
+        assert len(w._queue) == len(calls)
+    deadline = _t.monotonic() + 60
+    for t in threads:
+        t.join(timeout=max(0.0, deadline - _t.monotonic()))
+    assert all(not t.is_alive() for t in threads)
+    assert outcomes == {"f-0": 0, "f-1": 1, "wrong": "WrongExpectedVersionError",
+                        "retry": 0, "recreate": 1}
+    assert len(parquet_files() - before) == 1
+    rows = w.load().collect()
+    assert sorted(r.log_position for r in rows) == list(range(1, len(rows) + 1))
+    assert len(rows) == 4 + 3 + 2  # setup, fresh streams, recreate + $tb rewrite
+    w.close()
 
 
 def test_append_publish_is_cas_against_observed_manifest(spark, tmp_path):

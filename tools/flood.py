@@ -5,6 +5,7 @@ WriteFloodProcessor.cs:196-209, ReadFloodProcessor.cs:144-155), which print
 
 Usage:
     python tools/flood.py wrfl [streams] [events_per_stream] [payload_bytes]
+    python tools/flood.py wrflg [clients] [appends_per_client] [payload_bytes]
     python tools/flood.py rdfl [reads]
     python tools/flood.py bulk [rows]        # append_df distributed path
 
@@ -52,18 +53,21 @@ def wrfl(spark, streams: int = 20, per_stream: int = 10, size: int = 256) -> Non
     _report("wrfl", n, t0)
 
 
-def wrflg(spark, clients: int = 16, per_client: int = 25,
-          size: int = 256, window_ms: int = 5) -> None:
+def wrflg(spark, clients: int = 16, per_client: int = 25, size: int = 256) -> None:
     """Concurrent write flood through GROUP COMMIT — the reference
     testclient runs wrfl with --clients concurrent connections and the
     server's RequestManager batches them into shared storage writes;
-    here the writer's collector gathers concurrent append() calls into
-    one parquet commit per window."""
+    here every append() joins the writer's queue and the caller at its
+    front commits all queued appends as one parquet file. Each client's
+    stream is written once beforehand, so the timed appends measure
+    commits, not first-touch stream loads."""
     import threading
 
-    shutil.rmtree(WORKDIR, ignore_errors=True)
-    w = EventLogWriter(spark, WORKDIR, group_commit_window_ms=window_ms)
+    w = _fresh_writer(spark)
     payload = '{"d": "' + "x" * max(size - 10, 1) + '"}'
+    for c in range(clients):
+        w.append(f"flood-{c}", [ProposedEvent("Flood", payload)])
+    files_before = len(w.log_signature())
     t0 = time.time()
 
     def client(cid):
@@ -76,8 +80,9 @@ def wrflg(spark, clients: int = 16, per_client: int = 25,
     for t in threads:
         t.join()
     _report("wrflg", clients * per_client, t0)
+    print(f"wrflg: {len(w.log_signature()) - files_before} commit files")
     n = w.load().count()
-    assert n == clients * per_client, f"wrflg wrote {n}"
+    assert n == clients * (per_client + 1), f"wrflg wrote {n}"
     w.close()
 
 
