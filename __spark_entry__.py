@@ -1172,16 +1172,23 @@ def q_p6_fold_balance(spark, sf):
     visible rows are exactly the fold's; the cents expression reproduces
     ``_cents_py``'s float semantics operation for operation
     (floor(abs(v)*100 + 0.5) with the sign reattached — IEEE-identical in
-    Python and codegen). Equivalence against the row-at-a-time fold is
-    pinned by tests/test_projections.py::test_p6_vectorized_twin_matches_fold;
+    Python and codegen). A NULL or NaN ``value`` raises, as ``_cents_py``
+    does in the fold (sum() would skip a NULL that count() still counts,
+    and floor(NaN) casts to 0). Equivalence against the row-at-a-time fold
+    is pinned by tests/test_projections.py::test_p6_vectorized_twin_matches_fold;
     arbitrary user handlers still run the fold runtime (handler parity is
     the runtime's contract, not this query's).
     """
     from eventstore_spark.plans.reader_strategy import select_source
 
     src = select_source(load_envelope(spark, sf), _balance_projection())
-    mag = F.floor(F.abs(F.col("value")) * 100.0 + 0.5).cast("long")
-    signed = F.when(F.col("value") >= 0, mag).otherwise(-mag)
+    v = F.col("value")
+    mag = F.floor(F.abs(v) * 100.0 + 0.5).cast("long")
+    signed = (
+        F.when(v.isNull() | F.isnan(v),
+               F.raise_error(F.lit("p6_fold_balance: NULL or NaN value")))
+        .when(v >= 0, mag).otherwise(-mag)
+    )
     return (
         src.groupBy(F.col("stream_id").alias("partition"))
         .agg(
@@ -3228,7 +3235,9 @@ GROUP BY e.stream_id
     sqls["p6_fold_balance"] = _with_ev(
         f"""
 SELECT stream_id AS "partition", CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN {v_c} ELSE -{v_c} END) AS BIGINT) AS cents
+       CAST(sum(CASE WHEN value IS NULL OR isnan(value)
+                     THEN error('p6_fold_balance: NULL or NaN value')
+                     WHEN event_type = 'purchase' THEN {v_c} ELSE -{v_c} END) AS BIGINT) AS cents
 FROM ev WHERE event_type IN ('purchase', 'error') GROUP BY stream_id
 """
     )

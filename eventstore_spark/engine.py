@@ -35,6 +35,8 @@ from .schema import (
     STREAM_METADATA_SCHEMA,
     MAX_LONG,
     category_of,
+    query_scope,
+    scoped_cache,
 )
 from .sources import readers as R
 from .streaming.continuous import run_continuous
@@ -191,49 +193,36 @@ class EventStoreEngine:
         ``df`` overrides the log snapshot (time-travel reads)."""
         if df is None:
             df = self.writer.load()
-        metas = df.where(
-            df.stream_id.startswith(METASTREAM_PREFIX)
-            & (df.event_type == "$metadata")
-        )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("stream_id").orderBy(F.col("event_number").desc())
-        latest = (
-            metas.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(
-                F.expr(f"substring(stream_id, {len(METASTREAM_PREFIX) + 1})").alias("stream_id"),
-                F.get_json_object("data", "$.$maxCount").cast("long").alias("max_count"),
-                F.get_json_object("data", "$.$maxAge").cast("long").alias("max_age_seconds"),
-                F.get_json_object("data", "$.$tb").cast("long").alias("truncate_before"),
-                F.lit(False).alias("tombstoned"),
-                # $acl rides through as its JSON document (StreamAcl.cs:
-                # 11-34); $tmp as a boolean (StreamMetadata.cs:24,141);
-                # $cacheControl in seconds (StreamMetadata.cs:26)
-                F.get_json_object("data", "$.$acl").alias("acl"),
-                F.get_json_object("data", "$.$tmp").cast("boolean").alias("is_temp"),
-                F.get_json_object("data", "$.$cacheControl").cast("long")
-                .alias("cache_control_seconds"),
-            )
-        )
-        # ONE row per stream: full-outer-merge metadata with tombstones so
-        # a tombstone always wins even when the stream also has metadata —
-        # two rows here would duplicate events through the visibility join
+        # ONE aggregate keyed on the owner stream yields ONE row per
+        # stream: the latest `$$X` $metadata document (max_by skips the
+        # tombstone rows, whose ordering value is NULL) and a tombstone
+        # flag that wins even when the stream also has metadata — two
+        # rows here would duplicate events through the visibility join
         # and leave a tombstoned=False copy visible (hard delete must hide
         # the stream unconditionally, PrepareFlags.StreamDelete).
-        tombs = (
-            df.where(df.event_type == "$streamDeleted")
-            .select("stream_id")
-            .distinct()
-            .withColumn("_tomb", F.lit(True))
+        is_meta = (df.stream_id.startswith(METASTREAM_PREFIX)
+                   & (df.event_type == "$metadata"))
+        is_tomb = df.event_type == "$streamDeleted"
+        owner = F.when(is_meta, F.expr(
+            f"substring(stream_id, {len(METASTREAM_PREFIX) + 1})"
+        )).otherwise(F.col("stream_id"))
+        dim = df.where(is_meta | is_tomb).groupBy(owner.alias("stream_id")).agg(
+            F.max_by("data", F.when(is_meta, F.col("event_number"))).alias("data"),
+            F.max(is_tomb).alias("tombstoned"),
         )
-        return latest.join(tombs, "stream_id", "full_outer").select(
-            "stream_id", "max_count", "max_age_seconds", "truncate_before",
-            (
-                F.coalesce(F.col("tombstoned"), F.lit(False))
-                | F.coalesce(F.col("_tomb"), F.lit(False))
-            ).alias("tombstoned"),
-            "acl", "is_temp", "cache_control_seconds",
+        return dim.select(
+            "stream_id",
+            F.get_json_object("data", "$.$maxCount").cast("long").alias("max_count"),
+            F.get_json_object("data", "$.$maxAge").cast("long").alias("max_age_seconds"),
+            F.get_json_object("data", "$.$tb").cast("long").alias("truncate_before"),
+            "tombstoned",
+            # $acl rides through as its JSON document (StreamAcl.cs:
+            # 11-34); $tmp as a boolean (StreamMetadata.cs:24,141);
+            # $cacheControl in seconds (StreamMetadata.cs:26)
+            F.get_json_object("data", "$.$acl").alias("acl"),
+            F.get_json_object("data", "$.$tmp").cast("boolean").alias("is_temp"),
+            F.get_json_object("data", "$.$cacheControl").cast("long")
+            .alias("cache_control_seconds"),
         )
 
     # ---------------------------------------------------------------- writes
@@ -1208,13 +1197,11 @@ class EventStoreEngine:
         self._write_system_links_marker("continuous", prev_pos)
 
         def sink(batch_df, batch_id):
-            batch_df.persist()
-            try:
+            with query_scope():
+                scoped_cache(batch_df)
                 self.writer.append_df(
                     sysproj.system_link_rows(batch_df, corr_path))
                 head = batch_df.agg(F.max("log_position")).first()[0]
-            finally:
-                batch_df.unpersist()
             if head is not None:
                 cur = self._system_links_info() or {}
                 self._write_system_links_marker(
@@ -1494,8 +1481,8 @@ class EventStoreEngine:
                 # micro-batch (restart from checkpoint) idempotent. Nothing
                 # is ever collect()ed to the driver, so a foreachStream
                 # projection over millions of streams stays executor-bound.
-                batch_df.persist()
-                try:
+                with query_scope():
+                    scoped_cache(batch_df)
                     emissions = (
                         batch_df.where(F.col("kind").isin("emit", "link")).select(
                             F.col("emit_stream").alias("stream_id"),
@@ -1524,8 +1511,6 @@ class EventStoreEngine:
                         .write.mode("overwrite")
                         .parquet(os.path.join(state_dir, f"batch={batch_id}"))
                     )
-                finally:
-                    batch_df.unpersist()
 
             w = out.writeStream.outputMode("update").foreachBatch(sink)
             if checkpoint_dir:

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import fingerprint, shingles, sql_shingles, SQL_FINGERPRINT
-from ..schema import spread, scoped_cache, scoped_persist
+from ..schema import query_scope, spread, scoped_cache, scoped_persist
 
 # Storage level for CORPUS-SIZED cached projections (r14-opt, guide §5;
 # same rationale as stats._CORPUS_CACHE): serialized columnar batches
@@ -485,9 +485,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col="doc_id", text_col="text",
 
     SCALE VALVE (r10, VERDICT r9 "What's wrong #1"): the exact default's
     Σ df² join volume is superlinear on any corpus with hot shingles —
-    and NATURAL text always has them: on the Zipfian probe
-    (tools/zipf_df_probe.py, s=1.1 vocabulary, PLANS.md §"Zipf df
-    measurement") the top stop-word trigram's df grows ∝ corpus size, so
+    and NATURAL text always has them: on a Zipfian corpus (s=1.1
+    vocabulary, PLANS.md §"Zipf df measurement") the top stop-word trigram's df grows ∝ corpus size, so
     doubling the corpus ~quadruples the join's hottest key group. The
     exact default therefore MEASURES before it joins: one map-side
     df aggregate (cheap next to the join it guards), and a RuntimeWarning
@@ -827,13 +826,11 @@ def build_minhash_index(docs: DataFrame, path: str, id_col="doc_id",
     other.
     """
     rows = num_hashes // bands
-    sigs = _sigs_with_sets(docs, id_col, text_col, num_hashes, shingle_n).cache()
-    try:
+    with query_scope():
+        sigs = _sigs_with_sets(docs, id_col, text_col, num_hashes, shingle_n).transform(scoped_cache)
         _band_rows(sigs, bands, rows).write.mode("append").parquet(f"{path}/bands")
         sigs.select("doc_id", "sset").write.mode("append").parquet(f"{path}/sets")
         n = sigs.count()
-    finally:
-        sigs.unpersist()
     return {"docs_indexed": n, "path": path, "bands": bands,
             "num_hashes": num_hashes, "shingle_n": shingle_n}
 
@@ -910,7 +907,8 @@ def minhash_pairs_incremental(new_docs: DataFrame, spark, index_path: str,
     sets) and is cached; as with `minhash_lsh_pairs`, the cache lives
     until the session drops it — at warehouse scale both are reads of a
     persisted signature table. `streaming_minhash_dedup` uses the
-    internal per-batch variant that unpersists after every micro-batch.
+    internal per-batch variant whose query_scope drops it after every
+    micro-batch.
     """
     rows = num_hashes // bands
     sigs = _sigs_with_sets(new_docs, id_col, text_col, num_hashes, shingle_n).transform(scoped_cache)
@@ -937,24 +935,23 @@ def streaming_minhash_dedup(stream: DataFrame, spark, index_path: str,
     (idempotent), which is what makes the pipeline exactly-once
     end-to-end. The survivors' signatures are computed once per batch
     and reused for both the pair search and the index fold; all
-    per-batch caches are dropped in ``finally``. State is the persisted
-    index, not the state store, so the dedup horizon is the whole
-    indexed corpus (contrast `streaming_exact_dedup`'s keyed state).
+    per-batch caches are dropped when the batch's query_scope exits.
+    State is the persisted index, not the state store, so the dedup
+    horizon is the whole indexed corpus (contrast `streaming_exact_dedup`'s keyed state).
     The index directory uses epoch-partitioned layout — don't mix it
     with `build_minhash_index`'s flat layout.
     """
     rows = num_hashes // bands
 
     def _fold(batch_df, epoch_id):
-        batch_df = batch_df.persist()
-        sigs = pairs = survivors = None
-        try:
+        with query_scope():
+            batch_df = scoped_cache(batch_df)
             if batch_df.isEmpty():
                 return
             sigs = _sigs_with_sets(
                 batch_df.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
                 "doc_id", text_col, num_hashes, shingle_n,
-            ).persist()
+            ).transform(scoped_cache)
             # index presence via the Hadoop FS API, not a driver-local
             # isdir() — the index may live on any Hadoop filesystem
             # (hdfs://, s3a://); a read-attempt probe would work too but
@@ -965,7 +962,7 @@ def streaming_minhash_dedup(stream: DataFrame, spark, index_path: str,
             if has_index:
                 pairs = _incremental_pairs(
                     sigs, spark, index_path, bands, rows, threshold
-                ).persist()
+                ).transform(scoped_cache)
                 _, idx_sets = _read_index(spark, index_path)
                 indexed = idx_sets.select(
                     F.col("doc_id").alias("_idx_id"), F.lit(True).alias("_idx")
@@ -997,11 +994,11 @@ def streaming_minhash_dedup(stream: DataFrame, spark, index_path: str,
                 pairs = minhash_lsh_pairs(
                     batch_df, id_col, text_col, num_hashes, bands,
                     shingle_n, threshold,
-                ).persist()
+                ).transform(scoped_cache)
                 victims = pairs.select(F.col("b").alias("victim")).distinct()
             survivors = batch_df.join(
                 victims, batch_df[id_col] == victims["victim"], "left_anti"
-            ).persist()
+            ).transform(scoped_cache)
             survivors.write.mode("overwrite").parquet(
                 f"{out_path}/epoch={int(epoch_id)}"
             )
@@ -1015,10 +1012,6 @@ def streaming_minhash_dedup(stream: DataFrame, spark, index_path: str,
             surv_sigs.select("doc_id", "sset").write.mode("overwrite").parquet(
                 f"{index_path}/sets/epoch={int(epoch_id)}"
             )
-        finally:
-            for df in (pairs, survivors, sigs, batch_df):
-                if df is not None:
-                    df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_fold)
@@ -1978,9 +1971,8 @@ def streaming_bloom_dedup(stream: DataFrame, spark, index_path: str,
     bitset rather than a corpus-sized keyed store.
     """
     def _fold(batch_df, epoch_id):
-        batch_df = batch_df.persist()
-        probed = survivors = positions = None
-        try:
+        with query_scope():
+            batch_df = scoped_cache(batch_df)
             if batch_df.isEmpty():
                 return
             jpath = spark._jvm.org.apache.hadoop.fs.Path(
@@ -1997,11 +1989,11 @@ def streaming_bloom_dedup(stream: DataFrame, spark, index_path: str,
                 # the stream)
                 positions = _bloom_index_part(
                     spark, f"{index_path}/positions", "pos",
-                    exclude_epoch=int(epoch_id)).persist()
+                    exclude_epoch=int(epoch_id)).transform(scoped_cache)
                 probed = bloom_probe_indexed(
                     batch_df, spark, index_path, id_col, text_col,
                     m_bits, k, exclude_epoch=int(epoch_id),
-                    positions=positions).persist()
+                    positions=positions).transform(scoped_cache)
                 cross_dups = probed.where("is_dup").select("doc_id")
             else:
                 cross_dups = base.limit(0).select("doc_id")
@@ -2013,7 +2005,8 @@ def streaming_bloom_dedup(stream: DataFrame, spark, index_path: str,
                 .select("doc_id", "fp")
             )
             survivors = (
-                batch_keep.join(cross_dups, "doc_id", "left_anti").persist())
+                batch_keep.join(cross_dups, "doc_id", "left_anti")
+                .transform(scoped_cache))
             keep_ids = survivors.select(F.col("doc_id").alias("_keep_id"))
             (batch_df.join(keep_ids,
                            batch_df[id_col] == F.col("_keep_id"), "left_semi")
@@ -2028,10 +2021,6 @@ def streaming_bloom_dedup(stream: DataFrame, spark, index_path: str,
             (survivors.select("fp").distinct()
              .write.mode("overwrite")
              .parquet(f"{index_path}/fps/epoch={int(epoch_id)}"))
-        finally:
-            for df in (probed, survivors, positions, batch_df):
-                if df is not None:
-                    df.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_fold)

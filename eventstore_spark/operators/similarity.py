@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine, spark_sql_cosine, spark_sql_lit_array, sql_cosine
-from ..schema import spread, scoped_cache
+from ..schema import query_scope, spread, scoped_cache
 
 
 def brute_force_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
@@ -267,9 +267,9 @@ def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = 16,
             F.col(id_col).alias("vec_id"),
             F.expr(_quantize_sql(vec_col)).alias("qvec"),
         )
-        .cache()
     )
-    try:
+    with query_scope():
+        base = scoped_cache(base)
         seeds = (
             base.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
             .orderBy("_h", "vec_id")
@@ -304,8 +304,6 @@ def train_ivf_centroids(embeddings: DataFrame, n_centroids: int = 16,
                 for c in range(len(cents))
             ]
         return cents
-    finally:
-        base.unpersist()
 
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
@@ -1097,9 +1095,9 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, k: int = 16,
         spread(embeddings)
         .select(F.col(id_col).alias("vec_id"),
                 F.expr(qexpr).alias("qvec"))
-        .cache()
     )
-    try:
+    with query_scope():
+        base = scoped_cache(base)
         seeds = (
             base.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
             .orderBy("_h", "vec_id")
@@ -1116,8 +1114,6 @@ def train_pq_codebooks(embeddings: DataFrame, m: int = 8, k: int = 16,
             for s in range(m)
         ]
         return _pq_train_iters(base, books, m, k, iters, d)
-    finally:
-        base.unpersist()
 
 
 def _pq_train_iters(base, books, m: int, k: int, iters: int, d: int):
@@ -1238,7 +1234,6 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         spread(embeddings)
         .select(F.col(id_col).alias("vec_id"),
                 F.expr(_quantize_sql(vec_col)).alias("qvec"))
-        .cache()
     )
     seed_side = (
         base.withColumn("_h", F.md5(F.col("vec_id").cast("string")))
@@ -1251,7 +1246,8 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
         .withColumn("_h", F.md5(F.col("vec_id").cast("string")))
         .withColumn("_seed", F.lit(False))
     )
-    try:
+    with query_scope():
+        scoped_cache(base)
         rows = seed_side.unionByName(query_side).collect()
         seeds = sorted((r for r in rows if r["_seed"]), key=lambda r: (r["_h"], r["vec_id"]))
         qrows = [r.asDict() | {"query_id": r["vec_id"]} for r in rows if not r["_seed"]]
@@ -1264,16 +1260,14 @@ def pq_topk(embeddings: DataFrame, query_ids: list[int], k: int = 10,
             for s in range(m)
         ]
         books = _pq_train_iters(base, books, m, kk, iters, d)
-        cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
-        codes = base.select(
-            "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
-        ).transform(scoped_cache)
-    finally:
-        # the scoring action recomputes base's lineage once into the codes
-        # cache (one corpus pass, same as the old pq_encode scan) instead of
-        # pinning the corpus-sized qvec table for the query's lifetime; an
-        # empty corpus or a failed training pass must not leak it either
-        base.unpersist()
+    # codes escapes in the returned lazy frame, so it is cached after the
+    # scope closes: the scoring action recomputes base's lineage once into
+    # it (one corpus pass, same as the old pq_encode scan) instead of
+    # pinning the corpus-sized qvec table for the query's lifetime
+    cols = [_pq_code_sql("qvec", books[s], s * d + 1, d) for s in range(m)]
+    codes = base.select(
+        "vec_id", F.expr("array({})".format(", ".join(cols))).alias("codes")
+    ).transform(scoped_cache)
     per_query = []
     for r in sorted(qrows, key=lambda r: r["query_id"]):
         qv = [int(x) for x in r["qvec"]]
@@ -2400,9 +2394,9 @@ def pca_power_scores(embeddings: DataFrame, iterations: int = 3,
         spread(embeddings)
         .select(F.col(id_col).alias("vec_id"),
                 F.expr(_quantize_sql(vec_col)).alias("q"))
-        .cache()
     )
-    try:
+    with query_scope():
+        q = scoped_cache(q)
         mean_row = q.agg(
             F.count(F.lit(1)).alias("n"),
             *[F.sum(F.expr(f"CAST(element_at(q, {d + 1}) AS DECIMAL(38,0))"))
@@ -2440,8 +2434,6 @@ def pca_power_scores(embeddings: DataFrame, iterations: int = 3,
             for j in range(dim)
         )
         return q.select("vec_id", F.expr(out_sql).cast("long").alias("pc1"))
-    finally:
-        q.unpersist()
 
 
 def sql_pca_power_scores(iterations: int = 3, base: int = 1_000_000,
@@ -2639,10 +2631,8 @@ def kcenter_select(embeddings: DataFrame, k: int = 8, dim: int = 64,
             f"* (element_at(q, {j + 1}) - {c[j]}L)"
             for j in range(dim))
 
-    cached = []
-    try:
-        cur = base.cache()
-        cached.append(cur)
+    with query_scope() as cached:
+        cur = scoped_cache(base)
         first = cur.orderBy("vec_id").limit(1).collect()
         if not first:
             return cur.select("vec_id",
@@ -2655,8 +2645,7 @@ def kcenter_select(embeddings: DataFrame, k: int = 8, dim: int = 64,
             F.struct(
                 F.expr(f"CAST({d2_sql(cq0)} AS BIGINT)").alias("d2"),
                 F.lit(cid0).cast("long").alias("cid"),
-            ).alias("best")).cache()
-        cached.append(cur)
+            ).alias("best")).transform(scoped_cache)
 
         for _ in range(k - 1):
             far = (
@@ -2676,8 +2665,7 @@ def kcenter_select(embeddings: DataFrame, k: int = 8, dim: int = 64,
                         F.expr(f"CAST({d2_sql(cq)} AS BIGINT)").alias("d2"),
                         F.lit(cid).cast("long").alias("cid"),
                     ),
-                ).alias("best")).cache()
-            cached.append(cur)
+                ).alias("best")).transform(scoped_cache)
             if len(cached) > 2:  # keep the newest two live, evict the rest
                 cached.pop(0).unpersist()
 
@@ -2686,9 +2674,6 @@ def kcenter_select(embeddings: DataFrame, k: int = 8, dim: int = 64,
             F.col("best.cid").alias("center_id"),
             F.col("best.d2").alias("d2"),
         )
-    finally:
-        for c in cached:
-            c.unpersist()
 
 
 def sql_kcenter_select(k: int = 8, dim: int = 64,

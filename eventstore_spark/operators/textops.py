@@ -13,8 +13,7 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 from ..functions import text as X
-from ..plans import join_strategy
-from ..plans.join_strategy import guarded_broadcast
+from ..plans.join_strategy import broadcast_if_small, guarded_broadcast
 from ..schema import spread, scoped_cache, scoped_persist
 
 
@@ -1948,6 +1947,9 @@ def kn_perplexity(docs: DataFrame, train_source: str = "src0",
         "(a, b) -> named_struct('w1', a, 'w2', b))"
     )
     def bigrams(df):
+        # the != '' filter also drops NULL tokens (NULL != '' is NULL),
+        # so c2 holds no NULL w1/w2 and the countDistinct guard counts
+        # below are exact group counts
         return (
             df.select("doc_id", F.explode(F.expr(
                 f"IF(size(_toks) < 2, array(), {bigram_structs})")).alias("p"))
@@ -1980,17 +1982,10 @@ def kn_perplexity(docs: DataFrame, train_source: str = "src0",
         F.count(F.lit(1)), F.countDistinct("w1"), F.countDistinct("w2")
     ).first()
 
-    def _guard(df, n):
-        # module attribute read at call time — tests (and operator config
-        # passes) lower the bound to drive the fallback path
-        if n <= join_strategy.DEFAULT_MAX_BROADCAST_ROWS:
-            return F.broadcast(df)
-        return df.hint("shuffle_hash")
-
     scored = (
-        eb.join(_guard(c2, n_c2), ["w1", "w2"], "left")
-        .join(_guard(h, n_h), "w1", "left")
-        .join(_guard(cont, n_cont), "w2", "left")
+        eb.join(broadcast_if_small(c2, n_c2), ["w1", "w2"], "left")
+        .join(broadcast_if_small(h, n_h), "w1", "left")
+        .join(broadcast_if_small(cont, n_cont), "w2", "left")
         .crossJoin(F.broadcast(btot))
         .withColumn("n1p_eff", F.greatest(F.coalesce(F.col("n1p"), F.lit(0)), F.lit(1)))
         # num/den as DECIMAL(38,0): at 100-TB scale B (distinct bigram

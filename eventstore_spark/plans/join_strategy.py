@@ -56,17 +56,24 @@ def guarded_broadcast(df: DataFrame,
     the price of measuring instead of assuming. Pass ``cache=False`` for
     sides too large to be worth pinning when they overflow the bound.
     """
+    if cache:
+        # scoped (schema.query_scope): model tables stay hot for the
+        # query's lifetime, then the enclosing scope drops them
+        df = df.transform(scoped_persist(StorageLevel.MEMORY_AND_DISK))
+    return broadcast_if_small(df, df.count(), max_rows)
+
+
+def broadcast_if_small(df: DataFrame, n: int,
+                       max_rows: int | None = None) -> DataFrame:
+    """The one broadcast decision: ``F.broadcast(df)`` iff its measured
+    row count ``n`` is within ``max_rows``, else a ``shuffle_hash`` hint.
+    Callers that measure several sides in one fused aggregate pass their
+    counts here directly instead of paying one eager count per side."""
     if max_rows is None:
         # read the module constant at CALL time so a test (or an operator
         # config pass) can lower the bound and drive the fallback path
         # without materializing millions of rows
         max_rows = DEFAULT_MAX_BROADCAST_ROWS
-    if cache:
-        # registered for session-scoped release (r14 cache lifecycle):
-        # model tables stay hot for the query's lifetime, then
-        # release_query_caches() drops them with everything else
-        df = df.transform(scoped_persist(StorageLevel.MEMORY_AND_DISK))
-    n = df.count()
     if n <= max_rows:
         return F.broadcast(df)
     return df.hint("shuffle_hash")

@@ -19,58 +19,67 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 # ---------------------------------------------------------------------------
-# Query-scoped cache lifecycle (r14-opt, guide §5: "unpersist when done")
+# Query-scoped cache lifecycle (guide §5: "unpersist when done")
 # ---------------------------------------------------------------------------
-# Registry queries cache reused subtrees but return LAZY DataFrames, so no
-# operator can know when the caller's terminal action has run — unpersist-
-# after-action must be the session's job. Every cache a query path creates
-# goes through scoped_cache(), which registers the handle; a long-lived
-# session calls release_query_caches() after consuming a query's result
-# (the bench/oracle harnesses' clearCache() remains a superset of this).
-# Without a release, a session that runs the whole registry accumulates
-# every query's cached tables until memory pressure — measured and fixed
-# this round (OPTIMIZATION_r14.md §6: 0 cached relations remain after
-# running the caching query families + one release call).
+# The library's one cache-lifecycle mechanism. Every cache goes through
+# scoped_cache(); inside ``with query_scope():`` the handle is registered
+# on the innermost scope of the calling thread and unpersisted when that
+# scope exits, normally or by an exception — the way a micro-batch's
+# cached input is dropped once the batch is consumed. A function opens a
+# scope only when every consumer of its caches runs inside it; a cache
+# that escapes in a returned lazy DataFrame is made outside any scope of
+# the function, and the caller that runs the action owns its release
+# (its own enclosing scope, or the harnesses' spark.catalog.clearCache()).
 
-_QUERY_CACHES: list[DataFrame] = []
+_SCOPES = threading.local()
+
+
+@contextmanager
+def query_scope():
+    """Open a cache scope on this thread; yields the list of handles
+    registered in it and unpersists each one on exit. Scopes nest: an
+    inner scope releases only its own handles, and a scope on one thread
+    never sees another thread's."""
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    held: list[DataFrame] = []
+    stack.append(held)
+    try:
+        yield held
+    finally:
+        stack.pop()
+        for df in held:
+            try:
+                df.unpersist()
+            except Py4JError:  # session already stopped — nothing to release
+                pass
 
 
 def scoped_cache(df: DataFrame, level=None) -> DataFrame:
-    """persist() + register for session-scoped release. ``level=None``
-    uses Spark's DataFrame default (deserialized MEMORY_AND_DISK)."""
+    """persist() + register on the innermost open query_scope() of this
+    thread (outside any scope it only persists). ``level=None`` uses
+    Spark's DataFrame default (deserialized MEMORY_AND_DISK)."""
     out = df.persist(level) if level is not None else df.cache()
-    _QUERY_CACHES.append(out)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(out)
     return out
 
 
 def scoped_persist(level):
     """Curried scoped_cache for ``.transform(scoped_persist(level))``
-    chains (keeps conversion of existing ``.persist(level)`` call sites
-    purely suffix-textual)."""
+    chains."""
     return lambda df: scoped_cache(df, level)
-
-
-def release_query_caches() -> int:
-    """Unpersist every cache registered since the last release; returns
-    how many were released. Safe to call at any point between actions —
-    a consumer that still needs a released subtree just recomputes it."""
-    n = 0
-    while _QUERY_CACHES:
-        df = _QUERY_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n
 
 # ---------------------------------------------------------------------------
 # Envelope schema (FIXTURES.md F1)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.filters import EventFilter, default_all_filter
-from ..schema import EVENTS_SCHEMA
+from ..schema import EVENTS_SCHEMA, query_scope, scoped_cache
 
 
 def _maintenance_safe_predicate(log_path: str,
@@ -587,10 +587,8 @@ def start_with_markers(
         if committed is None:
             committed = [f for f in os.listdir(log_path)
                          if f.endswith(".parquet")]
-        cached = batch_df.persist()  # keep THIS reference for unpersist —
-        # rebinding to .drop(...) would unpersist a different plan and
-        # leak one cached micro-batch per trigger (round-8 review)
-        try:
+        with query_scope():
+            cached = scoped_cache(batch_df)
             files = {
                 os.path.basename(r[0])
                 for r in cached.select("_marker_src_file").distinct().collect()
@@ -646,8 +644,6 @@ def start_with_markers(
             if not state["live"] and not pending_after:
                 state["live"] = True
                 on_marker("CaughtUp", batch_id)
-        finally:
-            cached.unpersist()
 
     return start_foreach_batch(raw, fn, checkpoint_location,
                                available_now=available_now)
@@ -706,8 +702,8 @@ def start_all_with_checkpoints(
     state = {"batches": 0}
 
     def fn(batch_df, batch_id):
-        batch_df.persist()
-        try:
+        with query_scope():
+            scoped_cache(batch_df)
             matches = batch_df.where(pred) if pred is not None else batch_df
             state["batches"] += 1
             ckpt = None
@@ -716,7 +712,5 @@ def start_all_with_checkpoints(
                 if head is not None:
                     ckpt = int(head)
             on_batch(matches, ckpt, batch_id)
-        finally:
-            batch_df.unpersist()
 
     return start_foreach_batch(raw, fn, checkpoint_location)

@@ -70,6 +70,8 @@ from .schema import (
     METASTREAM_PREFIX,
     STREAM_DELETED_EVENT_TYPE,
     MAX_LONG,
+    query_scope,
+    scoped_cache,
 )
 
 # ExpectedVersion sentinel values (Data/ExpectedVersion.cs:6-13)
@@ -879,8 +881,8 @@ class EventLogWriter:
             if len(sids) <= 10_000:
                 log = log.where(F.col("stream_id").isin(sids))
             b = b.join(log, ["stream_id", "event_id"], "left_anti")
-        b = b.cache()
-        try:
+        with query_scope():
+            b = scoped_cache(b)
             # one job yields per-stream counts AND the size guard: the
             # single-event path validates MAX_RECORD_SIZE (TFConsts parity)
             # in _validate_sizes; the bulk path must enforce the same bound
@@ -990,8 +992,6 @@ class EventLogWriter:
                 self._ids.pop(sid, None)
                 self._bump_stream_gen(sid)
             self._notify_commit()
-        finally:
-            b.unpersist()
 
     # pyarrow schema mirroring EVENTS_SCHEMA (timestamp µs UTC — what
     # Spark's TimestampType reads back bit-identically).

@@ -49,6 +49,49 @@ def test_stream_metadata_retention(engine):
     assert raw.where("stream_id = '$$account-1'").count() == 1
 
 
+def test_metadata_dimension_is_one_aggregate(engine):
+    """The metadata dimension is one groupBy on the owner stream: the
+    latest `$$X` document per stream, and a tombstone that wins over
+    metadata. Reads over a store with metadata stay within these Spark
+    job counts (the window + distinct + full-outer-join form ran 10, 21
+    and 21 on this store)."""
+    import uuid
+
+    engine.set_stream_metadata("account-1", max_count=1)
+    engine.set_stream_metadata("account-2", truncate_before=0)
+    engine.set_stream_metadata("account-2", truncate_before=1, acl={"$r": ["ops"]})
+    engine.set_stream_metadata("chat-1", max_age_seconds=3600)
+    engine.delete_stream("chat-1", hard=True)
+    dim = {r.stream_id: (r.max_count, r.max_age_seconds, r.truncate_before,
+                         r.tombstoned, r.acl)
+           for r in engine.stream_metadata().collect()}
+    assert dim == {
+        "account-1": (1, None, None, False, None),
+        "account-2": (None, None, 1, False, '{"$r":["ops"]}'),
+        "chat-1": (None, 3600, None, True, None),
+    }
+
+    sc = engine.spark.sparkContext
+
+    def jobs(read):
+        group = f"md-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {
+        "read_event": jobs(lambda: engine.read_event("account-1", 1).collect()),
+        "read_stream_page": jobs(lambda: engine.read_stream_page(
+            "account-1", None, 1, backward=True)),
+        "read_all_page": jobs(lambda: engine.read_all_page(0, 10)),
+    }
+    caps = {"read_event": 7, "read_stream_page": 15, "read_all_page": 15}
+    assert all(got[k] <= caps[k] for k in caps), got
+
+
 def test_soft_delete_and_recreate(engine):
     engine.delete_stream("account-2")
     assert engine.read_stream("account-2").count() == 0

@@ -1263,6 +1263,25 @@ def test_pq_topk_empty_corpus_raises_without_leaking_cache(spark):
     assert n_persistent() == n0
 
 
+def test_pq_topk_codes_cache_outlives_its_training_scope(vectors):
+    """pq_topk releases its training cache on return, but the code table
+    escapes in the returned lazy frame: built inside a caller's scope,
+    the result still reads codes through the cache, and the caller's
+    scope owns its release."""
+    from pyspark import StorageLevel
+
+    from eventstore_spark.schema import query_scope
+
+    with query_scope() as held:
+        out = sim.pq_topk(vectors, [0, 1], k=3, m=4, n_codes=8)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+        assert len(held) == 1  # codes only; training's base was released
+        assert held[0].storageLevel != StorageLevel.NONE
+        assert out.count() == 6
+    assert held[0].storageLevel == StorageLevel.NONE
+
+
 def test_pq_codes_shape_and_determinism(vectors):
     books = sim.train_pq_codebooks(vectors, m=4, k=8, iters=2)
     assert len(books) == 4 and all(len(b) == 8 for b in books)

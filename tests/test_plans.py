@@ -1214,30 +1214,118 @@ def test_classifier_apply_scoring_is_a_literal_lut_fold(parquet_docs):
     assert "SinglePartition" not in plan
 
 
-def test_release_query_caches_empties_cache_manager(spark):
-    """r14 cache lifecycle: registry queries register every cache through
-    scoped_cache(); release_query_caches() after the terminal action must
-    drop each of them from the SQL cache manager, so a long-lived session
-    running many queries does not accumulate cached tables (guide §5:
-    unpersist when done). Only the query's own caches are checked: other
-    tests' session-scoped caches come and go with test order."""
+def test_query_scope_empties_cache_manager(spark):
+    """Registry queries register every cache through scoped_cache(); the
+    query_scope() around the terminal action must drop each of them from
+    the SQL cache manager on exit, so a long-lived session running many
+    queries does not accumulate cached tables (guide §5: unpersist when
+    done). Only the query's own caches are checked: other tests'
+    session-scoped caches come and go with test order."""
     from pyspark import StorageLevel
 
     import __spark_entry__ as entry
-    from eventstore_spark import schema
-    from eventstore_spark.schema import release_query_caches
+    from eventstore_spark.schema import query_scope
 
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"
 
-    release_query_caches()  # drop anything a prior test left registered
     # one query per caching family: quantiles (stats), LSH dedup (dedup),
     # entry-level reuse caches (tpch_q2), trained-model path (ann_pq)
     for name in ["exact_quantiles", "dedup_minhash_pairs",
                  "tpch_q2_min_cost_supplier", "ann_pq"]:
-        qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-        registered = list(schema._QUERY_CACHES)
-        assert release_query_caches() > 0, f"{name} registered no caches"
+        with query_scope() as held:
+            qs[name](spark, sf).write.format("noop").mode("overwrite").save()
+            registered = list(held)
+        assert registered, f"{name} registered no caches"
         # storageLevel asks the cache manager: NONE once uncached
         assert all(df.storageLevel == StorageLevel.NONE
                    for df in registered), name
+
+
+def test_query_scope_releases_on_raise(spark):
+    from pyspark import StorageLevel
+
+    from eventstore_spark.schema import query_scope, scoped_cache
+
+    with pytest.raises(RuntimeError):
+        with query_scope() as held:
+            df = scoped_cache(spark.range(1101))
+            df.count()
+            raise RuntimeError("consumer failed")
+    assert held == [df]
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_nested_query_scope_releases_only_its_own(spark):
+    from pyspark import StorageLevel
+
+    from eventstore_spark.schema import query_scope, scoped_cache
+
+    with query_scope() as outer:
+        kept = scoped_cache(spark.range(1102))
+        with query_scope() as inner:
+            dropped = scoped_cache(spark.range(1103))
+        assert inner == [dropped] and outer == [kept]
+        assert dropped.storageLevel == StorageLevel.NONE
+        assert kept.storageLevel != StorageLevel.NONE
+    assert kept.storageLevel == StorageLevel.NONE
+
+
+def test_query_scope_leaves_other_threads_caches(spark):
+    """Scopes are per thread: one thread's scope exiting must not drop a
+    cache a concurrently running query on another thread still holds,
+    even when that cache was taken while both scopes were open."""
+    import threading
+
+    from pyspark import StorageLevel
+
+    from eventstore_spark.schema import query_scope, scoped_cache
+
+    opened, main_open, cached, finish = (threading.Event() for _ in range(4))
+    other = {}
+
+    def worker():
+        with query_scope() as held:
+            other["held"] = held
+            opened.set()
+            main_open.wait(60)
+            other["df"] = scoped_cache(spark.range(1104))
+            cached.set()
+            finish.wait(60)
+
+    t = threading.Thread(target=worker, daemon=True)
+    t.start()
+    try:
+        assert opened.wait(60)
+        with query_scope() as held:
+            main_open.set()
+            assert cached.wait(60)
+            mine = scoped_cache(spark.range(1105))
+        assert held == [mine] and other["held"] == [other["df"]]
+        assert mine.storageLevel == StorageLevel.NONE
+        assert other["df"].storageLevel != StorageLevel.NONE
+    finally:
+        main_open.set()
+        finish.set()
+        t.join(60)
+    assert not t.is_alive()
+    assert other["df"].storageLevel == StorageLevel.NONE
+
+
+def test_scoped_cache_outside_scope_registers_nothing(spark):
+    """Outside any scope scoped_cache only persists: the caller's
+    clearCache() (or unpersist) owns the release."""
+    from pyspark import StorageLevel
+
+    from eventstore_spark import schema
+    from eventstore_spark.schema import query_scope, scoped_cache
+
+    df = scoped_cache(spark.range(1106))
+    try:
+        assert not getattr(schema._SCOPES, "stack", [])
+        with query_scope() as held:
+            pass
+        assert held == []
+        assert df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()

@@ -3,6 +3,7 @@ handler tests (EventStore.Projections.Core.Tests/Services/Jint/)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from eventstore_spark.projections.dsl import Projection
@@ -539,3 +540,39 @@ def test_p6_vectorized_twin_matches_fold(spark):
     )
     twin = entry.q_p6_fold_balance(spark, sf)
     assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, twin.collect()))
+
+
+@pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
+def test_p6_fold_twin_and_oracle_all_raise_on_bad_value(spark, tmp_path, bad):
+    """A NULL or NaN purchase value makes the fold raise in _cents_py; the
+    JVM twin and the DuckDB oracle must fail as loudly instead of sum()
+    skipping the NULL that count() counts, or floor(NaN) casting to 0."""
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from __spark_entry__ import _balance_projection, load_envelope
+
+    pq.write_table(pa.table({
+        "event_id": pa.array([0, 1, 2], pa.int64()),
+        "ts": pa.array([datetime(2024, 1, 1, 0, 0, s) for s in range(3)],
+                       pa.timestamp("us")),
+        "user_id": pa.array([1, 1, 2], pa.int64()),
+        "event_type": ["purchase", "error", "purchase"],
+        "value": pa.array([1.25, 0.5, bad], pa.float64()),
+        "props": ['{"k": 0}'] * 3,
+    }), tmp_path / "events.parquet")
+    sf = str(tmp_path)
+
+    with pytest.raises(Exception, match="TypeError|ValueError"):
+        (run_batch(_balance_projection(), load_envelope(spark, sf))
+         .states_as("n long, cents long").collect())
+    with pytest.raises(Exception, match="NULL or NaN value"):
+        entry.q_p6_fold_balance(spark, sf).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    with pytest.raises(duckdb.Error, match="NULL or NaN value"):
+        con.execute(entry.oracle_sql()["p6_fold_balance"]).fetchall()

@@ -9,6 +9,7 @@ order-insensitive values. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -17,7 +18,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -70,6 +71,7 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from eventstore_spark.schema import query_scope
     from eventstore_spark.session import get_spark
 
     spark = get_spark("check_oracle")
@@ -85,7 +87,10 @@ def main():
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            # each query's caches are released once its result is read, so
+            # the sweep does not pile them up
+            with query_scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception:
             print(f"FAIL {name}: SPARK ERROR\n{traceback.format_exc()}")
             n_fail += 1

@@ -93,9 +93,9 @@ ZIPF_S = 1.1
 
 def _zipf_sampler(rng):
     """Token sampler with rank-frequency ~ 1/rank^1.1 over a 50k vocab —
-    the natural-language word-frequency model (Zipf 1949; the
-    zipf_df_probe parameters). The sf tables' 31-word uniform vocab
-    under-represents hot-term skew: document frequency of stop-word-like
+    the natural-language word-frequency model (Zipf 1949; the parameters
+    of PLANS.md §"Zipf df measurement"). The sf tables' 31-word uniform
+    vocab under-represents hot-term skew: document frequency of stop-word-like
     tokens grows ∝ corpus size on real text, which is what stresses
     inverted-index ops (bm25/pmi/winnowing/jaccard). Vectorized inverse-
     CDF sampling (searchsorted over the cumulative), not rng.choice(p=)

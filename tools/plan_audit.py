@@ -12,11 +12,12 @@ Usage: python tools/plan_audit.py [sf_dir] > /tmp/plan_audit.tsv
 from __future__ import annotations
 
 import io
+import os
 import sys
 import traceback
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from eventstore_spark.session import get_spark  # noqa: E402
