@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from .operators.filters import EventFilter
 from .operators.links import resolve_links
 from .operators import memory_streams as mem
-from .operators.retention import visible_events
+from .operators.retention import stream_visibility, visible_events
 from .operators import system_projections as sysproj
 from .projections.dsl import Projection
 from .projections.runtime import ProjectionResult, run_batch
@@ -46,7 +46,7 @@ from .streaming.subscriptions import (
     subscribe_all,
     subscribe_stream,
 )
-from .writer import ANY, EventLogWriter, ProposedEvent
+from .writer import ANY, NO_STREAM, EventLogWriter, ProposedEvent, StreamDeletedError
 
 
 @dataclass
@@ -92,6 +92,8 @@ class EventStoreEngine:
             spark, path, lock_timeout_s=lock_timeout_s,
             read_only=read_only,
         )
+        # (key, {stream_id: metadata-dimension Row}) — see _metadata_snapshot
+        self._md_snapshot: tuple | None = None
         self.projections: dict[str, _ManagedProjection] = {}
         # groups rebuilt by a service-level ReplayParked with no live
         # instance: the next attach for the key ADOPTS the rebuilt group
@@ -164,7 +166,10 @@ class EventStoreEngine:
     # ------------------------------------------------------------------ log
     def events(self, visible_only: bool = True) -> DataFrame:
         """The canonical events DataFrame (visibility rules applied)."""
-        return self._events_of(self.writer.load(), visible_only)
+        df = self.writer.load()
+        if not visible_only:
+            return df
+        return self._events_of(df, self._metadata_snapshot().values())
 
     def events_at(self, manifest_seq: int, visible_only: bool = True) -> DataFrame:
         """Time travel: the store as of manifest generation
@@ -173,24 +178,60 @@ class EventStoreEngine:
         the result is exactly what ``events()`` returned at that commit —
         the reproducible-training-snapshot read. Bounded by ``vacuum``:
         generations inside the grace window are always available."""
-        return self._events_of(self.writer.load_at(manifest_seq), visible_only)
+        df = self.writer.load_at(manifest_seq)
+        if not visible_only:
+            return df
+        return self._events_of(df, self.stream_metadata(df).collect())
 
     def manifest_history(self) -> list[int]:
         from . import manifest as _manifest
 
         return _manifest.history(self.path)
 
-    def _events_of(self, df: DataFrame, visible_only: bool) -> DataFrame:
-        if not visible_only:
-            return df
-        md = self.stream_metadata(df)
+    def _events_of(self, df: DataFrame, md_rows) -> DataFrame:
+        """The visible user events of ``df`` under the metadata rows
+        ``md_rows``: no rows, no join. The rows travel as ONE JSON
+        parameter expanded by ``inline`` — parse cost stays linear in the
+        row count, and broadcasting it costs one job like any local
+        relation."""
         user = df.where(~df.stream_id.startswith(METASTREAM_PREFIX))
+        md_rows = list(md_rows)
+        if not md_rows:
+            return user
+        md = self.spark.sql(
+            "SELECT inline(from_json(:rows, "
+            f"'array<{STREAM_METADATA_SCHEMA.simpleString()}>'))",
+            args={"rows": json.dumps([r.asDict() for r in md_rows])},
+        )
+        if all(r.max_count is None for r in md_rows):
+            md = md.drop("max_count")  # visible_events then needs no heads
         return visible_events(user, md)
+
+    def _metadata_snapshot(self) -> dict:
+        """stream_id → metadata-dimension row, collected once per metadata
+        generation: ``core.meta_gen``, which the writer bumps after it
+        publishes a commit that can change the dimension. A read-only
+        engine, or a store a foreign process published to, keys on the
+        manifest generation instead (one directory listing)."""
+        core = self.writer._core
+        gens = self.manifest_history()
+        seq = gens[-1] if gens else -1
+        if self.writer.read_only or seq != core.manifest_seq:
+            key = ("seq", seq)
+        else:
+            key = ("gen", core.meta_gen)
+        snap = self._md_snapshot
+        if snap is None or snap[0] != key:
+            snap = self._md_snapshot = (
+                key, {r.stream_id: r for r in self.stream_metadata().collect()}
+            )
+        return snap[1]
 
     def stream_metadata(self, df: DataFrame | None = None) -> DataFrame | None:
         """Parse `$$<stream>` metastreams into the metadata dimension
         (latest $metadata event wins), plus tombstones from the log.
-        ``df`` overrides the log snapshot (time-travel reads)."""
+        ``df`` overrides the log snapshot (time-travel reads). Reads use
+        its collected rows (``_metadata_snapshot``)."""
         if df is None:
             df = self.writer.load()
         # ONE aggregate keyed on the owner stream yields ONE row per
@@ -302,11 +343,7 @@ class EventStoreEngine:
                    else self.DEFAULT_USER_ACL)
         sys_acl = settings.get(
             "$systemStreamAcl" if is_system else "$userStreamAcl") or def_acl
-        row = (
-            self.stream_metadata()
-            .where(F.col("stream_id") == stream_id)
-            .select("acl").first()
-        )
+        row = self._metadata_snapshot().get(stream_id)
         own = json.loads(row.acl) if row is not None and row.acl else None
         return {
             "acl": own or sys_acl,
@@ -376,9 +413,13 @@ class EventStoreEngine:
         raw log here — the reference's projection reader likewise sees
         them in $all before visibility applies."""
         raw = self.writer.load()
-        notices = raw.where(
-            sysproj.tombstone_row() | sysproj.softdelete_meta_row()
-        )
+        # the JSON-free envelope of both notice shapes, as its own
+        # conjunct, is what reaches the parquet reader: its event_type
+        # equalities prune the notice scan by row-group stats
+        envelope = (F.col("event_type") == "$streamDeleted") | (
+            F.col("stream_id").startswith(METASTREAM_PREFIX)
+            & (F.col("event_type") == "$metadata"))
+        notices = raw.where(envelope & sysproj.deletion_row())
         return self.events().unionByName(notices)
 
     def _system_base(self, ev: DataFrame, stream_id: str) -> DataFrame:
@@ -422,12 +463,25 @@ class EventStoreEngine:
         """What a stream read sources from: metastreams (`$$X`) read the
         RAW log — S9 metadata-HISTORY reads; the reference serves
         metastreams through the ordinary read path
-        (SystemStreams.MetastreamOf, IndexReader) — everything else the
-        visible log."""
+        (SystemStreams.MetastreamOf, IndexReader) — system-stream names
+        the visible log (``_system_base`` derives them from it), and any
+        other stream its own visible events: one pruned scan filtered by
+        the stream's retention rule as literals from the metadata
+        snapshot, with no join. Only a stream with max_count pays a top-1
+        head probe (same pinned snapshot) to fill the rule's head."""
         if stream_id.startswith(METASTREAM_PREFIX):
             return self.writer.load().where(
                 F.col("stream_id").startswith(METASTREAM_PREFIX))
-        return self.events()
+        if sysproj.is_system_stream_name(stream_id):
+            return self.events()
+        row = self._metadata_snapshot().get(stream_id)
+        df = self.writer.load().where(F.col("stream_id") == stream_id)
+        head = None
+        if row is not None and row.max_count is not None:
+            top = df.select("event_number").orderBy(
+                F.col("event_number").desc()).limit(1).first()
+            head = None if top is None else top[0]
+        return df.where(stream_visibility(row, head))
 
     def read_event(self, stream_id: str, event_number: int) -> DataFrame:
         if mem.is_in_memory_stream(stream_id):
@@ -454,7 +508,7 @@ class EventStoreEngine:
         # (SystemNames.cs:37-99; readers resolve $ce- via the link stream,
         # ReaderStrategy.cs:179-216): `$ce-/$et-/$bc-/$category-/$streams`
         # route to the equivalent derived view, shaped as link events.
-        # Links still resolve against the LOG (targets_from=ev below).
+        # Links still resolve against the LOG (targets_from below).
         base = ev
         if sysproj.is_system_stream_name(stream_id):
             base = self._system_base(ev, stream_id)
@@ -471,7 +525,8 @@ class EventStoreEngine:
                 base, stream_id, from_event_number or 0, max_count
             )
         if resolve_link_tos:
-            page = resolve_links(page, targets_from=ev)
+            # links resolve against the whole log, not the stream's own scan
+            page = resolve_links(page, targets_from=self.events())
             order = F.coalesce(F.col("link_event_number"), F.col("event_number"))
             page = page.orderBy(order.desc() if backward else order.asc())
         return page
@@ -486,6 +541,17 @@ class EventStoreEngine:
             return self.memory_streams.read_page(
                 stream_id, from_event_number, max_count, backward
             )
+        # ReadStreamResult parity (IndexReader.ReadStreamEventsForward
+        # :221-330) for user streams: a tombstoned stream READS as
+        # StreamDeleted — the client-visible exception, same error appends
+        # raise; a never-written or soft-deleted (un-recreated) stream
+        # reads as NoStream. Both come from the metadata snapshot; only an
+        # empty page of a stream WITH metadata asks the writer whether the
+        # stream was ever written.
+        user = not stream_id.startswith("$")
+        row = self._metadata_snapshot().get(stream_id) if user else None
+        if row is not None and row.tombstoned:
+            raise StreamDeletedError(stream_id)
         base = self._read_base(stream_id)
         if sysproj.is_system_stream_name(stream_id):
             # same name-routing as read_stream: page the link stream by
@@ -494,22 +560,10 @@ class EventStoreEngine:
         page = R.read_stream_page(
             base, stream_id, from_event_number, max_count, backward
         )
-        if (not sysproj.is_system_stream_name(stream_id)
-                and not stream_id.startswith("$")):
-            # ReadStreamResult parity (IndexReader.ReadStreamEventsForward
-            # :221-330): a tombstoned stream READS as StreamDeleted — the
-            # client-visible exception, same error appends raise; a
-            # never-written or soft-deleted (un-recreated) stream reads
-            # as NoStream. One cached writer-state lookup, no extra job.
-            from .writer import NO_STREAM, StreamDeletedError
-
-            last, tomb = self.writer._stream_state(stream_id)
-            if tomb:
-                raise StreamDeletedError(stream_id)
-            if last == NO_STREAM or (
-                    self.writer._is_soft_deleted(stream_id)
-                    and page.last_event_number < 0):
-                page.result = "NoStream"
+        if user and page.last_event_number < 0 and (
+                row is None or row.truncate_before == MAX_LONG
+                or self.writer._stream_state(stream_id)[0] == NO_STREAM):
+            page.result = "NoStream"
         return page
 
     def poll_stream(self, stream_id: str, from_event_number: int = 0,
@@ -806,8 +860,6 @@ class EventStoreEngine:
         BeginDelete), and record the removal in
         `$persistentSubscriptionConfig` (the server rewrites its config
         on every group change). Returns which streams were dropped."""
-        from .writer import NO_STREAM
-
         self._require_writer("delete_persistent_subscription")
         # a deleted group's pending replay adoption dies with it
         self._replay_adoptions.pop((group, stream_id or "$all"), None)

@@ -36,16 +36,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 # -- Spark-SQL text forms ----------------------------------------------------
 # The same folds as the Column builders above, emitted as Spark-SQL text for
 # callers that assemble large expressions (e.g. one term per IVF centroid):

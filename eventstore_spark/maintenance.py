@@ -58,6 +58,7 @@ from . import manifest
 from .manifest import vacuum  # noqa: F401  (public maintenance surface)
 from .operators.retention import visible_events
 from .schema import EVENTS_SCHEMA, MAX_LONG, METASTREAM_PREFIX
+from .writer import _core_for
 
 
 def _read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
@@ -103,6 +104,7 @@ def _publish_rewrite(path: str, staging: str, tag: str,
                 pass
         shutil.rmtree(staging, ignore_errors=True)
         raise
+    _core_for(path).meta_gen += 1  # after the publish: see _PathCore
     shutil.rmtree(staging)
     return new_names
 

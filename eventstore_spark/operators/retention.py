@@ -5,18 +5,74 @@ BEFORE touching the index (IndexReader.ReadStreamEventsForwardInternal,
 /root/reference/src/EventStore.Core/Services/Storage/ReaderIndex/
 IndexReader.cs:250-330), and hides everything for tombstoned streams.
 
-Spark-first translation: visibility is a JOIN + predicate applied as a
-VIEW over the log — Catalyst pushes the per-stream bounds into the scan.
-The broadcast of ``stream_metadata`` (a small dimension: one row per
-stream with retention settings) keeps this shuffle-free at any scale.
+The rule is written once (``visibility_rule``, over Columns) and has two
+forms:
+
+* ``stream_visibility`` — one stream's metadata row as LITERALS. A
+  single-stream read filters the log by ``stream_id = X AND <literals>``:
+  Catalyst folds the absent settings away and pushes the rest into the
+  parquet scan, with no join (the reference's per-stream bound check).
+* ``visible_events`` — the metadata dimension JOINED to the log, for
+  reads over many streams ($all, scavenge). The dimension is small (one
+  row per stream with metadata), so it broadcasts and the log path stays
+  shuffle-free at any scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..schema import MAX_LONG
+
+_SETTINGS = ("max_count", "max_age_seconds", "truncate_before", "tombstoned")
+
+
+def visibility_rule(tombstoned: Column, truncate_before: Column,
+                    max_count: Column, head: Column, max_age_seconds: Column,
+                    now_ts=None) -> Column:
+    """Is an event (``event_number``, ``created``) of a stream visible?
+
+    * ``tombstoned``: hard delete — nothing visible.
+    * ``truncate_before`` ($tb): event_number >= tb; tb == MAX_LONG is a
+      soft delete (everything hidden until new appends recreate).
+    * ``max_count``: only the last N events, counted back from ``head``
+      (the stream's last event number).
+    * ``max_age_seconds``: created >= now - max_age.
+
+    A NULL setting does not restrict."""
+    if now_ts is None:
+        now_ts = F.current_timestamp()
+    return (
+        (tombstoned.isNull() | ~tombstoned)
+        & (
+            truncate_before.isNull()
+            | (
+                (truncate_before != MAX_LONG)
+                & (F.col("event_number") >= truncate_before)
+            )
+        )
+        & (max_count.isNull() | (F.col("event_number") > head - max_count))
+        & (
+            max_age_seconds.isNull()
+            | (F.col("created") >= now_ts - F.make_dt_interval(secs=max_age_seconds))
+        )
+    )
+
+
+def stream_visibility(row: Row | None, head: int | None = None) -> Column:
+    """The rule for ONE stream as a literal predicate: ``row`` is the
+    stream's metadata-dimension row (None = no metadata, all visible) and
+    ``head`` its last event number, needed only when ``row.max_count`` is
+    set."""
+    if row is None:
+        return F.lit(True)
+    tomb, mc, age, tb = (F.lit(row[c]) for c in
+                         ("tombstoned", "max_count", "max_age_seconds",
+                          "truncate_before"))
+    return visibility_rule(tomb.cast("boolean"), tb.cast("long"),
+                           mc.cast("long"), F.lit(head).cast("long"),
+                           age.cast("long"))
 
 
 def visible_events(
@@ -24,62 +80,39 @@ def visible_events(
     stream_metadata: DataFrame | None,
     now_ts=None,
 ) -> DataFrame:
-    """Apply MaxCount / MaxAge / TruncateBefore / tombstone visibility.
+    """Apply ``visibility_rule`` through a broadcast join of the metadata
+    dimension (None = no metadata: every event visible).
 
-    * ``truncate_before`` ($tb): event_number >= tb; tb == MAX_LONG is a
-      soft delete (everything hidden until new appends recreate).
-    * ``max_count``: only the last N events of the stream are visible.
-    * ``max_age_seconds``: created >= now - max_age.
-    * ``tombstoned``: hard delete — nothing visible.
-
-    ``max_count`` needs the stream's last event number. Computing it with
+    ``max_count`` needs each stream's last event number. Computing it with
     a per-stream window over the WHOLE log would shuffle every event on
     every read, even when no stream sets max_count; instead the heads are
     aggregated only for the streams that HAVE a max_count (a broadcast
     semi-filtered scan → tiny per-stream max → broadcast back), so the
     main log path stays shuffle-free — the Spark shape of the reference's
-    O(1) last-event-number lookup in IndexBackend.
+    O(1) last-event-number lookup in IndexBackend. A dimension without a
+    ``max_count`` column has no such streams and skips that branch.
     """
     if stream_metadata is None:
         return events
-    if now_ts is None:
-        now_ts = F.current_timestamp()
-
-    md = F.broadcast(
-        stream_metadata.select(
-            "stream_id", "max_count", "max_age_seconds", "truncate_before", "tombstoned"
-        )
-    )
+    cols = stream_metadata.columns
+    md = F.broadcast(stream_metadata.select(
+        "stream_id", *(c for c in _SETTINGS if c in cols)))
     joined = events.join(md, "stream_id", "left")
+    max_count = head = F.lit(None)
+    if "max_count" in cols:
+        mc_streams = stream_metadata.where(
+            F.col("max_count").isNotNull()
+        ).select("stream_id")
+        last = (
+            events.join(F.broadcast(mc_streams), "stream_id")
+            .groupBy("stream_id")
+            .agg(F.max("event_number").alias("_last_event_number"))
+        )
+        joined = joined.join(F.broadcast(last), "stream_id", "left")
+        max_count, head = F.col("max_count"), F.col("_last_event_number")
 
-    mc_streams = stream_metadata.where(
-        F.col("max_count").isNotNull()
-    ).select("stream_id")
-    last = (
-        events.join(F.broadcast(mc_streams), "stream_id")
-        .groupBy("stream_id")
-        .agg(F.max("event_number").alias("_last_event_number"))
+    visible = visibility_rule(
+        F.col("tombstoned"), F.col("truncate_before"), max_count, head,
+        F.col("max_age_seconds"), now_ts,
     )
-    joined = joined.join(F.broadcast(last), "stream_id", "left")
-
-    visible = (
-        (F.col("tombstoned").isNull() | ~F.col("tombstoned"))
-        & (
-            F.col("truncate_before").isNull()
-            | (
-                (F.col("truncate_before") != MAX_LONG)
-                & (F.col("event_number") >= F.col("truncate_before"))
-            )
-        )
-        & (
-            F.col("max_count").isNull()
-            | (F.col("event_number") > F.col("_last_event_number") - F.col("max_count"))
-        )
-        & (
-            F.col("max_age_seconds").isNull()
-            | (F.col("created") >= now_ts - F.make_dt_interval(secs=F.col("max_age_seconds")))
-        )
-    )
-    return joined.where(visible).drop(
-        "max_count", "max_age_seconds", "truncate_before", "tombstoned", "_last_event_number"
-    )
+    return joined.where(visible).drop(*_SETTINGS, "_last_event_number")

@@ -261,7 +261,9 @@ def session_spans(df: DataFrame, key_cols: list[str], ts_col: str = "ts",
         F.when(F.lag("_ts").over(w).isNull()
                | (F.col("_ts") - F.lag("_ts").over(w) > int(gap)),
                1).otherwise(0))
-    ws = (Window.partitionBy(*key_cols).orderBy("_ts", "_new")
+    # a session's opening mark sorts before the events tied with it on
+    # _ts, so tied events never straddle two running-sum values
+    ws = (Window.partitionBy(*key_cols).orderBy("_ts", F.col("_new").desc())
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     sess = marked.withColumn("_sess", F.sum("_new").over(ws))
     return (
@@ -287,7 +289,7 @@ WITH base AS (
   FROM base WINDOW w AS (PARTITION BY k ORDER BY ts)
 ), sess AS (
   SELECT k, ts,
-         SUM(new_s) OVER (PARTITION BY k ORDER BY ts, new_s
+         SUM(new_s) OVER (PARTITION BY k ORDER BY ts, new_s DESC
                           ROWS UNBOUNDED PRECEDING) AS sid
   FROM marked
 )

@@ -172,14 +172,6 @@ def category_of(stream_id: Column, how: str = "first",
     ).otherwise(F.lit(None).cast("string"))
 
 
-def metastream_of(stream_id: Column) -> Column:
-    return F.concat(F.lit(METASTREAM_PREFIX), stream_id)
-
-
-def is_metastream(stream_id: Column) -> Column:
-    return stream_id.startswith(METASTREAM_PREFIX)
-
-
 # ---------------------------------------------------------------------------
 # Adapter: driver's application-level events.parquet -> canonical envelope
 # ---------------------------------------------------------------------------

@@ -46,8 +46,9 @@ def read_stream_forward(
 ) -> DataFrame:
     """S2: ordered page of one stream (IndexReader.cs:221-330).
 
-    Retention bounds (MaxCount/MaxAge/$tb) are applied by wrapping the
-    input in ``retention.visible_events`` — composition, not duplication.
+    Retention bounds (MaxCount/MaxAge/$tb) are applied to the input by the
+    caller (``retention.stream_visibility`` or ``visible_events``) —
+    composition, not duplication.
     """
     out = events.where(
         (F.col("stream_id") == stream_id)
@@ -74,6 +75,19 @@ def read_stream_backward(
     return out
 
 
+def _bounds(page: DataFrame, source: DataFrame, col: str) -> tuple:
+    """(min, max, count) of ``page``'s ``col`` and the head (max ``col``
+    of ``source``) in ONE query. The head is a top-1 sort-and-limit, which
+    plans without an exchange, where ``max()`` would cost AQE an extra
+    stage."""
+    head = source.select(F.col(col).alias("_head")).orderBy(
+        F.col("_head").desc()).limit(1)
+    row = page.agg(
+        F.min(col), F.max(col), F.count(F.lit(1))
+    ).join(head, how="left").first()
+    return row[0], row[1], int(row[2]), row[3]
+
+
 @dataclass
 class StreamPage:
     """Paging envelope of a stream read — the reply metadata of
@@ -98,9 +112,10 @@ def read_stream_page(
     max_count: int = 100,
     backward: bool = False,
 ) -> StreamPage:
-    """S2/S3 with full paging metadata. Two scalar aggregates (the page's
-    bounds and the stream head) — both pruned single-stream scans; the
-    page DataFrame itself stays lazy for the caller.
+    """S2/S3 with full paging metadata. One bounds query answers the
+    page's min/max/count and the stream head together (a top-1 scan, no
+    exchange), over the same snapshot as the page; the page DataFrame
+    itself stays lazy for the caller.
 
     Backward paging starts from the stream HEAD when
     ``from_event_number`` is None or -1 (the reference's end-of-stream
@@ -113,14 +128,10 @@ def read_stream_page(
         page = read_stream_backward(events, stream_id, start, max_count)
     else:
         page = read_stream_forward(events, stream_id, from_event_number or 0, max_count)
-    head = events.where(F.col("stream_id") == stream_id).agg(
-        F.max("event_number")
-    ).first()[0]
+    lo, hi, n, head = _bounds(
+        page, events.where(F.col("stream_id") == stream_id), "event_number"
+    )
     last_en = -1 if head is None else int(head)
-    bounds = page.agg(
-        F.min("event_number"), F.max("event_number"), F.count(F.lit(1))
-    ).first()
-    lo, hi, n = bounds[0], bounds[1], int(bounds[2])
     if backward:
         nxt = -1 if n == 0 else int(lo) - 1
         end = nxt < 0
@@ -156,9 +167,8 @@ def read_all_page(
     backward: bool = False,
     apply_default_filter: bool = False,
 ) -> AllPage:
-    """S4/S5 with full paging metadata (mirror of ``read_stream_page``).
-    Two scalar aggregates: the page bounds and the log head — the head is
-    a parquet-footer max, the page bounds a pruned scan."""
+    """S4/S5 with full paging metadata (mirror of ``read_stream_page``):
+    one bounds query answers the page's min/max/count and the log head."""
     if backward:
         pred = F.lit(True)
         if apply_default_filter:
@@ -174,12 +184,8 @@ def read_all_page(
         page = read_all_filtered(
             events, event_filter, from_position, max_count, apply_default_filter
         )
-    head = events.agg(F.max("log_position")).first()[0]
+    lo, hi, n, head = _bounds(page, events, "log_position")
     last_pos = 0 if head is None else int(head)
-    bounds = page.agg(
-        F.min("log_position"), F.max("log_position"), F.count(F.lit(1))
-    ).first()
-    lo, hi, n = bounds[0], bounds[1], int(bounds[2])
     if backward:
         nxt = 0 if n == 0 else int(lo) - 1
         end = nxt <= 0

@@ -203,138 +203,6 @@ def sessionize(
     )
 
 
-def streaming_interval_enrich(
-    probe: DataFrame,
-    reference: DataFrame,
-    key: str = "stream_id",
-    ts_col: str = "created",
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-    ref_cols: list[str] | None = None,
-    suffix: str = "_ref",
-) -> DataFrame:
-    """Stream-stream time-interval enrichment: every probe event joins
-    each reference event of the same ``key`` whose timestamp falls in
-    ``[probe_ts − lookback, probe_ts]`` — the live sibling of the batch
-    :func:`~eventstore_spark.operators.temporal.interval_join` family
-    (fraud checks against recent activity, purchase × recent views).
-
-    Pure Structured Streaming built-ins: both sides carry watermarks and
-    the join condition is key-equality plus the time range, which Spark
-    executes as a watermarked stream-stream join — state for reference
-    rows older than ``watermark + lookback`` is dropped automatically,
-    which is what bounds join-state memory at 100 TB/day rates (the
-    documented state-store story; no custom state code). Inner join:
-    probe rows with no reference match in-range are absent (Spark emits
-    unmatched outer rows only at watermark expiry — use leftOuter
-    downstream when completeness matters more than latency).
-
-    Returns the probe columns plus every ``ref_cols`` column suffixed
-    with ``suffix`` (default: the reference's payload value and its
-    timestamp).
-    """
-    if ref_cols is None:
-        ref_cols = ["event_id", ts_col]
-    p = probe.withWatermark(ts_col, watermark).alias("p")
-    r = (reference.select(
-            F.col(key).alias("_rk"),
-            F.col(ts_col).alias("_rts"),
-            *[F.col(c).alias(f"{c}{suffix}") for c in ref_cols])
-         .withWatermark("_rts", watermark).alias("r"))
-    cond = (
-        (F.col(f"p.{key}") == F.col("r._rk"))
-        & (F.col("r._rts") <= F.col(f"p.{ts_col}"))
-        & (F.col("r._rts")
-           >= F.col(f"p.{ts_col}") - F.expr(f"INTERVAL {lookback}"))
-    )
-    return p.join(r, cond, "inner").drop("_rk", "_rts")
-
-
-def streaming_rate_anomaly(
-    sub: DataFrame,
-    out_path: str,
-    state_path: str,
-    ts_col: str = "created",
-    trailing: int = 24,
-    threshold_ppm: int = 500_000,
-    watermark: str = "2 hours",
-):
-    """Live hourly event-rate anomaly monitoring — the streaming twin of
-    the batch :func:`~eventstore_spark.operators.stats.rate_anomaly`
-    (SAME columns, SAME arithmetic, equivalence on closed data pinned
-    by the cross-twin test):
-
-    * the stream collapses to FINALIZED hourly counts with pure
-      built-ins (watermarked 1-hour tumbling window, append mode —
-      state for open hours is Spark's own, dropped past the watermark);
-    * a ``foreachBatch`` fold carries the bounded trailing baseline —
-      the last ``trailing`` OBSERVED hours' (hour, n), ≤ ``trailing``
-      rows of state in a JSON file written atomically — and appends one
-      JSONL verdict row per finalized hour with the batch operator's
-      exact BIGINT deviation arithmetic;
-    * recovery is exactly-once by HOUR: a replayed micro-batch's hours
-      at or before the last emitted hour are skipped (the state file
-      commits after the output append, so a crash between them replays
-      into the skip).
-
-    Returns the writeStream builder — call ``.start()`` (pass a
-    checkpoint via ``.option("checkpointLocation", ...)`` first).
-
-    At 100 TB/day the executor-side work is one map-side-combined
-    window count; the fold only ever sees HOURS (≤ a few rows per
-    micro-batch), never events.
-    """
-    import json as _json
-
-    counts = (
-        sub.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("hour"), "n")
-    )
-
-    def _fold(batch_df, epoch_id):
-        rows = sorted(
-            ((r.hour, int(r.n)) for r in batch_df.collect()),
-            key=lambda t: t[0])
-        if not rows:
-            return
-        try:
-            with open(state_path) as fh:
-                st = _json.load(fh)
-        except (FileNotFoundError, ValueError):
-            st = {"hours": [], "last_emitted": None}
-        out = []
-        for hour, n in rows:
-            iso = hour.isoformat()
-            if st["last_emitted"] is not None and iso <= st["last_emitted"]:
-                continue  # replayed or out-of-order straggler
-            tail = st["hours"][-trailing:]
-            m = len(tail)
-            s = sum(c for _, c in tail)
-            dev = (abs(n * m - s) * 1_000_000 // s) if s else None
-            out.append({
-                "hour": iso, "n": n, "trailing_n": s,
-                "trailing_hours": m, "dev_ppm": dev,
-                "is_anomaly": bool(dev is not None
-                                   and dev >= threshold_ppm
-                                   and m == trailing),
-            })
-            st["hours"] = (st["hours"] + [[iso, n]])[-trailing:]
-            st["last_emitted"] = iso
-        if not out:
-            return
-        with open(out_path, "a") as fh:
-            for row in out:
-                fh.write(_json.dumps(row) + "\n")
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(st, fh)
-        os.replace(tmp, state_path)
-
-    return counts.writeStream.outputMode("append").foreachBatch(_fold)
-
-
 def start_to_memory(sub: DataFrame, name: str, checkpoint_location: str | None = None,
                     available_now: bool = False):
     """Run a subscription into an in-memory sink (tests / long-poll reads:

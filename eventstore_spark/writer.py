@@ -161,9 +161,13 @@ class _PathCore:
       * ``last_position`` is the committed head every writer syncs to
         before allocating, so positions from different writer objects
         never collide;
-      * ``stream_gen[sid]`` bumps on every commit touching ``sid``; a
-        writer whose cached per-stream state was taken at an older
-        generation reloads from the log before trusting it;
+      * ``stream_gen[sid]`` bumps after every commit touching ``sid`` is
+        published; a writer whose cached per-stream state was taken at an
+        older generation reloads from the log before trusting it;
+      * ``meta_gen`` bumps after every publish that can change the
+        metadata dimension (a ``$$`` or ``$streamDeleted`` row, a bulk
+        append, a rollback, a maintenance rewrite) — the key of the
+        engine's cached metadata snapshot;
       * the commit condition/epoch (U3 long-poll wakeups) lives here, so
         a waiter parked via one writer object wakes on a commit made
         through another;
@@ -178,6 +182,7 @@ class _PathCore:
         self.epoch = 0
         self.last_position: int | None = None  # None until first recovery
         self.stream_gen: dict[str, int] = {}
+        self.meta_gen = 0
         self.fence_token: str | None = None
         # manifest generation this process last observed/published — the
         # base every append publish CASes against (manifest.append_files
@@ -371,6 +376,10 @@ class EventLogWriter:
         # $metadata event), lazily read from the metastream; drives
         # soft-delete recreate. Kept current on every metastream append.
         self._meta_cache: dict[str, dict] = {}
+        # guards each check-and-store of the caches above: a reader that
+        # scanned without the core mutex never overwrites state an
+        # appender stored or applied at its own or a newer generation
+        self._cache_lock = threading.Lock()
         if read_only:
             return  # no fence, no recovery scan — reads resolve lazily
         with self._core.mutex:
@@ -415,13 +424,16 @@ class EventLogWriter:
 
         Cache validity is generation-checked against the shared core:
         a commit to this stream through ANOTHER writer object bumps
-        ``core.stream_gen[sid]`` and forces a reload here."""
+        ``core.stream_gen[sid]`` and forces a reload here. The generation
+        is read BEFORE the scan: a commit published during the scan then
+        leaves the loaded state at the older generation, to be reloaded,
+        instead of caching a stale head as current."""
+        gen = self._core.stream_gen.get(stream_id, 0)
         st = self._stats.get(stream_id)
         if (
             st is not None
             and stream_id in self._ids
-            and self._cache_gen.get(stream_id, 0)
-            == self._core.stream_gen.get(stream_id, 0)
+            and self._cache_gen.get(stream_id, 0) == gen
         ):
             return st
         rows = []
@@ -438,16 +450,17 @@ class EventLogWriter:
         # A tombstone is always the stream's final event (appends are
         # rejected afterwards), so the bounded window always contains it.
         tomb = bool(rows) and rows[0]["event_type"] == STREAM_DELETED_EVENT_TYPE
-        st = [last, tomb]
-        self._stats[stream_id] = st
         # latest position wins for a re-committed id (rows arrive DESC;
         # build ASC so the most recent commit overwrites) — matches
         # _remember_id's append-time bookkeeping
-        self._ids[stream_id] = {
-            r["event_id"]: int(r["event_number"]) for r in reversed(rows)
-        }
-        self._cache_gen[stream_id] = self._core.stream_gen.get(stream_id, 0)
-        return st
+        ids = {r["event_id"]: int(r["event_number"]) for r in reversed(rows)}
+        with self._cache_lock:
+            if (stream_id not in self._ids
+                    or self._cache_gen.get(stream_id, -1) < gen):
+                self._stats[stream_id] = [last, tomb]
+                self._ids[stream_id] = ids
+                self._cache_gen[stream_id] = gen
+            return self._stats[stream_id]
 
     def _remember_id(self, stream_id: str, event_id: str, event_number: int) -> None:
         known = self._ids.setdefault(stream_id, {})
@@ -564,10 +577,10 @@ class EventLogWriter:
         (generation check on `$$stream` against the shared core)."""
         meta_id = f"$${stream_id}"
         meta_gen_key = f"meta:{stream_id}"
+        gen = self._core.stream_gen.get(meta_id, 0)  # before the scan
         if (
             stream_id in self._meta_cache
-            and self._cache_gen.get(meta_gen_key, 0)
-            == self._core.stream_gen.get(meta_id, 0)
+            and self._cache_gen.get(meta_gen_key, 0) == gen
         ):
             return self._meta_cache[stream_id]
         doc: dict = {}
@@ -588,9 +601,12 @@ class EventLogWriter:
                     doc = json.loads(rows[0]["data"]) or {}
                 except ValueError:
                     doc = {}
-        self._meta_cache[stream_id] = doc
-        self._cache_gen[meta_gen_key] = self._core.stream_gen.get(meta_id, 0)
-        return doc
+        with self._cache_lock:
+            if (stream_id not in self._meta_cache
+                    or self._cache_gen.get(meta_gen_key, -1) < gen):
+                self._meta_cache[stream_id] = doc
+                self._cache_gen[meta_gen_key] = gen
+            return self._meta_cache[stream_id]
 
     def append(
         self,
@@ -706,7 +722,6 @@ class EventLogWriter:
         st[0] = last
         self._core.last_position = self._last_position
         if first_new is not None:
-            self._bump_stream_gen(stream_id)
             # keep the metadata cache current: a $metadata append to `$$X`
             # REPLACES X's document (the reference's GetStreamRawMeta always
             # reads the latest; a stale cached $tb would mis-trigger
@@ -743,14 +758,16 @@ class EventLogWriter:
         caches (they reload lazily), bump their shared generations so
         sibling writer objects drop theirs too, and re-read the committed
         head position."""
-        for sid in touched:
-            self._stats.pop(sid, None)
-            self._ids.pop(sid, None)
-            self._cache_gen.pop(sid, None)
-            self._core.stream_gen[sid] = self._core.stream_gen.get(sid, 0) + 1
-            if sid.startswith("$$"):
-                self._meta_cache.pop(sid[2:], None)
-                self._cache_gen.pop(f"meta:{sid[2:]}", None)
+        with self._cache_lock:
+            for sid in touched:
+                self._stats.pop(sid, None)
+                self._ids.pop(sid, None)
+                self._cache_gen.pop(sid, None)
+                self._core.stream_gen[sid] = self._core.stream_gen.get(sid, 0) + 1
+                if sid.startswith("$$"):
+                    self._meta_cache.pop(sid[2:], None)
+                    self._cache_gen.pop(f"meta:{sid[2:]}", None)
+        self._core.meta_gen += 1
         self._last_position = 0
         self._recover()
         self._core.last_position = self._last_position
@@ -786,6 +803,14 @@ class EventLogWriter:
             except BaseException:
                 self._rollback(touched)
                 raise
+            # generations move only once the commit is published: a reader
+            # that read one before (and may have scanned the older
+            # snapshot) reloads, rather than cache stale state at the new one
+            for sid in touched:
+                self._bump_stream_gen(sid)
+            if any(r[1].startswith(METASTREAM_PREFIX)
+                   or r[5] == STREAM_DELETED_EVENT_TYPE for r in rows):
+                self._core.meta_gen += 1
 
     def _publish_append(self, names: list[str]) -> None:
         """Publish an append commit's files to the manifest as a CAS
@@ -815,11 +840,12 @@ class EventLogWriter:
     def _bump_stream_gen(self, stream_id: str) -> None:
         """Record a commit touching ``stream_id`` in the shared core and
         mark this writer's own caches as taken at the new generation."""
-        gen = self._core.stream_gen.get(stream_id, 0) + 1
-        self._core.stream_gen[stream_id] = gen
-        self._cache_gen[stream_id] = gen
-        if stream_id.startswith("$$"):
-            self._cache_gen[f"meta:{stream_id[2:]}"] = gen
+        with self._cache_lock:
+            gen = self._core.stream_gen.get(stream_id, 0) + 1
+            self._core.stream_gen[stream_id] = gen
+            self._cache_gen[stream_id] = gen
+            if stream_id.startswith("$$"):
+                self._cache_gen[f"meta:{stream_id[2:]}"] = gen
 
     def _set_meta_cache(self, stream_id: str, doc: dict) -> None:
         self._meta_cache[stream_id] = doc
@@ -905,10 +931,11 @@ class EventLogWriter:
                 if s not in self._stats
                 or self._cache_gen.get(s, 0) != self._core.stream_gen.get(s, 0)
             ]
-            for s in missing:  # drop stale views before the reload
-                self._stats.pop(s, None)
-                self._ids.pop(s, None)
-                self._cache_gen[s] = self._core.stream_gen.get(s, 0)
+            with self._cache_lock:
+                for s in missing:  # drop stale views before the reload
+                    self._stats.pop(s, None)
+                    self._ids.pop(s, None)
+                    self._cache_gen[s] = self._core.stream_gen.get(s, 0)
             if missing and self._has_files():
                 got = (
                     self.load()
@@ -991,6 +1018,7 @@ class EventLogWriter:
                 # from the log and idempotent retries keep working.
                 self._ids.pop(sid, None)
                 self._bump_stream_gen(sid)
+            self._core.meta_gen += 1
             self._notify_commit()
 
     # pyarrow schema mirroring EVENTS_SCHEMA (timestamp µs UTC — what

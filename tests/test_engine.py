@@ -49,14 +49,41 @@ def test_stream_metadata_retention(engine):
     assert raw.where("stream_id = '$$account-1'").count() == 1
 
 
+def _read_jobs(spark, read) -> int:
+    """Spark jobs one read launches, counted through its job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _read_kinds(engine) -> dict:
+    return {
+        "read_event": lambda: engine.read_event("account-1", 1).collect(),
+        "read_stream_page": lambda: engine.read_stream_page(
+            "account-1", None, 1, backward=True).events.collect(),
+        "read_all_page": lambda: engine.read_all_page(0, 10).events.collect(),
+    }
+
+
 def test_metadata_dimension_is_one_aggregate(engine):
     """The metadata dimension is one groupBy on the owner stream: the
     latest `$$X` document per stream, and a tombstone that wins over
     metadata. Reads over a store with metadata stay within these Spark
-    job counts (the window + distinct + full-outer-join form ran 10, 21
-    and 21 on this store)."""
-    import uuid
-
+    job counts, page collect included, once the metadata snapshot is
+    warm: read_event 1 (a max_count stream adds a top-1 head probe: 2),
+    backward read_stream_page 4 (head probe, bounds query, collect) and
+    read_all_page 11 (the join's broadcasts and max_count heads, in the
+    bounds query and the collect; 5 once no stream has a max_count).
+    Joining a freshly aggregated dimension
+    on every read, with two eager aggregates per page, ran 7, 22 and 22
+    here."""
     engine.set_stream_metadata("account-1", max_count=1)
     engine.set_stream_metadata("account-2", truncate_before=0)
     engine.set_stream_metadata("account-2", truncate_before=1, acl={"$r": ["ops"]})
@@ -70,26 +97,73 @@ def test_metadata_dimension_is_one_aggregate(engine):
         "account-2": (None, None, 1, False, '{"$r":["ops"]}'),
         "chat-1": (None, 3600, None, True, None),
     }
-
-    sc = engine.spark.sparkContext
-
-    def jobs(read):
-        group = f"md-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            read()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    got = {
-        "read_event": jobs(lambda: engine.read_event("account-1", 1).collect()),
-        "read_stream_page": jobs(lambda: engine.read_stream_page(
-            "account-1", None, 1, backward=True)),
-        "read_all_page": jobs(lambda: engine.read_all_page(0, 10)),
-    }
-    caps = {"read_event": 7, "read_stream_page": 15, "read_all_page": 15}
+    engine.read_event("account-1", 1).collect()  # warms the snapshot
+    got = {k: _read_jobs(engine.spark, read)
+           for k, read in _read_kinds(engine).items()}
+    caps = {"read_event": 2, "read_stream_page": 4, "read_all_page": 11}
     assert all(got[k] <= caps[k] for k in caps), got
+    # once no stream has a max_count, a $all page skips the head branch
+    engine.set_stream_metadata("account-1", max_age_seconds=3600)
+    engine.read_all_page(0, 10)
+    assert _read_jobs(engine.spark, _read_kinds(engine)["read_all_page"]) <= 5
+
+
+def test_reads_without_metadata_are_one_pruned_scan(engine):
+    """On a store without metadata a read runs no join and no dimension
+    aggregate: after one warm-up read, read_event is its collect alone,
+    and a page read is one bounds query plus the collect (the per-read
+    dimension rebuild ran 5, 16 and 16 here)."""
+    engine.read_event("account-1", 1).collect()
+    got = {k: _read_jobs(engine.spark, read)
+           for k, read in _read_kinds(engine).items()}
+    caps = {"read_event": 1, "read_stream_page": 3, "read_all_page": 3}
+    assert all(got[k] <= caps[k] for k in caps), got
+
+
+def test_metadata_snapshot_follows_every_change(engine, spark):
+    """Each change to the metadata dimension shows in the very next read,
+    with the cached snapshot warm beforehand: metadata, a hard delete, a
+    soft delete and its recreate, a scavenge, a bulk `$$` append, and a
+    read-only engine reading after the owner's metadata commit."""
+    from eventstore_spark.writer import StreamDeletedError
+
+    def ens(sid):
+        return [r.event_number for r in engine.read_stream(sid).collect()]
+
+    assert ens("account-1") == [0, 1]
+    engine.set_stream_metadata("account-1", max_count=1)
+    assert ens("account-1") == [1]
+
+    assert engine.read_stream_page("chat-1").result == "Success"
+    engine.delete_stream("chat-1", hard=True)
+    with pytest.raises(StreamDeletedError):
+        engine.read_stream_page("chat-1")
+    assert "chat-1" not in {r.stream_id for r in engine.read_all().collect()}
+
+    assert ens("account-2") == [0]
+    engine.delete_stream("account-2")
+    assert ens("account-2") == []
+    assert engine.read_stream_page("account-2").result == "NoStream"
+    engine.append("account-2", [ProposedEvent("Deposited", "{}")])
+    assert ens("account-2") == [1]
+
+    engine.scavenge()
+    assert ens("account-1") == [1] and ens("account-2") == [1]
+    engine.append("account-1", [ProposedEvent("Deposited", "{}")])
+    assert ens("account-1") == [2]
+
+    engine.writer.append_df(spark.createDataFrame(
+        [("$$account-2", "$metadata", '{"$maxCount": 5, "$tb": 5}', None,
+          "bulk-meta-1")],
+        "stream_id string, event_type string, data string, "
+        "metadata string, event_id string"))
+    assert ens("account-2") == []
+
+    ro = EventStoreEngine(spark, engine.path, read_only=True)
+    assert [r.event_number for r in ro.read_stream("account-1").collect()] == [2]
+    engine.set_stream_metadata("account-1", max_count=2)
+    assert [r.event_number for r in ro.read_stream("account-1").collect()] == [1, 2]
+    assert ens("account-1") == [1, 2]
 
 
 def test_soft_delete_and_recreate(engine):

@@ -2379,159 +2379,3 @@ def test_connector_scope_without_filter_includes_system_events(
     })
     assert "user-1" in with_sys and "$$user-1" in with_sys
 
-
-def test_streaming_interval_enrich_joins_recent_reference(spark, tmp_path):
-    """Stream-stream time-interval enrichment (streaming_interval_enrich):
-    each probe event joins same-key reference events within the lookback
-    window [probe_ts - 1h, probe_ts] — inclusive at both edges, nothing
-    older, nothing later, never across keys. Pure watermarked
-    stream-stream join (state auto-expired by Spark); delivered across
-    TWO micro-batches to exercise cross-batch join state."""
-    from datetime import datetime
-
-    from eventstore_spark.schema import EVENTS_SCHEMA
-    from eventstore_spark.streaming.subscriptions import (
-        streaming_interval_enrich)
-
-    def ts(h, m=0):
-        return datetime(2024, 1, 1, h, m)
-
-    probe_dir = str(tmp_path / "probe")
-    ref_dir = str(tmp_path / "ref")
-    # batch 1 of the reference stream: views at 10:00 (u1, u2)
-    spark.createDataFrame([
-        (1, "u1", None, 0, "v1", "view", '{"p": 10}', None, ts(10), True),
-        (2, "u2", None, 0, "v2", "view", '{"p": 77}', None, ts(10), True),
-    ], EVENTS_SCHEMA).write.mode("append").parquet(ref_dir)
-    # probes: 11:00 u1 (inclusive 1h edge -> matches v1),
-    #         12:00 u1 (10:00 is 2h old -> no match),
-    #         13:00 u2 (3h old -> no match)
-    spark.createDataFrame([
-        (3, "u1", None, 0, "p1", "purchase", '{"x":1}', None, ts(11), True),
-        (4, "u1", None, 1, "p2", "purchase", '{"x":2}', None, ts(12), True),
-        (5, "u2", None, 0, "p3", "purchase", '{"x":3}', None, ts(13), True),
-    ], EVENTS_SCHEMA).write.mode("append").parquet(probe_dir)
-
-    probe = spark.readStream.schema(EVENTS_SCHEMA).parquet(probe_dir)
-    ref = spark.readStream.schema(EVENTS_SCHEMA).parquet(ref_dir)
-    joined = streaming_interval_enrich(probe, ref, key="stream_id",
-                                       lookback="1 hour")
-    q = (joined.select("event_id", "stream_id", "created", "event_id_ref",
-                       "created_ref")
-         .writeStream.outputMode("append").format("memory")
-         .queryName("iv_enrich")
-         .option("checkpointLocation", str(tmp_path / "ck")).start())
-    try:
-        q.processAllAvailable()
-        got = {(r.event_id, r.event_id_ref)
-               for r in spark.sql("SELECT * FROM iv_enrich").collect()}
-        assert got == {("p1", "v1")}, got
-
-        # batch 2: a fresh view at 12:30 enriches a later purchase at
-        # 13:00 (same key), proving cross-batch reference state
-        spark.createDataFrame([
-            (6, "u1", None, 1, "v3", "view", '{"p": 20}', None,
-             ts(12, 30), True),
-        ], EVENTS_SCHEMA).write.mode("append").parquet(ref_dir)
-        spark.createDataFrame([
-            (7, "u1", None, 2, "p4", "purchase", '{"x":4}', None,
-             ts(13), True),
-        ], EVENTS_SCHEMA).write.mode("append").parquet(probe_dir)
-        q.processAllAvailable()
-        got = {(r.event_id, r.event_id_ref)
-               for r in spark.sql("SELECT * FROM iv_enrich").collect()}
-        assert got == {("p1", "v1"), ("p4", "v3")}, got
-    finally:
-        q.stop()
-
-
-def test_streaming_rate_anomaly_matches_batch(spark, tmp_path):
-    """The live rate monitor emits, per FINALIZED hour, exactly the
-    batch rate_anomaly row (same trailing-observed-hours baseline,
-    same BIGINT deviation arithmetic) — across micro-batch boundaries,
-    through a spike hour, and with restart delivering each hour
-    exactly once."""
-    import datetime as dt
-    import json as _json
-
-    import pandas as pd
-
-    from eventstore_spark.operators.stats import rate_anomaly
-    from eventstore_spark.streaming.subscriptions import (
-        streaming_rate_anomaly)
-
-    def ts(h, m=0):
-        return dt.datetime(2026, 8, 13, h, m)
-
-    # hours 0-5; hour 3 is a 6x spike; hour 4 absent (observed-hours
-    # semantics: the gap is skipped, not zero-filled)
-    def hour_events(h, k):
-        return [(h * 100 + i, f"u-{i}", "e", ts(h, i % 60)) for i in range(k)]
-
-    batch1 = hour_events(0, 4) + hour_events(1, 5) + hour_events(2, 3)
-    batch2 = hour_events(3, 24) + hour_events(5, 4)
-    cols = ["log_position", "stream_id", "event_type", "created"]
-    src = tmp_path / "ra_in"
-    src.mkdir()
-    out = tmp_path / "ra_out.jsonl"
-    state = tmp_path / "ra_state.json"
-
-    def write(i, rows):
-        pd.DataFrame(rows, columns=cols).to_parquet(
-            src / f"b{i}.parquet", coerce_timestamps="us")
-
-    write(0, batch1)
-    stream = (spark.readStream.option("maxFilesPerTrigger", 1)
-              .schema("log_position long, stream_id string, "
-                      "event_type string, created timestamp")
-              .parquet(str(src)))
-    w = streaming_rate_anomaly(
-        stream, str(out), str(state), trailing=3,
-        threshold_ppm=500_000, watermark="0 seconds",
-    ).option("checkpointLocation", str(tmp_path / "ra_ck"))
-    q = w.start()
-    try:
-        q.processAllAvailable()
-        write(1, batch2)
-        q.processAllAvailable()
-        # sentinel far ahead finalizes hours 0-5
-        write(9, [(999, "u-9", "e", ts(23, 0))])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = [_json.loads(ln) for ln in open(out).read().splitlines()]
-    closed = batch1 + batch2
-    df = spark.createDataFrame(
-        pd.DataFrame(closed, columns=cols), )
-    want = {r.hour.isoformat(): (r.n, r.trailing_n, r.trailing_hours,
-                                 r.dev_ppm, r.is_anomaly)
-            for r in rate_anomaly(df, "created", trailing=3).collect()}
-    assert len(got) == len(want) == 5
-    for row in got:
-        assert want[row["hour"]] == (row["n"], row["trailing_n"],
-                                     row["trailing_hours"],
-                                     row["dev_ppm"], row["is_anomaly"])
-    # the 6x spike flags once the baseline is warm (3 observed hours)
-    spike = [r for r in got if r["hour"].endswith("T03:00:00")][0]
-    assert spike["is_anomaly"] and spike["trailing_hours"] == 3
-
-    # restart: a new query on the SAME checkpoint re-delivers nothing;
-    # a genuinely new hour (ABOVE the carried watermark — events under
-    # it are late by definition and correctly dropped) is appended
-    # exactly once
-    nxt = dt.datetime(2026, 8, 14, 1, 0)
-    write(10, [(2000 + i, f"u-{i}", "e", nxt.replace(minute=i))
-               for i in range(2)]
-          + [(2999, "u-9", "e", dt.datetime(2026, 8, 14, 23, 0))])
-    q = w.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got2 = [_json.loads(ln) for ln in open(out).read().splitlines()]
-    hours = [r["hour"] for r in got2]
-    # + the first sentinel's own hour (finalized by the new-day data)
-    # and the new day's 01:00 — each exactly once, nothing re-delivered
-    assert len(hours) == len(set(hours)) == 7
-    assert "2026-08-14T01:00:00" in hours

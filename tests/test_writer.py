@@ -994,3 +994,127 @@ def test_structural_append_validation(log):
     # structurally valid edge ids still append
     assert log.append("  ", ok) == 0
     assert log.append("$oddball", [ProposedEvent("A", "{}")]) == 0
+
+
+def _pin_reader_scan(monkeypatch, w):
+    """Patch ``w.load`` so a call from the thread registered in the
+    returned list blocks AFTER its snapshot is pinned, until ``release``
+    is set; ``pinned`` is set once it blocks."""
+    import threading
+
+    pinned, release, readers = threading.Event(), threading.Event(), []
+    orig = w.load
+
+    def load():
+        df = orig()
+        if threading.get_ident() in readers:
+            pinned.set()
+            release.wait(60)
+        return df
+
+    monkeypatch.setattr(w, "load", load)
+    return pinned, release, readers
+
+
+def _run_pinned(readers, pinned, release, read, write):
+    """Start ``read`` in a thread, run ``write`` while its scan is
+    pinned, then let the read finish; joins with a deadline."""
+    import threading
+
+    def reader():
+        readers.append(threading.get_ident())
+        read()
+
+    t = threading.Thread(target=reader, daemon=True)
+    t.start()
+    assert pinned.wait(60), "reader never reached its scan"
+    try:
+        write()
+    finally:
+        release.set()
+    t.join(60)
+    assert not t.is_alive(), "reader did not finish"
+
+
+def test_cold_state_scan_racing_an_append_keeps_numbering(log, monkeypatch):
+    """A reader's cold ``_stream_state`` scan pins the log, an append to
+    the same stream commits, then the scan finishes: the reader's stale
+    head must not be cached as current. (Reading the generation after the
+    scan cached it, and the next append reused event number 1.)"""
+    log.append("s-1", [ProposedEvent("E", "{}")])
+    log._stats.clear()
+    log._ids.clear()
+    pinned, release, readers = _pin_reader_scan(monkeypatch, log)
+    _run_pinned(readers, pinned, release,
+                lambda: log.last_event_number("s-1"),
+                lambda: log.append("s-1", [ProposedEvent("E", "{}")]))
+    log.append("s-1", [ProposedEvent("E", "{}")])
+    got = sorted(r.event_number for r in
+                 log.load().where("stream_id = 's-1'").collect())
+    assert got == [0, 1, 2]
+
+
+def test_cold_meta_scan_racing_a_soft_delete_keeps_recreate(log, monkeypatch):
+    """The same interleaving for ``_current_meta``: a reader scans the
+    old `$tb` document while a soft delete commits `$tb` = MAX. The next
+    append must still see the soft delete and recreate the stream
+    (`$tb` moves to the first new event number)."""
+    import json
+
+    log.append("s-1", [ProposedEvent("E", "{}")])
+    log.append("$$s-1", [ProposedEvent("$metadata", '{"$tb": 0}')])
+    log._meta_cache.clear()
+    pinned, release, readers = _pin_reader_scan(monkeypatch, log)
+    _run_pinned(readers, pinned, release,
+                lambda: log._current_meta("s-1"),
+                lambda: log.soft_delete("s-1"))
+    assert log.append("s-1", [ProposedEvent("E", "{}")]) == 1
+    docs = (log.load().where("stream_id = '$$s-1'")
+            .orderBy("event_number").collect())
+    assert json.loads(docs[-1].data) == {"$tb": 1}
+
+
+def test_readers_beside_two_writers_keep_numbering_dense(spark, tmp_path):
+    """Stress: appends to one stream through two writer objects on the
+    same path invalidate each other's cached state, while reader threads
+    reload it through the first writer without the core mutex. Every
+    acknowledged event number is distinct and the stream stays dense."""
+    import sys
+    import threading
+    import time as _t
+
+    path = str(tmp_path / "log")
+    w1, w2 = EventLogWriter(spark, path), EventLogWriter(spark, path)
+    w1.append("s-1", [ProposedEvent("E", "{}")])
+    acks, done = [], threading.Event()
+
+    def append(w):
+        for _ in range(6):
+            acks.append(w.append("s-1", [ProposedEvent("E", "{}")]))
+
+    def read():
+        while not done.is_set():
+            w1.last_event_number("s-1")
+            w1._current_meta("s-1")
+
+    appenders = [threading.Thread(target=append, args=(w,), daemon=True)
+                 for w in (w1, w2, w1, w2)]
+    readers = [threading.Thread(target=read, daemon=True) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in readers + appenders:
+            t.start()
+        deadline = _t.monotonic() + 180
+        for t in appenders:
+            t.join(timeout=max(0.0, deadline - _t.monotonic()))
+        done.set()
+        for t in readers:
+            t.join(timeout=max(0.0, deadline - _t.monotonic()))
+    finally:
+        done.set()
+        sys.setswitchinterval(interval)
+    assert all(not t.is_alive() for t in readers + appenders)
+    assert sorted(acks) == list(range(1, 25))
+    got = sorted(r.event_number for r in w1.load().collect())
+    assert got == list(range(25))
