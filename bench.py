@@ -150,10 +150,8 @@ def main():
     # standard robust estimator. Caches are cleared before EVERY repetition
     # so no repetition reuses the previous one's materialized data — each
     # timed run does the full data work at the target SF.
-    timings: dict[str, float] = {}
-    spread: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
-        fn = qs[name]
+    def _time_query(name: str) -> list[float]:
+        """The three timed repetitions of ``name``, sorted."""
         reps: list[float] = []
         for rep in range(3):
             spark.catalog.clearCache()
@@ -163,11 +161,15 @@ def main():
             # Spark call) and does not alter the timing methodology
             spark.sparkContext.setJobDescription(f"bench: {name} rep{rep}")
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             reps.append(time.time() - t0)
             spark.sparkContext.setJobDescription(None)
-        reps.sort()
+        return sorted(reps)
+
+    timings: dict[str, float] = {}
+    spread: dict[str, dict[str, float]] = {}
+    for name in HEADLINE:
+        reps = _time_query(name)
         timings[name] = round(reps[1], 3)
         # per-query spread makes the artifact noise-adjudicable: a wide
         # max/min ratio on a co-tenant machine is visible in the record
@@ -191,25 +193,15 @@ def main():
     if os.environ.get("SPARK_GRAFT_BENCH_SECONDARY"):
         secondary: dict[str, float] = {}
         for name in SECONDARY:
-            fn = qs[name]
             try:
                 spark.sparkContext.setJobDescription(f"warmup: {name}")
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             except Exception as e:
                 print(f"SECONDARY WARMUP FAILED {name}: {e!r}", file=sys.stderr)
                 continue
             finally:
                 spark.sparkContext.setJobDescription(None)
-            reps = []
-            for rep in range(3):
-                spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"bench: {name} rep{rep}")
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                reps.append(time.time() - t0)
-                spark.sparkContext.setJobDescription(None)
-            reps.sort()
-            secondary[name] = round(reps[1], 3)
+            secondary[name] = round(_time_query(name)[1], 3)
         out["secondary"] = secondary
 
     print(json.dumps(out))

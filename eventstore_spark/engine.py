@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 from .operators.filters import EventFilter
 from .operators.links import resolve_links
 from .operators import memory_streams as mem
-from .operators.retention import stream_visibility, visible_events
+from .operators.retention import (
+    metadata_dimension,
+    stream_visibility,
+    visible_events,
+)
 from .operators import system_projections as sysproj
 from .projections.dsl import Projection
 from .projections.runtime import ProjectionResult, run_batch
@@ -92,8 +96,6 @@ class EventStoreEngine:
             spark, path, lock_timeout_s=lock_timeout_s,
             read_only=read_only,
         )
-        # (key, {stream_id: metadata-dimension Row}) — see _metadata_snapshot
-        self._md_snapshot: tuple | None = None
         self.projections: dict[str, _ManagedProjection] = {}
         # groups rebuilt by a service-level ReplayParked with no live
         # instance: the next attach for the key ADOPTS the rebuilt group
@@ -169,7 +171,7 @@ class EventStoreEngine:
         df = self.writer.load()
         if not visible_only:
             return df
-        return self._events_of(df, self._metadata_snapshot().values())
+        return self._events_of(df, self.writer.metadata_snapshot().values())
 
     def events_at(self, manifest_seq: int, visible_only: bool = True) -> DataFrame:
         """Time travel: the store as of manifest generation
@@ -201,70 +203,19 @@ class EventStoreEngine:
         md = self.spark.sql(
             "SELECT inline(from_json(:rows, "
             f"'array<{STREAM_METADATA_SCHEMA.simpleString()}>'))",
-            args={"rows": json.dumps([r.asDict() for r in md_rows])},
+            args={"rows": json.dumps([
+                {f.name: r[f.name] for f in STREAM_METADATA_SCHEMA.fields}
+                for r in md_rows])},
         )
         if all(r.max_count is None for r in md_rows):
             md = md.drop("max_count")  # visible_events then needs no heads
         return visible_events(user, md)
 
-    def _metadata_snapshot(self) -> dict:
-        """stream_id → metadata-dimension row, collected once per metadata
-        generation: ``core.meta_gen``, which the writer bumps after it
-        publishes a commit that can change the dimension. A read-only
-        engine, or a store a foreign process published to, keys on the
-        manifest generation instead (one directory listing)."""
-        core = self.writer._core
-        gens = self.manifest_history()
-        seq = gens[-1] if gens else -1
-        if self.writer.read_only or seq != core.manifest_seq:
-            key = ("seq", seq)
-        else:
-            key = ("gen", core.meta_gen)
-        snap = self._md_snapshot
-        if snap is None or snap[0] != key:
-            snap = self._md_snapshot = (
-                key, {r.stream_id: r for r in self.stream_metadata().collect()}
-            )
-        return snap[1]
-
-    def stream_metadata(self, df: DataFrame | None = None) -> DataFrame | None:
-        """Parse `$$<stream>` metastreams into the metadata dimension
-        (latest $metadata event wins), plus tombstones from the log.
-        ``df`` overrides the log snapshot (time-travel reads). Reads use
-        its collected rows (``_metadata_snapshot``)."""
-        if df is None:
-            df = self.writer.load()
-        # ONE aggregate keyed on the owner stream yields ONE row per
-        # stream: the latest `$$X` $metadata document (max_by skips the
-        # tombstone rows, whose ordering value is NULL) and a tombstone
-        # flag that wins even when the stream also has metadata — two
-        # rows here would duplicate events through the visibility join
-        # and leave a tombstoned=False copy visible (hard delete must hide
-        # the stream unconditionally, PrepareFlags.StreamDelete).
-        is_meta = (df.stream_id.startswith(METASTREAM_PREFIX)
-                   & (df.event_type == "$metadata"))
-        is_tomb = df.event_type == "$streamDeleted"
-        owner = F.when(is_meta, F.expr(
-            f"substring(stream_id, {len(METASTREAM_PREFIX) + 1})"
-        )).otherwise(F.col("stream_id"))
-        dim = df.where(is_meta | is_tomb).groupBy(owner.alias("stream_id")).agg(
-            F.max_by("data", F.when(is_meta, F.col("event_number"))).alias("data"),
-            F.max(is_tomb).alias("tombstoned"),
-        )
-        return dim.select(
-            "stream_id",
-            F.get_json_object("data", "$.$maxCount").cast("long").alias("max_count"),
-            F.get_json_object("data", "$.$maxAge").cast("long").alias("max_age_seconds"),
-            F.get_json_object("data", "$.$tb").cast("long").alias("truncate_before"),
-            "tombstoned",
-            # $acl rides through as its JSON document (StreamAcl.cs:
-            # 11-34); $tmp as a boolean (StreamMetadata.cs:24,141);
-            # $cacheControl in seconds (StreamMetadata.cs:26)
-            F.get_json_object("data", "$.$acl").alias("acl"),
-            F.get_json_object("data", "$.$tmp").cast("boolean").alias("is_temp"),
-            F.get_json_object("data", "$.$cacheControl").cast("long")
-            .alias("cache_control_seconds"),
-        )
+    def stream_metadata(self, df: DataFrame | None = None) -> DataFrame:
+        """The metadata dimension (``retention.metadata_dimension``) of the
+        log, or of ``df`` (time-travel reads); reads use its collected rows,
+        ``writer.metadata_snapshot()``."""
+        return metadata_dimension(self.writer.load() if df is None else df)
 
     # ---------------------------------------------------------------- writes
     def append(self, stream_id: str, events: list[ProposedEvent],
@@ -343,7 +294,7 @@ class EventStoreEngine:
                    else self.DEFAULT_USER_ACL)
         sys_acl = settings.get(
             "$systemStreamAcl" if is_system else "$userStreamAcl") or def_acl
-        row = self._metadata_snapshot().get(stream_id)
+        row = self.writer.metadata_snapshot().get(stream_id)
         own = json.loads(row.acl) if row is not None and row.acl else None
         return {
             "acl": own or sys_acl,
@@ -474,7 +425,7 @@ class EventStoreEngine:
                 F.col("stream_id").startswith(METASTREAM_PREFIX))
         if sysproj.is_system_stream_name(stream_id):
             return self.events()
-        row = self._metadata_snapshot().get(stream_id)
+        row = self.writer.metadata_snapshot().get(stream_id)
         df = self.writer.load().where(F.col("stream_id") == stream_id)
         head = None
         if row is not None and row.max_count is not None:
@@ -549,7 +500,7 @@ class EventStoreEngine:
         # empty page of a stream WITH metadata asks the writer whether the
         # stream was ever written.
         user = not stream_id.startswith("$")
-        row = self._metadata_snapshot().get(stream_id) if user else None
+        row = self.writer.metadata_snapshot().get(stream_id) if user else None
         if row is not None and row.tombstoned:
             raise StreamDeletedError(stream_id)
         base = self._read_base(stream_id)
@@ -562,7 +513,7 @@ class EventStoreEngine:
         )
         if user and page.last_event_number < 0 and (
                 row is None or row.truncate_before == MAX_LONG
-                or self.writer._stream_state(stream_id)[0] == NO_STREAM):
+                or self.writer.last_event_number(stream_id) == NO_STREAM):
             page.result = "NoStream"
         return page
 
@@ -1888,8 +1839,8 @@ class EventStoreEngine:
                     doc[f"es-{k}-{k2}"] = v2
             else:
                 doc[f"es-{k}"] = v
-        if self.writer._current_meta(
-                self.NODE_STATS_STREAM).get("$maxAge") is None:
+        row = self.writer.metadata_snapshot().get(self.NODE_STATS_STREAM)
+        if row is None or row.max_age_seconds is None:
             self.set_stream_metadata(
                 self.NODE_STATS_STREAM, max_age_seconds=10 * 86400)
         self.writer.append(self.NODE_STATS_STREAM, [ProposedEvent(
@@ -2003,7 +1954,8 @@ class EventStoreEngine:
         (TFChunkScavengerLogManager.SetScavengeStreamMetadata) — links to
         aged-out detail events age out with them."""
         want = self.scavenge_history_max_age_days * 86400
-        if self.writer._current_meta("$scavenges").get("$maxAge") != want:
+        row = self.writer.metadata_snapshot().get("$scavenges")
+        if row is None or row.max_age_seconds != want:
             self.set_stream_metadata("$scavenges", max_age_seconds=want)
 
     def recover_scavenge_log(self) -> list[str]:
@@ -2083,10 +2035,8 @@ class EventStoreEngine:
         t0 = _time.monotonic()
         size_before = self.store_statistics()["log_bytes"]
         try:
-            stats = _scavenge(
-                self.spark, self.path, self.stream_metadata(),
-                now_ts=now_ts, target_files=target_files,
-            )
+            stats = _scavenge(self.spark, self.path, now_ts=now_ts,
+                              target_files=target_files)
         except BaseException as e:
             self._scavenge_log_append(detail, "$scavengeCompleted", {
                 "scavengeId": sid, "nodeEndpoint": "local",
@@ -2297,9 +2247,7 @@ class EventStoreEngine:
             )
             for seq in (gens[-max_as_of_views:] if max_as_of_views else []):
                 reg(f"{prefix}_events_at_{seq}", self.events_at(seq))
-        meta = self.stream_metadata()
-        if meta is not None:
-            reg(f"{prefix}_metadata", meta)
+        reg(f"{prefix}_metadata", self.stream_metadata())
         for name, mp in self.projections.items():
             if mp.last_result is not None:
                 reg(f"{prefix}_proj_{name}", mp.last_result.states)

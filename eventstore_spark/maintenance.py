@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 
 from . import manifest
 from .manifest import vacuum  # noqa: F401  (public maintenance surface)
-from .operators.retention import visible_events
+from .operators.retention import metadata_dimension, visible_events
 from .schema import EVENTS_SCHEMA, MAX_LONG, METASTREAM_PREFIX
 from .writer import _core_for
 
@@ -112,13 +112,16 @@ def _publish_rewrite(path: str, staging: str, tag: str,
 def scavenge(
     spark: SparkSession,
     path: str,
-    stream_metadata=None,
     now_ts=None,
     target_files: int = 8,
 ) -> dict:
-    """Run a scavenge over a log directory; returns stats."""
+    """Run a scavenge over a log directory; returns stats. Retention
+    comes from the metadata dimension of the same pinned snapshot the
+    rewrite reads, so a metadata change committed meanwhile is never
+    applied to rows it does not describe."""
     df, base_seq = _read_snapshot(spark, path)
     before = df.count()
+    md = metadata_dimension(df)
 
     is_meta = F.col("stream_id").startswith(METASTREAM_PREFIX)
     user = df.where(~is_meta)
@@ -141,19 +144,16 @@ def scavenge(
     # soft-deleted stream keeps its $tb-only metadata so the stream can
     # be recreated). The flag set is a metadata-scale dimension, so the
     # anti-joins broadcast.
-    temp_deleted_metas = latest_meta.where(
-        (F.get_json_object("data", "$.$tmp").cast("boolean"))
-        & (F.get_json_object("data", "$.$tb").cast("long") == MAX_LONG)
+    temp_deleted = md.where(
+        F.col("is_temp") & (F.col("truncate_before") == MAX_LONG)
     ).select("stream_id")
-    temp_deleted = temp_deleted_metas.select(
-        F.expr(f"substring(stream_id, {len(METASTREAM_PREFIX) + 1})")
-        .alias("stream_id")
-    )
     latest_meta = latest_meta.join(
-        F.broadcast(temp_deleted_metas), "stream_id", "left_anti"
+        F.broadcast(temp_deleted.select(
+            F.concat(F.lit(METASTREAM_PREFIX), "stream_id").alias("stream_id"))),
+        "stream_id", "left_anti",
     )
 
-    kept_user = visible_events(user, stream_metadata, now_ts=now_ts).join(
+    kept_user = visible_events(user, md, now_ts=now_ts).join(
         F.broadcast(temp_deleted), "stream_id", "left_anti"
     )
     kept = kept_user.unionByName(latest_meta).unionByName(tombstones).dropDuplicates(

@@ -5,6 +5,11 @@ BEFORE touching the index (IndexReader.ReadStreamEventsForwardInternal,
 /root/reference/src/EventStore.Core/Services/Storage/ReaderIndex/
 IndexReader.cs:250-330), and hides everything for tombstoned streams.
 
+The metadata dimension is built here, once (``metadata_dimension``): one
+row per stream with metadata or a tombstone. The writer keeps its
+collected rows as the store's metadata snapshot, which engine reads,
+commit checks and scavenge's temp-stream rule all read.
+
 The rule is written once (``visibility_rule``, over Columns) and has two
 forms:
 
@@ -23,9 +28,53 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-from ..schema import MAX_LONG
+from ..schema import (
+    MAX_LONG,
+    METADATA_EVENT_TYPE,
+    METASTREAM_PREFIX,
+    STREAM_DELETED_EVENT_TYPE,
+)
 
 _SETTINGS = ("max_count", "max_age_seconds", "truncate_before", "tombstoned")
+
+
+def metadata_dimension(df: DataFrame) -> DataFrame:
+    """Parse `$$<stream>` metastreams of the log ``df`` into the metadata
+    dimension (latest $metadata event wins), plus tombstones.
+
+    ONE aggregate keyed on the owner stream yields ONE row per stream:
+    the latest `$$X` $metadata document (max_by skips the tombstone rows,
+    whose ordering value is NULL) and a tombstone flag that wins even
+    when the stream also has metadata — two rows here would duplicate
+    events through the visibility join and leave a tombstoned=False copy
+    visible (hard delete must hide the stream unconditionally,
+    PrepareFlags.StreamDelete). The raw document rides along as ``data``
+    so a recreate can rewrite `$tb` inside it (SoftUndeleteRawMeta)."""
+    is_meta = (df.stream_id.startswith(METASTREAM_PREFIX)
+               & (df.event_type == METADATA_EVENT_TYPE))
+    is_tomb = df.event_type == STREAM_DELETED_EVENT_TYPE
+    owner = F.when(is_meta, F.expr(
+        f"substring(stream_id, {len(METASTREAM_PREFIX) + 1})"
+    )).otherwise(F.col("stream_id"))
+    dim = df.where(is_meta | is_tomb).groupBy(owner.alias("stream_id")).agg(
+        F.max_by("data", F.when(is_meta, F.col("event_number"))).alias("data"),
+        F.max(is_tomb).alias("tombstoned"),
+    )
+    return dim.select(
+        "stream_id",
+        F.get_json_object("data", "$.$maxCount").cast("long").alias("max_count"),
+        F.get_json_object("data", "$.$maxAge").cast("long").alias("max_age_seconds"),
+        F.get_json_object("data", "$.$tb").cast("long").alias("truncate_before"),
+        "tombstoned",
+        # $acl rides through as its JSON document (StreamAcl.cs:
+        # 11-34); $tmp as a boolean (StreamMetadata.cs:24,141);
+        # $cacheControl in seconds (StreamMetadata.cs:26)
+        F.get_json_object("data", "$.$acl").alias("acl"),
+        F.get_json_object("data", "$.$tmp").cast("boolean").alias("is_temp"),
+        F.get_json_object("data", "$.$cacheControl").cast("long")
+        .alias("cache_control_seconds"),
+        "data",
+    )
 
 
 def visibility_rule(tombstoned: Column, truncate_before: Column,

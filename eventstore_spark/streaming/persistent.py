@@ -379,16 +379,8 @@ class PersistentSubscription:
     def _parked_truncate_before(self) -> int:
         """$tb of the parked stream (set by replay's reprocessed marker,
         MessageParker.cs:202-208); 0 when never truncated."""
-        row = (
-            self.park_writer.load()
-            .where(F.col("stream_id") == f"$${self.parked_stream_id}")
-            .orderBy(F.col("event_number").desc())
-            .select("data")
-            .first()
-        )
-        if row is None:
-            return 0
-        return int(json.loads(row.data).get("$tb", 0))
+        row = self.park_writer.metadata_snapshot().get(self.parked_stream_id)
+        return 0 if row is None else row.truncate_before or 0
 
     def _parked_rows(self):
         """Visible (un-reprocessed) parked link rows, oldest first."""
@@ -514,7 +506,8 @@ class PersistentSubscription:
         from ..writer import ProposedEvent
 
         w = self.park_writer
-        if w._current_meta(self.checkpoint_stream_id).get("$maxCount") != 2:
+        row = w.metadata_snapshot().get(self.checkpoint_stream_id)
+        if row is None or row.max_count != 2:
             w.append(f"$${self.checkpoint_stream_id}", [ProposedEvent(
                 "$metadata", json.dumps({"$maxCount": 2}, sort_keys=True))])
         # data = the position's string form as JSON

@@ -34,11 +34,14 @@ atomic columnar commit:
     directory;
   * writer state is LAZY and BOUNDED: opening a writer reads exactly one
     scalar (max log_position) from the log; per-stream last-event-number /
-    tombstone / recent-event-ids load on first touch of that stream via a
+    recent-event-ids load on first touch of that stream via a
     pruned scan — the analog of the reference's LRU last-event-number cache
     (IndexBackend) plus its bounded near-head idempotency check
     (IndexWriter.cs:179-255 only consults recent commits). Nothing is ever
-    O(log size) on the driver.
+    O(log size) on the driver. A stream's metadata document and deletion
+    state come from the store's one metadata snapshot
+    (``metadata_snapshot``), which engine reads share — the reference's
+    one stream-metadata cache in IndexBackend.
 
 Bulk emission appends (``append_df``) stay DISTRIBUTED end to end: dedupe
 is a left-anti join against the log, per-stream event numbers come from a
@@ -64,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import manifest
+from .operators.retention import metadata_dimension
 from .schema import (
     EVENTS_SCHEMA,
     METADATA_EVENT_TYPE,
@@ -165,9 +169,11 @@ class _PathCore:
         published; a writer whose cached per-stream state was taken at an
         older generation reloads from the log before trusting it;
       * ``meta_gen`` bumps after every publish that can change the
-        metadata dimension (a ``$$`` or ``$streamDeleted`` row, a bulk
-        append, a rollback, a maintenance rewrite) — the key of the
-        engine's cached metadata snapshot;
+        metadata dimension (a ``$$`` or ``$streamDeleted`` row, a
+        rollback, a maintenance rewrite); ``md_snapshot`` holds the
+        dimension's collected rows under their key (see
+        ``EventLogWriter.metadata_snapshot``), shared by every writer and
+        engine on the path — reads and commit checks alike;
       * the commit condition/epoch (U3 long-poll wakeups) lives here, so
         a waiter parked via one writer object wakes on a commit made
         through another;
@@ -183,6 +189,7 @@ class _PathCore:
         self.last_position: int | None = None  # None until first recovery
         self.stream_gen: dict[str, int] = {}
         self.meta_gen = 0
+        self.md_snapshot: tuple | None = None  # (key, {stream_id: Row})
         self.fence_token: str | None = None
         # manifest generation this process last observed/published — the
         # base every append publish CASes against (manifest.append_files
@@ -362,20 +369,16 @@ class EventLogWriter:
         # cross-process fencing (see _PathCore / _acquire_fence)
         self._core = _core_for(path)
         self._last_position = 0
-        # stream -> [last_event_number, tombstoned]; filled lazily per
-        # stream (LRU-cache analog of IndexBackend's last-event-number).
-        self._stats: dict[str, list] = {}
-        # stream -> core.stream_gen value at which _stats/_ids/_meta_cache
-        # for that stream were taken; a foreign commit bumps the core gen
-        # and invalidates this writer's cached view of the stream.
+        # stream -> last_event_number; filled lazily per stream
+        # (LRU-cache analog of IndexBackend's last-event-number).
+        self._stats: dict[str, int] = {}
+        # stream -> core.stream_gen value at which _stats/_ids for that
+        # stream were taken; a foreign commit bumps the core gen and
+        # invalidates this writer's cached view of the stream.
         self._cache_gen: dict[str, int] = {}
         # stream -> {event_id: event_number}, bounded to the most recent
         # IDEMPOTENCY_WINDOW events per stream.
         self._ids: dict[str, dict[str, int]] = {}
-        # stream -> current metadata DOCUMENT (parsed JSON of the latest
-        # $metadata event), lazily read from the metastream; drives
-        # soft-delete recreate. Kept current on every metastream append.
-        self._meta_cache: dict[str, dict] = {}
         # guards each check-and-store of the caches above: a reader that
         # scanned without the core mutex never overwrites state an
         # appender stored or applied at its own or a newer generation
@@ -411,10 +414,10 @@ class EventLogWriter:
         row = self.load().agg(F.max("log_position")).first()
         self._last_position = int(row[0] or 0)
 
-    def _stream_state(self, stream_id: str) -> list:
-        """[last_event_number, tombstoned] for a stream, loading it from
-        the log on first touch via one pruned per-stream scan bounded to
-        the IDEMPOTENCY_WINDOW most recent events.
+    def _stream_state(self, stream_id: str) -> int:
+        """The last event number of a stream, loading it from the log on
+        first touch via one pruned per-stream scan bounded to the
+        IDEMPOTENCY_WINDOW most recent events.
 
         The cache is only authoritative when the id map is loaded too:
         ``append_df`` maintains ``_stats`` (numbering) but not ``_ids``
@@ -443,13 +446,10 @@ class EventLogWriter:
                 .where(F.col("stream_id") == stream_id)
                 .orderBy(F.col("event_number").desc())
                 .limit(IDEMPOTENCY_WINDOW)
-                .select("event_number", "event_id", "event_type")
+                .select("event_number", "event_id")
                 .collect()
             )
         last = int(rows[0]["event_number"]) if rows else NO_STREAM
-        # A tombstone is always the stream's final event (appends are
-        # rejected afterwards), so the bounded window always contains it.
-        tomb = bool(rows) and rows[0]["event_type"] == STREAM_DELETED_EVENT_TYPE
         # latest position wins for a re-committed id (rows arrive DESC;
         # build ASC so the most recent commit overwrites) — matches
         # _remember_id's append-time bookkeeping
@@ -457,7 +457,7 @@ class EventLogWriter:
         with self._cache_lock:
             if (stream_id not in self._ids
                     or self._cache_gen.get(stream_id, -1) < gen):
-                self._stats[stream_id] = [last, tomb]
+                self._stats[stream_id] = last
                 self._ids[stream_id] = ids
                 self._cache_gen[stream_id] = gen
             return self._stats[stream_id]
@@ -469,6 +469,50 @@ class EventLogWriter:
             cutoff = event_number - IDEMPOTENCY_WINDOW
             for k in [k for k, v in known.items() if v < cutoff]:
                 del known[k]
+
+    def metadata_snapshot(self) -> dict:
+        """stream_id → metadata-dimension row (``retention.
+        metadata_dimension``, raw ``data`` document included), collected
+        once per key and stored on the shared core: every writer and
+        engine on the path reads the same rows, for reads and commit
+        checks alike. The key is ``core.meta_gen`` while the latest
+        manifest generation is the one this process last published; a
+        store another process published to keys on that generation (one
+        directory listing). The key is read BEFORE the scan, so rows
+        scanned while a commit published are stored under the older key
+        and recollected, never served as current."""
+        core = self._core
+        gens = manifest.history(self.path)
+        seq = gens[-1] if gens else -1
+        key = ("gen", core.meta_gen) if seq == core.manifest_seq else ("seq", seq)
+        snap = core.md_snapshot
+        if snap is None or snap[0] != key:
+            rows = (metadata_dimension(self.load()).collect()
+                    if self._has_files() else [])
+            snap = core.md_snapshot = (key, {r.stream_id: r for r in rows})
+        return snap[1]
+
+    def _metadata_of(self, stream_id: str, applied: dict) -> tuple:
+        """(latest $metadata document, tombstoned) of a stream: what an
+        earlier append of the same commit group applied, else the
+        metadata snapshot."""
+        if stream_id in applied:
+            return applied[stream_id]
+        row = self.metadata_snapshot().get(stream_id)
+        return (None, False) if row is None else (row.data, bool(row.tombstoned))
+
+    def _soft_deleted_doc(self, stream_id: str, applied: dict) -> dict | None:
+        """The reference's IIndexWriter.IsSoftDeleted: the stream's current
+        metadata document (whole-document semantics — a metadata write
+        REPLACES it, StreamMetadata.cs:60-150) when it carries
+        TruncateBefore == long.Max (`$tb` = MAX_LONG), else None."""
+        if stream_id.startswith("$"):
+            return None
+        try:
+            doc = json.loads(self._metadata_of(stream_id, applied)[0] or "{}")
+        except ValueError:
+            return None
+        return doc if doc and doc.get("$tb") == MAX_LONG else None
 
     # -- size validation (Grpc/Streams.Append.cs:18, TFConsts.cs:9-11) --
     def _validate_sizes(self, events: list[ProposedEvent]) -> None:
@@ -488,15 +532,16 @@ class EventLogWriter:
             )
 
     # -- the commit check (IndexWriter.CheckCommit analog) --
-    def _check(self, stream_id: str, events: list[ProposedEvent], expected: int):
+    def _check(self, stream_id: str, events: list[ProposedEvent], expected: int,
+               applied: dict):
         """Returns ``"ok"`` or ``("idempotent", end_event_number)`` where
         ``end_event_number`` is the REPLAYED BATCH's own final event
         number (CommitCheckResult carries startEventNumber/endEventNumber
         of the original commit — a delayed retry must get its own
         positions back, not the stream's advanced head)."""
-        last, tombstoned = self._stream_state(stream_id)
-        if tombstoned:
+        if self._metadata_of(stream_id, applied)[1]:
             raise StreamDeletedError(stream_id)
+        last = self._stream_state(stream_id)
         # a tombstone mid-batch would leave events committed ABOVE the
         # $streamDeleted, breaking "the tombstone is the stream's final
         # event" which tombstone detection depends on — reject before
@@ -512,14 +557,13 @@ class EventLogWriter:
             # StreamExists on a soft-deleted stream is CommitDecision.
             # Deleted (IndexWriter.CheckCommit:192-193) — unlike ANY /
             # NoStream, it does NOT recreate.
-            if self._is_soft_deleted(stream_id):
+            if self._soft_deleted_doc(stream_id, applied) is not None:
                 raise StreamDeletedError(stream_id)
             if last == NO_STREAM:
                 # the stream also "exists" when only its METASTREAM has
                 # events — metadata was set before the first append
                 # (CheckCommit:195-200)
-                meta_last, _ = self._stream_state(f"$${stream_id}")
-                if meta_last == NO_STREAM:
+                if self._stream_state(f"$${stream_id}") == NO_STREAM:
                     raise WrongExpectedVersionError(stream_id, expected, last)
         elif expected != last:
             # NO_STREAM is exact version -1. On mismatch, walk the batch
@@ -535,8 +579,8 @@ class EventLogWriter:
                 for i, ev in enumerate(events):
                     if known.get(ev.event_id) == expected + 1 + i:
                         continue
-                    if i == 0 and expected == NO_STREAM \
-                            and self._is_soft_deleted(stream_id):
+                    if i == 0 and expected == NO_STREAM and \
+                            self._soft_deleted_doc(stream_id, applied) is not None:
                         return "ok"  # soft-delete recreate
                     raise WrongExpectedVersionError(stream_id, expected, last)
                 # idempotent replay reports the BATCH's own end number
@@ -561,52 +605,6 @@ class EventLogWriter:
                 return ("idempotent", known[events[-1].event_id])
             raise WrongExpectedVersionError(stream_id, expected, last)
         return "ok"
-
-    def _is_soft_deleted(self, stream_id: str) -> bool:
-        """The reference's IIndexWriter.IsSoftDeleted: current metadata
-        carries TruncateBefore == long.Max (`$tb` = MAX_LONG)."""
-        if stream_id.startswith("$"):
-            return False
-        return self._current_meta(stream_id).get("$tb") == MAX_LONG
-
-    def _current_meta(self, stream_id: str) -> dict:
-        """The stream's current metadata document (latest $metadata event of
-        `$$stream`, whole-document semantics — a metadata write REPLACES the
-        document, StreamMetadata.cs:60-150), lazily read and cached; the
-        cache invalidates when another writer commits to the metastream
-        (generation check on `$$stream` against the shared core)."""
-        meta_id = f"$${stream_id}"
-        meta_gen_key = f"meta:{stream_id}"
-        gen = self._core.stream_gen.get(meta_id, 0)  # before the scan
-        if (
-            stream_id in self._meta_cache
-            and self._cache_gen.get(meta_gen_key, 0) == gen
-        ):
-            return self._meta_cache[stream_id]
-        doc: dict = {}
-        if self._has_files():
-            rows = (
-                self.load()
-                .where(
-                    (F.col("stream_id") == meta_id)
-                    & (F.col("event_type") == METADATA_EVENT_TYPE)
-                )
-                .orderBy(F.col("event_number").desc())
-                .limit(1)
-                .select("data")
-                .collect()
-            )
-            if rows and rows[0]["data"]:
-                try:
-                    doc = json.loads(rows[0]["data"]) or {}
-                except ValueError:
-                    doc = {}
-        with self._cache_lock:
-            if (stream_id not in self._meta_cache
-                    or self._cache_gen.get(meta_gen_key, -1) < gen):
-                self._meta_cache[stream_id] = doc
-                self._cache_gen[meta_gen_key] = gen
-            return self._meta_cache[stream_id]
 
     def append(
         self,
@@ -681,24 +679,25 @@ class EventLogWriter:
                 self._queue_cond.notify_all()
 
     def _apply_append(self, stream_id, events, expected_version, created,
-                      rows_sink: list, touched: set) -> int:
+                      rows_sink: list, touched: set, applied: dict) -> int:
         """Check one append and APPLY it to in-memory state, emitting its
         rows into ``rows_sink`` for the caller to commit (possibly merged
-        with other appends' rows — group commit). All validations run
-        BEFORE any mutation, so a rejected append never dirties state;
-        after a failed physical commit the caller rolls ``touched``
-        streams back to the durable log via ``_rollback``."""
+        with other appends' rows — group commit) and the metadata and
+        tombstones it sets into ``applied``, which later appends of the
+        group check against. All validations run BEFORE any mutation, so
+        a rejected append never dirties state; after a failed physical
+        commit the caller rolls ``touched`` streams back to the durable
+        log via ``_rollback``."""
         self._last_position = max(
             self._last_position, self._core.last_position or 0
         )
         self._validate_sizes(events)
-        decision = self._check(stream_id, events, expected_version)
+        decision = self._check(stream_id, events, expected_version, applied)
         if decision != "ok":
             return decision[1]  # ("idempotent", batch's own end number)
         now = created or datetime.now(timezone.utc)
-        st = self._stream_state(stream_id)
+        last = self._stream_state(stream_id)
         touched.add(stream_id)
-        last = st[0]
         # once _check said "ok" the WHOLE batch commits fresh — the
         # reference never partially skips rows inside one transaction
         # (CheckCommit:204-233: a known id after an unknown FIRST id is
@@ -718,38 +717,30 @@ class EventLogWriter:
                 )
             )
             if ev.event_type == STREAM_DELETED_EVENT_TYPE:
-                st[1] = True
-        st[0] = last
+                applied[stream_id] = (
+                    self._metadata_of(stream_id, applied)[0], True)
+            elif (ev.event_type == METADATA_EVENT_TYPE
+                  and stream_id.startswith(METASTREAM_PREFIX)):
+                # a $metadata append to `$$X` REPLACES X's document (the
+                # reference's GetStreamRawMeta always reads the latest)
+                owner = stream_id[len(METASTREAM_PREFIX):]
+                applied[owner] = (ev.data, self._metadata_of(owner, applied)[1])
+        self._stats[stream_id] = last
         self._core.last_position = self._last_position
-        if first_new is not None:
-            # keep the metadata cache current: a $metadata append to `$$X`
-            # REPLACES X's document (the reference's GetStreamRawMeta always
-            # reads the latest; a stale cached $tb would mis-trigger
-            # recreate after set_stream_metadata overwrote it).
-            if stream_id.startswith("$$"):
-                orig = stream_id[2:]
-                for ev in events:
-                    if ev.event_type == METADATA_EVENT_TYPE:
-                        try:
-                            doc = json.loads(ev.data or "{}") or {}
-                        except ValueError:
-                            doc = {}
-                        self._set_meta_cache(orig, doc)
-            # soft-delete recreate: a stream whose $tb == MAX_LONG comes
-            # back to life on append — rewrite $tb to the first new number,
-            # PRESERVING the rest of the metadata document
-            # (SoftUndeleteRawMeta, StorageWriterService.cs:438-449). The
-            # metastream rows join the SAME sink → same atomic commit.
-            if not stream_id.startswith("$"):
-                if self._current_meta(stream_id).get("$tb") == MAX_LONG:
-                    doc = dict(self._current_meta(stream_id))
-                    doc["$tb"] = first_new
-                    self._apply_append(
-                        f"$${stream_id}",
-                        [ProposedEvent(METADATA_EVENT_TYPE,
-                                       data=json.dumps(doc, sort_keys=True))],
-                        ANY, created, rows_sink, touched,
-                    )
+        # soft-delete recreate: a stream whose $tb == MAX_LONG comes back
+        # to life on append — rewrite $tb to the first new number,
+        # PRESERVING the rest of the metadata document (SoftUndeleteRawMeta,
+        # StorageWriterService.cs:438-449). The metastream rows join the
+        # SAME sink → same atomic commit.
+        doc = None if first_new is None else self._soft_deleted_doc(stream_id, applied)
+        if doc is not None:
+            doc["$tb"] = first_new
+            self._apply_append(
+                f"$${stream_id}",
+                [ProposedEvent(METADATA_EVENT_TYPE,
+                               data=json.dumps(doc, sort_keys=True))],
+                ANY, created, rows_sink, touched, applied,
+            )
         return last
 
     def _rollback(self, touched: set) -> None:
@@ -764,9 +755,6 @@ class EventLogWriter:
                 self._ids.pop(sid, None)
                 self._cache_gen.pop(sid, None)
                 self._core.stream_gen[sid] = self._core.stream_gen.get(sid, 0) + 1
-                if sid.startswith("$$"):
-                    self._meta_cache.pop(sid[2:], None)
-                    self._cache_gen.pop(f"meta:{sid[2:]}", None)
         self._core.meta_gen += 1
         self._last_position = 0
         self._recover()
@@ -779,11 +767,12 @@ class EventLogWriter:
         _verify_fence(self._core)
         rows: list[tuple] = []
         touched: set[str] = set()
+        applied: dict[str, tuple] = {}  # see _metadata_of
         for sid, events, expected, created, box in batch:
             rows_before, touched_before = len(rows), set(touched)
             try:
                 box["result"] = self._apply_append(
-                    sid, events, expected, created, rows, touched
+                    sid, events, expected, created, rows, touched, applied
                 )
             except BaseException as e:
                 box["error"] = e
@@ -844,14 +833,6 @@ class EventLogWriter:
             gen = self._core.stream_gen.get(stream_id, 0) + 1
             self._core.stream_gen[stream_id] = gen
             self._cache_gen[stream_id] = gen
-            if stream_id.startswith("$$"):
-                self._cache_gen[f"meta:{stream_id[2:]}"] = gen
-
-    def _set_meta_cache(self, stream_id: str, doc: dict) -> None:
-        self._meta_cache[stream_id] = doc
-        self._cache_gen[f"meta:{stream_id}"] = self._core.stream_gen.get(
-            f"$${stream_id}", 0
-        )
 
     def append_df(self, batch: DataFrame, created: datetime | None = None) -> None:
         """Bulk path: append pre-shaped envelope rows (stream_id,
@@ -909,16 +890,19 @@ class EventLogWriter:
             b = b.join(log, ["stream_id", "event_id"], "left_anti")
         with query_scope():
             b = scoped_cache(b)
-            # one job yields per-stream counts AND the size guard: the
-            # single-event path validates MAX_RECORD_SIZE (TFConsts parity)
-            # in _validate_sizes; the bulk path must enforce the same bound
-            # or projection emissions could commit unreadably large rows.
+            # one job yields per-stream counts, the size guard (the
+            # single-event path validates MAX_RECORD_SIZE in
+            # _validate_sizes; the bulk path must enforce the same bound or
+            # projection emissions could commit unreadably large rows) and
+            # whether the stream gets a tombstone
             counts = b.groupBy("stream_id").agg(
                 F.count(F.lit(1)).alias("count"),
                 F.max(
                     F.coalesce(F.octet_length("data"), F.lit(0))
                     + F.coalesce(F.octet_length("metadata"), F.lit(0))
                 ).alias("max_size"),
+                F.max(F.col("event_type") == STREAM_DELETED_EVENT_TYPE)
+                .alias("deletes"),
             ).collect()
             if not counts:
                 return
@@ -941,24 +925,17 @@ class EventLogWriter:
                     self.load()
                     .where(F.col("stream_id").isin(missing))
                     .groupBy("stream_id")
-                    .agg(
-                        F.max("event_number").alias("last"),
-                        F.max(
-                            (F.col("event_type") == STREAM_DELETED_EVENT_TYPE).cast("int")
-                        ).alias("tomb"),
-                    )
+                    .agg(F.max("event_number").alias("last"))
                     .collect()
                 )
                 for r in got:
-                    self._stats[r["stream_id"]] = [int(r["last"]), bool(r["tomb"])]
+                    self._stats[r["stream_id"]] = int(r["last"])
             # tombstoned streams drop their rows silently below, so they
             # must not trip the size guard either: an oversize event bound
             # for a deleted stream was never going to commit, and aborting
             # the whole batch for it would fail every LIVE stream's rows
-            live = [
-                r for r in counts
-                if not self._stats.setdefault(r["stream_id"], [NO_STREAM, False])[1]
-            ]
+            dead = {s for s, r in self.metadata_snapshot().items() if r.tombstoned}
+            live = [r for r in counts if r["stream_id"] not in dead]
             oversized = [r for r in live if int(r["max_size"] or 0) > MAX_RECORD_SIZE]
             if oversized:
                 raise RecordTooLargeError(
@@ -969,8 +946,7 @@ class EventLogWriter:
             alloc = []  # (stream_id, en_base, pos_base)
             new_last = self._last_position
             for sid in sorted(by_stream):
-                st = self._stats[sid]
-                alloc.append((sid, st[0], new_last))
+                alloc.append((sid, self._stats.setdefault(sid, NO_STREAM), new_last))
                 new_last += by_stream[sid]
             if not alloc:
                 return
@@ -1011,14 +987,16 @@ class EventLogWriter:
             # the write committed — only now advance the numbering state
             self._last_position = self._core.last_position = new_last
             for sid, en_base, _pos in alloc:
-                self._stats[sid][0] = en_base + by_stream[sid]
+                self._stats[sid] = en_base + by_stream[sid]
                 # the bulk path doesn't know which event_ids landed per
                 # stream (collecting them would be one row per EVENT);
                 # invalidate the id map so the next append() reloads it
                 # from the log and idempotent retries keep working.
                 self._ids.pop(sid, None)
                 self._bump_stream_gen(sid)
-            self._core.meta_gen += 1
+            if any(r["stream_id"].startswith(METASTREAM_PREFIX) or r["deletes"]
+                   for r in live):
+                self._core.meta_gen += 1
             self._notify_commit()
 
     # pyarrow schema mirroring EVENTS_SCHEMA (timestamp µs UTC — what
@@ -1136,7 +1114,7 @@ class EventLogWriter:
         """The stream's last event number, NO_STREAM when never written
         (IndexReader.GetStreamLastEventNumber — the head lookup every
         commit check starts from)."""
-        return int(self._stream_state(stream_id)[0])
+        return self._stream_state(stream_id)
 
     def soft_delete(self, stream_id: str, metadata_writer=None) -> None:
         """Soft delete = write a FRESH metadata document containing only
@@ -1150,7 +1128,6 @@ class EventLogWriter:
             f"$${stream_id}",
             [ProposedEvent(METADATA_EVENT_TYPE, data=f'{{"$tb": {MAX_LONG}}}')],
         )
-        self._set_meta_cache(stream_id, {"$tb": MAX_LONG})
 
     def hard_delete(self, stream_id: str) -> None:
         """Tombstone: a $streamDeleted event; stream can never be recreated."""

@@ -190,7 +190,7 @@ def test_scavenge_preserves_all_visible_answers(scenario, spark):
     eng, model = scenario
     before = {s: [(r.event_number, r.data) for r in eng.read_stream(s).collect()]
               for s in STREAMS}
-    stats = scavenge(spark, eng.path, eng.stream_metadata())
+    stats = scavenge(spark, eng.path)
     assert stats["events_after"] <= stats["events_before"]
     eng2 = EventStoreEngine(spark, eng.path)
     for sid in STREAMS:
@@ -212,7 +212,7 @@ def test_scavenge_never_invalidates_inflight_readers(scenario, spark):
     n_all = pinned_all.count()
     rows_stream = [(r.event_number, r.data) for r in pinned_stream.collect()]
 
-    stats = scavenge(spark, eng.path, eng.stream_metadata())
+    stats = scavenge(spark, eng.path)
     assert stats["removed"] >= 0
 
     # the pinned snapshots re-collect with no FileNotFound, same answers

@@ -166,6 +166,60 @@ def test_metadata_snapshot_follows_every_change(engine, spark):
     assert ens("account-1") == [1, 2]
 
 
+def test_first_touch_append_reads_the_shared_snapshot(engine, spark):
+    """With the metadata snapshot warm, a first-touch append to an
+    existing stream runs one job, its per-stream state scan: the commit
+    check reads deletion state from the snapshot the engine's reads use
+    (a separate metastream probe made it 2)."""
+    from eventstore_spark.writer import EventLogWriter
+
+    engine.set_stream_metadata("account-2", max_count=3)
+    engine.read_event("account-1", 1).collect()  # warms the snapshot
+    w = EventLogWriter(spark, engine.path)  # nothing cached per stream
+    jobs = _read_jobs(spark, lambda: w.append(
+        "account-1", [ProposedEvent("Deposited", "{}")]))
+    assert jobs <= 1, jobs
+    assert [r.event_number for r in engine.read_stream("account-1").collect()] \
+        == [0, 1, 2]
+
+
+def test_append_df_of_ordinary_rows_keeps_the_snapshot(engine, spark):
+    """A bulk append that writes no `$$` row and no tombstone leaves the
+    metadata dimension as it was, so the next read reuses the warm
+    snapshot: one job (recollecting it after every bulk append ran 3)."""
+    engine.set_stream_metadata("account-2", max_count=3)
+    engine.read_event("account-1", 1).collect()  # warms the snapshot
+    engine.writer.append_df(spark.createDataFrame(
+        [("big-ops", "Big", "{}", None, "bulk-1")],
+        "stream_id string, event_type string, data string, "
+        "metadata string, event_id string"))
+    assert _read_jobs(spark, lambda: engine.read_event("account-1", 1).collect()) <= 1
+    assert engine.read_stream("big-ops").count() == 1
+
+
+def test_scavenge_reads_metadata_from_the_generation_it_rewrites(
+        engine, monkeypatch):
+    """A metadata change committed between the scavenge's start and the
+    snapshot it pins is applied with the rows it describes: max_count
+    raised from 1 to 5 keeps all five events."""
+    from eventstore_spark import maintenance
+
+    for _ in range(3):
+        engine.append("account-1", [ProposedEvent("Deposited", "{}")])
+    engine.set_stream_metadata("account-1", max_count=1)
+    orig = maintenance._read_snapshot
+
+    def raced(spark_, path_):
+        engine.set_stream_metadata("account-1", max_count=5)
+        return orig(spark_, path_)
+
+    monkeypatch.setattr(maintenance, "_read_snapshot", raced)
+    engine.scavenge()
+    monkeypatch.setattr(maintenance, "_read_snapshot", orig)
+    got = [r.event_number for r in engine.read_stream("account-1").collect()]
+    assert got == [0, 1, 2, 3, 4]
+
+
 def test_soft_delete_and_recreate(engine):
     engine.delete_stream("account-2")
     assert engine.read_stream("account-2").count() == 0

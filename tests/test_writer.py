@@ -188,7 +188,7 @@ def test_lazy_recovery_reads_one_scalar(spark, tmp_path):
     assert w2._stats == {}  # nothing preloaded
     w2.append("s-3", [ProposedEvent("C")], expected_version=1)
     assert set(w2._stats) == {"s-3"}  # only the touched stream was loaded
-    assert w2._stats["s-3"][0] == 2
+    assert w2._stats["s-3"] == 2
 
 
 def test_append_df_is_distributed_and_exactly_once(spark, tmp_path):
@@ -501,6 +501,66 @@ def test_group_commit_soft_delete_recreate_in_group(spark, tmp_path):
     w.close()
 
 
+def _one_group(w, calls):
+    """Queue ``calls`` in order while the core mutex is held, so they
+    commit as ONE group once it is released; returns each call's result,
+    or the name of the exception it raised."""
+    import threading
+    import time as _t
+
+    outcomes = [None] * len(calls)
+
+    def run(i):
+        try:
+            outcomes[i] = calls[i]()
+        except Exception as e:
+            outcomes[i] = type(e).__name__
+
+    threads = [threading.Thread(target=run, args=(i,), daemon=True)
+               for i in range(len(calls))]
+    with w._core.mutex:
+        for i, t in enumerate(threads):
+            t.start()
+            deadline = _t.monotonic() + 30
+            while len(w._queue) <= i and _t.monotonic() < deadline:
+                _t.sleep(0.01)
+            assert len(w._queue) == i + 1
+    deadline = _t.monotonic() + 60
+    for t in threads:
+        t.join(timeout=max(0.0, deadline - _t.monotonic()))
+    assert all(not t.is_alive() for t in threads)
+    return outcomes
+
+
+def test_soft_delete_and_recreate_in_one_group(log):
+    """A soft delete and the append that recreates the stream, queued in
+    ONE group: the append checks against the `$tb` the delete applied
+    earlier in the group, so `$tb` lands on the first new number."""
+    import json as _json
+
+    from eventstore_spark.schema import MAX_LONG
+
+    log.append("s-1", [ProposedEvent("A"), ProposedEvent("A")])
+    got = _one_group(log, [lambda: log.soft_delete("s-1"),
+                           lambda: log.append("s-1", [ProposedEvent("B")])])
+    assert got == [None, 2]
+    metas = (log.load().where("stream_id = '$$s-1'")
+             .orderBy("event_number").collect())
+    assert [_json.loads(r.data)["$tb"] for r in metas] == [MAX_LONG, 2]
+
+
+def test_hard_delete_then_append_in_one_group_rejects_append(log):
+    """A hard delete followed by an append to the same stream, queued in
+    ONE group: the append sees the tombstone the group applied and is
+    rejected, and the tombstone stays the stream's final event."""
+    log.append("s-1", [ProposedEvent("A")])
+    got = _one_group(log, [lambda: log.hard_delete("s-1"),
+                           lambda: log.append("s-1", [ProposedEvent("B")])])
+    assert got == [None, "StreamDeletedError"]
+    rows = log.load().where("stream_id = 's-1'").orderBy("event_number").collect()
+    assert [r.event_type for r in rows] == ["A", "$streamDeleted"]
+
+
 def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, monkeypatch):
     """An INFRASTRUCTURE failure mid-apply (not a rejection) aborts the
     whole group: nothing commits, every caller gets the error (none
@@ -512,14 +572,15 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
     w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])  # durable baseline
 
-    orig = EventLogWriter._current_meta
+    # the soft-delete lookup runs after the append's rows are emitted
+    orig = EventLogWriter._soft_deleted_doc
 
-    def poisoned(self, sid):
+    def poisoned(self, sid, applied):
         if sid == "boom-1":
             raise RuntimeError("simulated storage failure")
-        return orig(self, sid)
+        return orig(self, sid, applied)
 
-    monkeypatch.setattr(EventLogWriter, "_current_meta", poisoned)
+    monkeypatch.setattr(EventLogWriter, "_soft_deleted_doc", poisoned)
     errs, oks = [], []
 
     def good(sid):
@@ -547,7 +608,7 @@ def test_group_commit_mid_apply_failure_aborts_group_cleanly(spark, tmp_path, mo
     # with it (same group) or committed (different group) — but the LOG
     # is consistent either way
     assert ("boom-1", "RuntimeError") in errs
-    monkeypatch.setattr(EventLogWriter, "_current_meta", orig)
+    monkeypatch.setattr(EventLogWriter, "_soft_deleted_doc", orig)
     rows = w.load().collect()
     committed = {r.stream_id for r in rows}
     assert "boom-1" not in committed
@@ -581,8 +642,6 @@ def test_queued_appends_commit_as_one_group(spark, tmp_path):
     fresh streams, a wrong expected version, an idempotent retry and a
     soft-delete recreate, with dense log positions."""
     import os as _os
-    import threading
-    import time as _t
 
     from eventstore_spark.writer import NO_STREAM
 
@@ -596,37 +655,16 @@ def test_queued_appends_commit_as_one_group(spark, tmp_path):
     def parquet_files():
         return {f for f in _os.listdir(path) if f.endswith(".parquet")}
 
-    calls = {
-        "f-0": lambda: w.append("f-0", [ProposedEvent("B")]),
-        "f-1": lambda: w.append("f-1", [ProposedEvent("B"), ProposedEvent("C")]),
-        "wrong": lambda: w.append("s-old", [ProposedEvent("B")], expected_version=7),
-        "retry": lambda: w.append("s-idem", [ProposedEvent("A", event_id="fixed")],
-                                  expected_version=NO_STREAM),
-        "recreate": lambda: w.append("s-del", [ProposedEvent("B")]),
-    }
-    outcomes = {}
-
-    def run(name):
-        try:
-            outcomes[name] = calls[name]()
-        except Exception as e:
-            outcomes[name] = type(e).__name__
-
     before = parquet_files()
-    threads = [threading.Thread(target=run, args=(n,), daemon=True) for n in calls]
-    with w._core.mutex:
-        for t in threads:
-            t.start()
-        deadline = _t.monotonic() + 30
-        while len(w._queue) < len(calls) and _t.monotonic() < deadline:
-            _t.sleep(0.01)
-        assert len(w._queue) == len(calls)
-    deadline = _t.monotonic() + 60
-    for t in threads:
-        t.join(timeout=max(0.0, deadline - _t.monotonic()))
-    assert all(not t.is_alive() for t in threads)
-    assert outcomes == {"f-0": 0, "f-1": 1, "wrong": "WrongExpectedVersionError",
-                        "retry": 0, "recreate": 1}
+    outcomes = _one_group(w, [
+        lambda: w.append("f-0", [ProposedEvent("B")]),
+        lambda: w.append("f-1", [ProposedEvent("B"), ProposedEvent("C")]),
+        lambda: w.append("s-old", [ProposedEvent("B")], expected_version=7),
+        lambda: w.append("s-idem", [ProposedEvent("A", event_id="fixed")],
+                         expected_version=NO_STREAM),
+        lambda: w.append("s-del", [ProposedEvent("B")]),
+    ])
+    assert outcomes == [0, 1, "WrongExpectedVersionError", 0, 1]
     assert len(parquet_files() - before) == 1
     rows = w.load().collect()
     assert sorted(r.log_position for r in rows) == list(range(1, len(rows) + 1))
@@ -813,7 +851,7 @@ def test_idempotent_replay_reports_batch_own_positions(log):
     assert log.append("s-2", evs, expected_version=-1) == 1
     for i in range(4):
         log.append("s-2", [ProposedEvent("C", "{}")])
-    assert log._stats["s-2"][0] == 5
+    assert log._stats["s-2"] == 5
     # delayed retry of the original batch: same expected, same ids
     assert log.append("s-2", evs, expected_version=-1) == 1  # NOT 5
     # ANY-mode full-dedupe replay also reports the batch's own end
@@ -1055,18 +1093,18 @@ def test_cold_state_scan_racing_an_append_keeps_numbering(log, monkeypatch):
 
 
 def test_cold_meta_scan_racing_a_soft_delete_keeps_recreate(log, monkeypatch):
-    """The same interleaving for ``_current_meta``: a reader scans the
-    old `$tb` document while a soft delete commits `$tb` = MAX. The next
-    append must still see the soft delete and recreate the stream
-    (`$tb` moves to the first new event number)."""
+    """The same interleaving for the metadata snapshot: a reader's cold
+    ``metadata_snapshot`` scan holds the old `$tb` document while a soft
+    delete commits `$tb` = MAX. The next append must still see the soft
+    delete and recreate the stream (`$tb` moves to the first new event
+    number)."""
     import json
 
     log.append("s-1", [ProposedEvent("E", "{}")])
     log.append("$$s-1", [ProposedEvent("$metadata", '{"$tb": 0}')])
-    log._meta_cache.clear()
     pinned, release, readers = _pin_reader_scan(monkeypatch, log)
     _run_pinned(readers, pinned, release,
-                lambda: log._current_meta("s-1"),
+                log.metadata_snapshot,
                 lambda: log.soft_delete("s-1"))
     assert log.append("s-1", [ProposedEvent("E", "{}")]) == 1
     docs = (log.load().where("stream_id = '$$s-1'")
@@ -1095,7 +1133,7 @@ def test_readers_beside_two_writers_keep_numbering_dense(spark, tmp_path):
     def read():
         while not done.is_set():
             w1.last_event_number("s-1")
-            w1._current_meta("s-1")
+            w1.metadata_snapshot()
 
     appenders = [threading.Thread(target=append, args=(w,), daemon=True)
                  for w in (w1, w2, w1, w2)]
