@@ -1762,10 +1762,6 @@ class EventStoreEngine:
             F.max("log_position").alias("head_position"),
         ).first()
         files = _manifest.snapshot_files(self.path)
-        if files is None:
-            files = [
-                f for f in os.listdir(self.path) if f.endswith(".parquet")
-            ]
         arch = _manifest.archive_config(self.path)
         archived = set(arch.get("files", []))
         size = archived_bytes = 0

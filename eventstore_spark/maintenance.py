@@ -58,23 +58,16 @@ from . import manifest
 from .manifest import vacuum  # noqa: F401  (public maintenance surface)
 from .operators.retention import metadata_dimension, visible_events
 from .schema import EVENTS_SCHEMA, MAX_LONG, METASTREAM_PREFIX
-from .writer import _core_for
+from .writer import _core_for, read_files
 
 
 def _read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """(DataFrame, manifest seq) of the log's current committed snapshot
-    (manifest-aware, pinned). The seq is what the eventual publish CASes
-    against — a concurrent append moves it and fails the rewrite loudly
-    instead of losing the append. -1 = plain-directory mode."""
-    cur = manifest.latest(path)
-    if cur is None:
-        return spark.read.schema(EVENTS_SCHEMA).parquet(path), -1
-    seq, files = cur
-    if not files:
-        return spark.createDataFrame([], EVENTS_SCHEMA), seq
-    return spark.read.schema(EVENTS_SCHEMA).parquet(
-        *manifest.resolve_files(path, files)
-    ), seq
+    (pinned). The seq is what the eventual publish CASes against — a
+    concurrent append moves it and fails the rewrite loudly instead of
+    losing the append."""
+    seq, files = manifest.latest(path)
+    return read_files(spark, path, files), seq
 
 
 def _publish_rewrite(path: str, staging: str, tag: str,
@@ -422,8 +415,8 @@ def archive_cold(path: str, archive_base: str,
     likewise keeps PTables/scavenge.db local, archiving.md)."""
     import pyarrow.parquet as pq
 
-    files = manifest.snapshot_files(path)
-    if files is None:
+    seq, files = manifest.latest(path)
+    if seq < 0:
         raise ValueError(
             f"{path} has no manifest yet — append once (or scavenge) "
             "before archiving"
@@ -545,12 +538,11 @@ def backup(path: str, dest: str, include_projections: bool = True) -> dict:
     (backup.md's differential step 7), and files no longer referenced
     are pruned (step 8). Projection state/connector settings ride along
     when ``include_projections`` (the index-directory analog)."""
-    cur = manifest.latest(path)
-    if cur is None:
+    seq, files = manifest.latest(path)
+    if seq < 0:
         raise ValueError(
             f"{path} has no manifest — append once before backing up"
         )
-    seq, files = cur
     os.makedirs(dest, exist_ok=True)
     copied = skipped = 0
     for name, src in zip(files, manifest.resolve_files(path, files)):
@@ -710,18 +702,8 @@ def redact_events(spark: SparkSession, path: str, targets: list[str]) -> dict:
     ]
     if not affected:
         return {"redacted": 0, "files_rewritten": 0}
-    cur_files = manifest.snapshot_files(path)
-    if cur_files is None:
-        # plain-directory store (no manifest yet): the keep-set is the
-        # whole directory listing — deriving it from the absent manifest
-        # would publish a first snapshot referencing ONLY the rewritten
-        # files, orphaning (and eventually vacuuming) every untouched
-        # log file
-        cur_files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    keep = [f for f in cur_files if f not in set(affected)]
-    sub = spark.read.schema(EVENTS_SCHEMA).parquet(
-        *manifest.resolve_files(path, affected)
-    )
+    keep = [f for f in manifest.snapshot_files(path) if f not in set(affected)]
+    sub = read_files(spark, path, affected)
     m = F.trim(F.col("metadata"))
     merged_meta = (
         F.when(m.isNull() | (m == "") | (F.regexp_replace(m, r"\s", "") == "{}"),

@@ -18,11 +18,16 @@ superseded files on disk until ``vacuum`` removes files unreferenced by the
 current manifest after a grace period. An in-flight reader therefore always
 finds every file of the snapshot it pinned.
 
-Back-compat: a directory with no ``_manifest/`` behaves exactly as before
-(plain dir listing); the first manifested commit bootstraps the list from
-the directory. At scale the manifest is one small JSON per commit whose
-size tracks the live file count — bounded by ``optimize_layout``
-compaction, the same way Delta relies on OPTIMIZE + checkpointing.
+A log with no manifest yet (a directory Spark wrote directly, or a
+store before its first commit) is generation -1: its file list is the
+directory's ``*.parquet`` listing, and it exists only while no generation
+has been published. ``latest`` and ``files_at`` are the only code that
+know this; every other module sees a plain file list. The first publish
+builds generation 0 on that listing, after which a publish computed from
+generation -1 conflicts like any other stale base. At scale the manifest
+is one small JSON per commit whose size tracks the live file count —
+bounded by ``optimize_layout`` compaction, the same way Delta relies on
+OPTIMIZE + checkpointing.
 """
 
 from __future__ import annotations
@@ -50,27 +55,36 @@ def _dir(path: str) -> str:
     return os.path.join(path, MANIFEST_DIR)
 
 
-def latest(path: str) -> tuple[int, list[str]] | None:
-    """(seq, files) of the newest complete manifest, or None if the log
-    has never published one (plain-directory mode). One name-parse loop
-    lives in ``history`` — this derives from it."""
+def _listing(path: str) -> list[str]:
+    """The directory's ``*.parquet`` names: generation -1's file list."""
+    try:
+        return sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    except FileNotFoundError:
+        return []
+
+
+def latest(path: str) -> tuple[int, list[str]]:
+    """(seq, files) of the newest generation; (-1, directory listing)
+    while none has been published. One name-parse loop lives in
+    ``history`` — this derives from it."""
     gens = history(path)
     if not gens:
-        return None
-    best = gens[-1]
-    with open(os.path.join(_dir(path), f"manifest-{best:010d}.json")) as f:
-        return best, json.load(f)["files"]
+        return -1, _listing(path)
+    with open(os.path.join(_dir(path), f"manifest-{gens[-1]:010d}.json")) as f:
+        return gens[-1], json.load(f)["files"]
 
 
-def snapshot_files(path: str) -> list[str] | None:
-    """Current committed file names (relative), or None in plain-dir mode."""
-    cur = latest(path)
-    return None if cur is None else cur[1]
+def snapshot_files(path: str) -> list[str]:
+    """Current committed file names (relative)."""
+    return latest(path)[1]
 
 
 def files_at(path: str, seq: int) -> list[str] | None:
-    """File list of a SPECIFIC manifest generation (time travel), or None
-    if that generation does not exist (never published, or vacuumed)."""
+    """File list of a SPECIFIC generation (time travel), or None if that
+    generation does not exist (never published, or vacuumed). Generation
+    -1, the directory listing, exists only while ``history`` is empty."""
+    if seq == -1:
+        return None if history(path) else _listing(path)
     f = os.path.join(_dir(path), f"manifest-{seq:010d}.json")
     if not os.path.isfile(f):
         return None
@@ -119,11 +133,30 @@ def _write(path: str, seq: int, files: list[str]) -> int:
     return seq
 
 
+def _base(path: str, base_seq: int | None) -> tuple[int, list[str]]:
+    """(seq, files) of the generation a publish builds on: ``base_seq``,
+    or the latest when None. Raises ``ManifestConflictError`` when that
+    generation no longer exists — vacuumed, or generation -1 once a
+    manifest has appeared. Publishing N+1 over a vanished N could land
+    UNDER the live generations and orphan the commit."""
+    if base_seq is None:
+        base_seq = latest(path)[0]
+    files = files_at(path, base_seq)
+    if files is None:
+        raise ManifestConflictError(
+            f"manifest generation {base_seq} of {path} no longer exists "
+            "(vacuumed, or superseded by a published manifest) — re-sync "
+            "and retry"
+        )
+    return base_seq, files
+
+
 def append_files(path: str, new_files: list[str],
                  base_seq: int | None = None) -> int:
-    """Publish manifest N+1 = current snapshot ∪ ``new_files`` (the append
-    commit). Bootstraps from the directory listing on first use — at that
-    point no superseded files can exist, so the listing IS the snapshot.
+    """Publish manifest N+1 = snapshot N ∪ ``new_files`` (the append
+    commit). On a log with no manifest, N is generation -1, the directory
+    listing — no superseded files can exist yet, so the listing IS the
+    snapshot.
 
     ``base_seq`` makes the publish a true CAS against the generation the
     WRITER last observed (not re-read here): if the snapshot moved in the
@@ -133,35 +166,8 @@ def append_files(path: str, new_files: list[str],
     writer.py documents). Omitting it keeps the read-latest-then-publish
     behavior (still exclusive per generation via ``_write``, but
     last-reader-wins on the base)."""
-    if base_seq is None:
-        cur = latest(path)
-        if cur is None:
-            base = {f for f in os.listdir(path) if f.endswith(".parquet")}
-            seq = -1
-        else:
-            seq, files = cur
-            base = set(files)
-    elif base_seq < 0:
-        # caller observed plain-dir mode; a manifest appearing since then
-        # must CONFLICT. Checking "generation 0 exists" at _write is not
-        # enough — gen 0 may have been vacuumed while later generations
-        # live, and publishing a new gen 0 below them would silently
-        # orphan this append from the live snapshot.
-        if latest(path) is not None:
-            raise ManifestConflictError(
-                f"{path} gained a manifest since this writer opened it "
-                "plain-dir — re-sync and retry"
-            )
-        base, seq = {f for f in os.listdir(path) if f.endswith(".parquet")}, -1
-    else:
-        files = files_at(path, base_seq)
-        if files is None:
-            raise ManifestConflictError(
-                f"manifest generation {base_seq} of {path} no longer exists "
-                "(vacuumed or never published) — re-sync and retry"
-            )
-        base, seq = set(files), base_seq
-    return _write(path, seq + 1, sorted(base | set(new_files)))
+    seq, files = _base(path, base_seq)
+    return _write(path, seq + 1, sorted(set(files) | set(new_files)))
 
 
 def replace_snapshot(path: str, files: list[str],
@@ -176,18 +182,8 @@ def replace_snapshot(path: str, files: list[str],
     rewrite from the new snapshot). Omitting ``base_seq`` preserves the
     unguarded last-writer-wins behavior for callers that KNOW the writer
     is quiesced."""
-    if base_seq is None:
-        cur = latest(path)
-        base_seq = -1 if cur is None else cur[0]
-    elif base_seq < 0 and latest(path) is not None:
-        # the rewrite was computed from plain-dir mode but a manifest
-        # exists now — "gen 0 already exists" is not a safe proxy once
-        # gen 0 has been vacuumed under later generations
-        raise ManifestConflictError(
-            f"{path} gained a manifest since this rewrite was computed "
-            "from plain-dir mode — re-run from the new snapshot"
-        )
-    return _write(path, base_seq + 1, sorted(files))
+    seq, _ = _base(path, base_seq)
+    return _write(path, seq + 1, sorted(files))
 
 
 # ---------------------------------------------------------------------------
@@ -245,8 +241,8 @@ def resolve_files(path: str, files: list[str]) -> list[str]:
 
 
 def vacuum(path: str, grace_s: float = 3600.0) -> dict:
-    """Drain files superseded longer than ``grace_s`` ago. No-op in
-    plain-dir mode.
+    """Drain files superseded longer than ``grace_s`` ago. No-op while
+    no generation has been published.
 
     The grace clock starts at SUPERSESSION, not file creation: a manifest
     generation is "drained" only once its SUCCESSOR manifest is older
@@ -256,12 +252,10 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
     ``events_at`` keeps working for every generation whose JSON still
     exists. This is the contract the reference's scavenger honors — old
     chunks unlink only after readers drain (Scavenger.cs:199)."""
-    d = _dir(path)
-    if not os.path.isdir(d):
-        return {"removed": 0, "manifests_removed": 0, "archive_removed": 0}
     gens = history(path)
     if not gens:
         return {"removed": 0, "manifests_removed": 0, "archive_removed": 0}
+    d = _dir(path)
     cutoff = time.time() - grace_s
     keep: set[str] = set()
     drained: list[int] = []
@@ -277,8 +271,8 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
                 continue
         keep.update(files_at(path, seq) or [])
     removed = 0
-    for n in os.listdir(path):
-        if not n.endswith(".parquet") or n in keep:
+    for n in _listing(path):
+        if n in keep:
             continue
         full = os.path.join(path, n)
         try:

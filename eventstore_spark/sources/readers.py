@@ -169,21 +169,12 @@ def read_all_page(
 ) -> AllPage:
     """S4/S5 with full paging metadata (mirror of ``read_stream_page``):
     one bounds query answers the page's min/max/count and the log head."""
-    if backward:
-        pred = F.lit(True)
-        if apply_default_filter:
-            pred = pred & default_all_filter()
-        if event_filter is not None:
-            pred = pred & (
-                event_filter.predicate()
-                if isinstance(event_filter, EventFilter)
-                else event_filter
-            )
-        page = read_all_backward(events.where(pred), from_position or None, max_count)
-    else:
-        page = read_all_filtered(
-            events, event_filter, from_position, max_count, apply_default_filter
-        )
+    page = read_all_filtered(
+        events, event_filter,
+        (from_position or None) if backward else from_position,
+        max_count, apply_default_filter,
+        direction="backward" if backward else "forward",
+    )
     lo, hi, n, head = _bounds(page, events, "log_position")
     last_pos = 0 if head is None else int(head)
     if backward:

@@ -74,6 +74,8 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..manifest import snapshot_files
+from ..writer import read_files
 from .subscriptions import subscribe_all
 
 SYSTEM_DIR = "_connectors"
@@ -606,10 +608,10 @@ class ConnectorManager:
                 with open(sp_file) as fh:
                     fp = int(fh.read().strip())
             else:
-                from ..schema import EVENTS_SCHEMA
-
-                tail = (self.spark.read.schema(EVENTS_SCHEMA)
-                        .parquet(self.log_path)
+                # the snapshot, not the hot directory: archived history
+                # whose local copies were dropped still counts
+                tail = (read_files(self.spark, self.log_path,
+                                   snapshot_files(self.log_path))
                         .agg(F.max("log_position").alias("m"))
                         .collect()[0].m)
                 fp = int(tail) + 1 if tail is not None else 0

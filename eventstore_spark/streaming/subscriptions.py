@@ -19,8 +19,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import manifest as M
 from ..operators.filters import EventFilter, default_all_filter
 from ..schema import EVENTS_SCHEMA, query_scope, scoped_cache
+from ..writer import read_files
 
 
 def _maintenance_safe_predicate(log_path: str,
@@ -46,9 +48,6 @@ def _maintenance_safe_predicate(log_path: str,
       from its append file) — rewrites introduce no new events, so this
       drops only the second copy.
 
-    Returns None when the log has never published a manifest (then no
-    rewrite has ever happened and the filter would be dead weight).
-
     ``started_at_ms`` pins the cut for restarts: a query resumed from a
     streaming checkpoint re-builds this predicate, and must keep the
     ORIGINAL subscription start (else a rewrite that happened mid-run
@@ -58,11 +57,7 @@ def _maintenance_safe_predicate(log_path: str,
     """
     import time
 
-    from .. import manifest as M
-
     snap = M.snapshot_files(log_path)
-    if snap is None:
-        return None
     fname = F.substring_index(F.input_file_name(), "/", -1)
     gen = F.regexp_extract(fname, r"^part-(?:scavenge|optimize|redact)-(\d+)-", 1)
     cut = int(time.time() * 1000) if started_at_ms is None else started_at_ms
@@ -83,8 +78,6 @@ def _guard_archived_history(log_path: str, from_position: int) -> None:
     subscribe from the checkpoint forward. (The reference reads through
     to its archive on the read path, archiving.md; its subscription
     latency warning is this same boundary.)"""
-    from .. import manifest as M
-
     cfg = M.archive_config(log_path)
     if not cfg:
         return
@@ -120,10 +113,8 @@ def subscribe_all(
     reader = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    s = reader.parquet(log_path)
-    safe = _maintenance_safe_predicate(log_path, started_at_ms)
-    if safe is not None:
-        s = s.where(safe)
+    s = reader.parquet(log_path).where(
+        _maintenance_safe_predicate(log_path, started_at_ms))
     if from_position:
         s = s.where(F.col("log_position") >= from_position)
     if apply_default_filter:
@@ -149,31 +140,6 @@ def subscribe_stream(
     return s.where(
         (F.col("stream_id") == stream_id)
         & (F.col("event_number") >= from_event_number)
-    )
-
-
-def windowed_event_counts(
-    sub: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    by: str = "event_type",
-) -> DataFrame:
-    """Event-time tumbling-window counts over a subscription, tolerant of
-    late arrivals up to ``watermark`` (SURVEY §2.4: the reference has no
-    event-time windows — the log is processing-ordered — so this is the
-    Spark-native capability the engine ADDS for monitoring/analytics over
-    live streams; state for windows older than the watermark is dropped,
-    which is what bounds streaming-aggregation memory at 100 TB/day
-    ingest rates).
-
-    Returns a streaming DataFrame (window struct, ``by`` column, n) —
-    run with outputMode("update") (running counts) or "append"
-    (finalized windows only).
-    """
-    return (
-        sub.withWatermark("created", watermark)
-        .groupBy(F.window("created", window).alias("window"), F.col(by))
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -241,35 +207,34 @@ def is_caught_up(query) -> bool:
     return not status.get("isDataAvailable", True)
 
 
-def _checkpoint_seen_files(checkpoint_location: str) -> set[str] | None:
-    """File basenames the subscription's file source has COMMITTED
-    processing, parsed from the streaming checkpoint's source log
-    (``sources/0/<batch>`` entries; a ``.compact`` file carries the full
-    prior history, so parsing starts at the newest one). Driver-side file
-    IO only — never a Spark job. None when the source has not committed
-    its first batch yet."""
+def _checkpoint_seen_files(checkpoint_location: str,
+                           parsed: set[str]) -> set[str]:
+    """Basenames of the files the subscription's file source COMMITTED,
+    from the streaming checkpoint's source-log entries
+    (``sources/0/<batch>[.compact]``) not in ``parsed``; every entry name
+    read is added to ``parsed``, so a caller that keeps the set parses
+    each entry once. With nothing parsed yet, parsing starts at the
+    newest ``.compact`` entry, which carries the full prior history.
+    Driver-side file IO only — never a Spark job. Empty when the source
+    has not committed its first batch yet."""
     import json
 
     d = os.path.join(checkpoint_location, "sources", "0")
     if not os.path.isdir(d):
-        return None
-    entries = []
-    for n in os.listdir(d):
-        base = n[: -len(".compact")] if n.endswith(".compact") else n
-        try:
-            i = int(base)
-        except ValueError:
-            continue
-        entries.append((i, n))
-    if not entries:
-        return None
-    entries.sort()
+        return set()
+    entries = sorted(
+        (int(base), n) for n in os.listdir(d)
+        if (base := n.removesuffix(".compact")).isdigit()
+    )
     start = 0
-    for idx, (_i, n) in enumerate(entries):
-        if n.endswith(".compact"):
-            start = idx
+    if not parsed:
+        for idx, (_i, n) in enumerate(entries):
+            if n.endswith(".compact"):
+                start = idx
+    fresh = [n for _i, n in entries[start:] if n not in parsed]
+    parsed.update(n for _i, n in entries)
     seen: set[str] = set()
-    for _i, n in entries[start:]:
+    for n in fresh:
         try:
             with open(os.path.join(d, n)) as fh:
                 for line in fh:
@@ -277,13 +242,12 @@ def _checkpoint_seen_files(checkpoint_location: str) -> set[str] | None:
                     if not line or line.startswith("v"):
                         continue
                     try:
-                        doc = json.loads(line)
+                        p = json.loads(line).get("path")
                     except ValueError:
                         continue
-                    p = doc.get("path")
                     if p:
                         seen.add(os.path.basename(p))
-        except FileNotFoundError:
+        except (FileNotFoundError, IsADirectoryError):
             continue
     return seen
 
@@ -305,15 +269,8 @@ def subscription_backlog(log_path: str, checkpoint_location: str,
     slight over-estimate across maintenance rewrites — post-start rewrite
     files are scanned-then-row-filtered by the subscription, so they
     appear pending until scanned, which is honest backlog work."""
-    from .. import manifest as M
-
-    seen = _checkpoint_seen_files(checkpoint_location)
-    committed = M.snapshot_files(log_path)
-    if committed is None:
-        committed = [f for f in os.listdir(log_path) if f.endswith(".parquet")]
-    if seen is None:
-        seen = set()
-    pending = [f for f in committed if f not in seen]
+    seen = _checkpoint_seen_files(checkpoint_location, set())
+    pending = [f for f in M.snapshot_files(log_path) if f not in seen]
     return {
         "seen_files": len(seen),
         "pending_files": len(pending),
@@ -367,8 +324,6 @@ def start_with_markers(
     restart cannot re-deliver surviving events."""
     import time as _time
 
-    from .. import manifest as M
-
     if not checkpoint_location:
         raise ValueError(
             "start_with_markers requires checkpoint_location — file "
@@ -400,51 +355,15 @@ def start_with_markers(
         else event_filter
     )
     # a restart resumes the ORIGINAL subscription's progress: seed the
-    # seen-set from the streaming checkpoint's source log
+    # seen-set from the streaming checkpoint's source log. The source
+    # writes each batch's file list there BEFORE the batch executes, so
+    # crediting it also covers files whose rows were ALL filtered out
+    # (below from_position, or post-start rewrite files the row predicate
+    # drops) — row-derived names alone would leave such files "pending"
+    # forever and starve CaughtUp. Later credits parse only new entries.
+    parsed: set[str] = set()
     state = {"live": False,
-             "seen": set(_checkpoint_seen_files(checkpoint_location) or ()),
-             "ckpt_parsed": set()}
-
-    def _credit_checkpoint_files():
-        # The source writes this batch's file list to the offset log
-        # BEFORE the batch executes, so the checkpoint also credits
-        # files whose rows were ALL filtered out (below from_position,
-        # or post-start rewrite files the row predicate drops) —
-        # row-derived names alone would leave such files "pending"
-        # forever and starve CaughtUp. Parse INCREMENTALLY: only offset
-        # entries not seen before (a long-running query would otherwise
-        # re-parse the full .compact history every trigger).
-        d = os.path.join(checkpoint_location, "sources", "0")
-        if not os.path.isdir(d):
-            return
-
-        def is_entry(n):  # offset entries: "<batch>" or "<batch>.compact"
-            base = n[: -len(".compact")] if n.endswith(".compact") else n
-            return base.isdigit()
-
-        fresh = [n for n in os.listdir(d)
-                 if n not in state["ckpt_parsed"] and is_entry(n)]
-        if not fresh:
-            return
-        state["ckpt_parsed"].update(fresh)
-        import json as _json
-
-        for n in fresh:
-            try:
-                with open(os.path.join(d, n)) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line or line.startswith("v"):
-                            continue
-                        try:
-                            doc = _json.loads(line)
-                        except ValueError:
-                            continue
-                        p = doc.get("path")
-                        if p:
-                            state["seen"].add(os.path.basename(p))
-            except (FileNotFoundError, IsADirectoryError):
-                continue
+             "seen": _checkpoint_seen_files(checkpoint_location, parsed)}
 
     def fn(batch_df, batch_id):
         # list the committed files FIRST: files that commit while this
@@ -452,9 +371,6 @@ def start_with_markers(
         # (they'd fire a spurious FellBehind on a subscription that is
         # in fact keeping up)
         committed = M.snapshot_files(log_path)
-        if committed is None:
-            committed = [f for f in os.listdir(log_path)
-                         if f.endswith(".parquet")]
         with query_scope():
             cached = scoped_cache(batch_df)
             files = {
@@ -463,7 +379,7 @@ def start_with_markers(
             }
             seen_before = set(state["seen"])
             state["seen"] |= files
-            _credit_checkpoint_files()
+            state["seen"] |= _checkpoint_seen_files(checkpoint_location, parsed)
             pending_at_start = [f for f in committed if f not in seen_before]
             if state["live"] and len(pending_at_start) >= threshold_files:
                 state["live"] = False
@@ -486,7 +402,7 @@ def start_with_markers(
                 # this, every micro-batch would shuffle the whole log
                 # through the resolve join at warehouse scale.
                 from ..operators.links import parse_link, resolve_links
-                from ..schema import EVENTS_SCHEMA as _ES, LINK_EVENT_TYPE
+                from ..schema import LINK_EVENT_TYPE
 
                 target_streams = [
                     r[0] for r in matches
@@ -494,12 +410,8 @@ def start_with_markers(
                     .select(parse_link(F.col("data")).alias("t"))
                     .select("t.target_stream").distinct().collect()
                 ]
-                snap = M.snapshot_files(log_path)
-                log_df = (
-                    spark.read.schema(_ES).parquet(
-                        *M.resolve_files(log_path, snap))
-                    if snap else
-                    spark.read.schema(_ES).parquet(log_path)
+                log_df = read_files(
+                    spark, log_path, M.snapshot_files(log_path)
                 ).where(
                     F.col("stream_id").isin(target_streams)
                     if target_streams else F.lit(False)

@@ -49,8 +49,8 @@ window partitioned by stream, and global positions come from per-stream
 contiguous blocks allocated on the driver from one tiny per-stream count —
 no ``collect()`` of event rows ever happens.
 
-Readers never coordinate with the writer: they read the directory as a
-plain parquet table (plus ``load()`` here).
+Readers never coordinate with the writer: they read a manifest file list
+through ``read_files`` (``load()`` here).
 """
 
 from __future__ import annotations
@@ -394,18 +394,14 @@ class EventLogWriter:
                 )
             self._core.last_position = self._last_position
             if self._core.manifest_seq is None:
-                cur = manifest.latest(path)
-                self._core.manifest_seq = -1 if cur is None else cur[0]
+                self._core.manifest_seq = manifest.latest(path)[0]
 
     @property
     def read_only(self) -> bool:
         return self._read_only
 
     def _has_files(self) -> bool:
-        files = manifest.snapshot_files(self.path)
-        if files is None:
-            return any(f.endswith(".parquet") for f in os.listdir(self.path))
-        return bool(files)
+        return bool(manifest.snapshot_files(self.path))
 
     # -- recovery: one scalar read, never a full-log collect --
     def _recover(self) -> None:
@@ -823,8 +819,7 @@ class EventLogWriter:
                 attempts += 1
                 if attempts >= 8:
                     raise
-                cur = manifest.latest(self.path)
-                self._core.manifest_seq = -1 if cur is None else cur[0]
+                self._core.manifest_seq = manifest.latest(self.path)[0]
 
     def _bump_stream_gen(self, stream_id: str) -> None:
         """Record a commit touching ``stream_id`` in the shared core and
@@ -1137,16 +1132,13 @@ class EventLogWriter:
         )
 
     def load(self) -> DataFrame:
-        """The committed log as a DataFrame — a PINNED SNAPSHOT: when the
-        log has a manifest (see ``manifest.py``), the file list is resolved
-        here, at DataFrame creation, so a concurrent maintenance rewrite
-        can never FileNotFound this reader (superseded files are retained
-        until ``vacuum``'s grace period expires). Plain directories (no
-        manifest yet) read as before."""
-        files = manifest.snapshot_files(self.path)
-        if files is None:
-            return self.spark.read.schema(EVENTS_SCHEMA).parquet(self.path)
-        return self._load_files(files)
+        """The committed log as a DataFrame — a PINNED SNAPSHOT: the
+        manifest's file list (see ``manifest.py``) is resolved here, at
+        DataFrame creation, so a concurrent maintenance rewrite can never
+        FileNotFound this reader (superseded files are retained until
+        ``vacuum``'s grace period expires)."""
+        return read_files(self.spark, self.path,
+                          manifest.snapshot_files(self.path))
 
     def load_at(self, seq: int) -> DataFrame:
         """Time travel: the log as of manifest generation ``seq`` (see
@@ -1158,14 +1150,17 @@ class EventLogWriter:
                 f"manifest generation {seq} not available for {self.path} "
                 "(never published, or removed by vacuum)"
             )
-        return self._load_files(files)
+        return read_files(self.spark, self.path, files)
 
-    def _load_files(self, files: list[str]) -> DataFrame:
-        if not files:
-            return self.spark.createDataFrame([], EVENTS_SCHEMA)
-        # archive-aware: names resolve to the hot tier when present, else
-        # to the cold tier (manifest.resolve_files) — the transparent
-        # read-through of the reference's archiving feature
-        return self.spark.read.schema(EVENTS_SCHEMA).parquet(
-            *manifest.resolve_files(self.path, files)
-        )
+
+def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:
+    """The log files ``names`` of the log at ``path`` as one DataFrame —
+    every read of a manifest file list goes through here. Archive-aware:
+    names resolve to the hot tier when present, else to the cold tier
+    (``manifest.resolve_files``), the transparent read-through of the
+    reference's archiving feature. No names, an empty frame."""
+    if not names:
+        return spark.createDataFrame([], EVENTS_SCHEMA)
+    return spark.read.schema(EVENTS_SCHEMA).parquet(
+        *manifest.resolve_files(path, names)
+    )

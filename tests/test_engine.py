@@ -288,6 +288,45 @@ def test_hard_delete_wins_over_metadata(engine):
     assert engine.read_stream("account-1").count() == 2
 
 
+def test_max_age_agrees_in_literal_and_join_forms(engine):
+    """max_age is applied alike by the literal form of the visibility
+    rule (single-stream reads) and its join form ($all, events()), and
+    a max_count on another stream leaves the answer unchanged."""
+    from datetime import datetime, timedelta, timezone
+
+    old = datetime.now(timezone.utc) - timedelta(days=2)
+    w = engine.writer
+    w.append("aged-1", [ProposedEvent("Old", "{}")], created=old)
+    w.append("aged-1", [ProposedEvent("New", "{}")])
+    w.append("aged-1", [ProposedEvent("Old", "{}"),
+                        ProposedEvent("Old", "{}")], created=old)
+    w.append("aged-1", [ProposedEvent("New", "{}")])
+    engine.set_stream_metadata("aged-1", max_age_seconds=3600)
+
+    def nums(df):
+        return sorted(r.event_number for r in
+                      df.where(F.col("stream_id") == "aged-1").collect())
+
+    def answers():
+        return {
+            "read_event": [n for n in range(5)
+                           if engine.read_event("aged-1", n).count()],
+            "page_forward": nums(
+                engine.read_stream_page("aged-1", None, 10).events),
+            "page_backward": nums(engine.read_stream_page(
+                "aged-1", None, 10, backward=True).events),
+            "read_all_page": nums(engine.read_all_page(0, 100).events),
+            "events": nums(engine.events()),
+        }
+
+    got = answers()
+    assert all(v == [1, 4] for v in got.values()), got
+    engine.set_stream_metadata("account-1", max_count=1)
+    assert answers() == got
+    assert [r.event_number for r in
+            engine.read_stream("account-1").collect()] == [1]
+
+
 def test_read_link_stream_pages_by_link_identity(engine):
     """Reading a link stream with resolve_link_tos=True must filter and
     order by the LINK's own stream/event_number (ResolvedEvent.cs:8-33),

@@ -664,7 +664,7 @@ def test_redaction_plain_dir_keeps_untouched_files(spark, tmp_path):
         "append").parquet(path)
     spark.createDataFrame(rows_b, EVENTS_SCHEMA).coalesce(1).write.mode(
         "append").parquet(path)
-    assert M.latest(path) is None  # genuinely plain-dir
+    assert M.history(path) == []  # genuinely plain-dir
     res = redact_events(spark, path, ["0@orders-1"])
     assert res["redacted"] == 1
     snap = M.snapshot_files(path)
@@ -675,6 +675,37 @@ def test_redaction_plain_dir_keeps_untouched_files(spark, tmp_path):
     assert got["orders-2"] == '{"ok": 1}'     # untouched file SURVIVES
     assert got["users-1"] == '{"ok": 2}'
     assert df.count() == 3
+
+
+def test_plain_dir_is_generation_minus_one(spark, tmp_path):
+    """A Spark-written directory with no manifest is generation -1, its
+    parquet listing: a writer opened there reads every row, and its first
+    append publishes generation 0 = listing ∪ the new file, after which
+    generation -1 no longer exists."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.schema import EVENTS_SCHEMA
+    from eventstore_spark.writer import EventLogWriter, ProposedEvent
+
+    path = str(tmp_path / "plainlog")
+    rows = [(1, "orders-1", "orders", 0, "e1", "Placed", "{}", None, None,
+             True),
+            (2, "orders-2", "orders", 0, "e2", "Placed", "{}", None, None,
+             True)]
+    spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(path)
+    listing = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    assert listing and M.latest(path) == (-1, listing)
+    assert M.files_at(path, -1) == listing
+
+    w = EventLogWriter(spark, path)
+    assert w.load().count() == 2
+    assert w.append("orders-1", [ProposedEvent("Shipped", "{}")]) == 1
+    seq, files = M.latest(path)
+    assert seq == 0
+    new = set(files) - set(listing)
+    assert set(listing) < set(files) and len(new) == 1
+    assert M.files_at(path, -1) is None
+    assert w.load().count() == 3
+    w.close()
 
 
 def test_plain_dir_publish_conflicts_when_manifest_appeared(tmp_path):

@@ -608,66 +608,6 @@ def test_streaming_exact_dedup_across_batches(spark, tmp_path):
         q.stop()
 
 
-def test_windowed_counts_drop_data_later_than_watermark(spark, tmp_path):
-    """Event-time windowed counts with a watermark: on-time and
-    slightly-late rows aggregate; rows older than the watermark are
-    dropped (bounded state — the late-data contract)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from eventstore_spark.streaming.subscriptions import windowed_event_counts
-
-    src = tmp_path / "ev_in"
-    src.mkdir()
-
-    def ts(h, m=0):
-        return dt.datetime(2026, 8, 13, h, m)
-
-    cols = ["log_position", "stream_id", "event_type", "created"]
-    pd.DataFrame(
-        [(1, "s-1", "click", ts(10, 0)),
-         (2, "s-1", "click", ts(10, 30)),
-         (3, "s-2", "view", ts(11, 15))],
-        columns=cols,
-    ).to_parquet(src / "b1.parquet", coerce_timestamps="us")
-    stream = spark.readStream.schema(
-        "log_position long, stream_id string, event_type string, created timestamp"
-    ).parquet(str(src))
-    out = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory").queryName("wc")
-        .option("checkpointLocation", str(tmp_path / "wcck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # advance the watermark: max event time 14:00 - 2h => 12:00
-        pd.DataFrame([(4, "s-3", "click", ts(14, 0))], columns=cols).to_parquet(
-            src / "b2.parquet", coerce_timestamps="us"
-        )
-        q.processAllAvailable()
-        # 08:00 is far below the 12:00 watermark -> dropped; 13:30 counts
-        pd.DataFrame(
-            [(5, "s-4", "click", ts(8, 0)), (6, "s-5", "click", ts(13, 30))],
-            columns=cols,
-        ).to_parquet(src / "b3.parquet", coerce_timestamps="us")
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT window.start AS ws, event_type, n FROM wc"
-        ).collect()
-        latest = {}
-        for r in rows:  # update mode re-emits; keep the last count per key
-            latest[(r.ws.hour, r.event_type)] = r.n
-        assert latest[(10, "click")] == 2
-        assert latest[(11, "view")] == 1
-        assert latest[(13, "click")] == 1
-        assert (8, "click") not in latest, "late row below watermark not dropped"
-    finally:
-        q.stop()
-
-
 def test_streaming_sessionization_merges_and_splits(spark, tmp_path):
     """session_window semantics over a live stream: bursts within the gap
     merge into one session; a quiet period longer than the gap starts a
@@ -2273,6 +2213,36 @@ def test_connector_initial_position_latest(spark, tmp_path):
     finally:
         cm.stop("tail")
     assert "Old" not in set(types()) and "New" in set(types())
+
+
+def test_connector_latest_on_archived_store_starts_at_tail(spark, tmp_path):
+    """The 'latest' start position is the tail of the log's snapshot,
+    archived files included: with every hot copy dropped, the connector
+    starts after the archived history instead of at 0 (which the
+    archived-history guard refuses)."""
+    import os
+
+    from eventstore_spark.engine import EventStoreEngine
+    from eventstore_spark.streaming.connectors import ConnectorSettings
+
+    eng = EventStoreEngine(spark, str(tmp_path / "store"))
+    for i in range(3):
+        eng.append("hist-1", [ProposedEvent("Old", json.dumps({"i": i}))])
+    eng.archive_cold(str(tmp_path / "cold"), keep_files=0)
+    eng.drop_archived_local(grace_s=0)
+    assert eng.read_all().count() == 3  # served from the archive
+    cm = eng.connectors
+    cm.create("tail", ConnectorSettings.from_reference({
+        "instanceTypeName": "parquet-sink",
+        "path": str(tmp_path / "out"),
+    }))
+    q = cm.start("tail")
+    try:
+        q.processAllAvailable()
+    finally:
+        cm.stop("tail")
+    with open(os.path.join(cm._dir("tail"), "start_position")) as fh:
+        assert int(fh.read()) == 4
 
 
 def test_key_extraction_blank_source_uses_sink_default(spark):
