@@ -16,11 +16,16 @@ retention still admits", in one Spark job:
 
 log_position values are preserved (the reference scavenger also keeps
 positions stable — readers' checkpoints stay valid). Output is coalesced
-into few files — the ChunkMerger analog.
+into few files — the ChunkMerger analog. The file count between
+maintenance runs is bounded by the writer itself: it merges its small
+tail files every ``TAIL_FILES`` commits (``writer.EventLogWriter.
+_merge_tail``, LevelDB's level-0 compaction), so these jobs are not what
+keeps reads cheap as commits accumulate.
 
 Reader safety (round-4): rewrites are MANIFEST commits (see
 ``manifest.py``). The compacted files are staged, moved into the log dir
-under fresh names, and published as a new manifest snapshot; the
+under fresh names, and published as a new manifest snapshot
+(``manifest.publish_rewrite``, shared with the tail merge); the
 superseded files STAY on disk until ``vacuum(path, grace_s)`` removes
 them, so a reader that pinned the previous snapshot never hits
 FileNotFound mid-scan. Single-writer invariant still applies (no
@@ -72,33 +77,21 @@ def _read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
 
 def _publish_rewrite(path: str, staging: str, tag: str,
                      base_seq: int, keep: list[str] | None = None) -> list[str]:
-    """Move staged part files into the log dir under fresh unique names
-    and publish a manifest referencing them (plus ``keep`` — untouched
-    files a PARTIAL rewrite like redaction carries forward) — a CAS
-    against ``base_seq`` (the generation the rewrite read). Superseded
-    files remain on disk for ``vacuum``'s grace window. On conflict the
-    staged files are removed before re-raising: nothing half-published."""
-    gen = int(time.time() * 1000)
-    new_names = []
-    for i, f in enumerate(sorted(os.listdir(staging))):
-        if f.endswith(".parquet"):
-            name = f"part-{tag}-{gen}-{i:05d}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(path, name))
-            new_names.append(name)
+    """Publish a Spark job's staged part files as a rewrite generation
+    (``manifest.publish_rewrite``: rename, CAS against ``base_seq``,
+    unwind on failure), carrying ``keep`` forward — the untouched files
+    of a PARTIAL rewrite like redaction. The staging dir goes either
+    way; ``meta_gen`` moves only after the publish (see _PathCore)."""
     try:
-        manifest.replace_snapshot(
-            path, list(keep or []) + new_names, base_seq=base_seq
+        _, new_names = manifest.publish_rewrite(
+            path,
+            [os.path.join(staging, f) for f in sorted(os.listdir(staging))
+             if f.endswith(".parquet")],
+            tag, base_seq, keep or [],
         )
-    except manifest.ManifestConflictError:
-        for name in new_names:  # unwind: the rewrite lost the race
-            try:
-                os.remove(os.path.join(path, name))
-            except FileNotFoundError:
-                pass
+    finally:
         shutil.rmtree(staging, ignore_errors=True)
-        raise
-    _core_for(path).meta_gen += 1  # after the publish: see _PathCore
-    shutil.rmtree(staging)
+    _core_for(path).meta_gen += 1
     return new_names
 
 
@@ -223,14 +216,18 @@ def optimize_layout(spark: SparkSession, path: str, target_files: int = 8) -> di
     "Parquet row-group min/max pruning + Z-order on (stream_id,
     event_number) replaces the PTable index").
 
-    Appends land as many small per-commit files in arrival order; after
-    enough commits, per-stream reads touch every file. This job
-    repartitions BY RANGE on (stream_id, event_number) and sorts within
-    partitions, so each output file covers a contiguous (stream, number)
-    range and parquet footer min/max stats prune per-stream reads to a
-    couple of files. log_position values are untouched — checkpoints and
-    $all order stay valid. Published as a manifest snapshot; superseded
-    files drain via ``vacuum``.
+    The writer's tail merge already bounds the file count: appends land
+    as small per-commit files, and every ``TAIL_FILES`` of them merge
+    into one (``EventLogWriter._merge_tail``). What stays is arrival
+    order across files, so a per-stream read still opens each of them.
+    This job is the whole-log rewrite: it repartitions BY RANGE on
+    (stream_id, event_number) and sorts within partitions, so each
+    output file covers a contiguous (stream, number) range and parquet
+    footer min/max stats prune per-stream reads to a couple of files.
+    log_position values are untouched — checkpoints and $all order stay
+    valid. Published through the same rewrite publish as the tail merge
+    (``manifest.publish_rewrite``); superseded files drain via
+    ``vacuum``.
     """
     df, base_seq = _read_snapshot(spark, path)
     n = df.count()
@@ -724,7 +721,7 @@ def redact_events(spark: SparkSession, path: str, targets: list[str]) -> dict:
     redacted.coalesce(max(len(affected), 1)).write.mode("overwrite").parquet(staging)
     # one rename/publish/unwind implementation for ALL rewrites — the
     # subscription rewrite-file-name contract (part-<tag>-<epoch_ms>-)
-    # and the conflict unwind live in _publish_rewrite alone
+    # and the conflict unwind live in manifest.publish_rewrite alone
     new_names = _publish_rewrite(path, staging, "redact", base_seq, keep=keep)
     # The superseded files' ARCHIVE copies must go too (ADVICE r5): a
     # redaction that leaves the unredacted bytes readable in the cold

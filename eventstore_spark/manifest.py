@@ -26,8 +26,8 @@ know this; every other module sees a plain file list. The first publish
 builds generation 0 on that listing, after which a publish computed from
 generation -1 conflicts like any other stale base. At scale the manifest
 is one small JSON per commit whose size tracks the live file count —
-bounded by ``optimize_layout`` compaction, the same way Delta relies on
-OPTIMIZE + checkpointing.
+bounded by the writer's tail merge and ``optimize_layout`` compaction,
+the same way Delta relies on OPTIMIZE + checkpointing.
 """
 
 from __future__ import annotations
@@ -184,6 +184,42 @@ def replace_snapshot(path: str, files: list[str],
     is quiesced."""
     seq, _ = _base(path, base_seq)
     return _write(path, seq + 1, sorted(files))
+
+
+# The tags of rewrite output names, ``part-<tag>-<epoch_ms>-…``: the
+# maintenance jobs and the writer's tail merge. Subscriptions read the
+# publish time out of such a name (``streaming.subscriptions``).
+REWRITE_TAGS = ("scavenge", "optimize", "redact", "merge")
+
+
+def publish_rewrite(path: str, staged: list[str], tag: str, base_seq: int,
+                    keep: list[str]) -> tuple[int, list[str]]:
+    """Move the ``staged`` files (full paths outside the log's listing)
+    into the log dir as ``part-<tag>-<epoch_ms>-<i>-…`` and publish a
+    generation of exactly ``keep`` + them — a CAS against ``base_seq``,
+    the generation the rewrite read. Returns (published seq, new names).
+    Superseded files stay on disk for ``vacuum``. If the publish raises,
+    the moved files are removed before re-raising: nothing
+    half-published. Every rewrite of the log publishes through here."""
+    if tag not in REWRITE_TAGS:
+        raise ValueError(f"unknown rewrite tag {tag!r}")
+    gen = int(time.time() * 1000)
+    suffix = uuid.uuid4().hex[:8]
+    new_names = []
+    for i, src in enumerate(staged):
+        name = f"part-{tag}-{gen}-{i:05d}-{suffix}.parquet"
+        os.rename(src, os.path.join(path, name))
+        new_names.append(name)
+    try:
+        seq = replace_snapshot(path, [*keep, *new_names], base_seq=base_seq)
+    except Exception:
+        for name in new_names:  # unwind: the rewrite did not publish
+            try:
+                os.remove(os.path.join(path, name))
+            except FileNotFoundError:
+                pass
+        raise
+    return seq, new_names
 
 
 # ---------------------------------------------------------------------------

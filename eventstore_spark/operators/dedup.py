@@ -89,66 +89,6 @@ def streaming_exact_dedup(stream: DataFrame, text_col: str = "text",
     return out.dropDuplicates(["fp"])
 
 
-def streaming_minhash_neardup(stream: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text", num_hashes: int = 9,
-                              shingle_n: int = 3, bands: int = 3,
-                              rows: int = 3) -> DataFrame:
-    """NEAR-duplicate detection over a STREAM of documents — the stateful
-    streaming analog of ``minhash_lsh_pairs``: each incoming document's
-    minhash band buckets (same signatures/banding as the batch path)
-    check in against a bucket-keyed state store holding each bucket's
-    FIRST owner.
-
-    Emits one verdict row per (document, band):
-    (band, bh, doc_id, first_doc_id, is_first). A document sharing ANY
-    band bucket with a prior document is an LSH candidate-duplicate of
-    that bucket's owner — downstream (foreachBatch / the memory sink)
-    aggregates `bool_and(is_first)` per doc for the novelty verdict,
-    exactly the batch operator's candidate semantics, incrementally.
-
-    Scale shape: signatures/banding are the batch code (codegen, one md5
-    per shingle); the only stateful op is ``applyInPandasWithState``
-    keyed by (band, bucket) with ONE long of state per distinct bucket —
-    the streaming state store IS the LSH index, sized by distinct
-    buckets, not documents, and hash-partitioned across executors.
-    Within a micro-batch, bucket arrivals resolve in doc_id order so
-    verdicts are deterministic under shuffle nondeterminism.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    sigs = minhash_signature(stream, id_col, text_col, num_hashes, shingle_n)
-    banded = _band_rows(sigs, bands, rows)
-
-    def fn(key, pdfs, state):
-        band, bh = key
-        first = int(state.get[0]) if state.exists else None
-        out = []
-        docs = []
-        for pdf in pdfs:
-            docs.extend(int(d) for d in pdf["doc_id"].tolist())
-        for doc in sorted(docs):
-            if first is None:
-                first = doc
-                out.append((band, bh, doc, doc, True))
-            else:
-                out.append((band, bh, doc, first, doc == first))
-        if first is not None:
-            state.update((first,))
-        yield pd.DataFrame(
-            out, columns=["band", "bh", "doc_id", "first_doc_id", "is_first"]
-        )
-
-    return banded.groupBy("band", "bh").applyInPandasWithState(
-        fn,
-        outputStructType="band int, bh string, doc_id long, "
-                         "first_doc_id long, is_first boolean",
-        stateStructType="first long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

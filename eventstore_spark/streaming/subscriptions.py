@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from .. import manifest as M
 from ..operators.filters import EventFilter, default_all_filter
 from ..schema import EVENTS_SCHEMA, query_scope, scoped_cache
-from ..writer import read_files
+from ..writer import _core_for, merged_from, read_files
 
 
 def _maintenance_safe_predicate(log_path: str,
@@ -32,16 +32,19 @@ def _maintenance_safe_predicate(log_path: str,
 
     A Structured-Streaming file source tails the raw directory and cannot
     pin a manifest, so between a maintenance rewrite and its ``vacuum``
-    BOTH generations of the surviving events are on disk. Every event
-    row, however, can be attributed to its file (``input_file_name``),
-    and rewrite files carry their publish time in the name
-    (``part-{scavenge|optimize}-<epoch_ms>-…``, maintenance.
-    ``_publish_rewrite``), which gives an exact exclusion rule:
+    BOTH generations of the surviving events are on disk — after a
+    maintenance job, and after every tail merge of the writer. Every
+    event row, however, can be attributed to its file
+    (``input_file_name``), and rewrite files carry their publish time in
+    the name (``part-<tag>-<epoch_ms>-…``, ``manifest.REWRITE_TAGS``,
+    ``manifest.publish_rewrite``), which gives an exact exclusion rule:
 
     - files already SUPERSEDED at start (on disk but absent from the
       current manifest — the old generation inside its grace window)
       never deliver: the subscription reads the survivors from the new
-      generation instead;
+      generation instead. A tail-merge output whose merged files are all
+      still on disk counts as those files (``_delivering``), so the
+      commit files deliver and the merge output is the superseded copy;
     - rewrite files PUBLISHED AFTER start never deliver: every event in
       them is either already on disk at start (delivered from the old
       generation this subscription pinned) or appended later (delivered
@@ -54,19 +57,50 @@ def _maintenance_safe_predicate(log_path: str,
     would re-admit its files, which the restarted source sees as new).
     Callers that restart from checkpoints should persist their start
     time alongside the checkpoint and pass it here.
+
+    The snapshot is read and the directory listed under the log's core
+    mutex, which every commit and tail merge of this process holds from
+    the rename of its file to its publish: an append file renamed in but
+    not yet published is never taken for a superseded one. A writer in
+    ANOTHER process has no such hold, so a subscription that starts
+    inside one of its commits can still miss that commit.
     """
     import time
 
-    snap = M.snapshot_files(log_path)
+    with _core_for(log_path).mutex:
+        snap = M.snapshot_files(log_path)
+        disk = {f for f in os.listdir(log_path) if f.endswith(".parquet")}
+        now_ms = int(time.time() * 1000)
     fname = F.substring_index(F.input_file_name(), "/", -1)
-    gen = F.regexp_extract(fname, r"^part-(?:scavenge|optimize|redact)-(\d+)-", 1)
-    cut = int(time.time() * 1000) if started_at_ms is None else started_at_ms
+    tags = "|".join(M.REWRITE_TAGS)
+    gen = F.regexp_extract(fname, rf"^part-(?:{tags})-(\d+)-", 1)
+    cut = now_ms if started_at_ms is None else started_at_ms
     pred = (gen == "") | (gen.cast("long") <= cut)
-    disk = {f for f in os.listdir(log_path) if f.endswith(".parquet")}
-    superseded = sorted(disk - set(snap))
+    superseded = sorted(disk - _delivering(log_path, snap, disk))
     if superseded:
         pred = pred & ~fname.isin(superseded)
     return pred
+
+
+def _delivering(log_path: str, snap: list[str], disk: set[str]) -> set[str]:
+    """The files that deliver the events of the snapshot ``snap``: the
+    snapshot, with every tail-merge output whose merged files are all on
+    ``disk`` replaced by those files, recursively. Merges add no events
+    and leave their inputs on disk until ``vacuum``, so this set does not
+    move when the writer merges: a subscription restarted from its
+    streaming checkpoint (which re-builds the predicate) neither
+    re-delivers the commit files it read before it stopped, through the
+    merge output that now holds them, nor drops commit files appended
+    while it was stopped and merged since."""
+    out, todo = set(), list(snap)
+    while todo:
+        name = todo.pop()
+        inputs = merged_from(log_path, name) if name in disk else []
+        if inputs and disk.issuperset(inputs):
+            todo.extend(inputs)
+        else:
+            out.add(name)
+    return out
 
 
 def _guard_archived_history(log_path: str, from_position: int) -> None:

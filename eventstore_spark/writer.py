@@ -31,7 +31,10 @@ atomic columnar commit:
     StorageWriterService thread owns the log (StorageWriterService.cs:283);
     cluster fencing there is the election/epoch of the replication layer;
   * each committed batch lands as immutable parquet files inside the log
-    directory;
+    directory; the writer merges its own small commit files every
+    ``TAIL_FILES`` commits into one (level-0 compaction, ``_merge_tail``),
+    so the number of files a read opens stays bounded however many
+    commits came before;
   * writer state is LAZY and BOUNDED: opening a writer reads exactly one
     scalar (max log_position) from the log; per-stream last-event-number /
     recent-event-ids load on first touch of that stream via a
@@ -59,6 +62,7 @@ import json
 import os
 import threading
 import uuid
+import warnings
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -92,6 +96,17 @@ DEFAULT_MAX_APPEND_SIZE = 1024 * 1024
 # reference's CheckCommit similarly only consults commits near the head —
 # a replay of an ancient batch is NOT detected as idempotent there either.
 IDEMPOTENCY_WINDOW = 256
+
+# Level-0 compaction of the writer's own commit files (LevelDB's, the
+# reference's ChunkMerger): once the snapshot holds TAIL_FILES files the
+# writer wrote that are each under TAIL_FILE_BYTES, they merge into one
+# (see ``EventLogWriter._merge_tail``). A read then opens at most
+# TAIL_FILES - 1 tail files besides the merge output and the bulk files.
+TAIL_FILES = 8
+TAIL_FILE_BYTES = 256 * 1024
+# parquet footer key of a merge output: the JSON list of the files it
+# replaced (``merged_from``)
+MERGED_FROM = b"eventstore.merged_from"
 
 
 class WrongExpectedVersionError(Exception):
@@ -611,7 +626,10 @@ class EventLogWriter:
     ) -> int:
         """Append a batch to one stream; returns the new last event_number.
 
-        The whole batch commits atomically (one parquet file). Appending to
+        The whole batch commits atomically (one parquet file; once
+        ``TAIL_FILES`` such small files are live, the committing caller
+        merges them into one before it returns — ``_merge_tail``, so the
+        file count a read opens stays bounded). Appending to
         a soft-deleted stream RECREATES it (StorageWriterService.cs:374-416):
         event numbers continue after the old last, and $tb is rewritten to
         the first new event number so the old events stay invisible while
@@ -653,18 +671,22 @@ class EventLogWriter:
 
     def _commit_queue(self, front: tuple) -> None:
         """Run by the caller at the front of the queue: commit the queued
-        appends as one group under the core mutex, then hand each caller
-        its outcome and wake the next front."""
-        batch = [front]
+        appends as one group under the core mutex, merge the tail if it
+        has grown (``_merge_tail``), then hand each caller its outcome and
+        wake the next front."""
+        batch, committed = [front], False
         try:
             with self._core.mutex:
                 with self._queue_cond:
                     batch = list(self._queue)
                 self._commit_group(batch)
-        except BaseException as e:  # nothing committed: fail the group
-            for *_ignored, box in batch:
-                box.pop("result", None)
-                box.setdefault("error", e)
+                committed = True
+                self._merge_tail()
+        except BaseException as e:
+            if not committed:  # nothing committed: fail the group
+                for *_ignored, box in batch:
+                    box.pop("result", None)
+                    box.setdefault("error", e)
             if not isinstance(e, Exception):
                 raise  # an interrupt stays with the thread it hit
         finally:
@@ -796,6 +818,61 @@ class EventLogWriter:
             if any(r[1].startswith(METASTREAM_PREFIX)
                    or r[5] == STREAM_DELETED_EVENT_TYPE for r in rows):
                 self._core.meta_gen += 1
+
+    def _merge_tail(self) -> None:
+        """Level-0 compaction, run under the core mutex after a group
+        commit is published: once the snapshot this process published
+        holds ``TAIL_FILES`` small files of the writer's own — commit
+        files and earlier merge outputs, each under ``TAIL_FILE_BYTES``,
+        on the hot tier and not archived — merge them into one file
+        sorted by (stream_id, event_number), every value unchanged, and
+        publish it with the rewrite CAS (``manifest.publish_rewrite``).
+        Pyarrow on the driver, like ``_commit``: no Spark job. No row
+        changes, so ``meta_gen`` stays. Bulk ``append_df`` files and
+        maintenance outputs are never touched. The output's footer names
+        the files it replaced (``merged_from``).
+
+        The commit that triggered this is already acknowledged, so a
+        failed merge fails nothing: it removes its output and leaves the
+        tail for the next commit. An interrupt propagates."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        core = self._core
+        files = manifest.files_at(self.path, core.manifest_seq) or []
+        archived = set(manifest.archive_config(self.path).get("files", []))
+
+        def small(name: str) -> bool:
+            try:
+                return (os.path.getsize(os.path.join(self.path, name))
+                        < TAIL_FILE_BYTES)
+            except FileNotFoundError:
+                return False  # dropped from the hot tier
+
+        tail = [f for f in files
+                if f.startswith(("part-writer-", "part-merge-"))
+                and f not in archived and small(f)]
+        if len(tail) < TAIL_FILES:
+            return
+        tmp = os.path.join(self.path, f".merge-{uuid.uuid4().hex[:8]}.tmp")
+        try:
+            table = pa.concat_tables(
+                pq.read_table(os.path.join(self.path, f)) for f in tail)
+            pq.write_table(
+                table.sort_by([("stream_id", "ascending"),
+                               ("event_number", "ascending")])
+                .replace_schema_metadata({MERGED_FROM: json.dumps(tail)}),
+                tmp, compression="snappy")
+            merged = set(tail)
+            core.manifest_seq, _ = manifest.publish_rewrite(
+                self.path, [tmp], "merge", core.manifest_seq,
+                keep=[f for f in files if f not in merged])
+        except Exception as e:  # the tail stays for the next commit
+            warnings.warn(f"tail merge of {self.path} not published: {e!r}",
+                          RuntimeWarning, stacklevel=2)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def _publish_append(self, names: list[str]) -> None:
         """Publish an append commit's files to the manifest as a CAS
@@ -1151,6 +1228,17 @@ class EventLogWriter:
                 "(never published, or removed by vacuum)"
             )
         return read_files(self.spark, self.path, files)
+
+
+def merged_from(path: str, name: str) -> list[str]:
+    """The files the tail-merge output ``name`` of the log at ``path``
+    replaced, read from its parquet footer; [] for any other file."""
+    import pyarrow.parquet as pq
+
+    if not name.startswith("part-merge-"):
+        return []
+    md = pq.read_schema(os.path.join(path, name)).metadata or {}
+    return json.loads(md.get(MERGED_FROM, b"[]"))
 
 
 def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:

@@ -3,6 +3,7 @@
 PersistentSubscriptionTests.cs."""
 
 import json
+import os
 
 import pytest
 
@@ -983,6 +984,173 @@ def test_subscription_after_vacuum_reads_rewrite_generation(spark, tmp_path):
         q.stop()
 
 
+def _collect_positions(sub, checkpoint):
+    """Start ``sub`` into a foreachBatch sink; returns (query, the list
+    the delivered log positions land in)."""
+    seen = []
+    q = (
+        sub.writeStream.outputMode("append")
+        .foreachBatch(lambda df, _:
+                      seen.extend(r.log_position for r in df.collect()))
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    return q, seen
+
+
+def test_subscription_running_across_tail_merges_sees_each_event_once(
+        spark, tmp_path):
+    """The writer's tail merge publishes a second copy of its commit
+    files' events; a live subscription delivers each event once across
+    two merges (merge outputs newer than the subscription carry their
+    publish time in the name)."""
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "tmlog")
+    w = EventLogWriter(spark, path)
+    for i in range(3):
+        w.append(f"s-{i % 2}", [ProposedEvent("E", json.dumps({"i": i}))])
+    q, seen = _collect_positions(subscribe_all(spark, path),
+                                 str(tmp_path / "tmck"))
+    try:
+        q.processAllAvailable()
+        assert sorted(seen) == [1, 2, 3]
+        n = 3
+        for _round in range(2):
+            for i in range(TAIL_FILES):
+                n += 1
+                w.append(f"s-{n % 2}", [ProposedEvent("E", json.dumps({"i": n}))])
+                if i == TAIL_FILES // 2:
+                    q.processAllAvailable()
+        q.processAllAvailable()
+        merges = [f for f in os.listdir(path) if f.startswith("part-merge-")]
+        assert len(merges) >= 2
+        assert sorted(seen) == list(range(1, n + 1))
+    finally:
+        q.stop()
+        w.close()
+
+
+def test_subscription_started_after_tail_merge_sees_each_event_once(
+        spark, tmp_path):
+    """A subscription started after a tail merge, while the merged
+    commit files are still on disk, reads those events once, from the
+    merge output, and keeps delivering across a later merge."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "talog")
+    w = EventLogWriter(spark, path)
+    n = TAIL_FILES + 2
+    for i in range(n):
+        w.append(f"s-{i % 3}", [ProposedEvent("E", json.dumps({"i": i}))])
+    on_disk = {f for f in os.listdir(path) if f.endswith(".parquet")}
+    assert len(on_disk) > len(M.snapshot_files(path))  # superseded tail
+    q, seen = _collect_positions(subscribe_all(spark, path),
+                                 str(tmp_path / "tack"))
+    try:
+        q.processAllAvailable()
+        assert sorted(seen) == list(range(1, n + 1))
+        for i in range(TAIL_FILES):
+            n += 1
+            w.append(f"s-{n % 3}", [ProposedEvent("E", json.dumps({"i": n}))])
+        q.processAllAvailable()
+        assert sorted(seen) == list(range(1, n + 1))
+    finally:
+        q.stop()
+        w.close()
+
+
+def test_restarted_subscriptions_see_merged_appends_once(spark, tmp_path):
+    """A subscription restarted from its checkpoint after tail merges ran
+    while it was stopped delivers the appends made meanwhile once, and
+    nothing it had read before: without a persisted start (a plain
+    checkpointed query) the merge output does not re-deliver old events,
+    and with one (``start_with_markers``) the merged appends are not
+    dropped."""
+    from eventstore_spark.streaming.subscriptions import (
+        start_foreach_batch, start_with_markers,
+    )
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "rslog")
+    w = EventLogWriter(spark, path)
+    for i in range(3):
+        w.append(f"s-{i}", [ProposedEvent("E", json.dumps({"i": i}))])
+    seen, counts = [], []
+
+    def drain():
+        q = start_foreach_batch(
+            subscribe_all(spark, path),
+            lambda df, _: seen.extend(r.log_position for r in df.collect()),
+            str(tmp_path / "rsck"), available_now=True)
+        q.awaitTermination()
+        q = start_with_markers(
+            spark, path, on_batch=lambda df, _: counts.append(df.count()),
+            on_marker=lambda kind, _: None,
+            checkpoint_location=str(tmp_path / "rsmk"), available_now=True)
+        q.awaitTermination()
+
+    drain()
+    assert sorted(seen) == [1, 2, 3] and sum(counts) == 3
+    for i in range(TAIL_FILES):
+        w.append(f"s-{i}", [ProposedEvent("E", json.dumps({"i": 3 + i}))])
+    assert [f for f in os.listdir(path) if f.startswith("part-merge-")]
+    drain()
+    n = 3 + TAIL_FILES
+    assert sorted(seen) == list(range(1, n + 1))
+    assert sum(counts) == n
+    w.close()
+
+
+def test_subscription_starting_inside_a_commit_delivers_it(
+        spark, tmp_path, monkeypatch):
+    """An append whose file is renamed in but not yet published when a
+    subscription starts is not taken for a superseded file: the
+    subscription's start waits for the commit, and delivers it."""
+    import threading
+
+    from eventstore_spark import manifest as M
+
+    path = str(tmp_path / "iclog")
+    w = EventLogWriter(spark, path)
+    w.append("s-1", [ProposedEvent("E", '{"i": 0}')])
+    real = M.append_files
+    entered, release = threading.Event(), threading.Event()
+
+    def held(*a, **k):
+        entered.set()
+        release.wait(timeout=60)
+        return real(*a, **k)
+
+    monkeypatch.setattr(M, "append_files", held)
+    box = {}
+    writer = threading.Thread(
+        target=lambda: w.append("s-1", [ProposedEvent("E", '{"i": 1}')]),
+        daemon=True)
+    starter = threading.Thread(
+        target=lambda: box.setdefault("sub", subscribe_all(spark, path)),
+        daemon=True)
+    writer.start()
+    try:
+        assert entered.wait(timeout=60)
+        starter.start()
+        starter.join(timeout=3)  # at most until the commit publishes
+    finally:
+        release.set()
+    writer.join(timeout=60)
+    starter.join(timeout=60)
+    assert not writer.is_alive() and not starter.is_alive()
+    monkeypatch.setattr(M, "append_files", real)
+    q, seen = _collect_positions(box["sub"], str(tmp_path / "icck"))
+    try:
+        q.processAllAvailable()
+        assert sorted(seen) == [1, 2]
+    finally:
+        q.stop()
+        w.close()
+
+
 def test_connectors_lifecycle_and_sinks(spark, tmp_path):
     """Connectors parity (docs/server/features/connectors): a connector
     is a managed catch-up-subscription → filter → sink pipeline with
@@ -1395,61 +1563,6 @@ def test_markers_restart_across_maintenance_rewrite(spark, tmp_path):
         "rewrite files published after the original start must not "
         "re-deliver surviving events on restart")
     eng.close()
-
-
-def test_streaming_minhash_neardup_flags_candidates_across_batches(spark, tmp_path):
-    """Bucket-keyed LSH state across micro-batches: an exact copy arriving
-    in a LATER batch matches every band of its original (bool_and(is_first)
-    = false); novel docs own all their buckets; near-dup text shares at
-    least one band."""
-    import pandas as pd
-
-    from eventstore_spark.operators.dedup import streaming_minhash_neardup
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away home"
-    src = tmp_path / "nd_in"
-    src.mkdir()
-    pd.DataFrame(
-        [(1, base), (2, "completely different text about spark query engines here")],
-        columns=["doc_id", "text"],
-    ).to_parquet(src / "b1.parquet")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    out = streaming_minhash_neardup(stream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory").queryName("nd")
-        .option("checkpointLocation", str(tmp_path / "ndck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        verdict = {
-            r.doc_id: r for r in spark.sql(
-                "SELECT doc_id, bool_and(is_first) AS novel, "
-                "count(*) AS n_bands FROM nd GROUP BY doc_id").collect()
-        }
-        assert verdict[1].novel and verdict[2].novel
-        assert verdict[1].n_bands == 3
-        # batch 2: doc 3 = exact copy of 1, doc 4 = near-dup, doc 5 novel
-        pd.DataFrame(
-            [(3, base), (4, base.replace("quick", "slow")),
-             (5, "unrelated words entirely new content stream processing")],
-            columns=["doc_id", "text"],
-        ).to_parquet(src / "b2.parquet")
-        q.processAllAvailable()
-        verdict = {
-            r.doc_id: r for r in spark.sql(
-                "SELECT doc_id, bool_and(is_first) AS novel FROM nd "
-                "GROUP BY doc_id").collect()
-        }
-        assert not verdict[3].novel            # every band hits doc 1
-        assert not verdict[4].novel            # >= 1 band hits doc 1
-        assert verdict[5].novel
-        owners = {r.first_doc_id for r in spark.sql(
-            "SELECT first_doc_id FROM nd WHERE doc_id = 3").collect()}
-        assert owners == {1}
-    finally:
-        q.stop()
 
 
 def test_streaming_bloom_dedup_across_batches(spark, tmp_path):

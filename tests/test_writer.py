@@ -1,6 +1,8 @@
 """Append-protocol semantics (S7/S8) — pytest analog of the reference's
 IndexWriter.CheckCommit and Idempotency test fixtures."""
 
+import os
+
 import pytest
 
 from eventstore_spark.writer import (
@@ -444,7 +446,8 @@ def test_group_commit_batches_concurrent_appends(spark, tmp_path):
     for tid in range(n_threads):
         nums = sorted(r.event_number for r in rows if r.stream_id == f"s-{tid}")
         assert nums == list(range(per_thread))
-    files = [f for f in _os.listdir(path) if f.endswith(".parquet")]
+    # the writer's commit files: tail-merge outputs are not commits
+    files = [f for f in _os.listdir(path) if f.startswith("part-writer-")]
     assert len(files) < n  # appends actually grouped
     w.close()
 
@@ -1156,3 +1159,110 @@ def test_readers_beside_two_writers_keep_numbering_dense(spark, tmp_path):
     assert sorted(acks) == list(range(1, 25))
     got = sorted(r.event_number for r in w1.load().collect())
     assert got == list(range(25))
+
+
+# ---------------------------------------------------------------------------
+# tail merge (level-0 compaction of the writer's commit files)
+# ---------------------------------------------------------------------------
+
+def _parquet(path, prefix=""):
+    import os as _os
+
+    return sorted(f for f in _os.listdir(path)
+                  if f.endswith(".parquet") and f.startswith(prefix))
+
+
+def test_tail_merge_bounds_live_files(spark, tmp_path):
+    """200 single-event commits leave at most TAIL_FILES + 1 live files:
+    the writer merges its small commit files as they accumulate. The log
+    holds exactly the appended rows with dense positions, and a merge
+    output is sorted by (stream_id, event_number). A generation from
+    before a merge still reads the same rows."""
+    import pyarrow.parquet as pq
+
+    from eventstore_spark import manifest as M
+    from eventstore_spark.engine import EventStoreEngine
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "log")
+    eng = EventStoreEngine(spark, path)
+    appended = []
+    pre_merge = None
+    for i in range(200):
+        sid = f"s-{i % 4}"
+        eng.append(sid, [ProposedEvent("E", f'{{"i": {i}}}', event_id=f"e{i}")])
+        appended.append((i + 1, sid, i // 4, f"e{i}"))
+        if i == 4:
+            pre_merge = M.latest(path)[0]
+    snap = M.snapshot_files(path)
+    assert len(snap) <= TAIL_FILES + 1
+    assert any(f.startswith("part-merge-") for f in snap)
+    rows = eng.writer.load().collect()
+    assert sorted((r.log_position, r.stream_id, r.event_number, r.event_id)
+                  for r in rows) == appended
+    merged = pq.read_table(
+        f"{path}/{next(f for f in snap if f.startswith('part-merge-'))}")
+    keys = list(zip(merged.column("stream_id").to_pylist(),
+                    merged.column("event_number").to_pylist()))
+    assert keys == sorted(keys)
+    old = eng.events_at(pre_merge).collect()
+    assert sorted(r.event_id for r in old) == [f"e{i}" for i in range(5)]
+    eng.close()
+
+
+def test_failed_tail_merge_keeps_the_append(spark, tmp_path, monkeypatch):
+    """A merge whose publish fails fails nothing: the append that
+    triggered it is acknowledged and readable, no merge output stays on
+    disk, and the next commit merges the tail."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    for i in range(TAIL_FILES - 1):
+        w.append("s-1", [ProposedEvent("E")])
+
+    def boom(*a, **k):
+        raise OSError("disk full")
+
+    real = M.replace_snapshot
+    monkeypatch.setattr(M, "replace_snapshot", boom)
+    with pytest.warns(RuntimeWarning, match="tail merge"):
+        assert w.append("s-1", [ProposedEvent("E")]) == TAIL_FILES - 1
+    assert w.load().count() == TAIL_FILES
+    assert not _parquet(path, "part-merge-")
+    assert not [f for f in os.listdir(path) if f.startswith(".merge-")]
+    assert len(M.snapshot_files(path)) == TAIL_FILES
+    monkeypatch.setattr(M, "replace_snapshot", real)
+    w.append("s-1", [ProposedEvent("E")])
+    snap = M.snapshot_files(path)
+    assert len(snap) == 1 and snap[0].startswith("part-merge-")
+    rows = w.load().collect()
+    assert sorted(r.log_position for r in rows) == list(range(1, TAIL_FILES + 2))
+    w.close()
+
+
+def test_tail_merge_skips_archived_files(spark, tmp_path):
+    """A file the cold tier archived is never merged: its name stays in
+    the snapshot, and the merge takes only hot, unarchived commit files."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.maintenance import archive_cold
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    for i in range(TAIL_FILES - 1):
+        w.append(f"s-{i % 2}", [ProposedEvent("E")])
+    archive_cold(path, str(tmp_path / "archive"), keep_files=2)
+    archived = M.archive_config(path)["files"]
+    assert len(archived) == TAIL_FILES - 3
+    for i in range(TAIL_FILES):
+        w.append(f"s-{i % 2}", [ProposedEvent("E")])
+    snap = M.snapshot_files(path)
+    assert set(archived) <= set(snap)
+    assert [f for f in snap if f not in archived][0].startswith("part-merge-")
+    assert len(snap) <= len(archived) + TAIL_FILES
+    rows = w.load().collect()
+    assert sorted(r.log_position for r in rows) == list(
+        range(1, 2 * TAIL_FILES))
+    w.close()
