@@ -18,9 +18,9 @@ log_position values are preserved (the reference scavenger also keeps
 positions stable — readers' checkpoints stay valid). Output is coalesced
 into few files — the ChunkMerger analog. The file count between
 maintenance runs is bounded by the writer itself: it merges its small
-tail files every ``TAIL_FILES`` commits (``writer.EventLogWriter.
-_merge_tail``, LevelDB's level-0 compaction), so these jobs are not what
-keeps reads cheap as commits accumulate.
+tail files once ``TAIL_FILES`` of them are live (``writer.
+EventLogWriter._merge_tail``, LevelDB's level-0 compaction), so these
+jobs are not what keeps reads cheap as commits accumulate.
 
 Reader safety (round-4): rewrites are MANIFEST commits (see
 ``manifest.py``). The compacted files are staged, moved into the log dir
@@ -217,9 +217,10 @@ def optimize_layout(spark: SparkSession, path: str, target_files: int = 8) -> di
     event_number) replaces the PTable index").
 
     The writer's tail merge already bounds the file count: appends land
-    as small per-commit files, and every ``TAIL_FILES`` of them merge
-    into one (``EventLogWriter._merge_tail``). What stays is arrival
-    order across files, so a per-stream read still opens each of them.
+    as small per-commit files, and once ``TAIL_FILES`` of them are live
+    they merge into one (``EventLogWriter._merge_tail``). What stays is
+    arrival order across files, so a per-stream read still opens each
+    of them.
     This job is the whole-log rewrite: it repartitions BY RANGE on
     (stream_id, event_number) and sorts within partitions, so each
     output file covers a contiguous (stream, number) range and parquet

@@ -31,8 +31,8 @@ atomic columnar commit:
     StorageWriterService thread owns the log (StorageWriterService.cs:283);
     cluster fencing there is the election/epoch of the replication layer;
   * each committed batch lands as immutable parquet files inside the log
-    directory; the writer merges its own small commit files every
-    ``TAIL_FILES`` commits into one (level-0 compaction, ``_merge_tail``),
+    directory; the writer merges its own small commit files into one
+    once ``TAIL_FILES`` are live (level-0 compaction, ``_merge_tail``),
     so the number of files a read opens stays bounded however many
     commits came before;
   * writer state is LAZY and BOUNDED: opening a writer reads exactly one
