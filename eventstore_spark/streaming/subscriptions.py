@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from .. import manifest as M
 from ..operators.filters import EventFilter, default_all_filter
 from ..schema import EVENTS_SCHEMA, query_scope, scoped_cache
-from ..writer import _core_for, merged_from, read_files
+from ..writer import _core_for, read_files
 
 
 def _maintenance_safe_predicate(log_path: str,
@@ -42,9 +42,9 @@ def _maintenance_safe_predicate(log_path: str,
     - files already SUPERSEDED at start (on disk but absent from the
       current manifest — the old generation inside its grace window)
       never deliver: the subscription reads the survivors from the new
-      generation instead. A tail-merge output whose merged files are all
-      still on disk counts as those files (``_delivering``), so the
-      commit files deliver and the merge output is the superseded copy;
+      generation instead. A tail-merge output counts as the commit files
+      it holds (``_delivering``), so the commit files deliver and the
+      merge output is the superseded copy;
     - rewrite files PUBLISHED AFTER start never deliver: every event in
       them is either already on disk at start (delivered from the old
       generation this subscription pinned) or appended later (delivered
@@ -84,22 +84,21 @@ def _maintenance_safe_predicate(log_path: str,
 
 def _delivering(log_path: str, snap: list[str], disk: set[str]) -> set[str]:
     """The files that deliver the events of the snapshot ``snap``: the
-    snapshot, with every tail-merge output whose merged files are all on
-    ``disk`` replaced by those files, recursively. Merges add no events
-    and leave their inputs on disk until ``vacuum``, so this set does not
-    move when the writer merges: a subscription restarted from its
+    snapshot, with every tail-merge output replaced by the commit files
+    it holds (``manifest.merged_from``). Merges add no events, and
+    ``vacuum`` keeps those commit files for as long as a retained
+    generation names the merge output, so this set does not move when
+    the writer merges or vacuum runs: a subscription restarted from its
     streaming checkpoint (which re-builds the predicate) neither
     re-delivers the commit files it read before it stopped, through the
     merge output that now holds them, nor drops commit files appended
-    while it was stopped and merged since."""
-    out, todo = set(), list(snap)
-    while todo:
-        name = todo.pop()
-        inputs = merged_from(log_path, name) if name in disk else []
-        if inputs and disk.issuperset(inputs):
-            todo.extend(inputs)
-        else:
-            out.add(name)
+    while it was stopped and merged since. A merge output whose commit
+    files are not all on disk (removed by hand) delivers itself."""
+    out = set()
+    for name in snap:
+        commits = M.merged_from(log_path, name) if name in disk else []
+        out.update(commits if commits and disk.issuperset(commits)
+                   else [name])
     return out
 
 

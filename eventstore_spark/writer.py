@@ -104,9 +104,6 @@ IDEMPOTENCY_WINDOW = 256
 # TAIL_FILES - 1 tail files besides the merge output and the bulk files.
 TAIL_FILES = 8
 TAIL_FILE_BYTES = 256 * 1024
-# parquet footer key of a merge output: the JSON list of the files it
-# replaced (``merged_from``)
-MERGED_FROM = b"eventstore.merged_from"
 
 
 class WrongExpectedVersionError(Exception):
@@ -830,7 +827,8 @@ class EventLogWriter:
         Pyarrow on the driver, like ``_commit``: no Spark job. No row
         changes, so ``meta_gen`` stays. Bulk ``append_df`` files and
         maintenance outputs are never touched. The output's footer names
-        the files it replaced (``merged_from``).
+        the commit files whose events it holds, through the merge outputs
+        it took in (``manifest.merged_from``); ``vacuum`` keeps those.
 
         The commit that triggered this is already acknowledged, so a
         failed merge fails nothing: it removes its output and leaves the
@@ -858,10 +856,13 @@ class EventLogWriter:
         try:
             table = pa.concat_tables(
                 pq.read_table(os.path.join(self.path, f)) for f in tail)
+            commits = [c for f in tail
+                       for c in manifest.merged_from(self.path, f) or [f]]
             pq.write_table(
                 table.sort_by([("stream_id", "ascending"),
                                ("event_number", "ascending")])
-                .replace_schema_metadata({MERGED_FROM: json.dumps(tail)}),
+                .replace_schema_metadata(
+                    {manifest.MERGED_FROM: json.dumps(commits)}),
                 tmp, compression="snappy")
             merged = set(tail)
             core.manifest_seq, _ = manifest.publish_rewrite(
@@ -1228,17 +1229,6 @@ class EventLogWriter:
                 "(never published, or removed by vacuum)"
             )
         return read_files(self.spark, self.path, files)
-
-
-def merged_from(path: str, name: str) -> list[str]:
-    """The files the tail-merge output ``name`` of the log at ``path``
-    replaced, read from its parquet footer; [] for any other file."""
-    import pyarrow.parquet as pq
-
-    if not name.startswith("part-merge-"):
-        return []
-    md = pq.read_schema(os.path.join(path, name)).metadata or {}
-    return json.loads(md.get(MERGED_FROM, b"[]"))
 
 
 def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:

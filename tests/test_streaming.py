@@ -1062,12 +1062,15 @@ def test_subscription_started_after_tail_merge_sees_each_event_once(
 
 
 def test_restarted_subscriptions_see_merged_appends_once(spark, tmp_path):
-    """A subscription restarted from its checkpoint after tail merges ran
-    while it was stopped delivers the appends made meanwhile once, and
-    nothing it had read before: without a persisted start (a plain
-    checkpointed query) the merge output does not re-deliver old events,
-    and with one (``start_with_markers``) the merged appends are not
-    dropped."""
+    """A subscription restarted from its checkpoint after tail merges and
+    a ``vacuum`` ran while it was stopped delivers the appends made
+    meanwhile once, and nothing it had read before: without a persisted
+    start (a plain checkpointed query) the merge output does not
+    re-deliver old events, and with one (``start_with_markers``) the
+    merged appends are not dropped. Vacuum keeps every commit file a
+    live merge output holds, so which copy delivers an event does not
+    depend on when vacuum ran."""
+    from eventstore_spark.manifest import vacuum
     from eventstore_spark.streaming.subscriptions import (
         start_foreach_batch, start_with_markers,
     )
@@ -1075,8 +1078,17 @@ def test_restarted_subscriptions_see_merged_appends_once(spark, tmp_path):
 
     path = str(tmp_path / "rslog")
     w = EventLogWriter(spark, path)
-    for i in range(3):
-        w.append(f"s-{i}", [ProposedEvent("E", json.dumps({"i": i}))])
+    n = 0
+
+    def append(k):
+        nonlocal n
+        for _ in range(k):
+            w.append(f"s-{n % 3}", [ProposedEvent("E", json.dumps({"i": n}))])
+            n += 1
+
+    def merges():
+        return {f for f in os.listdir(path) if f.startswith("part-merge-")}
+
     seen, counts = [], []
 
     def drain():
@@ -1091,13 +1103,16 @@ def test_restarted_subscriptions_see_merged_appends_once(spark, tmp_path):
             checkpoint_location=str(tmp_path / "rsmk"), available_now=True)
         q.awaitTermination()
 
+    append(TAIL_FILES + 2)  # a merge before the first start
+    first = merges()
+    assert first
+    vacuum(path, grace_s=0)
     drain()
-    assert sorted(seen) == [1, 2, 3] and sum(counts) == 3
-    for i in range(TAIL_FILES):
-        w.append(f"s-{i}", [ProposedEvent("E", json.dumps({"i": 3 + i}))])
-    assert [f for f in os.listdir(path) if f.startswith("part-merge-")]
+    assert sorted(seen) == list(range(1, n + 1)) and sum(counts) == n
+    append(TAIL_FILES)  # a merge while both subscriptions are stopped
+    assert merges() - first
+    assert vacuum(path, grace_s=0)["manifests_removed"] > 0
     drain()
-    n = 3 + TAIL_FILES
     assert sorted(seen) == list(range(1, n + 1))
     assert sum(counts) == n
     w.close()

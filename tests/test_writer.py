@@ -1266,3 +1266,37 @@ def test_tail_merge_skips_archived_files(spark, tmp_path):
     assert sorted(r.log_position for r in rows) == list(
         range(1, 2 * TAIL_FILES))
     w.close()
+
+
+def test_vacuum_keeps_the_commit_files_of_a_live_merge(spark, tmp_path):
+    """A merge output's footer names every commit file whose events it
+    holds, through the merge outputs it took in, and ``vacuum`` keeps
+    those files while a retained generation names the merge output —
+    they are the copy subscriptions deliver. Once a maintenance rewrite
+    supersedes the merge output and its generation drains, they go."""
+    from eventstore_spark import manifest as M
+    from eventstore_spark.maintenance import optimize_layout
+    from eventstore_spark.writer import TAIL_FILES
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    n = 3 * TAIL_FILES
+    for i in range(n):
+        w.append(f"s-{i % 2}", [ProposedEvent("E")])
+    commits = _parquet(path, "part-writer-")
+    assert len(commits) == n
+    M.vacuum(path, grace_s=0)
+    assert _parquet(path, "part-writer-") == commits
+    [merge] = [f for f in M.snapshot_files(path) if f.startswith("part-merge-")]
+    assert _parquet(path, "part-merge-") == [merge]  # earlier merges drained
+    held = M.merged_from(path, merge)
+    tail = [f for f in M.snapshot_files(path) if f != merge]
+    assert sorted(held + tail) == commits
+    w.close()
+    optimize_layout(spark, path, target_files=1)
+    M.vacuum(path, grace_s=0)
+    assert not _parquet(path, "part-writer-") and not _parquet(path, "part-merge-")
+    w = EventLogWriter(spark, path)
+    assert sorted(r.log_position for r in w.load().collect()) == list(
+        range(1, n + 1))
+    w.close()
