@@ -1035,7 +1035,8 @@ def test_subscription_started_after_tail_merge_sees_each_event_once(
         spark, tmp_path):
     """A subscription started after a tail merge, while the merged
     commit files are still on disk, reads those events once, from the
-    merge output, and keeps delivering across a later merge."""
+    commit files the merge output holds, and keeps delivering across a
+    later merge."""
     from eventstore_spark import manifest as M
     from eventstore_spark.writer import TAIL_FILES
 
