@@ -1486,17 +1486,7 @@ class EventStoreEngine:
                 # projection over millions of streams stays executor-bound.
                 with query_scope():
                     scoped_cache(batch_df)
-                    emissions = (
-                        batch_df.where(F.col("kind").isin("emit", "link")).select(
-                            F.col("emit_stream").alias("stream_id"),
-                            F.col("emit_event_type").alias("event_type"),
-                            F.col("emit_data").alias("data"),
-                            F.col("emit_metadata").alias("metadata"),
-                            F.col("emit_event_id").alias("event_id"),
-                            # emissions replay in fold order (source pos, seq)
-                            "source_log_position", "emit_seq",
-                        )
-                    )
+                    emissions = ProjectionResult(raw=batch_df).emitted
                     if not mp.emit_enabled and emissions.limit(1).first():
                         # projections.proto emit_enabled: emitting while
                         # disabled FAULTS the projection (the reference

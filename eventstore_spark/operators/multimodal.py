@@ -3,8 +3,7 @@
 The engine treats media as ``binary`` payload columns with a typed metadata
 struct, processed by Arrow-batched ``mapInPandas`` operators. The Spark-side
 plumbing (schema, batch iteration, partition sizing, UDF signatures) is
-real and tested; the actual codec work (image decode, resampling, frame
-extraction) requires native libraries not present in this container and is
+real and tested; the actual codec work (image decode, frame extraction) requires native libraries not present in this container and is
 stubbed behind ``DECODERS`` — swap in real implementations (PIL/ffmpeg)
 without touching the plan shape.
 
@@ -261,7 +260,7 @@ def exact_media_dedup(media: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Frame sampling (video) and resize (image) — one-to-many / transform plumbing
+# Frame sampling (video) — one-to-many plumbing
 # ---------------------------------------------------------------------------
 
 FRAME_INTERVAL_MS = 1000
@@ -366,44 +365,6 @@ def segment_audio(media: DataFrame, chunk_ms: int = 250) -> DataFrame:
         media.where((F.col("kind") == "audio") & F.col("content").isNotNull())
         .select("media_id", "kind", "content", "meta")
         .mapInPandas(run, _CHUNKS_SCHEMA)
-    )
-
-
-_RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("digest", T.StringType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """Image resize to a fixed training resolution: binary in → binary out
-    through Arrow batches (the memory-shape that matters: resized bytes
-    are produced and consumed executor-side). The pixel work is the
-    documented stub — a digest token standing in for the resized image."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.kind != "image" or r.content is None:
-                    continue
-                content = bytes(r.content)
-                token = hashlib.sha256(
-                    content + f":{width}x{height}".encode()
-                ).digest()
-                rows.append((r.media_id, width, height, token, token.hex()[:16]))
-            yield pd.DataFrame(rows, columns=[f.name for f in _RESIZED_SCHEMA.fields])
-
-    # same boundary discipline as sample_frames (r13-opt, guide §4)
-    return (
-        media.where((F.col("kind") == "image") & F.col("content").isNotNull())
-        .select("media_id", "kind", "content")
-        .mapInPandas(run, _RESIZED_SCHEMA)
     )
 
 

@@ -88,15 +88,6 @@ FROM {table}
 """
 
 
-def quality_filter(docs: DataFrame, min_quality: float = 0.3,
-                   min_tokens: int = 10, text_col: str = "text") -> DataFrame:
-    """The classic pipeline gate: drop short/low-quality docs."""
-    c = F.col(text_col)
-    return docs.where(
-        (X.quality_score(c) >= min_quality) & (X.token_count(c) >= min_tokens)
-    )
-
-
 #: Gopher stop words (Rae et al. 2021, arXiv:2112.11446 §A1.1 — the
 #: eight-word list the "minimum stop words" rule counts)
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")

@@ -1,4 +1,5 @@
-"""Batch ("OneTime query") projection runtime (SURVEY §2.3 P6-P18, §3.3).
+"""Projection runtime: the one fold loop and the batch ("OneTime query")
+driver (SURVEY §2.3 P6-P18, §3.3).
 
 Semantics contract (mirrors CoreProjection + JintProjectionStateHandler
 execution: events are applied to per-partition state in EXACT log order;
@@ -6,17 +7,26 @@ handlers may emit new events; the final state flows through
 transformBy/filterBy before being output — WriteQueryResultProjection
 ProcessingPhase for one-time queries).
 
+One fold loop (``_FoldLoop``) runs every mode, as the reference runs
+one-time and continuous projections through the same state handler:
+batch groups, the bi-state pass, and continuous micro-batch groups
+(streaming/continuous.py) differ only in where a partition's state
+starts and where it goes.
+
 Spark-first execution:
   * source selection = one pruned scan (plans/reader_strategy.py);
-  * partitioning = groupBy on a key column (stream_id, a Column expression,
-    or a row-wise Python key for parity with JS partitionBy);
-  * the fold itself = ``applyInPandas`` over each partition group, sorted
-    by log_position inside the group — Arrow-batched, one pass, no
-    driver-side loop. State is an arbitrary JSON-serializable Python value.
+  * partitioning = one ``_partition`` key column (stream_id, a Column
+    expression, or a row-wise Python key for parity with JS partitionBy),
+    built by ``_with_partition`` for batch and continuous alike;
+  * the fold itself = ``mapInPandas`` over a hash repartition sorted by
+    (partition, order) — Arrow-batched, one pass, no driver-side loop.
+    State is an arbitrary JSON-serializable Python value.
   * emitted events (emit/linkTo) come back as extra rows from the same
-    pass with deterministic event ids (xxhash of projection, partition,
-    source position, seq) so re-runs are idempotent — the analog of the
-    reference's expected-version emission tracking
+    pass with deterministic event ids: sha1 of (projection, partition,
+    source position, k) where k counts the emissions of that one source
+    event. The id does not depend on batch boundaries, so a re-run — in
+    either mode, however its batches are split — dedupes against the log
+    — the analog of the reference's expected-version emission tracking
     (Emitting/EmittedStream.cs:24-183) without coordination.
 
 Scale notes: one shuffle on the partition key (the same key the state is
@@ -28,9 +38,10 @@ every projection single-threaded per partition.
 
 from __future__ import annotations
 
+import hashlib
 import json
 from dataclasses import dataclass
-from typing import Any, Iterable
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,16 +68,22 @@ _OUT_SCHEMA = T.StructType(
         T.StructField("emit_seq", T.LongType()),
     ]
 )
+_OUT_COLS = [f.name for f in _OUT_SCHEMA.fields]
 
 
 class EmitContext:
     """Passed to handlers as ``ctx``: collects emit/linkTo output
-    (JintProjectionStateHandler.cs:239-326)."""
+    (JintProjectionStateHandler.cs:239-326).
+
+    The fold loop points the context at each source event before its
+    handler runs, and ``emit_seq`` restarts at 0 there: an emission's id
+    hashes (projection, partition, source position, k-th emission of that
+    event), whatever batch or micro-batch the event was folded in."""
 
     __slots__ = ("rows", "partition", "projection_name", "_pos", "_seq",
                  "_cause_id", "_cause_meta")
 
-    def __init__(self, projection_name: str, partition: str):
+    def __init__(self, projection_name: str, partition: str = ""):
         self.rows: list[tuple] = []
         self.partition = partition
         self.projection_name = projection_name
@@ -74,14 +91,6 @@ class EmitContext:
         self._seq = 0
         self._cause_id = None    # causing event's event_id
         self._cause_meta = None  # causing event's metadata JSON (raw)
-
-    def _id(self) -> str:
-        import hashlib
-
-        h = hashlib.sha1(
-            f"{self.projection_name}|{self.partition}|{self._pos}|{self._seq}".encode()
-        ).hexdigest()
-        return h[:32]
 
     def _meta(self, user_metadata: Any) -> str:
         """Final emitted-event metadata, the reference's composition
@@ -110,53 +119,34 @@ class EmitContext:
                 out["$correlationId"] = corr
         return json.dumps(out, sort_keys=True)
 
-    def emit(self, stream: str, event_type: str, body: Any, metadata: Any = None):
-        self.rows.append(
-            (
-                self.partition, "emit", None, stream, event_type,
-                json.dumps(body, sort_keys=True) if not isinstance(body, str) else body,
-                self._meta(metadata),
-                self._id(), self._pos, self._seq,
-            )
-        )
+    def _row(self, kind: str, stream: str, event_type: str, data, metadata):
+        event_id = hashlib.sha1(
+            f"{self.projection_name}|{self.partition}|{self._pos}|{self._seq}".encode()
+        ).hexdigest()[:32]
+        self.rows.append((self.partition, kind, None, stream, event_type, data,
+                          metadata, event_id, self._pos, self._seq))
         self._seq += 1
 
+    def emit(self, stream: str, event_type: str, body: Any, metadata: Any = None):
+        self._row("emit", stream, event_type,
+                  body if isinstance(body, str) else json.dumps(body, sort_keys=True),
+                  self._meta(metadata))
+
     def link_to(self, stream: str, event: dict, metadata: Any = None):
-        body = f"{event['event_number']}@{event['stream_id']}"
-        self.rows.append(
-            (
-                self.partition, "link", None, stream, "$>", body,
-                self._meta(metadata),
-                self._id(), self._pos, self._seq,
-            )
-        )
-        self._seq += 1
+        self._row("link", stream, "$>",
+                  f"{event['event_number']}@{event['stream_id']}",
+                  self._meta(metadata))
 
     def link_stream_to(self, stream: str, source_stream: str, metadata: Any = None):
         """P17 linkStreamTo: stream-reference link `$@`
         (JintProjectionStateHandler.cs:329)."""
-        self.rows.append(
-            (
-                self.partition, "link", None, stream, "$@", source_stream,
-                self._meta(metadata),
-                self._id(), self._pos, self._seq,
-            )
-        )
-        self._seq += 1
+        self._row("link", stream, "$@", source_stream, self._meta(metadata))
 
     def copy_to(self, stream: str, event: dict, metadata: Any = None):
         """P17 copyTo: re-emit the event's payload into another stream."""
-        self.rows.append(
-            (
-                self.partition, "emit", None, stream, event["event_type"],
-                event.get("data"),
-                json.dumps(metadata, sort_keys=True)
-                if metadata is not None
-                else event.get("metadata"),
-                self._id(), self._pos, self._seq,
-            )
-        )
-        self._seq += 1
+        self._row("emit", stream, event["event_type"], event.get("data"),
+                  json.dumps(metadata, sort_keys=True)
+                  if metadata is not None else event.get("metadata"))
 
 
 class Event(dict):
@@ -214,158 +204,162 @@ class Event(dict):
         raise KeyError(key)
 
 
-def _event_dict(row: dict) -> Event:
-    return Event(row)
+class _FoldLoop:
+    """The one fold loop: batch groups, the bi-state pass and continuous
+    micro-batch groups all run ``fold`` then ``output``.
 
-
-def _make_fold(proj: Projection, sort_key: str = "log_position"):
-    """Build the applyInPandas fold closure for one projection.
+    ``fold(pdf, states)`` replays ``pdf`` (envelope rows plus their
+    ``_partition``) in ``sort_key`` order into ``states`` (partition ->
+    state, updated in place; a partition not in it starts from
+    ``$init``) and returns the emitted rows. Per event: a
+    ``$streamDeleted`` row goes to ``$deleted`` or to nothing, any other
+    row to its typed handler, else to ``$any``; an undefined return keeps
+    the state. ``output`` builds the emissions, then each partition's
+    state row after the transformBy/filterBy chain
+    (TransformStateToResult, JintProjectionStateHandler.cs:730-752).
 
     ``sort_key``: per-stream folds replay by ``event_number`` — identical
     order to log_position within a stream (envelope invariant), but it
     doesn't force materializing the global position when the source lacks
     it.
     """
-    handlers = dict(proj.handlers)
-    arity = dict(proj.handler_arity)
-    chain = list(proj.state_chain)
-    name = proj.name
-    # r10 hot-loop trims (sf10 row, VERDICT r9 task #6) — the fold is the
-    # engine's one Python-per-event surface (reference parity: the JS
-    # handler contract), so constant work per row is the whole game:
-    #   * handlers prebound with their ctx-arity — drops a dict lookup
-    #     and a branch per row;
-    #   * ctx bookkeeping (int(pos) + two attribute writes per row) runs
-    #     only when SOME handler can observe ctx (arity >= 3) — pure
-    #     folds like the balance projection skip it entirely;
-    #   * the per-group sort is a monotonic CHECK in the common case:
-    #     run_batch already sortWithinPartitions-orders every group, so
-    #     the mergesort only runs if something upstream broke order.
-    bound = {k: (fn, arity.get(k, 3) >= 3) for k, fn in handlers.items()}
-    needs_ctx = any(t for _, t in bound.values())
 
-    def call(fn_takes, state, ev, ctx):
-        fn, takes_ctx = fn_takes
-        out = fn(state, ev, ctx) if takes_ctx else fn(state, ev)
-        return state if out is None else out  # undefined return keeps state
+    def __init__(self, proj: Projection, sort_key="log_position"):
+        self.name = proj.name
+        self.sort_key = sort_key
+        self.chain = list(proj.state_chain)
+        self.init = proj.handlers.get(INIT)
+        # P9 bi-state: the shared state rides in states[SHARED_PARTITION]
+        self.init_shared = proj.handlers.get(INIT_SHARED)
+        # r10 hot-loop trims (sf10 row, VERDICT r9 task #6) — the fold is
+        # the engine's one Python-per-event surface (reference parity: the
+        # JS handler contract), so constant work per row is the whole game:
+        #   * handlers prebound with their ctx-arity — drops a dict lookup
+        #     and a branch per row;
+        #   * ctx bookkeeping (int(pos) + attribute writes per row) runs
+        #     only when SOME handler can observe ctx (arity >= 3) — pure
+        #     folds like the balance projection skip it entirely;
+        #   * the sort is a monotonic CHECK in the common case: run_batch
+        #     already sortWithinPartitions-orders every group, so the
+        #     mergesort only runs if something upstream broke order.
+        arity = proj.handler_arity
+        self.bound = {k: (fn, arity.get(k, 3) >= 3)
+                      for k, fn in proj.handlers.items()}
+        self.needs_ctx = any(t for _, t in self.bound.values())
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = sort_key if isinstance(sort_key, list) else [sort_key]
-        if len(key) > 1 or not pdf[key[0]].is_monotonic_increasing:
+    def _bistate(self, states: dict) -> dict:
+        """Handlers see ``{"p": partition_state, "s": shared_state}`` and
+        return the same shape (None keeps both)."""
+        def wrap(fn, takes_ctx):
+            def h(state, ev, ctx):
+                pair = {"p": state, "s": states[SHARED_PARTITION]}
+                out = fn(pair, ev, ctx) if takes_ctx else fn(pair, ev)
+                out = pair if out is None else out
+                states[SHARED_PARTITION] = out.get("s", pair["s"])
+                return out.get("p", state)
+            return h, True
+
+        return {k: wrap(*b) for k, b in self.bound.items()}
+
+    def fold(self, pdf: pd.DataFrame, states: dict) -> list[tuple]:
+        sort_key = self.sort_key
+        if isinstance(sort_key, list) or not pdf[sort_key].is_monotonic_increasing:
             pdf = pdf.sort_values(sort_key, kind="mergesort")
-        partition = str(pdf["_partition"].iloc[0]) if len(pdf) else ""
-        ctx = EmitContext(name, partition)
-        init = handlers.get(INIT)
-        state = init() if init is not None else {}
-        any_h = bound.get(ANY)
-        del_h = bound.get(DELETED)
+        init, needs_ctx = self.init, self.needs_ctx
+        bound = self.bound
+        if self.init_shared is not None:
+            if SHARED_PARTITION not in states:
+                states[SHARED_PARTITION] = self.init_shared()
+            bound = self._bistate(states)
+        get, any_h, del_h = bound.get, bound.get(ANY), bound.get(DELETED)
+        ctx = EmitContext(self.name)
         cols = [c for c in pdf.columns if c != "_partition"]
-        for row in pdf[cols].itertuples(index=False):
+        pos_col = next((c for c in ("log_position", "event_number") if c in cols),
+                       None)
+        cur, key, state = None, None, None
+        for part, row in zip(pdf["_partition"].values,
+                             pdf[cols].itertuples(index=False, name=None)):
+            if key is None or part != cur:
+                if key is not None:
+                    states[key] = state
+                cur, key = part, str(part)
+                state = states[key] if key in states else (
+                    init() if init is not None else {})
+                ctx.partition = key
             ev = Event(zip(cols, row))
-            ev["partition"] = partition  # custom.md §Handlers property
+            ev["partition"] = key  # custom.md §Handlers property
             if needs_ctx:
-                ctx._pos = int(ev.get("log_position",
-                                      ev.get("event_number", -1)))
+                ctx._pos = int(ev[pos_col]) if pos_col else -1
+                ctx._seq = 0
                 ctx._cause_id = ev.get("event_id")
                 ctx._cause_meta = ev.get("metadata")
             et = ev["event_type"]
-            if et == STREAM_DELETED_EVENT_TYPE:
-                if del_h is not None:
-                    state = call(del_h, state, ev, ctx)
-                continue
-            h = bound.get(et)
+            h = del_h if et == STREAM_DELETED_EVENT_TYPE else get(et, any_h)
             if h is not None:
-                state = call(h, state, ev, ctx)
-            elif any_h is not None:
-                state = call(any_h, state, ev, ctx)
-        # transformBy/filterBy chain on the final state (TransformStateToResult,
-        # JintProjectionStateHandler.cs:730-752)
-        keep = True
-        for op, fn in chain:
-            if op == "transform":
-                state = fn(state)
-            elif op == "filter" and not fn(state):
-                keep = False
-                break
-        rows = list(ctx.rows)
-        if keep:
-            rows.append(
-                (partition, "state", json.dumps(state, sort_keys=True, default=str),
-                 None, None, None, None, None, None, None)
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in _OUT_SCHEMA.fields])
+                fn, takes_ctx = h
+                out = fn(state, ev, ctx) if takes_ctx else fn(state, ev)
+                if out is not None:  # undefined return keeps state
+                    state = out
+        if key is not None:
+            states[key] = state
+        return ctx.rows
 
-    return fold
-
-
-def _make_bistate_fold(proj: Projection, sort_key="log_position"):
-    """P9 bi-state fold: one global pass in log order, carrying a shared
-    state plus a state per partition. Handlers see
-    ``{"p": partition_state, "s": shared_state}`` and return the same
-    shape (None keeps both). Inherently sequential — the reference also
-    runs bi-state projections on a single thread; parallelizing shared
-    state would change semantics."""
-    handlers = dict(proj.handlers)
-    arity = dict(proj.handler_arity)
-    chain = list(proj.state_chain)
-    name = proj.name
-
-    def call(fn, key, state, ev, ctx):
-        n = arity.get(key, 3)
-        out = fn(state, ev) if n == 2 else fn(state, ev, ctx)
-        return state if out is None else out
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_key, kind="mergesort")
-        init = handlers.get(INIT)
-        init_shared = handlers.get(INIT_SHARED)
-        shared = init_shared() if init_shared is not None else {}
-        parts: dict[str, Any] = {}
-        ctx = EmitContext(name, "")
-        any_h, del_h = handlers.get(ANY), handlers.get(DELETED)
-        cols = [c for c in pdf.columns if c != "_partition"]
-        for part, row in zip(pdf["_partition"].values, pdf[cols].itertuples(index=False)):
-            part = str(part)
-            if part not in parts:
-                parts[part] = init() if init is not None else {}
-            ev = _event_dict(dict(zip(cols, row)))
-            ev["partition"] = part  # custom.md §Handlers property
-            ctx.partition = part
-            ctx._pos = int(ev.get("log_position", -1))
-            ctx._cause_id = ev.get("event_id")
-            ctx._cause_meta = ev.get("metadata")
-            et = ev["event_type"]
-            if et == STREAM_DELETED_EVENT_TYPE:
-                h = del_h
-            else:
-                h = handlers.get(et) or any_h
-            if h is None or (et == STREAM_DELETED_EVENT_TYPE and del_h is None):
+    def output(self, states: dict, emitted: list[tuple],
+               position: int | None = None) -> pd.DataFrame:
+        """``position`` is the state rows' source_log_position (the
+        continuous high-water mark); bi-state adds the `$shared` row,
+        outside the chain."""
+        rows = list(emitted)
+        shared = self.init_shared is not None
+        for part, state in states.items():
+            if shared and part == SHARED_PARTITION:
                 continue
-            pair = call(h, et, {"p": parts[part], "s": shared}, ev, ctx)
-            parts[part] = pair.get("p", parts[part])
-            shared = pair.get("s", shared)
-        rows = list(ctx.rows)
-        for part, state in parts.items():
             keep = True
-            for op, fn in chain:
+            for op, fn in self.chain:
                 if op == "transform":
                     state = fn(state)
                 elif op == "filter" and not fn(state):
                     keep = False
                     break
             if keep:
-                rows.append(
-                    (part, "state", json.dumps(state, sort_keys=True, default=str),
-                     None, None, None, None, None, None, None)
-                )
-        rows.append(
-            (SHARED_PARTITION, "state",
-             json.dumps(shared, sort_keys=True, default=str),
-             None, None, None, None, None, None, None)
-        )
-        return pd.DataFrame(rows, columns=[f.name for f in _OUT_SCHEMA.fields])
+                rows.append((part, "state",
+                             json.dumps(state, sort_keys=True, default=str),
+                             None, None, None, None, None, position, None))
+        if shared:
+            rows.append((SHARED_PARTITION, "state",
+                         json.dumps(states[SHARED_PARTITION], sort_keys=True,
+                                    default=str),
+                         None, None, None, None, None, None, None))
+        return pd.DataFrame(rows, columns=_OUT_COLS)
+
+
+def _make_fold(proj: Projection, sort_key="log_position"):
+    """The batch driver: fold one pandas frame from ``$init`` (one
+    partition's group, or every partition for a bi-state pass)."""
+    loop = _FoldLoop(proj, sort_key)
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        states: dict = {}
+        return loop.output(states, loop.fold(pdf, states))
 
     return fold
+
+
+def _with_partition(proj: Projection, src: DataFrame) -> DataFrame:
+    """``src`` plus the ``_partition`` key every runtime groups by: the
+    stream for foreachStream, the partitionBy Column or Python key (row
+    wise), else the one partition ``""``."""
+    if proj.by_stream:
+        key = F.col("stream_id")
+    elif proj.partition_col is not None:
+        key = proj.partition_col.cast("string")
+    elif proj.partition_fn is not None:
+        fn, cols = proj.partition_fn, src.columns
+        key = F.udf(lambda *vals: str(fn(Event(zip(cols, vals)))),
+                    T.StringType())(*[F.col(c) for c in cols])
+    else:
+        key = F.lit("")
+    return src.withColumn("_partition", key)
 
 
 @dataclass
@@ -502,34 +496,21 @@ def run_batch(proj: Projection, events: DataFrame) -> ProjectionResult:
         keep = needed + [c for c in proj.columns_ if c not in needed and c in src.columns]
         src = src.select(*keep)
 
-    if proj.by_stream:
-        src = src.withColumn("_partition", F.col("stream_id"))
-    elif proj.partition_col is not None:
-        src = src.withColumn("_partition", proj.partition_col.cast("string"))
-    elif proj.partition_fn is not None:
-        fn = proj.partition_fn
-        cols = src.columns
-
-        @F.udf(T.StringType())
-        def _pkey(*vals):
-            ev = _event_dict(dict(zip(cols, vals)))
-            return str(fn(ev))
-
-        src = src.withColumn("_partition", _pkey(*[F.col(c) for c in cols]))
-    else:
-        src = src.withColumn("_partition", F.lit(""))
-
+    src = _with_partition(proj, src)
     sort_cols = sort_key if isinstance(sort_key, list) else [sort_key]
 
+    fold = _make_fold(proj, sort_key)
     if proj.bi_state:
-        fold_all = _make_bistate_fold(proj, sort_key)
-
+        # P9 bi-state: one global pass in log order, carrying the shared
+        # state beside each partition's. Inherently sequential — the
+        # reference also runs bi-state projections on a single thread;
+        # parallelizing shared state would change semantics.
         def run_all(batches):
             import pandas as _pd
 
             pdfs = list(batches)
             if pdfs:
-                yield fold_all(_pd.concat(pdfs, ignore_index=True))
+                yield fold(_pd.concat(pdfs, ignore_index=True))
 
         one = src.repartition(1).sortWithinPartitions(*sort_cols)
         return ProjectionResult(raw=one.mapInPandas(run_all, _OUT_SCHEMA))
@@ -541,8 +522,6 @@ def run_batch(proj: Projection, events: DataFrame) -> ProjectionResult:
     # group — ruinous for many small streams); here a batch carries
     # thousands of groups. Groups spanning batch boundaries are stitched
     # via a carried tail.
-    fold = _make_fold(proj, sort_key)
-
     def fold_partition(batches):
         import pandas as _pd
 

@@ -1,12 +1,19 @@
-"""Continuous projections (P20 Continuous mode + U6/U8) — the same fold
-DSL executed over a live subscription with ``applyInPandasWithState``.
+"""Continuous projections (P20 Continuous mode + U6/U8) — the batch
+runtime's fold loop (``projections/runtime._FoldLoop``) executed over a
+live subscription with ``applyInPandasWithState``.
 
-Semantics kept from the batch runtime: per-partition state, events applied
-in log order within each micro-batch, ``$init`` seeding, undefined return
-keeps state. State is JSON text in Spark's state store; checkpointing (U8)
-is the streaming checkpoint — exactly-once state updates come for free,
-emission dedupe relies on the same deterministic event ids as the batch
-runtime.
+Each micro-batch group runs the same per-event step as a batch fold: the
+same handler dispatch, ``$init`` seeding, undefined return keeping state,
+``e["partition"]``, and the same emission ids, which hash the source
+event and not the micro-batch — so a onetime run after a continuous one,
+or a re-run split into other micro-batches, dedupes against the log.
+State is JSON text in Spark's state store; checkpointing (U8) is the
+streaming checkpoint — exactly-once state updates come for free.
+
+Rejected before any query starts (``ValueError``): bi-state
+(``$initShared``) specs, whose shared state spans every partition while
+the state store keeps one state per group, and ``$includeLinks`` specs,
+whose links would need the log to resolve against.
 
 Ordering caveat (documented contract): Structured Streaming delivers
 files in commit order, and events are sorted by log_position inside each
@@ -22,18 +29,14 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..plans.reader_strategy import select_source
-from ..projections.dsl import ANY, DELETED, INIT, Projection, validate_reorder
-from ..projections.runtime import EmitContext, _OUT_SCHEMA, _event_dict
-from ..schema import STREAM_DELETED_EVENT_TYPE
+from ..projections.dsl import INIT_SHARED, Projection, validate_reorder
+from ..projections.runtime import _OUT_SCHEMA, _FoldLoop, _with_partition
 
 _STATE_SCHEMA = T.StructType([T.StructField("js", T.StringType())])
-
-_OUT_COLS = [f.name for f in _OUT_SCHEMA.fields]
 
 
 def _make_stateful(proj: Projection):
@@ -43,77 +46,30 @@ def _make_stateful(proj: Projection):
     # processingLag <= the trigger interval (the micro-batch boundary IS
     # the buffer drain). Validation happens in run_continuous.
     reorder = bool(proj.options_.get("reorderEvents"))
-    sort_cols = ["created", "log_position"] if reorder else "log_position"
-    handlers = dict(proj.handlers)
-    arity = dict(proj.handler_arity)
-    chain = list(proj.state_chain)
-    name = proj.name
-
-    def call(fn, key, state, ev, ctx):
-        n = arity.get(key, 3)
-        out = fn(state, ev) if n == 2 else fn(state, ev, ctx)
-        return state if out is None else out
+    loop = _FoldLoop(proj, ["created", "log_position"] if reorder
+                     else "log_position")
 
     def fn(key, pdfs: Iterator[pd.DataFrame], gstate: GroupState):
-        partition = key[0]
-        if gstate.exists:
-            state = json.loads(gstate.get[0])
-        else:
-            init = handlers.get(INIT)
-            state = init() if init is not None else {}
-        ctx = EmitContext(name, partition)
-        any_h, del_h = handlers.get(ANY), handlers.get(DELETED)
-        last = -1
+        partition = str(key[0])
+        states = ({partition: json.loads(gstate.get[0])} if gstate.exists
+                  else {})
         # Materialize the group's chunks and sort ONCE: Spark feeds a
         # group as multiple Arrow chunks in arbitrary row order, so
         # per-chunk sorting would replay out of log order whenever a
         # group spans chunks. Memory bound = this partition's share of
         # one micro-batch (the same bound applyInPandasWithState itself
         # imposes on the handler).
-        frames = [p for p in pdfs]
-        if frames:
-            pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            cols = [c for c in pdf.columns if c != "_partition"]
-            for row in pdf[cols].itertuples(index=False):
-                ev = _event_dict(dict(zip(cols, row)))
-                pos = int(ev["log_position"])
-                ctx._pos = pos
-                ctx._cause_id = ev.get("event_id")
-                ctx._cause_meta = ev.get("metadata")
-                # with reorderEvents the final row by timestamp need not
-                # carry the max position — report the true high-water mark
-                last = pos if pos > last else last
-                et = ev["event_type"]
-                if et == STREAM_DELETED_EVENT_TYPE:
-                    if del_h is not None:
-                        state = call(del_h, DELETED, state, ev, ctx)
-                    continue
-                h = handlers.get(et)
-                if h is not None:
-                    state = call(h, et, state, ev, ctx)
-                elif any_h is not None:
-                    state = call(any_h, ANY, state, ev, ctx)
-        gstate.update((json.dumps(state, sort_keys=True, default=str),))
-        # Output rows share the batch runtime's kind-tagged schema:
-        # emissions first (emit/linkTo from this micro-batch, deterministic
-        # ids), then the partition's state UPDATE — with the transformBy/
-        # filterBy chain applied to the OUTPUT only (raw fold state stays
-        # in the store, as in TransformStateToResult).
-        rows = list(ctx.rows)
-        out, keep = state, True
-        for op, fn_ in chain:
-            if op == "transform":
-                out = fn_(out)
-            elif op == "filter" and not fn_(out):
-                keep = False
-                break
-        if keep:
-            rows.append(
-                (partition, "state", json.dumps(out, sort_keys=True, default=str),
-                 None, None, None, None, None, last, None)
-            )
-        yield pd.DataFrame(rows, columns=_OUT_COLS)
+        frames = list(pdfs)
+        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+        emitted = loop.fold(pdf, states)
+        # the raw fold state stays in the store; the transformBy/filterBy
+        # chain shapes the OUTPUT only (TransformStateToResult)
+        gstate.update((json.dumps(states[partition], sort_keys=True,
+                                  default=str),))
+        # with reorderEvents the final row by timestamp need not carry
+        # the max position — report the true high-water mark
+        yield loop.output(states, emitted,
+                          position=int(pdf["log_position"].max()))
 
     return fn
 
@@ -127,25 +83,22 @@ def run_continuous(proj: Projection, subscription: DataFrame) -> DataFrame:
     Start it with ``.writeStream.outputMode("update")`` — e.g. foreachBatch
     that MERGEs state rows into a state table and appends emission rows to
     the log (engine.run_projection wires exactly that).
+
+    Raises ``ValueError`` for a bi-state (``$initShared``) or an
+    ``$includeLinks`` spec, which only the batch runtime runs.
     """
     validate_reorder(proj)  # shared ReaderStrategy.cs:64-74 rules
-    src = select_source(subscription, proj)
-    if proj.by_stream:
-        src = src.withColumn("_partition", F.col("stream_id"))
-    elif proj.partition_col is not None:
-        src = src.withColumn("_partition", proj.partition_col.cast("string"))
-    elif proj.partition_fn is not None:
-        pfn = proj.partition_fn
-        cols = src.columns
-
-        @F.udf(T.StringType())
-        def _pkey(*vals):
-            return str(pfn(_event_dict(dict(zip(cols, vals)))))
-
-        src = src.withColumn("_partition", _pkey(*[F.col(c) for c in cols]))
-    else:
-        src = src.withColumn("_partition", F.lit(""))
-
+    if proj.bi_state:
+        raise ValueError(
+            f"projection '{proj.name}': bi-state ({INIT_SHARED}) projections "
+            "run in batch only"
+        )
+    if proj.include_links:
+        raise ValueError(
+            f"projection '{proj.name}': $includeLinks projections run in "
+            "batch only"
+        )
+    src = _with_partition(proj, select_source(subscription, proj))
     return src.groupBy("_partition").applyInPandasWithState(
         _make_stateful(proj),
         outputStructType=_OUT_SCHEMA,

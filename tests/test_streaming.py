@@ -422,6 +422,79 @@ def test_continuous_projection_emits_to_log(spark, log, tmp_path):
         q.stop()
 
 
+def test_batch_and_continuous_folds_agree(spark, tmp_path):
+    """One fold loop: a spec folded by run_batch and by run_continuous fed
+    one append per micro-batch ends in the same states and emits the same
+    rows under the same ids — an emission's id hashes its source event
+    (projection, partition, position, k), never its micro-batch, so the
+    writer's (stream_id, event_id) anti-join dedupes across modes.
+    Handlers read e["partition"] in both."""
+    from eventstore_spark.projections.runtime import run_batch
+
+    path = str(tmp_path / "twin")
+    w = EventLogWriter(spark, path)
+
+    def op(s, e, ctx):
+        v = e["body"]["v"]
+        ctx.emit("twinout-" + e["partition"], "Seen",
+                 {"p": e["partition"], "v": v})
+        if v % 2:
+            ctx.link_to("twinodd-all", e)
+        return {**s, "n": s["n"] + 1, "sum": s["sum"] + v}
+
+    spec = (
+        Projection.from_category("acct", name="twin")
+        .foreach_stream()
+        .when({"$init": lambda: {"n": 0, "sum": 0, "deleted": False},
+               "Op": op,
+               "$deleted": lambda s, e: {**s, "deleted": True}})
+        .transform_by(lambda s: {**s, "mean": s["sum"] / s["n"]})
+        .filter_by(lambda s: s["n"] > 1)
+    )
+    appends = [("acct-1", 1), ("acct-2", 4), ("acct-1", 2), ("acct-3", 6),
+               ("acct-2", 5), ("acct-1", 3)]
+
+    def append(i):
+        sid, v = appends[i]
+        w.append(sid, [ProposedEvent("Op", json.dumps({"v": v}))])
+
+    append(0)
+    q = (run_continuous(spec, subscribe_all(spark, path))
+         .writeStream.outputMode("update").format("memory")
+         .queryName("twinrows")
+         .option("checkpointLocation", str(tmp_path / "twinck")).start())
+    try:
+        q.processAllAvailable()
+        for i in range(1, len(appends)):
+            append(i)
+            q.processAllAvailable()
+        w.soft_delete("acct-2")
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM twinrows").collect()
+    finally:
+        q.stop()
+    live_states = {}
+    for r in sorted((r for r in rows if r.kind == "state"),
+                    key=lambda r: r.source_log_position):
+        live_states[r.partition] = json.loads(r.state)
+    live_emitted = {(r.emit_stream, r.emit_event_id, r.emit_data)
+                    for r in rows if r.kind != "state"}
+
+    res = run_batch(spec, w.load())
+    batch_states = {r.partition: json.loads(r.state)
+                    for r in res.states.collect()}
+    batch_emitted = {(r.stream_id, r.event_id, r.data)
+                     for r in res.emitted.collect()}
+
+    assert batch_states == {
+        "acct-1": {"n": 3, "sum": 6, "deleted": False, "mean": 2.0},
+        "acct-2": {"n": 2, "sum": 9, "deleted": True, "mean": 4.5},
+    }
+    assert live_states == batch_states
+    assert len(batch_emitted) == 9  # six Seen emits, three odd links
+    assert live_emitted == batch_emitted
+
+
 def test_continuous_state_table_scale_and_restart(spark, tmp_path):
     """The continuous state sink is a parquet state table, not a driver
     dict: a foreachStream projection over 10k partitions lands its state
@@ -1523,6 +1596,31 @@ def test_continuous_reorder_within_microbatch(spark, tmp_path):
            .options(reorderEvents=True, processingLag=100))
     with _pytest.raises(ValueError, match="fromAll"):
         run_continuous(bad, subscribe_all(spark, logdir))
+
+
+def test_continuous_rejects_bi_state_spec(spark, log):
+    """A bi-state ($initShared) spec is refused before any query starts:
+    the state store keeps one state per group, so the shared state has
+    nowhere to live (handlers would otherwise get a flat state)."""
+    spec = (Projection.from_category("account", name="bistate-live")
+            .foreach_stream()
+            .when({"$init": lambda: {"n": 0},
+                   "$initShared": lambda: {"total": 0},
+                   "$any": lambda s, e: {"p": {"n": s["p"]["n"] + 1},
+                                         "s": s["s"]}}))
+    with pytest.raises(ValueError, match="initShared"):
+        run_continuous(spec, subscribe_all(spark, log.path))
+
+
+def test_continuous_rejects_include_links_spec(spark, log):
+    """An $includeLinks spec is refused before any query starts, rather
+    than folding raw `$>` link rows as if they were events."""
+    spec = (Projection.from_category("account", name="links-live")
+            .when({"$init": lambda: {"n": 0},
+                   "$any": lambda s, e: {"n": s["n"] + 1}})
+            .options(**{"$includeLinks": True}))
+    with pytest.raises(ValueError, match="includeLinks"):
+        run_continuous(spec, subscribe_all(spark, log.path))
 
 
 def test_markers_caughtup_with_from_position_skipping_whole_files(spark, log, tmp_path):
