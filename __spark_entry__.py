@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 from eventstore_spark.schema import (
     ENVELOPE_SQL_CTE,
     MAX_LONG,
+    TABLE_SCHEMAS,
     load_envelope,
     scoped_cache,
 )
@@ -59,7 +60,8 @@ def _cents_py(v: float) -> int:
 
 
 def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(
+        f"{sf_dir}/{name}.parquet")
 
 
 def _with_ev(body_sql: str) -> str:

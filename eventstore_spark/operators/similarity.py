@@ -787,137 +787,6 @@ FROM pred p JOIN {table} t ON t.vec_id = p.query_id
 """
 
 
-def build_ivf_index(embeddings: DataFrame, path: str, n_centroids: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    trained: bool = False, iters: int = 2) -> dict:
-    """Persist the IVF index: centroids (`<path>/centroids`) and the
-    corpus PARTITIONED BY CELL (`<path>/cells`).
-
-    The build/query split `ivf_topk` folds into one call: assignment (the
-    expensive full-corpus pass) runs once here; `ivf_topk_indexed` then
-    reads ONLY the probed cells — with cell as the storage partition
-    column, probe queries prune whole directories (PartitionFilters in
-    the scan), so query cost is nprobe/n_centroids of the corpus by
-    construction, on disk, not just in the plan.
-
-    ``trained=True`` trains the integer k-means quantizer
-    (``train_ivf_centroids``) and persists the integer centroids; the
-    index carries its quantizer, so ``ivf_topk_indexed`` reads whichever
-    kind was built.
-    """
-    base = spread(embeddings).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    )
-    spark = embeddings.sparkSession
-    if trained:
-        cents_i = train_ivf_centroids(embeddings, n_centroids, iters,
-                                      id_col, vec_col)
-        spark.createDataFrame(
-            [(c, cv) for c, cv in enumerate(cents_i)],
-            "cent_id long, qvec array<long>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-        assigned = base.withColumn(
-            "cell",
-            F.expr(
-                f"-array_max({_int_scored_sql(_quantize_sql('vec'), cents_i)}).nid"
-            ),
-        )
-        n_cents = len(cents_i)
-    else:
-        cents = sorted(
-            base.where(F.col("vec_id") < n_centroids).collect(),
-            key=lambda r: r["vec_id"],
-        )
-        spark.createDataFrame(
-            [(int(r["vec_id"]), [float(x) for x in r["vec"]]) for r in cents],
-            "cent_id long, vec array<float>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-        terms = ", ".join(
-            "named_struct('sim', {}, 'nid', {})".format(
-                spark_sql_cosine("vec", spark_sql_lit_array(r["vec"])), -int(r["vec_id"])
-            )
-            for r in cents
-        )
-        assigned = base.withColumn("cell", F.expr(f"-array_max(array({terms})).nid"))
-        n_cents = len(cents)
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/cells")
-    n = base.count()
-    return {"vectors_indexed": n, "n_centroids": n_cents, "path": path,
-            "trained": trained}
-
-
-def ivf_topk_indexed(spark, index_path: str, query_ids: list[int], k: int = 10,
-                     nprobe: int = 4) -> DataFrame:
-    """IVF ANN over a persisted index: identical results to `ivf_topk`
-    (same deterministic quantizer and rerank), but the corpus pass is
-    replaced by a pruned read of the probed cells.
-
-    Probe-cell selection uses the SAME argmax/sort expressions as the
-    batch path, then the (tiny: |Q| x nprobe) probe set is collected and
-    applied as an `isin` filter on the partition column — static
-    partition pruning: the scan's PartitionFilters show `cell IN (...)`
-    and unprobed directories are never opened. The centroid schema tells
-    this reader which quantizer the index was built with (integer
-    ``qvec`` = trained k-means, float ``vec`` = lowest-id stand-in).
-    """
-    cent_df = spark.read.parquet(f"{index_path}/centroids")
-    cents = sorted(cent_df.collect(), key=lambda r: r["cent_id"])
-
-    if "qvec" in cent_df.columns:  # trained integer quantizer
-        cents_i = [[int(x) for x in r["qvec"]] for r in cents]
-
-        def scored_sql(vec_sql: str) -> str:
-            return _int_scored_sql(_quantize_sql(vec_sql), cents_i)
-    else:
-
-        def scored_sql(vec_sql: str) -> str:
-            terms = ", ".join(
-                "named_struct('sim', {}, 'nid', {})".format(
-                    spark_sql_cosine(vec_sql, spark_sql_lit_array(r["vec"])),
-                    -int(r["cent_id"]),
-                )
-                for r in cents
-            )
-            return f"array({terms})"
-
-    cells = spark.read.parquet(f"{index_path}/cells")
-    queries = cells.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    probe_sql = (
-        f"transform(slice(reverse(array_sort({scored_sql('qvec')})), 1, {int(nprobe)}),"
-        " s -> -s.nid)"
-    )
-    # ONE query-lookup pass: collect the tiny (|Q| x nprobe, bounded)
-    # probe rows, then rebuild them as a local DataFrame — the cells scan
-    # for query vectors runs once, and the probed-cell set falls out of
-    # the same collect instead of a second job
-    probe_rows = (
-        queries.withColumn("cells", F.expr(probe_sql))
-        .select("query_id", "qvec", F.explode("cells").alias("cell"))
-        .collect()
-    )
-    probed_cells = sorted({int(r["cell"]) for r in probe_rows})
-    probes = spark.createDataFrame(
-        [(int(r["query_id"]), [float(x) for x in r["qvec"]], int(r["cell"]))
-         for r in probe_rows],
-        "query_id long, qvec array<float>, cell int",
-    )
-    cand = (
-        cells.where(F.col("cell").isin(probed_cells))
-        .join(F.broadcast(probes), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("sim", cosine(F.col("qvec"), F.col("vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "sim")
-    )
-
-
 def embedding_outliers(embeddings: DataFrame,
                        ratio_centi: int = 400) -> DataFrame:
     """Embedding-hygiene screen for ANN/dedup pipelines: flag vectors
@@ -1706,70 +1575,6 @@ def _ivfpq_score(codes: DataFrame, qrows, cents: list[list[int]],
     )
 
 
-def build_ivfpq_index(embeddings: DataFrame, path: str, n_centroids: int = 8,
-                      m: int = 8, n_codes: int = 8, iters: int = 2,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> dict:
-    """Persist the IVFADC index: integer centroids
-    (`<path>/centroids`), residual codebooks (`<path>/codebooks`), and
-    the code table PARTITIONED BY CELL (`<path>/codes`) — 1 long + m
-    small ints per vector, the compact artifact a billion-vector corpus
-    keeps hot while the raw embeddings go cold.
-
-    The build/query split mirrors ``build_ivf_index``: training and the
-    full-corpus encode pass run once here; ``ivfpq_topk_indexed`` then
-    opens ONLY the probed cells' directories (static partition pruning on
-    the cell filter) and reads codes, never vectors.
-    """
-    spark = embeddings.sparkSession
-    cents, books, _, codes = _ivfpq_model(
-        embeddings, n_centroids, m, n_codes, iters, id_col, vec_col)
-    spark.createDataFrame(
-        [(c, cv) for c, cv in enumerate(cents)],
-        "cent_id long, qvec array<long>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(s, j, cv) for s, book in enumerate(books)
-         for j, cv in enumerate(book)],
-        "sub long, code long, cvec array<long>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    codes.write.partitionBy("cell").mode("overwrite").parquet(f"{path}/codes")
-    n = spark.read.parquet(f"{path}/codes").count()
-    return {"vectors_indexed": n, "n_centroids": len(cents), "m": m,
-            "n_codes": len(books[0]), "path": path}
-
-
-def ivfpq_topk_indexed(spark, index_path: str, embeddings: DataFrame,
-                       query_ids: list[int], k: int = 10, nprobe: int = 3,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> DataFrame:
-    """IVFADC over a persisted index: identical results to
-    ``ivfpq_topk`` (same centroids/codebooks/codes — they are read, not
-    retrained), but the corpus pass is replaced by a pruned read of the
-    probed cells' code partitions. ``embeddings`` supplies only the
-    QUERY vectors (an isin point-lookup) — query time never touches the
-    corpus vectors, only the m-byte codes of nprobe cells.
-    """
-    cents = [
-        [int(x) for x in r["qvec"]]
-        for r in sorted(spark.read.parquet(f"{index_path}/centroids")
-                        .collect(), key=lambda r: r["cent_id"])
-    ]
-    brows = spark.read.parquet(f"{index_path}/codebooks").collect()
-    m = 1 + max(int(r["sub"]) for r in brows)
-    n_codes = 1 + max(int(r["code"]) for r in brows)
-    books = [[None] * n_codes for _ in range(m)]
-    for r in brows:
-        books[int(r["sub"])][int(r["code"])] = [int(x) for x in r["cvec"]]
-    qbase = spread(embeddings).select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(_quantize_sql(vec_col)).alias("qvec"),
-    )
-    qrows = _ivfpq_query_rows(qbase, cents, query_ids, nprobe)
-    codes = spark.read.parquet(f"{index_path}/codes")
-    return _ivfpq_score(codes, qrows, cents, books, m, k)
-
-
 def sql_ivfpq_topk(query_ids: list[int], k: int = 10, n_centroids: int = 8,
                    nprobe: int = 3, m: int = 8, n_codes: int = 8,
                    iters: int = 2, dim: int = 64,
@@ -2081,7 +1886,7 @@ def hybrid_rrf(docs: DataFrame, embeddings: DataFrame, query_text: str,
     reductions — BM25's corpus pass is scan-shaped (term isin before the
     tf aggregate, TakeOrdered) and the dense side is whichever ANN
     strategy produced it (brute force here as the exact baseline; swap
-    ``ivfpq_topk_indexed`` for the production path — the fusion is
+    ``ivfpq_topk`` for the production path — the fusion is
     rank-only so any (vec_id, rank) source composes). The fusion itself
     touches 2·n_each rows: a union, one tiny groupBy, one TakeOrdered.
     Nothing corpus-sized flows through the fuse.

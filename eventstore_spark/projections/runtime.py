@@ -348,18 +348,24 @@ def _make_fold(proj: Projection, sort_key="log_position"):
 def _with_partition(proj: Projection, src: DataFrame) -> DataFrame:
     """``src`` plus the ``_partition`` key every runtime groups by: the
     stream for foreachStream, the partitionBy Column or Python key (row
-    wise), else the one partition ``""``."""
+    wise), else the one partition ``""``. An event whose partitionBy key
+    is null belongs to no partition, so every runtime skips it."""
     if proj.by_stream:
-        key = F.col("stream_id")
-    elif proj.partition_col is not None:
+        return src.withColumn("_partition", F.col("stream_id"))
+    if proj.partition_col is not None:
         key = proj.partition_col.cast("string")
     elif proj.partition_fn is not None:
         fn, cols = proj.partition_fn, src.columns
-        key = F.udf(lambda *vals: str(fn(Event(zip(cols, vals)))),
-                    T.StringType())(*[F.col(c) for c in cols])
+
+        def key_of(*vals):
+            k = fn(Event(zip(cols, vals)))
+            return None if k is None else str(k)
+
+        key = F.udf(key_of, T.StringType())(*[F.col(c) for c in cols])
     else:
-        key = F.lit("")
-    return src.withColumn("_partition", key)
+        return src.withColumn("_partition", F.lit(""))
+    return src.withColumn("_partition", key).where(
+        F.col("_partition").isNotNull())
 
 
 @dataclass

@@ -21,6 +21,7 @@ import os
 import shutil
 import threading
 import uuid
+import warnings
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
@@ -99,6 +100,50 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("is_json", T.BooleanType(), True),
     ]
 )
+
+# The cached envelope (load_envelope): the log columns plus the driver
+# table's typed payload and user.
+ENVELOPE_SCHEMA = T.StructType(EVENTS_SCHEMA.fields + [
+    T.StructField("value", T.DoubleType()),
+    T.StructField("user_id", T.LongType()),
+])
+
+# The driver tables (FIXTURES.md, TESTDATA.md): what Spark infers from
+# their parquet footers, declared so that a read runs no inference job.
+_DDL_TYPES = {
+    "bigint": T.LongType(), "int": T.IntegerType(), "double": T.DoubleType(),
+    "string": T.StringType(), "timestamp_ntz": T.TimestampNTZType(),
+    "array<float>": T.ArrayType(T.FloatType()),
+}
+
+
+def _table_schema(ddl: str) -> T.StructType:
+    return T.StructType([T.StructField(name, _DDL_TYPES[typ])
+                         for name, typ in (f.split() for f in ddl.split(","))])
+
+
+TABLE_SCHEMAS = {name: _table_schema(ddl) for name, ddl in {
+    "customer": "c_custkey bigint, c_name string, c_nationkey int,"
+                " c_acctbal double, c_mktsegment string",
+    "documents": "doc_id bigint, text string, lang string, source string,"
+                 " n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint,"
+              " event_type string, value double, props string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
+                " l_linenumber int, l_quantity double, l_extendedprice double,"
+                " l_discount double, l_tax double, l_returnflag string,"
+                " l_linestatus string, l_shipdate timestamp_ntz",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
+              " o_totalprice double, o_orderdate timestamp_ntz,"
+              " o_orderpriority string",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string,"
+            " p_size int, p_retailprice double",
+    "region": "r_regionkey int, r_name string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int,"
+                " s_acctbal double",
+}.items()}
 
 STREAM_METADATA_SCHEMA = T.StructType(
     [
@@ -312,7 +357,9 @@ def load_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global row_number windows in ``envelope_from_app_events`` run once
     per (events.parquet mtime/size), the result lands as a range-partitioned
     parquet table (so per-stream reads still prune + parallelize), and
-    every subsequent query is a plain columnar scan of assigned positions.
+    every subsequent query is a plain columnar scan of assigned positions,
+    read with ``ENVELOPE_SCHEMA`` so that building it runs no Spark job.
+    A cache that cannot be used warns and falls back to ``build()``.
     """
     # The driver's events.parquet stores TIMESTAMP(NANOS), which Spark can
     # only read as a long. get_spark() sets this at build time, but the
@@ -330,6 +377,7 @@ def load_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{sf_dir}/events.parquet"
 
     def build() -> DataFrame:
+        # inferred, not TABLE_SCHEMAS["events"]: ts may be stored as nanos
         return envelope_from_app_events(spark.read.parquet(src))
 
     try:
@@ -354,6 +402,8 @@ def load_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.rename(tmp, dest)
             except OSError:  # lost a concurrent-build race; theirs is fine
                 shutil.rmtree(tmp, ignore_errors=True)
-        return spark.read.parquet(dest)
-    except Exception:
+        return spark.read.schema(ENVELOPE_SCHEMA).parquet(dest)
+    except Exception as e:
+        warnings.warn(f"envelope cache for {src} unusable ({e!r}); rebuilding"
+                      " the envelope in this query", RuntimeWarning)
         return build()

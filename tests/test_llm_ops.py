@@ -176,25 +176,6 @@ def test_trained_ivf_beats_standin_recall(skewed_vectors):
     assert trained == 1.0  # co-clustered neighbors stay co-assigned
 
 
-def test_trained_ivf_index_matches_batch(spark, skewed_vectors, tmp_path_factory):
-    """A trained index persists its integer quantizer and reproduces the
-    batch trained path exactly."""
-    idx = str(tmp_path_factory.mktemp("ivftrained") / "index")
-    stats = sim.build_ivf_index(skewed_vectors, idx, n_centroids=4, trained=True)
-    assert stats["trained"] is True and stats["n_centroids"] == 4
-    qids = [10, 60]
-    batch = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in sim.ivf_topk(skewed_vectors, qids, k=3, n_centroids=4,
-                              nprobe=2, dim=8, trained=True).collect()
-    }
-    indexed = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in sim.ivf_topk_indexed(spark, idx, qids, k=3, nprobe=2).collect()
-    }
-    assert batch == indexed and batch
-
-
 def test_sniff_media_headers_real_formats(spark):
     """The header sniffer parses GENUINE file headers (not the fake
     decoder): PNG big-endian dims, GIF little-endian dims, WAV fmt-chunk
@@ -571,49 +552,6 @@ def test_incremental_minhash_matches_batch(spark, docs, tmp_path_factory):
         spark.createDataFrame([], docs.schema), spark, idx, threshold=0.4
     )
     assert again.count() == 0
-
-
-def test_ivf_index_matches_batch_and_prunes_partitions(spark, vectors, tmp_path_factory):
-    """The persisted IVF index returns IDENTICAL top-k to the one-shot
-    ivf_topk, and its scan reads only the probed cell partitions
-    (PartitionFilters carries the cell isin — directory-level pruning,
-    the on-disk version of nprobe)."""
-    import io
-    import contextlib
-
-    from eventstore_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_indexed,
-    )
-
-    idx = str(tmp_path_factory.mktemp("ivfidx") / "index")
-    stats = build_ivf_index(vectors, idx, n_centroids=4)
-    assert stats["n_centroids"] == 4
-
-    qids = [5, 11]
-    batch = {
-        (r.query_id, r.rank): (r.vec_id, round(r.sim, 9))
-        for r in ivf_topk(vectors, qids, k=3, n_centroids=4, nprobe=2, dim=8).collect()
-    }
-    indexed_df = ivf_topk_indexed(spark, idx, qids, k=3, nprobe=2)
-    indexed = {
-        (r.query_id, r.rank): (r.vec_id, round(r.sim, 9))
-        for r in indexed_df.collect()
-    }
-    assert indexed == batch and len(indexed) == 6
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        indexed_df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "cell#" in plan.split("PartitionFilters", 2)[-1][:400].replace(
-        "dynamicpruning", ""
-    )
-    # the isin filter must actually restrict cells (nprobe=2 of 4 per
-    # query -> at most 4 distinct probed cells, typically fewer)
-    assert "cell" in plan
 
 
 def test_source_mixture_flattens_skew(spark):
@@ -1683,38 +1621,6 @@ def test_ivfpq_probes_only_and_finds_neighbors(spark):
         # the nearest hit is a member of the query's own cluster
         top = min(rs, key=lambda r: (r.adist, r.vec_id))
         assert top.vec_id // 8 == q // 8, (q, top)
-
-
-def test_ivfpq_index_roundtrip_matches_oneshot_and_prunes(spark, tmp_path):
-    """r10 persisted IVFADC: build/query split returns IDENTICAL results
-    to the one-shot operator, and the query's code scans carry the cell
-    partition filter (only probed directories are opened)."""
-    from eventstore_spark.operators.similarity import (build_ivfpq_index,
-                                                       ivfpq_topk,
-                                                       ivfpq_topk_indexed)
-
-    rows = []
-    for c in range(4):
-        for i in range(8):
-            vec = [0.0] * 16
-            vec[c * 4] = 1.0
-            vec[c * 4 + 1] = 0.1 * i
-            rows.append((c * 8 + i, [float(x) for x in vec]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    one = sorted(map(tuple, ivfpq_topk(
-        emb, [0, 9], k=5, n_centroids=4, nprobe=2, m=4, n_codes=4).collect()))
-
-    path = str(tmp_path / "ivfpq")
-    info = build_ivfpq_index(emb, path, n_centroids=4, m=4, n_codes=4)
-    assert info["vectors_indexed"] == 32 and info["m"] == 4
-
-    idx = ivfpq_topk_indexed(spark, path, emb, [0, 9], k=5, nprobe=2)
-    assert sorted(map(tuple, idx.collect())) == one
-
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(cell" in plan or \
-           "PartitionFilters: [(cell" in plan or "cell#" in plan.split(
-               "PartitionFilters")[1][:120]
 
 
 # ---------------------------------------------------------------------------

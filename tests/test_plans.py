@@ -335,6 +335,83 @@ def test_no_accidental_cartesian_in_any_query(spark):
     _walk_no_cartesian(spark, sf_dir)
 
 
+SF_SMALL = "/root/testdata/sf0.001"
+
+# Registry entries that run Spark jobs while the query is BUILT, before
+# its action: trainers and driver-side collects whose result shapes the
+# plan, and guarded_broadcast's size count. Every other entry builds with
+# no job (D2). An entry that stops running build jobs leaves this set.
+EAGER_BUILD = {
+    "ann_ivf": "trains the IVF centroids (a collect per k-means round)",
+    "ann_ivfpq": "trains IVF centroids and PQ codebooks, collects probe rows",
+    "ann_pq": "trains the PQ codebooks (a collect per round)",
+    "bpe_apply": "collects the trained BPE merge steps",
+    "bpe_train": "collects the trained BPE merge steps",
+    "ccnet_buckets": "collects per-(lang, score) counts to set bucket edges",
+    "classifier_train_apply": "collects the trained naive-Bayes model",
+    "cluster_balanced_sample": "trains the IVF centroids",
+    "cluster_survivors": "duplicate_clusters: checkpoint + count per round",
+    "contamination_overlap": "guarded_broadcast counts the benchmark side",
+    "dedup_bloom": "guarded_broadcast counts the seen-id side",
+    "dedup_clusters": "duplicate_clusters: checkpoint + count per round",
+    "dedup_ngram_jaccard": "first() of the document-frequency stats",
+    "embedding_pca": "power iteration collects each round's vector",
+    "events_resample": "collects the time range that sets the grid",
+    "kcenter_select": "greedy selection collects each pick",
+    "kmeans_clusters": "trains the IVF centroids",
+    "kn_perplexity": "first() of the bigram counts that size the model",
+    "knn_eval": "trains the IVF centroids",
+    "leakage_safe_split": "duplicate_clusters: checkpoint + count per round",
+    "link_hits": "eager localCheckpoint per iteration",
+    "link_pagerank": "counts the nodes for the teleport term",
+    "ndcg_eval": "trains the IVF centroids",
+    "pack_shards": "collects the doc-id range and per-bucket token sums",
+    "pmi_collocations": "eager localCheckpoint of the two count tables",
+    "semantic_dedup": "trains the IVF centroids",
+    "tokenizer_fertility": "collects the trained BPE merge steps",
+}
+
+
+def _registry_build_jobs(spark, names):
+    """Spark jobs that building each named query runs at sf0.001; the
+    built DataFrames are never acted on."""
+    import os
+
+    import __spark_entry__ as entry
+    from eventstore_spark.schema import load_envelope
+    from tests.test_engine import _read_jobs
+
+    if not os.path.isdir(SF_SMALL):
+        pytest.skip("driver testdata not present")
+    load_envelope(spark, SF_SMALL)  # builds the envelope cache once, uncounted
+    qs = entry.queries()
+    try:
+        return {n: _read_jobs(spark, lambda: qs[n](spark, SF_SMALL))
+                for n in names}
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_headline_queries_build_with_no_spark_job(spark):
+    """Building a headline query reads its tables with declared schemas
+    (no inference job) and runs nothing before the action."""
+    import bench
+
+    jobs = _registry_build_jobs(spark, bench.HEADLINE)
+    assert jobs == dict.fromkeys(bench.HEADLINE, 0)
+
+
+def test_registry_builds_run_jobs_only_where_declared(spark):
+    """Every queries() entry builds with no Spark job unless EAGER_BUILD
+    names it with its reason; a named entry that stopped running build
+    jobs is reported too, so the set only shrinks."""
+    import __spark_entry__ as entry
+
+    jobs = _registry_build_jobs(spark, sorted(entry.queries()))
+    assert {n for n, j in jobs.items() if j} == set(EAGER_BUILD), {
+        n: j for n, j in jobs.items() if bool(j) != (n in EAGER_BUILD)}
+
+
 SF10_DIR = "/root/repo/.localdata/sf10"
 
 

@@ -67,6 +67,24 @@ def test_partition_by_custom_python(bank_events):
     assert st == {"ana": {"n": 2}, "bob": {"n": 1}}
 
 
+def test_null_partition_key_skips_the_event(spark):
+    """An event whose partitionBy key is NULL belongs to no partition:
+    the batch fold skips it (so does the continuous runtime, see
+    test_streaming), for a Column key and a Python key alike."""
+    from eventstore_spark.schema import EVENTS_SCHEMA
+
+    rows = [(i + 1, "acct-1", "acct", i, f"e{i}", "Op", body, None, None, True)
+            for i, body in enumerate(['{"k": "a"}', '{}', '{"k": "a"}'])]
+    ev = spark.createDataFrame(rows, EVENTS_SCHEMA)
+    handlers = {"$init": lambda: {"n": 0}, "$any": lambda s, e: {"n": s["n"] + 1}}
+    by_col = (Projection.from_category("acct", name="bycol")
+              .partition_by(F.get_json_object("data", "$.k")).when(handlers))
+    by_fn = (Projection.from_category("acct", name="byfn")
+             .partition_by(lambda e: e["body"].get("k")).when(handlers))
+    assert states_of(run_batch(by_col, ev)) == {"a": {"n": 2}}
+    assert states_of(run_batch(by_fn, ev)) == {"a": {"n": 2}}
+
+
 def test_undefined_return_keeps_state(bank_events):
     p = Projection.from_stream("chat-1", name="keep").when(
         {"$init": lambda: {"n": 41}, "$any": lambda s, e: None}

@@ -495,6 +495,33 @@ def test_batch_and_continuous_folds_agree(spark, tmp_path):
     assert live_emitted == batch_emitted
 
 
+def test_continuous_null_partition_key_skips_the_event(spark, tmp_path):
+    """The continuous twin of test_null_partition_key_skips_the_event: an
+    event whose partitionBy Column is NULL folds into no partition (no
+    state row ``"None"``), as in batch."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "nullkey")
+    w = EventLogWriter(spark, path)
+    for body in ('{"k": "a"}', '{}', '{"k": "a"}'):
+        w.append("acct-1", [ProposedEvent("Op", body)])
+    spec = (Projection.from_category("acct", name="nullkey")
+            .partition_by(F.get_json_object("data", "$.k"))
+            .when({"$init": lambda: {"n": 0},
+                   "$any": lambda s, e: {"n": s["n"] + 1}}))
+    q = (run_continuous(spec, subscribe_all(spark, path))
+         .writeStream.outputMode("update").format("memory")
+         .queryName("nullkeyrows")
+         .option("checkpointLocation", str(tmp_path / "nullkeyck")).start())
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM nullkeyrows").collect()
+    finally:
+        q.stop()
+    assert {r.partition: json.loads(r.state)
+            for r in rows if r.kind == "state"} == {"a": {"n": 2}}
+
+
 def test_continuous_state_table_scale_and_restart(spark, tmp_path):
     """The continuous state sink is a parquet state table, not a driver
     dict: a foreachStream projection over 10k partitions lands its state
