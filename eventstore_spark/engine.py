@@ -427,11 +427,8 @@ class EventStoreEngine:
             return self.events()
         row = self.writer.metadata_snapshot().get(stream_id)
         df = self.writer.load().where(F.col("stream_id") == stream_id)
-        head = None
-        if row is not None and row.max_count is not None:
-            top = df.select("event_number").orderBy(
-                F.col("event_number").desc()).limit(1).first()
-            head = None if top is None else top[0]
+        capped = row is not None and row.max_count is not None
+        head = R.head(df, "event_number") if capped else None
         return df.where(stream_visibility(row, head))
 
     def read_event(self, stream_id: str, event_number: int) -> DataFrame:
@@ -511,7 +508,8 @@ class EventStoreEngine:
         page = R.read_stream_page(
             base, stream_id, from_event_number, max_count, backward
         )
-        if user and page.last_event_number < 0 and (
+        # a page with rows has a head: only an empty page probes it here
+        if user and page.events.isEmpty() and page.last_event_number < 0 and (
                 row is None or row.truncate_before == MAX_LONG
                 or self.writer.last_event_number(stream_id) == NO_STREAM):
             page.result = "NoStream"
@@ -553,12 +551,7 @@ class EventStoreEngine:
                 # probing the raw log would see no `$ce-…` rows on an
                 # unmaterialized store and park until timeout
                 base = self._system_base(base, stream_id)
-            head = (
-                base
-                .where(F.col("stream_id") == stream_id)
-                .agg(F.max("event_number"))
-                .first()[0]
-            )
+            head = R.head(base.where(F.col("stream_id") == stream_id), "event_number")
             if head is not None and head >= from_event_number:
                 return self.read_stream(stream_id, from_event_number, max_count)
             if _time.monotonic() >= deadline:
@@ -1185,7 +1178,7 @@ class EventStoreEngine:
         corr_path = self._corr_path()
         if mode == "onetime":
             src = self._link_source_events()
-            head = src.agg(F.max("log_position")).first()[0] or 0
+            head = R.head(src, "log_position", 0)
             self.writer.append_df(
                 sysproj.system_link_rows(src, corr_path))
             # data landed — only now (re)write the marker, covering the
@@ -1204,7 +1197,7 @@ class EventStoreEngine:
                 scoped_cache(batch_df)
                 self.writer.append_df(
                     sysproj.system_link_rows(batch_df, corr_path))
-                head = batch_df.agg(F.max("log_position")).first()[0]
+                head = R.head(batch_df, "log_position")
             if head is not None:
                 cur = self._system_links_info() or {}
                 self._write_system_links_marker(
@@ -1394,8 +1387,7 @@ class EventStoreEngine:
                 # emitted streams have been deleted, record how far the
                 # deletion got (the reference checkpoints the tracker's
                 # deletion progress so a crashed delete resumes)
-                head = (self.events().agg(F.max("log_position")).first()[0]
-                        or 0)
+                head = R.head(self.events(), "log_position", 0)
                 self.writer.append(
                     f"$projections-{name}-emittedstreams-checkpoint",
                     [ProposedEvent("$ProjectionCheckpoint", json.dumps(
@@ -1548,13 +1540,8 @@ class EventStoreEngine:
         # idempotent via the deterministic per-position event id.
         from .plans.reader_strategy import source_predicate
 
-        last_pos = (
-            self.events()
-            .where(source_predicate(mp.spec))
-            .agg(F.max("log_position"))
-            .first()[0]
-            or 0
-        )
+        last_pos = R.head(
+            self.events().where(source_predicate(mp.spec)), "log_position", 0)
         self.writer.append_df(
             self.spark.createDataFrame(
                 [(
@@ -1864,12 +1851,8 @@ class EventStoreEngine:
             if ck is None:
                 progress = 0.0
             else:
-                src_head = (
-                    visible.where(source_predicate(mp.spec))
-                    .agg(F.max("log_position"))
-                    .first()[0]
-                    or 0
-                )
+                src_head = R.head(
+                    visible.where(source_predicate(mp.spec)), "log_position", 0)
                 progress = (
                     100.0 if src_head <= ck
                     else round(100.0 * ck / src_head, 1)

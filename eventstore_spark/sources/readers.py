@@ -9,11 +9,14 @@ Catalyst compiles to a pruned columnar scan — the index IS the storage
 layout (partition by category, row-group sort by stream_id, event_number).
 
 All readers return the envelope columns in log order; ``limit`` semantics
-match maxCount paging.
+match maxCount paging. A page read is one Spark job, collect included,
+as the reference's is one pass: its rows come back as a local relation,
+and its head probe is lazy, bounded by vacuum's grace like any pinned read.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -75,17 +78,51 @@ def read_stream_backward(
     return out
 
 
-def _bounds(page: DataFrame, source: DataFrame, col: str) -> tuple:
-    """(min, max, count) of ``page``'s ``col`` and the head (max ``col``
-    of ``source``) in ONE query. The head is a top-1 sort-and-limit, which
-    plans without an exchange, where ``max()`` would cost AQE an extra
-    stage."""
-    head = source.select(F.col(col).alias("_head")).orderBy(
-        F.col("_head").desc()).limit(1)
-    row = page.agg(
-        F.min(col), F.max(col), F.count(F.lit(1))
-    ).join(head, how="left").first()
-    return row[0], row[1], int(row[2]), row[3]
+def head(source: DataFrame, col: str, empty=None):
+    """The max ``col`` of ``source`` (``empty`` when it has no rows): a
+    top-1 sort-and-limit, which plans without an exchange, where
+    ``max()`` would cost AQE an extra stage."""
+    row = source.select(col).orderBy(F.col(col).desc()).limit(1).first()
+    return empty if row is None else row[0]
+
+
+class _OnRead:
+    """A dataclass field that may be given as a zero-argument function,
+    which runs the first time the field is read; its value is kept."""
+
+    def __set_name__(self, owner, name):
+        self.slot = "_" + name
+
+    def __get__(self, obj, owner=None):
+        if obj is None:
+            raise AttributeError(self.slot)  # a required field, no default
+        if callable(value := obj.__dict__[self.slot]):
+            value = obj.__dict__[self.slot] = value()
+        return value
+
+    def __set__(self, obj, value):
+        obj.__dict__[self.slot] = value
+
+
+def _paged(page: DataFrame, source: DataFrame, col: str, backward: bool,
+           empty: int, at_head: bool = False) -> tuple:
+    """(events, next, last, end) of ``page``, sorted on ``col``: one Spark
+    job collects it in the JVM and ``events`` is a local relation over
+    those rows, with its bounds at its ends. The head (``last``) is its
+    first row when ``at_head``, else a top-1 probe of ``source`` run when
+    a field that needs it is first read."""
+    jdf, spark = page._jdf, page.sparkSession
+    rows = jdf.collectAsList()
+    n, i = rows.size(), jdf.schema().fieldIndex(col)
+    lo, hi = sorted((rows.get(0).get(i), rows.get(n - 1).get(i))) if n else (empty, empty)
+    events = DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
+    last = functools.cache(lambda: hi if at_head else head(source, col, empty))
+    if backward:
+        nxt = empty if n == 0 else lo - 1
+        return events, nxt, last, nxt <= empty
+    # an empty forward page starts past the head
+    return (events, hi + 1 if n else lambda: last() + 1, last,
+            (lambda: hi >= last()) if n else True)
 
 
 @dataclass
@@ -95,9 +132,9 @@ class StreamPage:
     where to continue and whether the stream is exhausted."""
 
     events: DataFrame
-    next_event_number: int
-    last_event_number: int
-    is_end_of_stream: bool
+    next_event_number: int = _OnRead()
+    last_event_number: int = _OnRead()
+    is_end_of_stream: bool = _OnRead()
     # ReadStreamResult analog (SRangeReadResult: Success / NoStream /
     # StreamDeleted — the last surfaces as a raised StreamDeletedError
     # at the engine instead). Standalone reader calls report "Success";
@@ -112,10 +149,10 @@ def read_stream_page(
     max_count: int = 100,
     backward: bool = False,
 ) -> StreamPage:
-    """S2/S3 with full paging metadata. One bounds query answers the
-    page's min/max/count and the stream head together (a top-1 scan, no
-    exchange), over the same snapshot as the page; the page DataFrame
-    itself stays lazy for the caller.
+    """S2/S3 with full paging metadata, in one Spark job (``_paged``): a
+    backward page from the head reads the head off its first row; other
+    pages probe it when ``last_event_number``, or a forward page's
+    ``is_end_of_stream`` or empty ``next_event_number``, is first read.
 
     Backward paging starts from the stream HEAD when
     ``from_event_number`` is None or -1 (the reference's end-of-stream
@@ -123,27 +160,16 @@ def read_stream_page(
     containing only event 0 — the same convention as
     ``engine.read_stream``. Forward defaults to 0.
     """
+    from_head = backward and from_event_number in (None, -1)
     if backward:
-        start = None if from_event_number in (None, -1) else from_event_number
+        start = None if from_head else from_event_number
         page = read_stream_backward(events, stream_id, start, max_count)
     else:
         page = read_stream_forward(events, stream_id, from_event_number or 0, max_count)
-    lo, hi, n, head = _bounds(
-        page, events.where(F.col("stream_id") == stream_id), "event_number"
-    )
-    last_en = -1 if head is None else int(head)
-    if backward:
-        nxt = -1 if n == 0 else int(lo) - 1
-        end = nxt < 0
-    else:
-        nxt = last_en + 1 if n == 0 else int(hi) + 1
-        end = nxt > last_en
-    return StreamPage(
-        events=page,
-        next_event_number=nxt,
-        last_event_number=last_en,
-        is_end_of_stream=end,
-    )
+    return StreamPage(*_paged(
+        page, events.where(F.col("stream_id") == stream_id), "event_number",
+        backward, -1, at_head=from_head and max_count != 0,
+    ))
 
 
 @dataclass
@@ -154,9 +180,9 @@ class AllPage:
     the log end was reached."""
 
     events: DataFrame
-    next_position: int
-    last_position: int
-    is_end_of_all: bool
+    next_position: int = _OnRead()
+    last_position: int = _OnRead()
+    is_end_of_all: bool = _OnRead()
 
 
 def read_all_page(
@@ -168,27 +194,14 @@ def read_all_page(
     apply_default_filter: bool = False,
 ) -> AllPage:
     """S4/S5 with full paging metadata (mirror of ``read_stream_page``):
-    one bounds query answers the page's min/max/count and the log head."""
+    one Spark job, and a log-head probe on first need."""
     page = read_all_filtered(
         events, event_filter,
         (from_position or None) if backward else from_position,
         max_count, apply_default_filter,
         direction="backward" if backward else "forward",
     )
-    lo, hi, n, head = _bounds(page, events, "log_position")
-    last_pos = 0 if head is None else int(head)
-    if backward:
-        nxt = 0 if n == 0 else int(lo) - 1
-        end = nxt <= 0
-    else:
-        nxt = last_pos + 1 if n == 0 else int(hi) + 1
-        end = nxt > last_pos
-    return AllPage(
-        events=page,
-        next_position=nxt,
-        last_position=last_pos,
-        is_end_of_all=end,
-    )
+    return AllPage(*_paged(page, events, "log_position", backward, 0))
 
 
 def read_all_forward(

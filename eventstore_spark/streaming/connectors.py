@@ -75,6 +75,7 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from ..manifest import snapshot_files
+from ..sources import readers as R
 from ..writer import read_files
 from .subscriptions import subscribe_all
 
@@ -610,10 +611,9 @@ class ConnectorManager:
             else:
                 # the snapshot, not the hot directory: archived history
                 # whose local copies were dropped still counts
-                tail = (read_files(self.spark, self.log_path,
-                                   snapshot_files(self.log_path))
-                        .agg(F.max("log_position").alias("m"))
-                        .collect()[0].m)
+                tail = R.head(read_files(self.spark, self.log_path,
+                                         snapshot_files(self.log_path)),
+                              "log_position")
                 fp = int(tail) + 1 if tail is not None else 0
                 with open(sp_file, "w") as fh:
                     fh.write(str(fp))

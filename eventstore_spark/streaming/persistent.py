@@ -29,6 +29,7 @@ from ..operators.system_projections import (
     is_system_stream_name,
     system_stream_predicate,
 )
+from ..sources import readers as R
 
 # NakAction (persistent.proto / PersistentSubscription.cs:474-502)
 NAK_RETRY = "retry"
@@ -599,14 +600,12 @@ class PersistentSubscription:
         persistent-subscription metric set (diagnostics/metrics.md
         §Persistent Subscriptions): connections, parked/in-flight
         gauges, processed counter, last-known vs checkpointed positions.
-        The last-known position is one pruned footer-max over the
+        The last-known position is one top-1 probe over the
         group's selector; everything else is driver-side state."""
         states: dict[str, int] = {}
         for d in self._deliveries.values():
             states[d.state] = states.get(d.state, 0) + 1
-        head = (
-            self._selected().agg(F.max("log_position")).first()[0]
-        )
+        head = R.head(self._selected(), "log_position")
         return {
             "group": self.group,
             "checkpointed_position": self._checkpointed_position,

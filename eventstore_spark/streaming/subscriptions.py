@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from .. import manifest as M
 from ..operators.filters import EventFilter, default_all_filter
 from ..schema import EVENTS_SCHEMA, query_scope, scoped_cache
+from ..sources import readers as R
 from ..writer import _core_for, read_files
 
 
@@ -521,7 +522,7 @@ def start_all_with_checkpoints(
             state["batches"] += 1
             ckpt = None
             if state["batches"] % checkpoint_interval == 0:
-                head = batch_df.agg(F.max("log_position")).first()[0]
+                head = R.head(batch_df, "log_position")
                 if head is not None:
                     ckpt = int(head)
             on_batch(matches, ckpt, batch_id)

@@ -81,6 +81,7 @@ from .schema import (
     query_scope,
     scoped_cache,
 )
+from .sources import readers as R
 
 # ExpectedVersion sentinel values (Data/ExpectedVersion.cs:6-13)
 ANY = -2
@@ -419,8 +420,7 @@ class EventLogWriter:
     def _recover(self) -> None:
         if not self._has_files():
             return
-        row = self.load().agg(F.max("log_position")).first()
-        self._last_position = int(row[0] or 0)
+        self._last_position = int(R.head(self.load(), "log_position", 0))
 
     def _stream_state(self, stream_id: str) -> int:
         """The last event number of a stream, loading it from the log on

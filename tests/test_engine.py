@@ -78,12 +78,12 @@ def test_metadata_dimension_is_one_aggregate(engine):
     metadata. Reads over a store with metadata stay within these Spark
     job counts, page collect included, once the metadata snapshot is
     warm: read_event 1 (a max_count stream adds a top-1 head probe: 2),
-    backward read_stream_page 4 (head probe, bounds query, collect) and
-    read_all_page 11 (the join's broadcasts and max_count heads, in the
-    bounds query and the collect; 5 once no stream has a max_count).
-    Joining a freshly aggregated dimension
-    on every read, with two eager aggregates per page, ran 7, 22 and 22
-    here."""
+    backward read_stream_page 2 (that head probe and the page) and
+    read_all_page 5 (the join's broadcasts and max_count heads, in the
+    one page query; 2 once no stream has a max_count). Joining a freshly
+    aggregated dimension on every read, with two eager aggregates per
+    page, ran 7, 22 and 22 here; a bounds query run apart from the
+    collect ran 2, 4 and 11 (5 without a max_count)."""
     engine.set_stream_metadata("account-1", max_count=1)
     engine.set_stream_metadata("account-2", truncate_before=0)
     engine.set_stream_metadata("account-2", truncate_before=1, acl={"$r": ["ops"]})
@@ -100,24 +100,57 @@ def test_metadata_dimension_is_one_aggregate(engine):
     engine.read_event("account-1", 1).collect()  # warms the snapshot
     got = {k: _read_jobs(engine.spark, read)
            for k, read in _read_kinds(engine).items()}
-    caps = {"read_event": 2, "read_stream_page": 4, "read_all_page": 11}
+    caps = {"read_event": 2, "read_stream_page": 2, "read_all_page": 5}
     assert all(got[k] <= caps[k] for k in caps), got
     # once no stream has a max_count, a $all page skips the head branch
     engine.set_stream_metadata("account-1", max_age_seconds=3600)
     engine.read_all_page(0, 10)
-    assert _read_jobs(engine.spark, _read_kinds(engine)["read_all_page"]) <= 5
+    assert _read_jobs(engine.spark, _read_kinds(engine)["read_all_page"]) <= 2
 
 
 def test_reads_without_metadata_are_one_pruned_scan(engine):
     """On a store without metadata a read runs no join and no dimension
-    aggregate: after one warm-up read, read_event is its collect alone,
-    and a page read is one bounds query plus the collect (the per-read
-    dimension rebuild ran 5, 16 and 16 here)."""
+    aggregate: after one warm-up read, each read is one Spark job, a
+    page's collect included, since the page query runs once and its
+    rows are served back as a local relation (the per-read dimension
+    rebuild ran 5, 16 and 16 here, a bounds query plus the collect 1, 3
+    and 3)."""
     engine.read_event("account-1", 1).collect()
     got = {k: _read_jobs(engine.spark, read)
            for k, read in _read_kinds(engine).items()}
-    caps = {"read_event": 1, "read_stream_page": 3, "read_all_page": 3}
-    assert all(got[k] <= caps[k] for k in caps), got
+    assert got == {"read_event": 1, "read_stream_page": 1, "read_all_page": 1}
+
+
+def test_page_head_is_probed_once_on_first_read(engine):
+    """A page's fields that need the head probe it with one Spark job
+    the first time one of them is read, and keep it; the page's events
+    and the fields its own rows answer cost nothing more."""
+    spark = engine.spark
+    page = engine.read_stream_page("account-1", 0, 1)
+    assert _read_jobs(spark, lambda: (page.next_event_number,
+                                      page.events.collect())) == 0
+    assert _read_jobs(spark, lambda: page.last_event_number) == 1
+    assert _read_jobs(spark, lambda: (page.last_event_number,
+                                      page.is_end_of_stream)) == 0
+    assert (page.next_event_number, page.last_event_number,
+            page.is_end_of_stream) == (1, 1, False)
+
+    page = engine.read_all_page(0, 2)
+    assert _read_jobs(spark, lambda: (page.next_position,
+                                      page.events.collect())) == 0
+    assert _read_jobs(spark, lambda: page.is_end_of_all) == 1
+    assert _read_jobs(spark, lambda: (page.last_position,
+                                      page.is_end_of_all)) == 0
+    assert (page.next_position, page.last_position,
+            page.is_end_of_all) == (3, 4, False)
+
+    # a backward page from the head reads the head off its first row
+    page = engine.read_stream_page("account-1", None, 1, backward=True)
+    assert _read_jobs(spark, lambda: (page.last_event_number,
+                                      page.next_event_number,
+                                      page.is_end_of_stream)) == 0
+    assert (page.next_event_number, page.last_event_number,
+            page.is_end_of_stream) == (0, 1, False)
 
 
 def test_metadata_snapshot_follows_every_change(engine, spark):

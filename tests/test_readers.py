@@ -131,6 +131,80 @@ def test_read_all_page_metadata(bank_events):
     assert pb.next_position == back[1].log_position - 1
 
 
+def _fields(page):
+    return [getattr(page, f) for f in type(page).__dataclass_fields__
+            if f not in ("events", "result")]
+
+
+def test_stream_page_fields_that_need_the_head(spark):
+    """Each field a page cannot take from its own rows probes the stream
+    head, with the values the paging contract gives: (events, next,
+    last, end) for a forward page past the head, backward pages from an
+    explicit start (0 included), and a stream that does not exist."""
+    from eventstore_spark.schema import EVENTS_SCHEMA
+
+    ev = spark.createDataFrame(
+        [(i + 1, "s-1", "s", i, f"e{i}", "E", "{}", None, None, True)
+         for i in range(10)], EVENTS_SCHEMA)
+
+    def page(*args, **kw):
+        p = R.read_stream_page(ev, *args, **kw)
+        return [nums(p.events), *_fields(p)]
+
+    assert page("s-1", 15, 4) == [[], 10, 9, True]
+    assert page("s-1", 9, 4) == [[9], 10, 9, True]
+    assert page("s-1", 5, 3, backward=True) == [[5, 4, 3], 2, 9, False]
+    assert page("s-1", 0, 3, backward=True) == [[0], -1, 9, True]
+    assert page("s-1", 20, 3, backward=True) == [[9, 8, 7], 6, 9, False]
+    assert page("s-1", None, 0, backward=True) == [[], -1, 9, True]
+    for backward in (False, True):
+        assert page("nope", None, 4, backward=backward) == [
+            [], -1 if backward else 0, -1, True]
+
+
+def test_all_page_fields_that_need_the_head(bank_events):
+    """$all pages: a forward page that comes back empty continues past
+    the log head, and a backward page's last_position is the log head
+    even when a filter hides the head event."""
+    def page(**kw):
+        p = R.read_all_page(bank_events, **kw)
+        return [nums(p.events, "log_position"), *_fields(p)]
+
+    assert page(from_position=12, max_count=5) == [[], 12, 11, True]
+    assert page(from_position=10, max_count=5) == [[10, 11], 12, 11, True]
+    assert page(backward=True, max_count=2) == [[11, 10], 9, 11, False]
+    only_accounts = EventFilter(stream_prefixes=("account-",))
+    assert page(backward=True, max_count=2, event_filter=only_accounts) == [
+        [8, 5], 4, 11, False]
+    assert page(from_position=3, backward=True, max_count=5) == [
+        [3, 2, 1], 0, 11, True]
+
+
+def test_page_events_outlive_a_vacuum(spark, tmp_path):
+    """A page's events are its rows, collected when the page was read:
+    they still collect after maintenance rewrites the log and vacuum
+    deletes the files the page was read from."""
+    import os
+
+    from eventstore_spark import manifest
+    from eventstore_spark.engine import EventStoreEngine
+    from eventstore_spark.writer import ProposedEvent
+
+    path = str(tmp_path / "store")
+    eng = EventStoreEngine(spark, path)
+    for i in range(3):
+        eng.append("s-1", [ProposedEvent("E", f'{{"i": {i}}}')])
+    before = set(manifest.snapshot_files(path))
+    stream = eng.read_stream_page("s-1", None, 10, backward=True)
+    log = eng.read_all_page(0, 10)
+    eng.optimize_layout(target_files=1)
+    eng.vacuum(grace_s=0)
+    assert not any(os.path.exists(os.path.join(path, f)) for f in before)
+    assert nums(stream.events) == [2, 1, 0]
+    assert nums(log.events, "log_position") == [1, 2, 3]
+    eng.close()
+
+
 def test_virtual_link_numbering_correct_across_buckets(spark, monkeypatch):
     """number_in_log_order's two-phase rank (per-bucket row_number +
     broadcast prefix offsets) must equal the plain global rank ACROSS
