@@ -18,9 +18,11 @@ import shutil
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import manifest
 from .operators.filters import EventFilter
 from .operators.links import resolve_links
 from .operators import memory_streams as mem
@@ -50,7 +52,8 @@ from .streaming.subscriptions import (
     subscribe_all,
     subscribe_stream,
 )
-from .writer import ANY, NO_STREAM, EventLogWriter, ProposedEvent, StreamDeletedError
+from .writer import (ANY, NO_STREAM, EventLogWriter, ProposedEvent,
+                     StreamDeletedError, lookup, read_files)
 
 
 @dataclass
@@ -186,9 +189,7 @@ class EventStoreEngine:
         return self._events_of(df, self.stream_metadata(df).collect())
 
     def manifest_history(self) -> list[int]:
-        from . import manifest as _manifest
-
-        return _manifest.history(self.path)
+        return manifest.history(self.path)
 
     def _events_of(self, df: DataFrame, md_rows) -> DataFrame:
         """The visible user events of ``df`` under the metadata rows
@@ -410,31 +411,54 @@ class EventStoreEngine:
         return mat.unionByName(tail.select(*mat.columns))
 
     # ----------------------------------------------------------------- reads
+    def _head(self, files: list[str], stream_id: str) -> int | None:
+        """The stream's last event number in the log files ``files``
+        (None when it has no events there): one stream ``lookup``, no
+        Spark job."""
+        got = lookup(self.path, files, stream_id, columns=["event_number"])
+        return pc.max(got["event_number"]).as_py()
+
     def _read_base(self, stream_id: str) -> DataFrame:
         """What a stream read sources from: metastreams (`$$X`) read the
         RAW log — S9 metadata-HISTORY reads; the reference serves
         metastreams through the ordinary read path
         (SystemStreams.MetastreamOf, IndexReader) — system-stream names
         the visible log (``_system_base`` derives them from it), and any
-        other stream its own visible events: one pruned scan filtered by
-        the stream's retention rule as literals from the metadata
-        snapshot, with no join. Only a stream with max_count pays a top-1
-        head probe (same pinned snapshot) to fill the rule's head."""
+        other stream its own visible events: one pruned scan of a pinned
+        file list, filtered by the stream's retention rule as literals
+        from the metadata snapshot, with no join. A max_count stream
+        takes the rule's head from a stream lookup over the same list."""
         if stream_id.startswith(METASTREAM_PREFIX):
             return self.writer.load().where(
                 F.col("stream_id").startswith(METASTREAM_PREFIX))
         if sysproj.is_system_stream_name(stream_id):
             return self.events()
         row = self.writer.metadata_snapshot().get(stream_id)
-        df = self.writer.load().where(F.col("stream_id") == stream_id)
+        files = manifest.snapshot_files(self.path)
         capped = row is not None and row.max_count is not None
-        head = R.head(df, "event_number") if capped else None
-        return df.where(stream_visibility(row, head))
+        head = self._head(files, stream_id) if capped else None
+        return read_files(self.spark, self.path, files).where(
+            (F.col("stream_id") == stream_id) & stream_visibility(row, head))
 
     def read_event(self, stream_id: str, event_number: int) -> DataFrame:
+        """S1 point read (IndexReader.ReadEvent); -1 reads the stream's
+        last event. A stored stream is read on the driver, with no Spark
+        job: stream lookups over one pinned file list select the row in
+        Arrow, and it comes back as a local relation filtered by the
+        stream's retention rule (none for a metastream), so a last event
+        the rule hides reads as no event, as the reference's NotFound."""
         if mem.is_in_memory_stream(stream_id):
             return self.memory_streams.read_event(stream_id, event_number)
-        return R.read_event(self._read_base(stream_id), stream_id, event_number)
+        row = (None if stream_id.startswith(METASTREAM_PREFIX)
+               else self.writer.metadata_snapshot().get(stream_id))
+        files = manifest.snapshot_files(self.path)
+        capped = row is not None and row.max_count is not None
+        head = self._head(files, stream_id) if capped or event_number == -1 else None
+        # -1 reads the head; a stream with no head has no rows to read
+        got = lookup(self.path, files, stream_id,
+                     head if event_number == -1 else event_number)
+        return self.spark.createDataFrame(got, EVENTS_SCHEMA).where(
+            stream_visibility(row, head))
 
     def read_stream(self, stream_id: str, from_event_number: int | None = None,
                     max_count: int | None = None, backward: bool = False,
@@ -1731,15 +1755,13 @@ class EventStoreEngine:
         event/stream counts from one aggregate over the visible log, plus
         storage-level figures read straight from the manifest — no Spark
         job for the file inventory."""
-        from . import manifest as _manifest
-
         agg = self.events().agg(
             F.count(F.lit(1)).alias("events"),
             F.countDistinct("stream_id").alias("streams"),
             F.max("log_position").alias("head_position"),
         ).first()
-        files = _manifest.snapshot_files(self.path)
-        arch = _manifest.archive_config(self.path)
+        files = manifest.snapshot_files(self.path)
+        arch = manifest.archive_config(self.path)
         archived = set(arch.get("files", []))
         size = archived_bytes = 0
         for f in files:
@@ -1770,7 +1792,7 @@ class EventStoreEngine:
             "head_position": int(agg["head_position"] or 0),
             "log_files": len(files),
             "log_bytes": size,
-            "manifest_generations": len(_manifest.history(self.path)),
+            "manifest_generations": len(manifest.history(self.path)),
             "projections": len(self.projections),
             "projection_state_generations": state_gens,
             "archived_files": len(archived),
@@ -2190,15 +2212,13 @@ class EventStoreEngine:
         reg(f"{prefix}_events", self.events())
         reg(f"{prefix}_all", self.events(visible_only=False))
         reg(f"{prefix}_streams", self.streams())
-        from . import manifest as _manifest
-
-        gens = _manifest.history(self.path)
+        gens = manifest.history(self.path)
         if gens:
             hist_rows = []
             for seq in gens:
-                files = _manifest.files_at(self.path, seq) or []
+                files = manifest.files_at(self.path, seq) or []
                 mf = os.path.join(
-                    self.path, _manifest.MANIFEST_DIR, f"manifest-{seq:010d}.json"
+                    self.path, manifest.MANIFEST_DIR, f"manifest-{seq:010d}.json"
                 )
                 try:
                     published = datetime.fromtimestamp(

@@ -12,6 +12,9 @@ All readers return the envelope columns in log order; ``limit`` semantics
 match maxCount paging. A page read is one Spark job, collect included,
 as the reference's is one pass: its rows come back as a local relation,
 and its head probe is lazy, bounded by vacuum's grace like any pinned read.
+The engine's point reads of a stored stream do not come here: they are
+index lookups in the reference, and the writer's stream lookup
+(``writer.lookup``) serves them on the driver with no Spark job.
 """
 
 from __future__ import annotations
@@ -26,7 +29,8 @@ from ..operators.filters import EventFilter, default_all_filter
 
 
 def read_event(events: DataFrame, stream_id: str, event_number: int) -> DataFrame:
-    """S1: point-read one event; event_number == -1 means the last event.
+    """S1: point-read one event of any DataFrame of events as a Spark
+    query; event_number == -1 means the last event.
 
     Mirrors IndexReader.ReadEvent (IndexReader.cs:113-121).
     """
@@ -105,18 +109,22 @@ class _OnRead:
 
 
 def _paged(page: DataFrame, source: DataFrame, col: str, backward: bool,
-           empty: int, at_head: bool = False) -> tuple:
+           empty: int, whole: bool = False) -> tuple:
     """(events, next, last, end) of ``page``, sorted on ``col``: one Spark
     job collects it in the JVM and ``events`` is a local relation over
-    those rows, with its bounds at its ends. The head (``last``) is its
-    first row when ``at_head``, else a top-1 probe of ``source`` run when
-    a field that needs it is first read."""
+    those rows, with its bounds at its ends. ``whole``: the page starts
+    at an end of ``source`` (backward from its head, forward from its
+    first row) and asks for at least one row; the head (``last``) of
+    such a backward page is its first row, and such a forward page that
+    is empty shows ``source`` is empty. Any other head is a top-1 probe
+    of ``source``, run when a field that needs it is first read."""
     jdf, spark = page._jdf, page.sparkSession
     rows = jdf.collectAsList()
     n, i = rows.size(), jdf.schema().fieldIndex(col)
     lo, hi = sorted((rows.get(0).get(i), rows.get(n - 1).get(i))) if n else (empty, empty)
     events = DataFrame(spark._jsparkSession.createDataFrame(rows, jdf.schema()), spark)
-    last = functools.cache(lambda: hi if at_head else head(source, col, empty))
+    known = whole and (backward or n == 0)
+    last = functools.cache(lambda: hi if known else head(source, col, empty))
     if backward:
         nxt = empty if n == 0 else lo - 1
         return events, nxt, last, nxt <= empty
@@ -150,7 +158,8 @@ def read_stream_page(
     backward: bool = False,
 ) -> StreamPage:
     """S2/S3 with full paging metadata, in one Spark job (``_paged``): a
-    backward page from the head reads the head off its first row; other
+    backward page from the head reads the head off its first row, and an
+    empty forward page from event 0 shows the stream has none; other
     pages probe it when ``last_event_number``, or a forward page's
     ``is_end_of_stream`` or empty ``next_event_number``, is first read.
 
@@ -160,15 +169,16 @@ def read_stream_page(
     containing only event 0 — the same convention as
     ``engine.read_stream``. Forward defaults to 0.
     """
-    from_head = backward and from_event_number in (None, -1)
     if backward:
-        start = None if from_head else from_event_number
+        from_end = from_event_number in (None, -1)
+        start = None if from_end else from_event_number
         page = read_stream_backward(events, stream_id, start, max_count)
     else:
+        from_end = (from_event_number or 0) <= 0
         page = read_stream_forward(events, stream_id, from_event_number or 0, max_count)
     return StreamPage(*_paged(
         page, events.where(F.col("stream_id") == stream_id), "event_number",
-        backward, -1, at_head=from_head and max_count != 0,
+        backward, -1, whole=from_end and max_count != 0,
     ))
 
 

@@ -37,12 +37,13 @@ atomic columnar commit:
     commits came before;
   * writer state is LAZY and BOUNDED: opening a writer reads exactly one
     scalar (max log_position) from the log; per-stream last-event-number /
-    recent-event-ids load on first touch of that stream via a
-    pruned scan — the analog of the reference's LRU last-event-number cache
-    (IndexBackend) plus its bounded near-head idempotency check
-    (IndexWriter.cs:179-255 only consults recent commits). Nothing is ever
-    O(log size) on the driver. A stream's metadata document and deletion
-    state come from the store's one metadata snapshot
+    recent-event-ids load on first touch of that stream via the stream
+    ``lookup`` (pyarrow on the driver, pruned by row-group statistics,
+    no Spark job) — the analog of the reference's LRU last-event-number
+    cache (IndexBackend) plus its bounded near-head idempotency check
+    (IndexWriter.cs:179-255 only consults recent commits). Nothing is
+    ever O(log size) on the driver. A stream's metadata document and
+    deletion state come from the store's one metadata snapshot
     (``metadata_snapshot``), which engine reads share — the reference's
     one stream-metadata cache in IndexBackend.
 
@@ -53,7 +54,8 @@ contiguous blocks allocated on the driver from one tiny per-stream count —
 no ``collect()`` of event rows ever happens.
 
 Readers never coordinate with the writer: they read a manifest file list
-through ``read_files`` (``load()`` here).
+through ``read_files`` (``load()`` here) as a Spark scan, or one stream of
+it through ``lookup`` on the driver.
 """
 
 from __future__ import annotations
@@ -66,6 +68,7 @@ import warnings
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -424,8 +427,8 @@ class EventLogWriter:
 
     def _stream_state(self, stream_id: str) -> int:
         """The last event number of a stream, loading it from the log on
-        first touch via one pruned per-stream scan bounded to the
-        IDEMPOTENCY_WINDOW most recent events.
+        first touch via one stream ``lookup`` (no Spark job), of which the
+        IDEMPOTENCY_WINDOW most recent events are kept.
 
         The cache is only authoritative when the id map is loaded too:
         ``append_df`` maintains ``_stats`` (numbering) but not ``_ids``
@@ -447,21 +450,15 @@ class EventLogWriter:
             and self._cache_gen.get(stream_id, 0) == gen
         ):
             return st
-        rows = []
-        if self._has_files():
-            rows = (
-                self.load()
-                .where(F.col("stream_id") == stream_id)
-                .orderBy(F.col("event_number").desc())
-                .limit(IDEMPOTENCY_WINDOW)
-                .select("event_number", "event_id")
-                .collect()
-            )
-        last = int(rows[0]["event_number"]) if rows else NO_STREAM
-        # latest position wins for a re-committed id (rows arrive DESC;
+        rows = (lookup(self.path, manifest.snapshot_files(self.path), stream_id,
+                       columns=["event_number", "event_id"])
+                .sort_by([("event_number", "descending")])
+                .slice(0, IDEMPOTENCY_WINDOW).to_pylist())
+        last = rows[0]["event_number"] if rows else NO_STREAM
+        # latest position wins for a re-committed id (rows are DESC;
         # build ASC so the most recent commit overwrites) — matches
         # _remember_id's append-time bookkeeping
-        ids = {r["event_id"]: int(r["event_number"]) for r in reversed(rows)}
+        ids = {r["event_id"]: r["event_number"] for r in reversed(rows)}
         with self._cache_lock:
             if (stream_id not in self._ids
                     or self._cache_gen.get(stream_id, -1) < gen):
@@ -833,7 +830,6 @@ class EventLogWriter:
         The commit that triggered this is already acknowledged, so a
         failed merge fails nothing: it removes its output and leaves the
         tail for the next commit. An interrupt propagates."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         core = self._core
@@ -1072,15 +1068,6 @@ class EventLogWriter:
                 self._core.meta_gen += 1
             self._notify_commit()
 
-    # pyarrow schema mirroring EVENTS_SCHEMA (timestamp µs UTC — what
-    # Spark's TimestampType reads back bit-identically).
-    _ARROW_FIELDS = (
-        ("log_position", "int64"), ("stream_id", "string"), ("category", "string"),
-        ("event_number", "int64"), ("event_id", "string"), ("event_type", "string"),
-        ("data", "string"), ("metadata", "string"), ("created", "ts"),
-        ("is_json", "bool"),
-    )
-
     def _commit(self, rows: list[tuple]) -> None:
         """Write one commit file directly with pyarrow on the driver — the
         StorageWriterService analog: the single writer appends to the log
@@ -1090,18 +1077,12 @@ class EventLogWriter:
         never needs an executor.) Readers see the file atomically: written
         dot-prefixed (ignored by Spark's file index), then renamed in.
         """
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        types = {
-            "int64": pa.int64(), "string": pa.string(), "bool": pa.bool_(),
-            "ts": pa.timestamp("us", tz="UTC"),
-        }
-        schema = pa.schema([(n, types[t]) for n, t in self._ARROW_FIELDS])
         cols = list(zip(*rows))
         table = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
-            schema=schema,
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, ARROW_SCHEMA)],
+            schema=ARROW_SCHEMA,
         )
         name = f"part-writer-{rows[-1][0]:020d}-{uuid.uuid4().hex[:8]}.parquet"
         tmp = os.path.join(self.path, "." + name + ".tmp")
@@ -1229,6 +1210,41 @@ class EventLogWriter:
                 "(never published, or removed by vacuum)"
             )
         return read_files(self.spark, self.path, files)
+
+
+# EVENTS_SCHEMA in Arrow: the schema of the files the writer writes and of
+# every ``lookup``. ``created`` is µs UTC, what Spark's TimestampType reads
+# back bit-identically.
+ARROW_SCHEMA = pa.schema([
+    (f.name, {"bigint": pa.int64(), "string": pa.string(), "boolean": pa.bool_(),
+              "timestamp": pa.timestamp("us", tz="UTC")}[f.dataType.simpleString()])
+    for f in EVENTS_SCHEMA.fields
+])
+
+
+def lookup(path: str, names: list[str], stream_id: str,
+           event_number: int | None = None,
+           columns: list[str] | None = None) -> pa.Table:
+    """The rows of one stream (its event ``event_number`` only, when
+    given) in the log files ``names`` of the log at ``path``, in no
+    order: read on the driver with pyarrow, so no Spark job runs — the
+    reference's index lookups (IndexReader.ReadEvent,
+    GetStreamLastEventNumber). The filter prunes row groups by their
+    ``stream_id``/``event_number`` statistics. Every file reads under
+    ``ARROW_SCHEMA``; Spark's INT96 ``created`` is read as µs.
+    Archive-aware like ``read_files``. The rows come as one chunk:
+    PySpark 4.1's ``createDataFrame`` returned no rows for a table whose
+    first record batches (one per file) were empty."""
+    import pyarrow.dataset as ds
+
+    where = ds.field("stream_id") == stream_id
+    if event_number is not None:
+        where &= ds.field("event_number") == event_number
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
+    return ds.dataset(manifest.resolve_files(path, names), schema=ARROW_SCHEMA,
+                      format=fmt).to_table(columns=columns,
+                                           filter=where).combine_chunks()
 
 
 def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:

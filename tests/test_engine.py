@@ -77,13 +77,15 @@ def test_metadata_dimension_is_one_aggregate(engine):
     latest `$$X` document per stream, and a tombstone that wins over
     metadata. Reads over a store with metadata stay within these Spark
     job counts, page collect included, once the metadata snapshot is
-    warm: read_event 1 (a max_count stream adds a top-1 head probe: 2),
-    backward read_stream_page 2 (that head probe and the page) and
-    read_all_page 5 (the join's broadcasts and max_count heads, in the
-    one page query; 2 once no stream has a max_count). Joining a freshly
-    aggregated dimension on every read, with two eager aggregates per
-    page, ran 7, 22 and 22 here; a bounds query run apart from the
-    collect ran 2, 4 and 11 (5 without a max_count)."""
+    warm: read_event 0 (a stream lookup on the driver, the max_count
+    head included), backward read_stream_page 1 (the page; its max_count
+    head is a stream lookup) and read_all_page 5 (the join's broadcasts
+    and max_count heads, in the one page query; 2 once no stream has a
+    max_count). Joining a freshly aggregated dimension on every read,
+    with two eager aggregates per page, ran 7, 22 and 22 here; a bounds
+    query run apart from the collect ran 2, 4 and 11 (5 without a
+    max_count); a Spark point read and a top-1 head probe ran 2, 2 and
+    5."""
     engine.set_stream_metadata("account-1", max_count=1)
     engine.set_stream_metadata("account-2", truncate_before=0)
     engine.set_stream_metadata("account-2", truncate_before=1, acl={"$r": ["ops"]})
@@ -100,7 +102,7 @@ def test_metadata_dimension_is_one_aggregate(engine):
     engine.read_event("account-1", 1).collect()  # warms the snapshot
     got = {k: _read_jobs(engine.spark, read)
            for k, read in _read_kinds(engine).items()}
-    caps = {"read_event": 2, "read_stream_page": 2, "read_all_page": 5}
+    caps = {"read_event": 0, "read_stream_page": 1, "read_all_page": 5}
     assert all(got[k] <= caps[k] for k in caps), got
     # once no stream has a max_count, a $all page skips the head branch
     engine.set_stream_metadata("account-1", max_age_seconds=3600)
@@ -110,15 +112,38 @@ def test_metadata_dimension_is_one_aggregate(engine):
 
 def test_reads_without_metadata_are_one_pruned_scan(engine):
     """On a store without metadata a read runs no join and no dimension
-    aggregate: after one warm-up read, each read is one Spark job, a
+    aggregate: after one warm-up read, each page read is one Spark job, a
     page's collect included, since the page query runs once and its
-    rows are served back as a local relation (the per-read dimension
-    rebuild ran 5, 16 and 16 here, a bounds query plus the collect 1, 3
-    and 3)."""
+    rows are served back as a local relation, and a point read runs none
+    (the per-read dimension rebuild ran 5, 16 and 16 here, a bounds
+    query plus the collect 1, 3 and 3, a Spark point read 1)."""
     engine.read_event("account-1", 1).collect()
     got = {k: _read_jobs(engine.spark, read)
            for k, read in _read_kinds(engine).items()}
-    assert got == {"read_event": 1, "read_stream_page": 1, "read_all_page": 1}
+    assert got == {"read_event": 0, "read_stream_page": 1, "read_all_page": 1}
+
+
+def test_empty_forward_page_of_a_missing_stream_is_one_job(engine):
+    """A forward page from event 0 that comes back empty shows the
+    stream has no visible events, so its head is -1 with no head probe:
+    the page is the one Spark job, and the read still says NoStream (it
+    ran 2 while the NoStream check probed the head)."""
+    engine.read_event("account-1", 1).collect()  # warms the snapshot
+
+    def read():
+        page = engine.read_stream_page("nope-1")
+        page.events.collect()
+        return (page.result, page.next_event_number, page.last_event_number,
+                page.is_end_of_stream)
+
+    assert _read_jobs(engine.spark, read) == 1
+    assert read() == ("NoStream", 0, -1, True)
+    # an empty forward page from further on still probes the head
+    assert _read_jobs(engine.spark,
+                      lambda: engine.read_stream_page("account-1", 5)) == 2
+    page = engine.read_stream_page("account-1", 5)
+    assert (page.result, page.next_event_number, page.last_event_number,
+            page.is_end_of_stream) == ("Success", 2, 1, True)
 
 
 def test_page_head_is_probed_once_on_first_read(engine):
@@ -201,9 +226,10 @@ def test_metadata_snapshot_follows_every_change(engine, spark):
 
 def test_first_touch_append_reads_the_shared_snapshot(engine, spark):
     """With the metadata snapshot warm, a first-touch append to an
-    existing stream runs one job, its per-stream state scan: the commit
-    check reads deletion state from the snapshot the engine's reads use
-    (a separate metastream probe made it 2)."""
+    existing stream runs no Spark job: the commit check reads deletion
+    state from the snapshot the engine's reads use (a separate
+    metastream probe made it 2), and the stream's state comes from a
+    stream lookup on the driver (a Spark scan made it 1)."""
     from eventstore_spark.writer import EventLogWriter
 
     engine.set_stream_metadata("account-2", max_count=3)
@@ -211,7 +237,7 @@ def test_first_touch_append_reads_the_shared_snapshot(engine, spark):
     w = EventLogWriter(spark, engine.path)  # nothing cached per stream
     jobs = _read_jobs(spark, lambda: w.append(
         "account-1", [ProposedEvent("Deposited", "{}")]))
-    assert jobs <= 1, jobs
+    assert jobs == 0, jobs
     assert [r.event_number for r in engine.read_stream("account-1").collect()] \
         == [0, 1, 2]
 
@@ -219,14 +245,15 @@ def test_first_touch_append_reads_the_shared_snapshot(engine, spark):
 def test_append_df_of_ordinary_rows_keeps_the_snapshot(engine, spark):
     """A bulk append that writes no `$$` row and no tombstone leaves the
     metadata dimension as it was, so the next read reuses the warm
-    snapshot: one job (recollecting it after every bulk append ran 3)."""
+    snapshot: a point read runs no job (recollecting the snapshot after
+    every bulk append ran 3 with a Spark point read)."""
     engine.set_stream_metadata("account-2", max_count=3)
     engine.read_event("account-1", 1).collect()  # warms the snapshot
     engine.writer.append_df(spark.createDataFrame(
         [("big-ops", "Big", "{}", None, "bulk-1")],
         "stream_id string, event_type string, data string, "
         "metadata string, event_id string"))
-    assert _read_jobs(spark, lambda: engine.read_event("account-1", 1).collect()) <= 1
+    assert _read_jobs(spark, lambda: engine.read_event("account-1", 1).collect()) == 0
     assert engine.read_stream("big-ops").count() == 1
 
 

@@ -1037,23 +1037,24 @@ def test_structural_append_validation(log):
     assert log.append("$oddball", [ProposedEvent("A", "{}")]) == 0
 
 
-def _pin_reader_scan(monkeypatch, w):
-    """Patch ``w.load`` so a call from the thread registered in the
-    returned list blocks AFTER its snapshot is pinned, until ``release``
-    is set; ``pinned`` is set once it blocks."""
+def _pin_reader_scan(monkeypatch, owner, name):
+    """Patch the log read ``owner.<name>`` (a writer's ``load``, or the
+    writer module's stream ``lookup``) so a call from the thread
+    registered in the returned list blocks AFTER its snapshot is pinned,
+    until ``release`` is set; ``pinned`` is set once it blocks."""
     import threading
 
     pinned, release, readers = threading.Event(), threading.Event(), []
-    orig = w.load
+    orig = getattr(owner, name)
 
-    def load():
-        df = orig()
+    def read(*args, **kwargs):
+        got = orig(*args, **kwargs)
         if threading.get_ident() in readers:
             pinned.set()
             release.wait(60)
-        return df
+        return got
 
-    monkeypatch.setattr(w, "load", load)
+    monkeypatch.setattr(owner, name, read)
     return pinned, release, readers
 
 
@@ -1078,21 +1079,28 @@ def _run_pinned(readers, pinned, release, read, write):
 
 
 def test_cold_state_scan_racing_an_append_keeps_numbering(log, monkeypatch):
-    """A reader's cold ``_stream_state`` scan pins the log, an append to
-    the same stream commits, then the scan finishes: the reader's stale
-    head must not be cached as current. (Reading the generation after the
-    scan cached it, and the next append reused event number 1.)"""
+    """A reader's cold ``_stream_state`` lookup pins the log, an append
+    to the same stream commits, through the reader's writer object and
+    then through another one on the path, then the lookup finishes: the
+    reader's stale head must not be cached as current. (Reading the
+    generation after the lookup cached it after the other object's
+    append, and the next append reused event number 2; after an append
+    through the same object, that append's own state wins either way.)"""
+    from eventstore_spark import writer
+
     log.append("s-1", [ProposedEvent("E", "{}")])
-    log._stats.clear()
-    log._ids.clear()
-    pinned, release, readers = _pin_reader_scan(monkeypatch, log)
-    _run_pinned(readers, pinned, release,
-                lambda: log.last_event_number("s-1"),
-                lambda: log.append("s-1", [ProposedEvent("E", "{}")]))
+    other = EventLogWriter(log.spark, log.path)
+    for w in (log, other):
+        log._stats.clear()
+        log._ids.clear()
+        pinned, release, readers = _pin_reader_scan(monkeypatch, writer, "lookup")
+        _run_pinned(readers, pinned, release,
+                    lambda: log.last_event_number("s-1"),
+                    lambda: w.append("s-1", [ProposedEvent("E", "{}")]))
     log.append("s-1", [ProposedEvent("E", "{}")])
     got = sorted(r.event_number for r in
                  log.load().where("stream_id = 's-1'").collect())
-    assert got == [0, 1, 2]
+    assert got == [0, 1, 2, 3]
 
 
 def test_cold_meta_scan_racing_a_soft_delete_keeps_recreate(log, monkeypatch):
@@ -1105,7 +1113,7 @@ def test_cold_meta_scan_racing_a_soft_delete_keeps_recreate(log, monkeypatch):
 
     log.append("s-1", [ProposedEvent("E", "{}")])
     log.append("$$s-1", [ProposedEvent("$metadata", '{"$tb": 0}')])
-    pinned, release, readers = _pin_reader_scan(monkeypatch, log)
+    pinned, release, readers = _pin_reader_scan(monkeypatch, log, "load")
     _run_pinned(readers, pinned, release,
                 log.metadata_snapshot,
                 lambda: log.soft_delete("s-1"))
