@@ -48,6 +48,7 @@ from .sources import readers as R
 from .streaming.continuous import run_continuous
 from .streaming.persistent import PersistentSubscription, PersistentSubscriptionSettings
 from .streaming.subscriptions import (
+    committed_position,
     start_all_with_checkpoints,
     subscribe_all,
     subscribe_stream,
@@ -725,7 +726,6 @@ class EventStoreEngine:
                                event_filter: EventFilter | None = None,
                                from_position: int = 0,
                                available_now: bool = False,
-                               max_files_per_trigger: int | None = None,
                                resolve_link_tos: bool = False):
         """U1 $all subscription with IN-BAND CaughtUp/FellBehind markers
         — the reference enumerator's default contract (streams.proto:
@@ -742,7 +742,6 @@ class EventStoreEngine:
             checkpoint_location=checkpoint_location,
             event_filter=event_filter, from_position=from_position,
             available_now=available_now,
-            max_files_per_trigger=max_files_per_trigger,
             resolve_link_tos=resolve_link_tos,
         )
 
@@ -1234,6 +1233,7 @@ class EventStoreEngine:
             .writeStream.outputMode("append").foreachBatch(sink)
         )
         if checkpoint_dir:
+            committed_position(checkpoint_dir)  # a file-source one fails
             w = w.option("checkpointLocation", checkpoint_dir)
         q = w.start()
         self._system_links_query = q
@@ -1523,6 +1523,7 @@ class EventStoreEngine:
 
             w = out.writeStream.outputMode("update").foreachBatch(sink)
             if checkpoint_dir:
+                committed_position(checkpoint_dir)  # a file-source one fails
                 w = w.option("checkpointLocation", checkpoint_dir)
             mp.query = w.start()
             return mp.query

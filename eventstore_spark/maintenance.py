@@ -31,14 +31,13 @@ them, so a reader that pinned the previous snapshot never hits
 FileNotFound mid-scan. Single-writer invariant still applies (no
 concurrent appends during the rewrite).
 
-Subscriptions stay exactly-once across maintenance (round-5): although a
-Structured-Streaming source tails the raw directory and cannot pin a
-manifest, every subscription filters rows by file attribution —
-superseded-at-start files and rewrite generations published after start
-are excluded (``streaming.subscriptions._maintenance_safe_predicate``),
-so a subscription may start inside the rewrite→vacuum window, or run
-across a rewrite, and still observe each surviving event exactly once —
-the same guarantee the reference's chunk switch-over gives its readers
+Subscriptions stay exactly-once across maintenance: a subscription's
+offset is a log position, which no rewrite changes, and each micro-batch
+reads its position range from the manifest's files
+(``streaming.subscriptions.LogSource``). So a subscription may start
+inside the rewrite→vacuum window, run across a rewrite, or restart after
+one, and still observe each surviving event exactly once — the same
+guarantee the reference's chunk switch-over gives its readers
 (Scavenger.cs:19,199).
 
 Concurrency (round-5): manifest publication is a CAS on the generation
@@ -63,7 +62,7 @@ from . import manifest
 from .manifest import vacuum  # noqa: F401  (public maintenance surface)
 from .operators.retention import metadata_dimension, visible_events
 from .schema import EVENTS_SCHEMA, MAX_LONG, METASTREAM_PREFIX
-from .writer import _core_for, read_files
+from .writer import _core_for, log_head, read_files
 
 
 def _read_snapshot(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
@@ -411,8 +410,6 @@ def archive_cold(path: str, archive_base: str,
 
     Only data files are archived; manifests stay local (the reference
     likewise keeps PTables/scavenge.db local, archiving.md)."""
-    import pyarrow.parquet as pq
-
     seq, files = manifest.latest(path)
     if seq < 0:
         raise ValueError(
@@ -427,17 +424,8 @@ def archive_cold(path: str, archive_base: str,
         )
     done = set(cfg.get("files", []))
 
-    def max_pos(name: str) -> int:
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        mx = 0
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(0).statistics  # log_position
-            if st is not None and st.has_min_max:
-                mx = max(mx, int(st.max))
-        return mx
-
     local = [f for f in files if os.path.exists(os.path.join(path, f))]
-    by_pos = sorted((max_pos(f), f) for f in local)
+    by_pos = sorted((log_head(path, [f]), f) for f in local)
     if up_to_position is not None:
         cold = [(p, f) for p, f in by_pos if p <= up_to_position]
     else:
@@ -721,8 +709,8 @@ def redact_events(spark: SparkSession, path: str, targets: list[str]) -> dict:
     staging = path.rstrip("/") + f"._redact_{int(time.time() * 1000)}"
     redacted.coalesce(max(len(affected), 1)).write.mode("overwrite").parquet(staging)
     # one rename/publish/unwind implementation for ALL rewrites — the
-    # subscription rewrite-file-name contract (part-<tag>-<epoch_ms>-)
-    # and the conflict unwind live in manifest.publish_rewrite alone
+    # rewrite file names (part-<tag>-<epoch_ms>-) and the conflict
+    # unwind live in manifest.publish_rewrite alone
     new_names = _publish_rewrite(path, staging, "redact", base_seq, keep=keep)
     # The superseded files' ARCHIVE copies must go too (ADVICE r5): a
     # redaction that leaves the unredacted bytes readable in the cold

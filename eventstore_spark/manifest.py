@@ -187,25 +187,9 @@ def replace_snapshot(path: str, files: list[str],
 
 
 # The tags of rewrite output names, ``part-<tag>-<epoch_ms>-…``: the
-# maintenance jobs and the writer's tail merge. Subscriptions read the
-# publish time out of such a name (``streaming.subscriptions``).
+# maintenance jobs and the writer's tail merge. Only the name says which
+# job wrote a file; readers and subscriptions go by manifest and position.
 REWRITE_TAGS = ("scavenge", "optimize", "redact", "merge")
-# parquet footer key of a tail-merge output: the JSON list of the writer
-# commit files whose events it holds (``merged_from``)
-MERGED_FROM = b"eventstore.merged_from"
-
-
-def merged_from(path: str, name: str) -> list[str]:
-    """The commit files whose events the tail-merge output ``name`` of
-    the log at ``path`` holds, through every earlier merge it took in,
-    read from its parquet footer (hot or cold tier); [] for any other
-    file."""
-    import pyarrow.parquet as pq
-
-    if not name.startswith("part-merge-"):
-        return []
-    md = pq.read_schema(resolve_files(path, [name])[0]).metadata or {}
-    return json.loads(md.get(MERGED_FROM, b"[]"))
 
 
 def publish_rewrite(path: str, staged: list[str], tag: str, base_seq: int,
@@ -303,14 +287,9 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
     current manifest and every not-yet-drained generation, so
     ``events_at`` keeps working for every generation whose JSON still
     exists. This is the contract the reference's scavenger honors — old
-    chunks unlink only after readers drain (Scavenger.cs:199).
-
-    The commit files a tail-merge output of a retained generation holds
-    (``merged_from``) are kept with it: they, not the merge output, are
-    the copy a subscription delivers those events from
-    (``streaming.subscriptions._delivering``), so they leave the disk
-    only once a maintenance rewrite has superseded the merge output and
-    its generation has drained."""
+    chunks unlink only after readers drain (Scavenger.cs:199). A tail
+    merge's commit files drain like any other superseded file:
+    subscriptions read by log position, which a merge never changes."""
     gens = history(path)
     if not gens:
         return {"removed": 0, "manifests_removed": 0, "archive_removed": 0}
@@ -329,8 +308,6 @@ def vacuum(path: str, grace_s: float = 3600.0) -> dict:
                 drained.append(seq)
                 continue
         keep.update(files_at(path, seq) or [])
-    for name in [n for n in keep if n.startswith("part-merge-")]:
-        keep.update(merged_from(path, name))
     removed = 0
     for n in _listing(path):
         if n in keep:

@@ -75,9 +75,8 @@ from dataclasses import asdict, dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from ..manifest import snapshot_files
-from ..sources import readers as R
-from ..writer import read_files
-from .subscriptions import subscribe_all
+from ..writer import log_head
+from .subscriptions import committed_position, subscribe_all
 
 SYSTEM_DIR = "_connectors"
 
@@ -611,10 +610,7 @@ class ConnectorManager:
             else:
                 # the snapshot, not the hot directory: archived history
                 # whose local copies were dropped still counts
-                tail = R.head(read_files(self.spark, self.log_path,
-                                         snapshot_files(self.log_path)),
-                              "log_position")
-                fp = int(tail) + 1 if tail is not None else 0
+                fp = log_head(self.log_path, snapshot_files(self.log_path)) + 1
                 with open(sp_file, "w") as fh:
                     fh.write(str(fp))
         # settings.md filter-expression note: scope specified with NO
@@ -632,6 +628,7 @@ class ConnectorManager:
         if st.transform:
             src = _apply_transform(src, st.transform)
         ck = os.path.join(self._dir(name), "checkpoint")
+        committed_position(ck)  # a file-source checkpoint fails here
         w = src.writeStream.outputMode("append").option("checkpointLocation", ck)
         if st.sink == "parquet":
             q = w.format("parquet").option(

@@ -239,10 +239,12 @@ class PersistentSubscription:
         """Messages matching this group's selector NOT yet pulled into the
         delivery buffer — the per-group behind-count the reference's
         subscription statistics expose (PersistentSubscription.cs
-        statistics / FellBehind pressure; round 6, the group-level
-        counterpart of ``subscriptions.subscription_backlog``). One
-        pruned range count; the buffer itself is bounded by
-        read_batch_size, so this is the unbounded-side observable."""
+        statistics / FellBehind pressure; round 6). One pruned range
+        count of matching events; ``subscriptions.subscription_backlog``
+        is the catch-up counterpart, which counts every committed event
+        past a subscription's checkpoint from footers, with no job. The
+        buffer itself is bounded by read_batch_size, so this is the
+        unbounded-side observable."""
         self._ensure_checkpoint_loaded()
         return int(
             self._selected()

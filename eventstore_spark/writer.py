@@ -36,7 +36,8 @@ atomic columnar commit:
     so the number of files a read opens stays bounded however many
     commits came before;
   * writer state is LAZY and BOUNDED: opening a writer reads exactly one
-    scalar (max log_position) from the log; per-stream last-event-number /
+    scalar (max log_position) from the log files' footers (``log_head``,
+    no Spark job); per-stream last-event-number /
     recent-event-ids load on first touch of that stream via the stream
     ``lookup`` (pyarrow on the driver, pruned by row-group statistics,
     no Spark job) — the analog of the reference's LRU last-event-number
@@ -69,6 +70,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -84,7 +86,6 @@ from .schema import (
     query_scope,
     scoped_cache,
 )
-from .sources import readers as R
 
 # ExpectedVersion sentinel values (Data/ExpectedVersion.cs:6-13)
 ANY = -2
@@ -419,11 +420,10 @@ class EventLogWriter:
     def _has_files(self) -> bool:
         return bool(manifest.snapshot_files(self.path))
 
-    # -- recovery: one scalar read, never a full-log collect --
+    # -- recovery: the head from footers, never a Spark job --
     def _recover(self) -> None:
-        if not self._has_files():
-            return
-        self._last_position = int(R.head(self.load(), "log_position", 0))
+        self._last_position = log_head(self.path,
+                                       manifest.snapshot_files(self.path))
 
     def _stream_state(self, stream_id: str) -> int:
         """The last event number of a stream, loading it from the log on
@@ -823,9 +823,7 @@ class EventLogWriter:
         publish it with the rewrite CAS (``manifest.publish_rewrite``).
         Pyarrow on the driver, like ``_commit``: no Spark job. No row
         changes, so ``meta_gen`` stays. Bulk ``append_df`` files and
-        maintenance outputs are never touched. The output's footer names
-        the commit files whose events it holds, through the merge outputs
-        it took in (``manifest.merged_from``); ``vacuum`` keeps those.
+        maintenance outputs are never touched.
 
         The commit that triggered this is already acknowledged, so a
         failed merge fails nothing: it removes its output and leaves the
@@ -852,13 +850,9 @@ class EventLogWriter:
         try:
             table = pa.concat_tables(
                 pq.read_table(os.path.join(self.path, f)) for f in tail)
-            commits = [c for f in tail
-                       for c in manifest.merged_from(self.path, f) or [f]]
             pq.write_table(
                 table.sort_by([("stream_id", "ascending"),
-                               ("event_number", "ascending")])
-                .replace_schema_metadata(
-                    {manifest.MERGED_FROM: json.dumps(commits)}),
+                               ("event_number", "ascending")]),
                 tmp, compression="snappy")
             merged = set(tail)
             core.manifest_seq, _ = manifest.publish_rewrite(
@@ -954,6 +948,8 @@ class EventLogWriter:
                 r["stream_id"]
                 for r in b.select("stream_id").distinct().limit(10_001).collect()
             ]
+            if not sids:
+                return  # an empty batch: nothing to number or write
             if len(sids) <= 10_000:
                 log = log.where(F.col("stream_id").isin(sids))
             b = b.join(log, ["stream_id", "event_id"], "left_anti")
@@ -1222,6 +1218,58 @@ ARROW_SCHEMA = pa.schema([
 ])
 
 
+# (log path, file name) -> the file's (min, max) log_position, or None
+# when it has no rows; a log file never changes once written
+_RANGES: dict[tuple[str, str], tuple[int, int] | None] = {}
+
+
+def position_range(path: str, name: str) -> tuple[int, int] | None:
+    """The (min, max) ``log_position`` of the log file ``name`` of the log
+    at ``path``, None when it has no rows: from the row-group statistics
+    of its parquet footer, or from its ``log_position`` column when a
+    row group with rows has none. Archive-aware, no Spark job, and read
+    once per file and process."""
+    key = (path, name)
+    if key not in _RANGES:
+        import pyarrow.parquet as pq
+
+        f = pq.ParquetFile(manifest.resolve_files(path, [name])[0])
+        md = f.metadata
+        col = f.schema_arrow.get_field_index("log_position")
+        stats = [md.row_group(i).column(col).statistics
+                 for i in range(md.num_row_groups)
+                 if md.row_group(i).num_rows]
+        if not stats:
+            _RANGES[key] = None
+        elif all(st is not None and st.has_min_max for st in stats):
+            _RANGES[key] = (min(int(st.min) for st in stats),
+                            max(int(st.max) for st in stats))
+        else:
+            mm = pc.min_max(f.read(columns=["log_position"]).column(0))
+            _RANGES[key] = (mm["min"].as_py(), mm["max"].as_py())
+    return _RANGES[key]
+
+
+def log_head(path: str, names: list[str]) -> int:
+    """The largest ``log_position`` in the log files ``names`` of the log
+    at ``path``, 0 when they hold no event: the log's head, read from
+    footers (``position_range``)."""
+    return max((r[1] for n in names if (r := position_range(path, n))),
+               default=0)
+
+
+def arrow_dataset(path: str, names: list[str]):
+    """The log files ``names`` of the log at ``path`` as one
+    ``pyarrow.dataset`` under ``ARROW_SCHEMA``, archive-aware like
+    ``read_files``; Spark's INT96 ``created`` reads as µs."""
+    import pyarrow.dataset as ds
+
+    fmt = ds.ParquetFileFormat(
+        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
+    return ds.dataset(manifest.resolve_files(path, names), schema=ARROW_SCHEMA,
+                      format=fmt)
+
+
 def lookup(path: str, names: list[str], stream_id: str,
            event_number: int | None = None,
            columns: list[str] | None = None) -> pa.Table:
@@ -1230,21 +1278,17 @@ def lookup(path: str, names: list[str], stream_id: str,
     order: read on the driver with pyarrow, so no Spark job runs — the
     reference's index lookups (IndexReader.ReadEvent,
     GetStreamLastEventNumber). The filter prunes row groups by their
-    ``stream_id``/``event_number`` statistics. Every file reads under
-    ``ARROW_SCHEMA``; Spark's INT96 ``created`` is read as µs.
-    Archive-aware like ``read_files``. The rows come as one chunk:
-    PySpark 4.1's ``createDataFrame`` returned no rows for a table whose
-    first record batches (one per file) were empty."""
+    ``stream_id``/``event_number`` statistics (``arrow_dataset``). The
+    rows come as one chunk: PySpark 4.1's ``createDataFrame`` returned no
+    rows for a table whose first record batches (one per file) were
+    empty."""
     import pyarrow.dataset as ds
 
     where = ds.field("stream_id") == stream_id
     if event_number is not None:
         where &= ds.field("event_number") == event_number
-    fmt = ds.ParquetFileFormat(
-        read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
-    return ds.dataset(manifest.resolve_files(path, names), schema=ARROW_SCHEMA,
-                      format=fmt).to_table(columns=columns,
-                                           filter=where).combine_chunks()
+    return arrow_dataset(path, names).to_table(
+        columns=columns, filter=where).combine_chunks()
 
 
 def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:

@@ -12,11 +12,18 @@ from eventstore_spark.streaming.persistent import (
     PersistentSubscription, PersistentSubscriptionSettings,
 )
 from eventstore_spark.streaming.subscriptions import (
-    EventFilter, start_to_memory, subscribe_all, subscribe_stream,
+    EventFilter, subscribe_all, subscribe_stream,
 )
 from eventstore_spark.streaming.continuous import run_continuous
 from eventstore_spark.projections.dsl import Projection
 from eventstore_spark.writer import EventLogWriter, ProposedEvent
+
+
+def start_to_memory(sub, name, checkpoint_location):
+    """Run a subscription into the in-memory table ``name``."""
+    return (sub.writeStream.outputMode("append").format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint_location).start())
 
 
 @pytest.fixture()
@@ -1165,12 +1172,10 @@ def test_subscription_started_after_tail_merge_sees_each_event_once(
 def test_restarted_subscriptions_see_merged_appends_once(spark, tmp_path):
     """A subscription restarted from its checkpoint after tail merges and
     a ``vacuum`` ran while it was stopped delivers the appends made
-    meanwhile once, and nothing it had read before: without a persisted
-    start (a plain checkpointed query) the merge output does not
-    re-deliver old events, and with one (``start_with_markers``) the
-    merged appends are not dropped. Vacuum keeps every commit file a
-    live merge output holds, so which copy delivers an event does not
-    depend on when vacuum ran."""
+    meanwhile once, and nothing it had read before, whether it is a
+    plain checkpointed query or ``start_with_markers``. Both read by
+    position, so which file holds an event, and when vacuum ran, does
+    not matter."""
     from eventstore_spark.manifest import vacuum
     from eventstore_spark.streaming.subscriptions import (
         start_foreach_batch, start_with_markers,
@@ -1265,6 +1270,114 @@ def test_subscription_starting_inside_a_commit_delivers_it(
     finally:
         q.stop()
         w.close()
+
+
+def test_subscription_restarted_after_a_rewrite_delivers_only_new_events(
+        spark, tmp_path):
+    """A plain checkpointed ``subscribe_all`` drained, then
+    ``optimize_layout`` and one append while it is stopped, then drained
+    again from the same checkpoint, delivers only the new event: the
+    rewrite moved no event's log position."""
+    from eventstore_spark.maintenance import optimize_layout
+    from eventstore_spark.streaming.subscriptions import start_foreach_batch
+
+    path = str(tmp_path / "rplog")
+    w = EventLogWriter(spark, path)
+    for i in range(3):
+        w.append(f"s-{i}", [ProposedEvent("E", json.dumps({"i": i}))])
+    seen = []
+
+    def drain():
+        start_foreach_batch(
+            subscribe_all(spark, path),
+            lambda df, _: seen.extend(r.log_position for r in df.collect()),
+            str(tmp_path / "rpck"), available_now=True).awaitTermination()
+
+    drain()
+    assert sorted(seen) == [1, 2, 3]
+    optimize_layout(spark, path, target_files=1)
+    w.append("s-9", [ProposedEvent("E", "{}")])
+    seen.clear()
+    drain()
+    assert seen == [4]
+    w.close()
+
+
+def test_another_process_commit_is_delivered_once(spark, tmp_path):
+    """A commit by another process, its file renamed into the log before
+    a subscription starts and published with ``manifest.append_files``
+    after it, outside this process's core mutex, is delivered once."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventstore_spark import manifest as M
+    from eventstore_spark.writer import ARROW_SCHEMA
+
+    path = str(tmp_path / "oplog")
+    w = EventLogWriter(spark, path)
+    w.append("s-1", [ProposedEvent("E", '{"i": 0}')])
+    w.close()
+    name = "part-writer-00000000000000000002-foreign0.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([{
+        "log_position": 2, "stream_id": "s-2", "category": "s",
+        "event_number": 0, "event_id": "foreign-0", "event_type": "E",
+        "data": "{}", "metadata": None,
+        "created": datetime.now(timezone.utc), "is_json": True,
+    }], schema=ARROW_SCHEMA), tmp)
+    os.rename(tmp, os.path.join(path, name))
+    q, seen = _collect_positions(subscribe_all(spark, path),
+                                 str(tmp_path / "opck"))
+    try:
+        q.processAllAvailable()
+        assert seen == [1]
+        M.append_files(path, [name])
+        q.processAllAvailable()
+        assert sorted(seen) == [1, 2]
+    finally:
+        q.stop()
+
+
+def test_file_source_checkpoint_fails_loudly(spark, log, tmp_path):
+    """A checkpoint the file source wrote (offset ``{"logOffset": n}``)
+    cannot resume on the position source: restarting on one raises a
+    ``ValueError`` that names the checkpoint before any query starts, and
+    the backlog observable refuses it the same way."""
+    import re
+
+    from eventstore_spark.schema import EVENTS_SCHEMA
+    from eventstore_spark.streaming.subscriptions import (
+        start_foreach_batch, subscription_backlog,
+    )
+
+    ck = str(tmp_path / "fsck")
+    (spark.readStream.schema(EVENTS_SCHEMA).parquet(log.path)
+     .writeStream.foreachBatch(lambda df, _: None)
+     .option("checkpointLocation", ck).trigger(availableNow=True).start()
+     .awaitTermination())
+    with pytest.raises(ValueError, match="restart from a position") as e:
+        start_foreach_batch(subscribe_all(spark, log.path),
+                            lambda df, _: None, ck)
+    assert ck in str(e.value)
+    with pytest.raises(ValueError, match=re.escape(ck)):
+        subscription_backlog(log.path, ck)
+
+
+def test_subscribe_all_plans_on_the_position_source(spark, log):
+    """``subscribe_all`` reads the Python stream source ``LogSource``
+    alone: its one leaf is a V2 streaming relation over it, and the plan
+    holds no file-source scan."""
+    plan = subscribe_all(spark, log.path, EventFilter(
+        event_type_prefixes=("Dep",)), from_position=2,
+        apply_default_filter=True)._jdf.queryExecution().analyzed()
+    leaves = plan.collectLeaves()
+    assert [leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())] == ["StreamingRelationV2"]
+    tree = plan.treeString()
+    assert "PythonDataSourceV2" in tree and "eventstore_log" in tree
+    assert "FileSource" not in tree and "Parquet" not in tree
 
 
 def test_connectors_lifecycle_and_sinks(spark, tmp_path):
@@ -1418,8 +1531,8 @@ def test_custom_sink_contract(spark, tmp_path):
 
 def test_subscription_backlog_fell_behind(spark, log, tmp_path):
     """FellBehind parity (streams.proto CaughtUp/FellBehind): the backlog
-    observable reports committed files the subscription's checkpoint has
-    not processed, and clears after a drain."""
+    observable reports committed events past the position the
+    subscription's checkpoint has committed, and clears after a drain."""
     from eventstore_spark.streaming.subscriptions import (
         start_foreach_batch, subscription_backlog,
     )
@@ -1435,17 +1548,18 @@ def test_subscription_backlog_fell_behind(spark, log, tmp_path):
 
     drain()
     b0 = subscription_backlog(path, ckpt)
-    assert b0["pending_files"] == 0 and not b0["fell_behind"]
-    assert b0["seen_files"] == 3
+    assert b0["pending_events"] == 0 and not b0["fell_behind"]
+    assert b0["position"] == b0["head"] == 3
     # fall behind: three more commits with no query running
     for i in range(3):
         log.append("account-9", [ProposedEvent("Op", f'{{"i": {i}}}')])
     b1 = subscription_backlog(path, ckpt)
-    assert b1["pending_files"] == 3 and b1["fell_behind"]
+    assert b1["pending_events"] == 3 and b1["fell_behind"]
+    assert (b1["position"], b1["head"]) == (3, 6)
     # drain from the same checkpoint → caught up again
     drain()
     b2 = subscription_backlog(path, ckpt)
-    assert b2["pending_files"] == 0 and not b2["fell_behind"]
+    assert b2["pending_events"] == 0 and not b2["fell_behind"]
 
 
 def test_persistent_group_backlog(spark, ps_log):
@@ -1507,9 +1621,9 @@ def test_connector_transformation(spark, tmp_path):
 
 
 def test_subscription_backlog_over_maintenance_rewrite(spark, log, tmp_path):
-    """Backlog across a maintenance rewrite: the rewrite's files count as
-    pending (the subscription scans then row-filters them — honest
-    backlog work, documented over-estimate), and a drain clears them."""
+    """Backlog across a maintenance rewrite: a rewrite moves no event's
+    position, so it adds nothing pending, and a later drain reads
+    nothing."""
     from eventstore_spark.maintenance import optimize_layout
     from eventstore_spark.streaming.subscriptions import (
         start_foreach_batch, subscription_backlog,
@@ -1524,18 +1638,18 @@ def test_subscription_backlog_over_maintenance_rewrite(spark, log, tmp_path):
         q.awaitTermination()
 
     drain()
-    assert subscription_backlog(log.path, ckpt)["pending_files"] == 0
+    assert subscription_backlog(log.path, ckpt)["pending_events"] == 0
     optimize_layout(spark, log.path, target_files=1)
     b = subscription_backlog(log.path, ckpt)
-    assert b["pending_files"] == 1  # the rewrite generation, to be scanned
+    assert b["pending_events"] == 0 and not b["fell_behind"]
     drain()
-    assert subscription_backlog(log.path, ckpt)["pending_files"] == 0
+    assert subscription_backlog(log.path, ckpt)["pending_events"] == 0
 
 
 def test_in_band_caughtup_fellbehind_markers(spark, log, tmp_path):
     """streams.proto:103-106 in-band markers: CaughtUp arrives between
     batches once history drains; a live subscription that falls
-    threshold_files behind gets FellBehind BEFORE the catch-up batch and
+    threshold_events behind gets FellBehind BEFORE the catch-up batch and
     CaughtUp again after recovery — interleaved with deliveries, exactly
     the reference enumerator's message ordering (round 8; the pull-style
     subscription_backlog observable covered the state, not the
@@ -1549,10 +1663,10 @@ def test_in_band_caughtup_fellbehind_markers(spark, log, tmp_path):
         spark, log.path,
         on_batch=lambda df, bid: events.append(df.count()),
         on_marker=lambda kind, bid: markers.append(kind),
-        checkpoint_location=ck, max_files_per_trigger=1)
+        checkpoint_location=ck)
     try:
         q.processAllAvailable()
-        # 3 history files drained (catch-up), ONE CaughtUp at the end
+        # 3 history events drained (catch-up), ONE CaughtUp at the end
         assert sum(events) == 3 and markers == ["CaughtUp"]
         # two commits land while live -> FellBehind precedes the drain,
         # CaughtUp follows it
@@ -1563,9 +1677,8 @@ def test_in_band_caughtup_fellbehind_markers(spark, log, tmp_path):
         assert sum(events) == 5
     finally:
         q.stop()
-    # restart from the checkpoint: seen-files seed means only the delta
-    # is re-read and one recovery CaughtUp fires (no FellBehind below
-    # threshold)
+    # restart from the checkpoint: only the delta is re-read and one
+    # recovery CaughtUp fires (no FellBehind below threshold)
     log.append("account-9", [ProposedEvent("Op", '{"i": 3}')])
     q2 = start_with_markers(
         spark, log.path,
@@ -1651,10 +1764,9 @@ def test_continuous_rejects_include_links_spec(spark, log):
 
 
 def test_markers_caughtup_with_from_position_skipping_whole_files(spark, log, tmp_path):
-    """Round-8 review: a from_position that filters out ALL of an older
-    file's rows must not starve CaughtUp — file progress is credited
-    from the streaming checkpoint's offset log (written before the batch
-    runs), not only from rows that survive the filter."""
+    """Round-8 review: a from_position above every event on disk must
+    not starve CaughtUp — the first (empty) batch already stands at the
+    head."""
     from eventstore_spark.streaming.subscriptions import start_with_markers
 
     # log fixture: 3 files, positions 1..4 (file1 holds position 1)
@@ -1673,10 +1785,9 @@ def test_markers_caughtup_with_from_position_skipping_whole_files(spark, log, tm
 
 
 def test_markers_restart_across_maintenance_rewrite(spark, tmp_path):
-    """Round-8 review: start_with_markers persists its original start
-    time beside the checkpoint, so a maintenance rewrite published
-    BETWEEN stop and restart is excluded by the maintenance-safe
-    predicate — surviving events are not delivered a second time."""
+    """Round-8 review: a maintenance rewrite published BETWEEN stop and
+    restart moves no event's position, so the restarted subscription
+    does not deliver surviving events a second time."""
     from eventstore_spark.engine import EventStoreEngine
     from eventstore_spark.streaming.subscriptions import start_with_markers
 

@@ -1276,35 +1276,89 @@ def test_tail_merge_skips_archived_files(spark, tmp_path):
     w.close()
 
 
-def test_vacuum_keeps_the_commit_files_of_a_live_merge(spark, tmp_path):
-    """A merge output's footer names every commit file whose events it
-    holds, through the merge outputs it took in, and ``vacuum`` keeps
-    those files while a retained generation names the merge output —
-    they are the copy subscriptions deliver. Once a maintenance rewrite
-    supersedes the merge output and its generation drains, they go."""
+def test_vacuum_drains_merged_commit_files(spark, tmp_path):
+    """``vacuum`` drains the commit files a tail merge superseded like any
+    other superseded file, and a subscription restarted from its
+    checkpoint across merges and vacuums still delivers each event
+    once: it reads by log position, which a merge never changes."""
     from eventstore_spark import manifest as M
-    from eventstore_spark.maintenance import optimize_layout
+    from eventstore_spark.streaming.subscriptions import (
+        start_foreach_batch, subscribe_all,
+    )
     from eventstore_spark.writer import TAIL_FILES
 
     path = str(tmp_path / "log")
     w = EventLogWriter(spark, path)
-    n = 3 * TAIL_FILES
-    for i in range(n):
-        w.append(f"s-{i % 2}", [ProposedEvent("E")])
-    commits = _parquet(path, "part-writer-")
-    assert len(commits) == n
-    M.vacuum(path, grace_s=0)
-    assert _parquet(path, "part-writer-") == commits
-    [merge] = [f for f in M.snapshot_files(path) if f.startswith("part-merge-")]
-    assert _parquet(path, "part-merge-") == [merge]  # earlier merges drained
-    held = M.merged_from(path, merge)
-    tail = [f for f in M.snapshot_files(path) if f != merge]
-    assert sorted(held + tail) == commits
+    seen = []
+
+    def drain():
+        start_foreach_batch(
+            subscribe_all(spark, path),
+            lambda df, _: seen.extend(r.log_position for r in df.collect()),
+            str(tmp_path / "ck"), available_now=True).awaitTermination()
+
+    n = 0
+    for _round in range(2):
+        for _ in range(TAIL_FILES + 2):
+            n += 1
+            w.append(f"s-{n % 2}", [ProposedEvent("E")])
+        M.vacuum(path, grace_s=0)
+        assert _parquet(path) == sorted(M.snapshot_files(path))
+        assert len(_parquet(path, "part-writer-")) < TAIL_FILES
+        drain()
+        assert sorted(seen) == list(range(1, n + 1))
     w.close()
-    optimize_layout(spark, path, target_files=1)
-    M.vacuum(path, grace_s=0)
-    assert not _parquet(path, "part-writer-") and not _parquet(path, "part-merge-")
+
+
+def test_writer_opens_over_a_log_with_no_spark_job(spark, tmp_path):
+    """Building an ``EventLogWriter`` over a non-empty log reads the head
+    from parquet footers with no Spark job, also over a file written
+    without statistics (its ``log_position`` column is read), and the
+    next append gets head+1."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventstore_spark.schema import EVENTS_SCHEMA
+    from eventstore_spark.writer import ARROW_SCHEMA
+
+    from .test_engine import _read_jobs
+
+    path = str(tmp_path / "log")
+    spark.createDataFrame(
+        [(p, "s-1", "s", p - 1, f"e{p}", "E", "{}", None, None, True)
+         for p in (1, 2, 3)], EVENTS_SCHEMA).coalesce(1).write.parquet(path)
+    pq.write_table(pa.Table.from_pylist([dict(zip(
+        ARROW_SCHEMA.names, (4, "s-1", "s", 3, "e4", "E", "{}", None, None,
+                             True)))], schema=ARROW_SCHEMA),
+        os.path.join(path, "part-nostats.parquet"), write_statistics=False)
+    box = {}
+    assert _read_jobs(
+        spark, lambda: box.setdefault("w", EventLogWriter(spark, path))) == 0
+    w = box["w"]
+    w.append("s-2", [ProposedEvent("E")])
+    assert sorted(r.log_position for r in w.load().collect()) == [1, 2, 3, 4, 5]
+    w.close()
+
+
+def test_empty_append_df_into_a_log_is_one_job(spark, tmp_path):
+    """An empty bulk batch into a non-empty log (a projection sink's
+    micro-batch that emitted nothing) returns once its stream-set collect
+    comes back empty: one Spark job, and nothing is written."""
+    from pyspark.sql import functions as F
+
+    from eventstore_spark import manifest as M
+
+    from .test_engine import _read_jobs
+
+    path = str(tmp_path / "log")
     w = EventLogWriter(spark, path)
-    assert sorted(r.log_position for r in w.load().collect()) == list(
-        range(1, n + 1))
+    w.append("s-1", [ProposedEvent("E")])
+    gen = M.latest(path)[0]
+    empty = spark.range(3).where(F.col("id") > 5).select(
+        F.lit("s-2").alias("stream_id"), F.lit("E").alias("event_type"),
+        F.lit("{}").alias("data"), F.lit(None).cast("string").alias("metadata"),
+        F.col("id").cast("string").alias("event_id"))
+    assert _read_jobs(spark, lambda: w.append_df(empty)) == 1
+    assert M.latest(path)[0] == gen
+    assert [r.log_position for r in w.load().collect()] == [1]
     w.close()
