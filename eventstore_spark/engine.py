@@ -18,7 +18,6 @@ import shutil
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,7 +53,7 @@ from .streaming.subscriptions import (
     subscribe_stream,
 )
 from .writer import (ANY, NO_STREAM, EventLogWriter, ProposedEvent,
-                     StreamDeletedError, lookup, read_files)
+                     StreamDeletedError, lookup, read_files, stream_head)
 
 
 @dataclass
@@ -412,13 +411,6 @@ class EventStoreEngine:
         return mat.unionByName(tail.select(*mat.columns))
 
     # ----------------------------------------------------------------- reads
-    def _head(self, files: list[str], stream_id: str) -> int | None:
-        """The stream's last event number in the log files ``files``
-        (None when it has no events there): one stream ``lookup``, no
-        Spark job."""
-        got = lookup(self.path, files, stream_id, columns=["event_number"])
-        return pc.max(got["event_number"]).as_py()
-
     def _read_base(self, stream_id: str) -> DataFrame:
         """What a stream read sources from: metastreams (`$$X`) read the
         RAW log — S9 metadata-HISTORY reads; the reference serves
@@ -437,7 +429,7 @@ class EventStoreEngine:
         row = self.writer.metadata_snapshot().get(stream_id)
         files = manifest.snapshot_files(self.path)
         capped = row is not None and row.max_count is not None
-        head = self._head(files, stream_id) if capped else None
+        head = stream_head(self.path, files, stream_id) if capped else None
         return read_files(self.spark, self.path, files).where(
             (F.col("stream_id") == stream_id) & stream_visibility(row, head))
 
@@ -454,7 +446,8 @@ class EventStoreEngine:
                else self.writer.metadata_snapshot().get(stream_id))
         files = manifest.snapshot_files(self.path)
         capped = row is not None and row.max_count is not None
-        head = self._head(files, stream_id) if capped or event_number == -1 else None
+        head = (stream_head(self.path, files, stream_id)
+                if capped or event_number == -1 else None)
         # -1 reads the head; a stream with no head has no rows to read
         got = lookup(self.path, files, stream_id,
                      head if event_number == -1 else event_number)
@@ -1433,19 +1426,16 @@ class EventStoreEngine:
         except (FileNotFoundError, ValueError):
             return []
 
-    def _record_emitted_streams(self, name: str, emitted: DataFrame) -> None:
+    def _record_emitted_streams(self, name: str, sids: list[str]) -> None:
         """Track which streams a projection has emitted into — the analog
         of the reference's `$projections-<name>-emittedstreams` stream
         (EmittedStreamsTracker.cs), consulted by
-        delete_projection(delete_emitted_streams=True). One tiny distinct
-        over the emission batch; the set is merged into a JSON beside the
-        projection's state (capped — a projection emitting into unbounded
-        distinct streams records the cap and deletion falls back to the
-        recorded subset, as the reference's tracker batches do)."""
-        sids = [
-            r[0]
-            for r in emitted.select("stream_id").distinct().limit(10_001).collect()
-        ]
+        delete_projection(delete_emitted_streams=True). ``sids`` are the
+        stream ids ``append_df`` returned for the emission batch, merged
+        into a JSON beside the projection's state with no Spark job
+        (capped — a projection emitting into unbounded distinct streams
+        records the cap and deletion falls back to the recorded subset,
+        as the reference's tracker batches do)."""
         if not sids:
             return
         merged = set(self._emitted_streams(name)) | set(sids)
@@ -1512,8 +1502,8 @@ class EventStoreEngine:
                             f"projection '{name}' called emit/linkTo but "
                             "was created with emit_enabled=False"
                         )
-                    self.writer.append_df(emissions)
-                    self._record_emitted_streams(name, emissions)
+                    self._record_emitted_streams(
+                        name, self.writer.append_df(emissions))
                     (
                         batch_df.where(F.col("kind") == "state")
                         .select("partition", "state", "source_log_position")
@@ -1532,7 +1522,14 @@ class EventStoreEngine:
         # projection reader sees $all pre-visibility; tombstones and
         # soft-delete metastream writes become partition-deleted
         # notifications — StreamDeletedHelper.cs:35-63)
-        mp.last_result = run_batch(mp.spec, self._link_source_events())
+        # The fold runs once: every consumer below reads this eager local
+        # checkpoint of its output. A cache would not hold — each
+        # append_df writes into the log directory, and Spark empties the
+        # cache of every plan that reads under a path it writes to, so
+        # the next consumer re-ran the fold.
+        mp.last_result = ProjectionResult(
+            raw=run_batch(mp.spec, self._link_source_events())
+            .raw.localCheckpoint(eager=True))
         if not mp.emit_enabled and mp.last_result.emitted.limit(1).first():
             mp.last_result = None  # faulted — nothing persisted
             raise RuntimeError(
@@ -1542,8 +1539,8 @@ class EventStoreEngine:
         # emitted events append back to the log with deterministic ids
         # full emitted shape: source_log_position/emit_seq keep emitted
         # streams numbered in fold order (reference appends in order)
-        self.writer.append_df(mp.last_result.emitted)
-        self._record_emitted_streams(name, mp.last_result.emitted)
+        self._record_emitted_streams(
+            name, self.writer.append_df(mp.last_result.emitted))
         # P12/P13 result-stream parity: outputState()/outputTo() materialize
         # the final states as Result events in `$projections-<name>-result`
         # (or the outputTo override) so `read_stream("$projections-…-result")`
@@ -1553,8 +1550,7 @@ class EventStoreEngine:
                 name, mp.spec.result_stream_name,
                 getattr(mp.spec, "partition_result_pattern", None),
             )
-            self.writer.append_df(results)
-            self._record_emitted_streams(name, results)
+            self._record_emitted_streams(name, self.writer.append_df(results))
         # U8 parity: checkpoint stream `$projections-<name>-checkpoint`
         # records the position this run processed up to (the reference
         # persists CheckpointTags there, ProjectionCheckpoint.cs:19,83;

@@ -2012,9 +2012,9 @@ def write_packed_corpus(docs: DataFrame, path: str, ctx_tokens: int = 512,
     BY SHARD, rows arriving in position order within each shard's files
     — the on-disk layout a trainer streams sequentially (shard dir by
     shard dir) and cuts into ``ctx_tokens`` blocks with the
-    :func:`block_manifest` slice arithmetic. The sink counterpart of
-    ``sources/ingest.py``'s readers: crawl → clean → dedup → pack →
-    THIS → training loop.
+    :func:`block_manifest` slice arithmetic: crawl → clean → dedup →
+    pack → THIS → training loop. A trainer task reads one shard with a
+    ``shard = s`` filter, which prunes the other shard directories.
 
     Layout: `<path>/shards/shard=<s>/` with (doc_id, position,
     tok_start, n_tokens, first_block, last_block, text); plus a one-file
@@ -2056,18 +2056,6 @@ def write_packed_corpus(docs: DataFrame, path: str, ctx_tokens: int = 512,
     return {"path": path, "num_shards": num_shards,
             "ctx_tokens": ctx_tokens,
             "n_docs": int(tot[0] or 0), "n_tokens": int(tot[1] or 0)}
-
-
-def read_packed_shard(spark, path: str, shard: int) -> DataFrame:
-    """Read ONE shard of a :func:`write_packed_corpus` layout, in
-    position order — the partition filter prunes every other shard
-    directory (PartitionFilters on the scan), so a trainer task reads
-    exactly its own shard's bytes."""
-    return (
-        spark.read.parquet(f"{path}/shards")
-        .where(F.col("shard") == shard)
-        .orderBy("position")
-    )
 
 
 def crawl_frontier(docs: DataFrame, url_col: str = "url",

@@ -18,9 +18,10 @@ atomic columnar commit:
     so throughput scales with batch size while order stays total;
   * the single-writer invariant is ENFORCED, not just documented
     (round 5). In-process: every writer on one directory shares a
-    ``_PathCore`` (append mutex + position allocator + per-stream cache
-    generations), so two writer objects can never interleave positions
-    or serve stale stream state. Cross-process: a ``_writer.lock`` file
+    ``_PathCore`` (append mutex + the one write head: position counter,
+    stream heads and idempotency window, written only under the mutex),
+    so two writer objects can never interleave positions or serve stale
+    stream state. Cross-process: a ``_writer.lock`` file
     carries (pid, fencing token); a live foreign holder makes writer
     construction raise ``WriterFencedError``, a dead holder's lock is
     stolen atomically, and the token is re-verified before every commit
@@ -179,12 +180,16 @@ class _PathCore:
 
       * ``mutex`` serializes whole commits (one group of queued
         appends, a bulk ``append_df``, writer open and close);
-      * ``last_position`` is the committed head every writer syncs to
-        before allocating, so positions from different writer objects
-        never collide;
-      * ``stream_gen[sid]`` bumps after every commit touching ``sid`` is
-        published; a writer whose cached per-stream state was taken at an
-        older generation reloads from the log before trusting it;
+      * the write head — ``last_position`` (the log head every
+        allocation starts from), ``heads`` (stream → last event number)
+        and ``ids`` (stream → {event_id: event_number} of its
+        IDEMPOTENCY_WINDOW most recent events) — is the log's one
+        last-event-number cache (the reference's IndexBackend). It is
+        written only by a thread holding ``mutex``: the commit group,
+        ``append_df``, ``_rollback``, writer open and close. It starts
+        empty when this process takes the ``_writer.lock`` claim and is
+        dropped when it releases it, so it never outlives the claim
+        under which no other process writes. Readers never fill it;
       * ``meta_gen`` bumps after every publish that can change the
         metadata dimension (a ``$$`` or ``$streamDeleted`` row, a
         rollback, a maintenance rewrite); ``md_snapshot`` holds the
@@ -203,8 +208,7 @@ class _PathCore:
         self.mutex = threading.Lock()
         self.cond = threading.Condition()
         self.epoch = 0
-        self.last_position: int | None = None  # None until first recovery
-        self.stream_gen: dict[str, int] = {}
+        self.drop_head()
         self.meta_gen = 0
         self.md_snapshot: tuple | None = None  # (key, {stream_id: Row})
         self.fence_token: str | None = None
@@ -212,6 +216,12 @@ class _PathCore:
         # base every append publish CASes against (manifest.append_files
         # base_seq). None until the first writer on this path syncs it.
         self.manifest_seq: int | None = None
+
+    def drop_head(self) -> None:
+        """Empty the write head: the claim was just taken or released."""
+        self.last_position: int | None = None  # None until recovered
+        self.heads: dict[str, int] = {}
+        self.ids: dict[str, dict[str, int]] = {}
 
 
 _CORES: dict[str, _PathCore] = {}
@@ -287,6 +297,7 @@ def _acquire_fence(core: _PathCore, timeout_s: float = 0.0) -> None:
         return
     import time as _time
 
+    core.drop_head()  # a new claim starts from the log, not from memory
     lock = os.path.join(core.path, LOCK_FILE)
     token = uuid.uuid4().hex
     payload = json.dumps(
@@ -359,6 +370,7 @@ def _release_fence(core: _PathCore) -> None:
         except FileNotFoundError:
             pass
     core.fence_token = None
+    core.drop_head()
 
 
 class EventLogWriter:
@@ -385,31 +397,12 @@ class EventLogWriter:
         # shared per-directory write head: in-process total-order +
         # cross-process fencing (see _PathCore / _acquire_fence)
         self._core = _core_for(path)
-        self._last_position = 0
-        # stream -> last_event_number; filled lazily per stream
-        # (LRU-cache analog of IndexBackend's last-event-number).
-        self._stats: dict[str, int] = {}
-        # stream -> core.stream_gen value at which _stats/_ids for that
-        # stream were taken; a foreign commit bumps the core gen and
-        # invalidates this writer's cached view of the stream.
-        self._cache_gen: dict[str, int] = {}
-        # stream -> {event_id: event_number}, bounded to the most recent
-        # IDEMPOTENCY_WINDOW events per stream.
-        self._ids: dict[str, dict[str, int]] = {}
-        # guards each check-and-store of the caches above: a reader that
-        # scanned without the core mutex never overwrites state an
-        # appender stored or applied at its own or a newer generation
-        self._cache_lock = threading.Lock()
         if read_only:
             return  # no fence, no recovery scan — reads resolve lazily
         with self._core.mutex:
             _acquire_fence(self._core, timeout_s=lock_timeout_s)
-            self._recover()
-            if self._core.last_position is not None:
-                self._last_position = max(
-                    self._last_position, self._core.last_position
-                )
-            self._core.last_position = self._last_position
+            if self._core.last_position is None:
+                self._recover()
             if self._core.manifest_seq is None:
                 self._core.manifest_seq = manifest.latest(path)[0]
 
@@ -422,53 +415,37 @@ class EventLogWriter:
 
     # -- recovery: the head from footers, never a Spark job --
     def _recover(self) -> None:
-        self._last_position = log_head(self.path,
-                                       manifest.snapshot_files(self.path))
+        self._core.last_position = log_head(
+            self.path, manifest.snapshot_files(self.path))
 
     def _stream_state(self, stream_id: str) -> int:
-        """The last event number of a stream, loading it from the log on
-        first touch via one stream ``lookup`` (no Spark job), of which the
-        IDEMPOTENCY_WINDOW most recent events are kept.
+        """The last event number of a stream from the core's write head,
+        loading it on first touch via one stream ``lookup`` (no Spark
+        job), of which the IDEMPOTENCY_WINDOW most recent events are kept.
+        Called with ``core.mutex`` held: only the mutex holder writes the
+        head, which is emptied with the claim (see ``_PathCore``).
 
-        The cache is only authoritative when the id map is loaded too:
-        ``append_df`` maintains ``_stats`` (numbering) but not ``_ids``
-        (idempotency), so a stream whose ids were invalidated by a bulk
-        append reloads BOTH here — otherwise an idempotent retry through
-        ``append()`` would see an empty id map and dupe or reject.
-
-        Cache validity is generation-checked against the shared core:
-        a commit to this stream through ANOTHER writer object bumps
-        ``core.stream_gen[sid]`` and forces a reload here. The generation
-        is read BEFORE the scan: a commit published during the scan then
-        leaves the loaded state at the older generation, to be reloaded,
-        instead of caching a stale head as current."""
-        gen = self._core.stream_gen.get(stream_id, 0)
-        st = self._stats.get(stream_id)
-        if (
-            st is not None
-            and stream_id in self._ids
-            and self._cache_gen.get(stream_id, 0) == gen
-        ):
-            return st
-        rows = (lookup(self.path, manifest.snapshot_files(self.path), stream_id,
-                       columns=["event_number", "event_id"])
-                .sort_by([("event_number", "descending")])
-                .slice(0, IDEMPOTENCY_WINDOW).to_pylist())
-        last = rows[0]["event_number"] if rows else NO_STREAM
-        # latest position wins for a re-committed id (rows are DESC;
-        # build ASC so the most recent commit overwrites) — matches
-        # _remember_id's append-time bookkeeping
-        ids = {r["event_id"]: r["event_number"] for r in reversed(rows)}
-        with self._cache_lock:
-            if (stream_id not in self._ids
-                    or self._cache_gen.get(stream_id, -1) < gen):
-                self._stats[stream_id] = last
-                self._ids[stream_id] = ids
-                self._cache_gen[stream_id] = gen
-            return self._stats[stream_id]
+        A head is only authoritative when its id map is loaded too:
+        ``append_df`` maintains ``heads`` (numbering) but not ``ids``
+        (idempotency), so a stream whose ids a bulk append dropped
+        reloads BOTH here — otherwise an idempotent retry through
+        ``append()`` would see an empty id map and dupe or reject."""
+        core = self._core
+        if stream_id not in core.heads or stream_id not in core.ids:
+            rows = (lookup(self.path, manifest.snapshot_files(self.path),
+                           stream_id, columns=["event_number", "event_id"])
+                    .sort_by([("event_number", "descending")])
+                    .slice(0, IDEMPOTENCY_WINDOW).to_pylist())
+            core.heads[stream_id] = rows[0]["event_number"] if rows else NO_STREAM
+            # latest position wins for a re-committed id (rows are DESC;
+            # build ASC so the most recent commit overwrites) — matches
+            # _remember_id's append-time bookkeeping
+            core.ids[stream_id] = {r["event_id"]: r["event_number"]
+                                   for r in reversed(rows)}
+        return core.heads[stream_id]
 
     def _remember_id(self, stream_id: str, event_id: str, event_number: int) -> None:
-        known = self._ids.setdefault(stream_id, {})
+        known = self._core.ids.setdefault(stream_id, {})
         known[event_id] = event_number
         if len(known) > 2 * IDEMPOTENCY_WINDOW:  # trim to the recent window
             cutoff = event_number - IDEMPOTENCY_WINDOW
@@ -579,7 +556,7 @@ class EventLogWriter:
             # (StorageWriterService.cs:688-691); a first-position miss
             # with NoStream on a soft-deleted stream → Ok (the recreate
             # path, CheckCommit:255-256).
-            known = self._ids.get(stream_id, {})
+            known = self._core.ids.get(stream_id, {})
             if expected < last and events:
                 for i, ev in enumerate(events):
                     if known.get(ev.event_id) == expected + 1 + i:
@@ -604,7 +581,7 @@ class EventLogWriter:
         # commit again at new positions); known first id requires every
         # id known → idempotent with the replayed batch's own end
         # position, else CorruptedIdempotency → WrongExpectedVersion
-        known = self._ids.get(stream_id, {})
+        known = self._core.ids.get(stream_id, {})
         if events and events[0].event_id in known:
             if all(ev.event_id in known for ev in events):
                 return ("idempotent", known[events[-1].event_id])
@@ -700,9 +677,7 @@ class EventLogWriter:
         a rejected append never dirties state; after a failed physical
         commit the caller rolls ``touched`` streams back to the durable
         log via ``_rollback``."""
-        self._last_position = max(
-            self._last_position, self._core.last_position or 0
-        )
+        core = self._core
         self._validate_sizes(events)
         decision = self._check(stream_id, events, expected_version, applied)
         if decision != "ok":
@@ -717,14 +692,14 @@ class EventLogWriter:
         # later unknown one was already rejected as CorruptedIdempotency)
         first_new = None
         for ev in events:
-            self._last_position += 1
+            core.last_position += 1
             last += 1
             if first_new is None:
                 first_new = last
             self._remember_id(stream_id, ev.event_id, last)
             rows_sink.append(
                 (
-                    self._last_position, stream_id, _category(stream_id), last,
+                    core.last_position, stream_id, _category(stream_id), last,
                     ev.event_id, ev.event_type, ev.data, ev.metadata, now, ev.is_json,
                 )
             )
@@ -737,8 +712,7 @@ class EventLogWriter:
                 # reference's GetStreamRawMeta always reads the latest)
                 owner = stream_id[len(METASTREAM_PREFIX):]
                 applied[owner] = (ev.data, self._metadata_of(owner, applied)[1])
-        self._stats[stream_id] = last
-        self._core.last_position = self._last_position
+        core.heads[stream_id] = last
         # soft-delete recreate: a stream whose $tb == MAX_LONG comes back
         # to life on append — rewrite $tb to the first new number,
         # PRESERVING the rest of the metadata document (SoftUndeleteRawMeta,
@@ -757,20 +731,13 @@ class EventLogWriter:
 
     def _rollback(self, touched: set) -> None:
         """A physical commit failed after state was applied: restore the
-        in-memory view from the DURABLE log — drop the touched streams'
-        caches (they reload lazily), bump their shared generations so
-        sibling writer objects drop theirs too, and re-read the committed
-        head position."""
-        with self._cache_lock:
-            for sid in touched:
-                self._stats.pop(sid, None)
-                self._ids.pop(sid, None)
-                self._cache_gen.pop(sid, None)
-                self._core.stream_gen[sid] = self._core.stream_gen.get(sid, 0) + 1
+        write head from the DURABLE log — drop the touched streams' heads
+        and ids (they reload lazily) and re-read the committed log head."""
+        for sid in touched:
+            self._core.heads.pop(sid, None)
+            self._core.ids.pop(sid, None)
         self._core.meta_gen += 1
-        self._last_position = 0
         self._recover()
-        self._core.last_position = self._last_position
 
     def _commit_group(self, batch: list) -> None:
         """Apply the queued appends in order and commit all their rows as
@@ -804,11 +771,6 @@ class EventLogWriter:
             except BaseException:
                 self._rollback(touched)
                 raise
-            # generations move only once the commit is published: a reader
-            # that read one before (and may have scanned the older
-            # snapshot) reloads, rather than cache stale state at the new one
-            for sid in touched:
-                self._bump_stream_gen(sid)
             if any(r[1].startswith(METASTREAM_PREFIX)
                    or r[5] == STREAM_DELETED_EVENT_TYPE for r in rows):
                 self._core.meta_gen += 1
@@ -889,15 +851,8 @@ class EventLogWriter:
                     raise
                 self._core.manifest_seq = manifest.latest(self.path)[0]
 
-    def _bump_stream_gen(self, stream_id: str) -> None:
-        """Record a commit touching ``stream_id`` in the shared core and
-        mark this writer's own caches as taken at the new generation."""
-        with self._cache_lock:
-            gen = self._core.stream_gen.get(stream_id, 0) + 1
-            self._core.stream_gen[stream_id] = gen
-            self._cache_gen[stream_id] = gen
-
-    def append_df(self, batch: DataFrame, created: datetime | None = None) -> None:
+    def append_df(self, batch: DataFrame,
+                  created: datetime | None = None) -> list[str]:
         """Bulk path: append pre-shaped envelope rows (stream_id,
         event_type, data, metadata, event_id) — used by projection emission
         sinks where event ids are deterministic.
@@ -916,6 +871,10 @@ class EventLogWriter:
         deterministic event_id order. Driver-side numbering state commits
         only AFTER the write succeeds — a failed Spark job leaves the
         writer's dense-numbering invariant intact for the retry.
+
+        Returns the batch's distinct stream ids (at most 10,001 when the
+        log already has files), taken BEFORE the exactly-once dedupe, so
+        a replay that appends nothing still names the streams it touched.
         """
         if self._read_only:
             raise WriterFencedError(
@@ -923,13 +882,11 @@ class EventLogWriter:
                 "the owning writer process"
             )
         with self._core.mutex:
-            self._append_df_locked(batch, created)
+            return self._append_df_locked(batch, created)
 
-    def _append_df_locked(self, batch: DataFrame, created) -> None:
-        _verify_fence(self._core)
-        self._last_position = max(
-            self._last_position, self._core.last_position or 0
-        )
+    def _append_df_locked(self, batch: DataFrame, created) -> list[str]:
+        core = self._core
+        _verify_fence(core)
         order_cols = [
             c for c in ("source_log_position", "emit_seq") if c in batch.columns
         ]
@@ -949,10 +906,12 @@ class EventLogWriter:
                 for r in b.select("stream_id").distinct().limit(10_001).collect()
             ]
             if not sids:
-                return  # an empty batch: nothing to number or write
+                return sids  # an empty batch: nothing to number or write
             if len(sids) <= 10_000:
                 log = log.where(F.col("stream_id").isin(sids))
             b = b.join(log, ["stream_id", "event_id"], "left_anti")
+        else:
+            sids = None  # no dedupe: the counted streams are the batch's
         with query_scope():
             b = scoped_cache(b)
             # one job yields per-stream counts, the size guard (the
@@ -969,22 +928,13 @@ class EventLogWriter:
                 F.max(F.col("event_type") == STREAM_DELETED_EVENT_TYPE)
                 .alias("deletes"),
             ).collect()
+            if sids is None:
+                sids = [r["stream_id"] for r in counts]
             if not counts:
-                return
-            touched = sorted(r["stream_id"] for r in counts)
-            # one batched job fills last-event-number for cold streams; a
-            # stream cached at an older shared generation (written through
-            # another writer object) counts as cold and reloads
-            missing = [
-                s for s in touched
-                if s not in self._stats
-                or self._cache_gen.get(s, 0) != self._core.stream_gen.get(s, 0)
-            ]
-            with self._cache_lock:
-                for s in missing:  # drop stale views before the reload
-                    self._stats.pop(s, None)
-                    self._ids.pop(s, None)
-                    self._cache_gen[s] = self._core.stream_gen.get(s, 0)
+                return sids
+            # one batched job fills last-event-number for cold streams
+            missing = sorted(r["stream_id"] for r in counts
+                             if r["stream_id"] not in core.heads)
             if missing and self._has_files():
                 got = (
                     self.load()
@@ -994,7 +944,7 @@ class EventLogWriter:
                     .collect()
                 )
                 for r in got:
-                    self._stats[r["stream_id"]] = int(r["last"])
+                    core.heads[r["stream_id"]] = int(r["last"])
             # tombstoned streams drop their rows silently below, so they
             # must not trip the size guard either: an oversize event bound
             # for a deleted stream was never going to commit, and aborting
@@ -1009,12 +959,12 @@ class EventLogWriter:
                 )
             by_stream = {r["stream_id"]: int(r["count"]) for r in live}
             alloc = []  # (stream_id, en_base, pos_base)
-            new_last = self._last_position
+            new_last = core.last_position
             for sid in sorted(by_stream):
-                alloc.append((sid, self._stats.setdefault(sid, NO_STREAM), new_last))
+                alloc.append((sid, core.heads.setdefault(sid, NO_STREAM), new_last))
                 new_last += by_stream[sid]
             if not alloc:
-                return
+                return sids
             am = self.spark.createDataFrame(
                 alloc, "stream_id string, en_base long, pos_base long"
             )
@@ -1050,19 +1000,19 @@ class EventLogWriter:
                  if f.endswith(".parquet") and f not in pre],
             )
             # the write committed — only now advance the numbering state
-            self._last_position = self._core.last_position = new_last
+            core.last_position = new_last
             for sid, en_base, _pos in alloc:
-                self._stats[sid] = en_base + by_stream[sid]
+                core.heads[sid] = en_base + by_stream[sid]
                 # the bulk path doesn't know which event_ids landed per
                 # stream (collecting them would be one row per EVENT);
-                # invalidate the id map so the next append() reloads it
-                # from the log and idempotent retries keep working.
-                self._ids.pop(sid, None)
-                self._bump_stream_gen(sid)
+                # drop the id map so the next append() reloads it from
+                # the log and idempotent retries keep working.
+                core.ids.pop(sid, None)
             if any(r["stream_id"].startswith(METASTREAM_PREFIX) or r["deletes"]
                    for r in live):
-                self._core.meta_gen += 1
+                core.meta_gen += 1
             self._notify_commit()
+        return sids
 
     def _commit(self, rows: list[tuple]) -> None:
         """Write one commit file directly with pyarrow on the driver — the
@@ -1161,10 +1111,12 @@ class EventLogWriter:
                 raise ValueError("empty eventId provided")
 
     def last_event_number(self, stream_id: str) -> int:
-        """The stream's last event number, NO_STREAM when never written
-        (IndexReader.GetStreamLastEventNumber — the head lookup every
-        commit check starts from)."""
-        return self._stream_state(stream_id)
+        """The stream's last event number in the current snapshot,
+        NO_STREAM when never written (IndexReader.
+        GetStreamLastEventNumber): ``stream_head``, uncached — a read
+        leaves the write head alone."""
+        return stream_head(self.path, manifest.snapshot_files(self.path),
+                           stream_id)
 
     def soft_delete(self, stream_id: str, metadata_writer=None) -> None:
         """Soft delete = write a FRESH metadata document containing only
@@ -1289,6 +1241,15 @@ def lookup(path: str, names: list[str], stream_id: str,
         where &= ds.field("event_number") == event_number
     return arrow_dataset(path, names).to_table(
         columns=columns, filter=where).combine_chunks()
+
+
+def stream_head(path: str, names: list[str], stream_id: str) -> int:
+    """The last event number of one stream in the log files ``names`` of
+    the log at ``path``, NO_STREAM when it has no event there: one
+    ``lookup`` of its event numbers, no Spark job."""
+    head = pc.max(lookup(path, names, stream_id, columns=["event_number"])
+                  ["event_number"]).as_py()
+    return NO_STREAM if head is None else head
 
 
 def read_files(spark: SparkSession, path: str, names: list[str]) -> DataFrame:

@@ -482,6 +482,33 @@ def test_output_state_writes_result_stream(engine):
     assert engine.read_stream("acct-results").count() == 2
 
 
+def test_onetime_projection_runs_its_fold_once(engine, spark):
+    """One onetime run of an emitting foreachStream projection with
+    outputState calls its handler once per source event: the emission
+    append, the emitted-stream record, the result stream and the
+    bookkeeping all read one materialized fold output."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def seen(s, e, ctx):
+        calls.add(1)
+        ctx.emit("seen-ops", "Seen", {"n": s["n"]})
+        return {"n": s["n"] + 1}
+
+    spec = (
+        Projection.from_category("account", name="counted")
+        .foreach_stream()
+        .when({"$init": lambda: {"n": 0}, "$any": seen})
+        .output_state()
+    )
+    engine.create_projection(spec, mode="onetime", emit_enabled=True)
+    engine.run_projection("counted")
+    assert calls.value == 3  # account-1 twice, account-2 once
+    assert engine.read_stream("seen-ops").count() == 3
+    assert engine.read_stream("$projections-counted-result").count() == 2
+    assert {"seen-ops", "$projections-counted-result"} <= set(
+        engine._emitted_streams("counted"))
+
+
 def test_long_poll_read(engine):
     """U3: a poll at the head blocks until new events arrive (or times
     out empty); a poll over existing events returns immediately."""

@@ -1,159 +1,14 @@
-"""Ingestion-source tests (r10): JSONL/CSV with pinned schemas and
-corrupt-row quarantine; distributed WARC record splitting."""
-
-import pytest
-
-
-def test_documents_from_jsonl_quarantines_corrupt_rows(spark, tmp_path):
-    from eventstore_spark.sources.ingest import documents_from_jsonl
-
-    p = tmp_path / "shard.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "s", "n_chars": 11}\n'
-        'THIS IS NOT JSON\n'
-        '{"doc_id": 2, "text": "zwei", "lang": "de", "source": "s", "n_chars": 4, "extra": true}\n'
-    )
-    df = documents_from_jsonl(spark, str(p))
-    rows = {r.doc_id: r for r in df.collect()}
-    assert rows[1].text == "hello world" and not rows[1].is_corrupt
-    assert rows[2].lang == "de" and not rows[2].is_corrupt  # extra field ignored
-    bad = [r for r in rows.values() if r.is_corrupt]
-    assert len(bad) == 1 and bad[0].doc_id is None  # quarantined, not dropped
-    assert df.count() == 3
-
-
-def test_documents_from_csv_roundtrip(spark, tmp_path):
-    from eventstore_spark.sources.ingest import documents_from_csv
-
-    p = tmp_path / "export.csv"
-    p.write_text(
-        "doc_id,text,lang,source,n_chars\n"
-        "1,plain text,en,s,10\n"
-        '2,"quoted, with comma",en,s,18\n'
-    )
-    rows = {r.doc_id: r for r in documents_from_csv(spark, str(p)).collect()}
-    assert rows[1].text == "plain text"
-    assert rows[2].text == "quoted, with comma"
-    assert not rows[1].is_corrupt and not rows[2].is_corrupt
-
-
-_WARC = (
-    "WARC/1.0\r\n"
-    "WARC-Type: warcinfo\r\n"
-    "WARC-Record-ID: <urn:uuid:aaa>\r\n"
-    "Content-Length: 10\r\n"
-    "\r\n"
-    "info: body\r\n"
-    "\r\n"
-    "WARC/1.0\r\n"
-    "WARC-Type: response\r\n"
-    "WARC-Target-URI: <http://example.com/page>\r\n"
-    "WARC-Record-ID: <urn:uuid:bbb>\r\n"
-    "Content-Length: 78\r\n"
-    "\r\n"
-    "HTTP/1.1 200 OK\r\n"
-    "Content-Type: text/html\r\n"
-    "\r\n"
-    "<html><body><p>Crawled content</p></body></html>\r\n"
-    "\r\n"
-    "WARC/1.0\r\n"
-    "WARC-Type: response\r\n"
-    "WARC-Target-URI: http://example.com/two\r\n"
-    "WARC-Record-ID: <urn:uuid:ccc>\r\n"
-    "Content-Length: 40\r\n"
-    "\r\n"
-    "HTTP/1.1 200 OK\r\n"
-    "\r\n"
-    "plain second page\r\n"
-)
-
-
-def test_warc_records_split_and_parse(spark, tmp_path):
-    from eventstore_spark.sources.ingest import documents_from_warc, warc_records
-
-    p = tmp_path / "crawl.warc"
-    p.write_text(_WARC)
-    recs = {r.record_id: r for r in warc_records(spark, str(p)).collect()}
-    assert len(recs) == 3
-    assert recs["urn:uuid:aaa"].warc_type == "warcinfo"
-    r2 = recs["urn:uuid:bbb"]
-    assert r2.target_uri == "http://example.com/page"
-    assert r2.payload == "<html><body><p>Crawled content</p></body></html>"
-    assert r2.content_length == 78
-    # angle brackets optional on the URI; HTTP header block stripped
-    assert recs["urn:uuid:ccc"].payload == "plain second page"
-
-    docs = documents_from_warc(spark, str(p)).collect()
-    assert {d.text for d in docs} == {
-        "<html><body><p>Crawled content</p></body></html>",
-        "plain second page",
-    }
-    assert all(d.doc_id is not None and d.source == "warc" for d in docs)
-    # compose with the extraction operator: markup payload -> text
-    from eventstore_spark.operators.textops import html_extract_text
-
-    ext = {r.extracted for r in html_extract_text(
-        documents_from_warc(spark, str(p))).collect()}
-    assert "Crawled content" in ext
-
-
-def test_documents_stream_from_jsonl_micro_batches(spark, tmp_path):
-    """Streaming ingest: shards become micro-batches under the same
-    schema/quarantine contract (availableNow drains what exists)."""
-    from eventstore_spark.sources.ingest import documents_stream_from_jsonl
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "first shard", "lang": "en", "source": "s", "n_chars": 11}\n')
-    (src / "b.jsonl").write_text(
-        '{"doc_id": 2, "text": "second shard", "lang": "en", "source": "s", "n_chars": 12}\n'
-        "garbage line\n")
-    stream = documents_stream_from_jsonl(spark, str(src))
-    assert stream.isStreaming
-    out = str(tmp_path / "out")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.where(~got.is_corrupt).count() == 2
-    assert got.where(got.is_corrupt).count() == 1  # quarantined, present
-
-
-def test_jsonl_export_roundtrips_through_the_reader(spark, tmp_path):
-    """documents_to_jsonl -> documents_from_jsonl must reproduce the
-    corpus exactly (same rows, no quarantined lines)."""
-    from eventstore_spark.sources.ingest import (documents_from_jsonl,
-                                                 documents_to_jsonl)
-
-    rows = [(i, f'text "quoted" {i}é', "en" if i % 2 else "de",
-             f"src{i % 3}", 10 + i) for i in range(57)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long")
-    path = str(tmp_path / "export")
-    documents_to_jsonl(docs, path, num_shards=4)
-
-    # one collect: querying only the corrupt-derived column is the
-    # documented JSON-source limitation (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    back = documents_from_jsonl(spark, path).collect()
-    assert not any(r.is_corrupt for r in back)
-    got = sorted(
-        (r.doc_id, r.text, r.lang, r.source, r.n_chars) for r in back
-    )
-    assert got == sorted(rows)
+"""Continuous-ingest pipeline test: JSONL shards stream through the
+text quality gate and a stateful exact dedup into parquet."""
 
 
 def test_streaming_corpus_pipeline_quality_gate_and_cross_batch_dedup(
         spark, tmp_path):
     """End-to-end continuous-ingest pipeline: JSONL shards stream in one
-    file per micro-batch, flow through quarantine, the quality gate and
-    a STATEFUL exact dedup (dropDuplicates on the normalized
-    fingerprint — state spans micro-batches), and land in parquet.
+    file per micro-batch through Spark's JSON source with a declared
+    schema, flow through the quality gate and a STATEFUL exact dedup
+    (dropDuplicates on the normalized fingerprint — state spans
+    micro-batches), and land in parquet.
     A duplicate arriving two batches later and a junk doc must both be
     dropped; the three good uniques must land exactly once."""
     import json as _json
@@ -161,7 +16,6 @@ def test_streaming_corpus_pipeline_quality_gate_and_cross_batch_dedup(
     from pyspark.sql import functions as SF
 
     from eventstore_spark.functions.text import fingerprint, quality_score
-    from eventstore_spark.sources.ingest import documents_stream_from_jsonl
 
     good1 = ("the quick brown fox jumps over the lazy dog and then the "
              "dog sleeps while the fox runs into the green forest again")
@@ -184,11 +38,11 @@ def test_streaming_corpus_pipeline_quality_gate_and_cross_batch_dedup(
     # duplicate of doc 1 (same text modulo case/whitespace) + one new doc
     shard("c.jsonl", [(4, "  " + good1.upper() + "  "), (5, good3)])
 
-    stream = documents_stream_from_jsonl(spark, str(src),
-                                         max_files_per_trigger=1)
+    stream = (spark.readStream.schema(
+        "doc_id long, text string, lang string, source string, n_chars long")
+        .option("maxFilesPerTrigger", "1").json(str(src)))
     cleaned = (
-        stream.where(~SF.col("is_corrupt"))
-        .where(quality_score(SF.col("text")) >= 0.3)
+        stream.where(quality_score(SF.col("text")) >= 0.3)
         .withColumn("fingerprint", fingerprint(SF.col("text")))
         .dropDuplicates(["fingerprint"])
     )

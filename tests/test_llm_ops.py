@@ -1632,9 +1632,12 @@ def test_write_packed_corpus_roundtrip_and_prunes(spark, tmp_path):
     (contiguous positions, additive token offsets), its summary must
     account for every doc/token, and a single-shard read must prune the
     other shard directories at the scan (PartitionFilters)."""
-    from eventstore_spark.operators.corpus import (read_packed_shard,
-                                                   sequence_pack,
+    from eventstore_spark.operators.corpus import (sequence_pack,
                                                    write_packed_corpus)
+
+    def read_shard(shard):
+        return (spark.read.parquet(f"{path}/shards")
+                .where(F.col("shard") == shard).orderBy("position"))
 
     rows = [(i, " ".join(f"w{j}" for j in range((i * 7) % 23 + 1)))
             for i in range(60)]
@@ -1648,7 +1651,7 @@ def test_write_packed_corpus_roundtrip_and_prunes(spark, tmp_path):
         docs, ctx_tokens=32, num_shards=4).collect()}
     seen = 0
     for shard in range(4):
-        part = read_packed_shard(spark, path, shard).collect()
+        part = read_shard(shard).collect()
         # contiguous positions, additive offsets, placement identical
         off = 0
         for pos, r in enumerate(part, start=1):
@@ -1661,7 +1664,7 @@ def test_write_packed_corpus_roundtrip_and_prunes(spark, tmp_path):
         seen += len(part)
     assert seen == 60
 
-    plan = read_packed_shard(spark, path, 2)._jdf.queryExecution(
+    plan = read_shard(2)._jdf.queryExecution(
         ).executedPlan().toString()
     assert "PartitionFilters" in plan
     tail = plan.split("PartitionFilters", 1)[1][:160]

@@ -126,12 +126,12 @@ def test_filtered_subscription_periodic_checkpoints(spark, log, tmp_path):
         q.processAllAvailable()
         assert seen["events"] == 0 and seen["ckpts"]
         head1 = max(seen["ckpts"])
-        assert head1 == log._last_position  # scan reached the log head
+        assert head1 == log._core.last_position  # scan reached the log head
         # new non-matching events still advance the checkpoint position
         log.append("account-1", [ProposedEvent("Deposited", '{"amount": 1}')])
         q.processAllAvailable()
         assert seen["events"] == 0
-        assert max(seen["ckpts"]) == log._last_position > head1
+        assert max(seen["ckpts"]) == log._core.last_position > head1
         assert seen["ckpts"] == sorted(seen["ckpts"])  # monotone
     finally:
         q.stop()
@@ -1770,7 +1770,7 @@ def test_markers_caughtup_with_from_position_skipping_whole_files(spark, log, tm
     from eventstore_spark.streaming.subscriptions import start_with_markers
 
     # log fixture: 3 files, positions 1..4 (file1 holds position 1)
-    head = log._last_position
+    head = log._core.last_position
     events, markers = [], []
     q = start_with_markers(
         spark, log.path,

@@ -185,12 +185,63 @@ def test_lazy_recovery_reads_one_scalar(spark, tmp_path):
     w1 = EventLogWriter(spark, path)
     for i in range(5):
         w1.append(f"s-{i}", [ProposedEvent("A"), ProposedEvent("B")])
+    w1.close()
     w2 = EventLogWriter(spark, path)
-    assert w2._last_position == 10
-    assert w2._stats == {}  # nothing preloaded
+    assert w2._core.last_position == 10
+    assert w2._core.heads == {}  # nothing preloaded
     w2.append("s-3", [ProposedEvent("C")], expected_version=1)
-    assert set(w2._stats) == {"s-3"}  # only the touched stream was loaded
-    assert w2._stats["s-3"] == 2
+    assert set(w2._core.heads) == {"s-3"}  # only the touched stream was loaded
+    assert w2._core.heads["s-3"] == 2
+
+
+def test_reader_head_lookup_leaves_the_write_head_alone(spark, tmp_path):
+    """``last_event_number`` of a stream the write head has not loaded
+    reads the log and stores nothing: only a commit writes the head."""
+    path = str(tmp_path / "log")
+    w1 = EventLogWriter(spark, path)
+    w1.append("s-1", [ProposedEvent("A"), ProposedEvent("B")])
+    w1.close()
+    w = EventLogWriter(spark, path)
+    w.append("s-2", [ProposedEvent("C")])
+    core = w._core
+    before = (dict(core.heads), {k: dict(v) for k, v in core.ids.items()},
+              core.last_position)
+    assert w.last_event_number("s-1") == 1
+    assert w.last_event_number("s-9") == NO_STREAM
+    assert (core.heads, core.ids, core.last_position) == before
+    assert "s-1" not in core.heads
+
+
+def test_reopen_after_a_foreign_commit_numbers_from_the_log(spark, tmp_path):
+    """Close drops the write head with the claim: a commit another process
+    made while no writer here held the claim is numbered after on reopen."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventstore_spark import manifest as M
+    from eventstore_spark.writer import ARROW_SCHEMA
+
+    path = str(tmp_path / "log")
+    w = EventLogWriter(spark, path)
+    w.append("s-1", [ProposedEvent("E", "{}")])
+    w.close()
+    name = "part-writer-00000000000000000002-foreign0.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist([{
+        "log_position": 2, "stream_id": "s-1", "category": "s",
+        "event_number": 1, "event_id": "foreign-1", "event_type": "E",
+        "data": "{}", "metadata": None,
+        "created": datetime.now(timezone.utc), "is_json": True,
+    }], schema=ARROW_SCHEMA), tmp)
+    os.rename(tmp, os.path.join(path, name))
+    M.append_files(path, [name])
+    w = EventLogWriter(spark, path)
+    assert w.append("s-1", [ProposedEvent("E", "{}")]) == 2
+    got = sorted((r.log_position, r.event_number) for r in
+                 w.load().where("stream_id = 's-1'").collect())
+    assert got == [(1, 0), (2, 1), (3, 2)]
 
 
 def test_append_df_is_distributed_and_exactly_once(spark, tmp_path):
@@ -280,11 +331,11 @@ def test_fence_takeover_fails_commit_without_corruption(spark, tmp_path):
     path = str(tmp_path / "log")
     w = EventLogWriter(spark, path)
     w.append("s-1", [ProposedEvent("A")])
-    pos_before = w._last_position
+    pos_before = w._core.last_position
     _write_lock(path, pid=1, token="stolen")  # foreign claim on disk
     with pytest.raises(WriterFencedError):
         w.append("s-1", [ProposedEvent("B")])
-    assert w._last_position == pos_before  # staged, not applied
+    assert w._core.last_position == pos_before  # staged, not applied
     assert w.load().count() == 1
 
 
@@ -854,7 +905,7 @@ def test_idempotent_replay_reports_batch_own_positions(log):
     assert log.append("s-2", evs, expected_version=-1) == 1
     for i in range(4):
         log.append("s-2", [ProposedEvent("C", "{}")])
-    assert log._stats["s-2"] == 5
+    assert log._core.heads["s-2"] == 5
     # delayed retry of the original batch: same expected, same ids
     assert log.append("s-2", evs, expected_version=-1) == 1  # NOT 5
     # ANY-mode full-dedupe replay also reports the batch's own end
@@ -1091,8 +1142,8 @@ def test_cold_state_scan_racing_an_append_keeps_numbering(log, monkeypatch):
     log.append("s-1", [ProposedEvent("E", "{}")])
     other = EventLogWriter(log.spark, log.path)
     for w in (log, other):
-        log._stats.clear()
-        log._ids.clear()
+        log._core.heads.clear()
+        log._core.ids.clear()
         pinned, release, readers = _pin_reader_scan(monkeypatch, writer, "lookup")
         _run_pinned(readers, pinned, release,
                     lambda: log.last_event_number("s-1"),
